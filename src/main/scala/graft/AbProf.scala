@@ -40,15 +40,7 @@ object AbProf {
       })
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // the same offline-contract warm-up as Bench (indexes/stats/BPE)
-    try SparkEntry.queries("q05_group_count")(spark, sfDir).count()
-    catch { case _: Throwable => () }
-    try graft.analytics.MinHashBandIndex.ensure(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.analytics.IvfIndex.ensure(spark, sfDir)
-    catch { case _: Throwable => () }
-    try graft.analytics.BpeTokenizer.loadOrLearn(spark, sfDir)
-    catch { case _: Throwable => () }
+    Bench.warmUp(spark, sfDir)
     val qs = names.map(n => SparkEntry.registry.find(_.name == n)
       .getOrElse(sys.error(s"unknown query: $n")))
     qs.foreach { q =>

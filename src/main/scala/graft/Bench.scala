@@ -18,6 +18,50 @@ import org.apache.spark.sql.SparkSession
   * long-lived cluster session behaves.
   */
 object Bench {
+  import graft.analytics._
+
+  /** The untimed warm-up, as named steps: one query for JVM,
+    * classloading and codegen warm-up, then every offline artifact the
+    * registry probes. Artifacts are OFFLINE by the operator's contract
+    * ([[OfflineArtifact]]): built once per corpus epoch, so entry
+    * timings measure the probe (ss03/ss05 the IVF/PQ serve, tp02/tp03
+    * the stats-steered plan, dm02b/dm06b tokenization), never the
+    * build. ss18's lifecycle staging (private copy + append + drift
+    * rebuild) is offline maintenance by the same contract. */
+  private def warmUps(sfDir: String): Seq[(String, SparkSession => Any)] = Seq(
+    "q05_group_count" -> (s => SparkEntry.queries("q05_group_count")(s, sfDir).count()),
+    "ivf" -> (s => IvfIndex.ensure(s, sfDir)),
+    "pq_codebooks" -> (s => Similarity.pqCodebooksFor(s, sfDir)),
+    "ivf_sem" -> (s => IvfIndex.ensure(s, sfDir, Similarity.semLists(s, sfDir))),
+    "int8" -> (s => Int8Index.ensure(s, sfDir)),
+    "ivf_spilled_m30" -> (s => IvfIndex.ensureSpilled(
+      s, sfDir, IvfIndex.DefaultLists, margin = 0.3)),
+    "ivf_spilled_m5" -> (s => IvfIndex.ensureSpilled(
+      s, sfDir, IvfIndex.DefaultLists, margin = 0.05)),
+    "ivf_drift_refresh" -> (s => Similarity.stageDriftRefresh(s, sfDir)),
+    "minhash_seed" -> (s => MinHashBandIndex.ensure(s, sfDir)),
+    "bloom" -> (s => BloomGramIndex.ensure(s, sfDir)),
+    "bloom_sharded" -> (s => BloomGramIndex.ensureSharded(
+      s, sfDir, DataQuality.ShardedK)),
+    "table_stats" -> (s => TableStats.ensure(
+      s, sfDir, Seq("customer", "orders", "lineitem"))),
+    "skewed_orders" -> (s => TableStats.ensureSkewedOrders(
+      s, sfDir, histogram = true)),
+    "bpe" -> (s => BpeTokenizer.loadOrLearn(s, sfDir)),
+    "bpe_deep" -> (s => BpeTokenizer.loadOrLearn(
+      s, sfDir, BpeTokenizer.DeepMerges, "bigram")))
+
+  /** Run every [[warmUps]] step. A failing step is reported on one
+    * stderr line and the rest still run: the entries that needed it
+    * then fail (or pay the build) visibly in their own timings. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit =
+    warmUps(sfDir).foreach { case (name, step) =>
+      try step(spark)
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] warm-up $name failed: $e")
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -30,73 +74,7 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // warm-up: JVM/classloading/codegen, not measured. The IVF index
-    // build is also staged here — it is an OFFLINE step by the
-    // operator's contract (queries probe a persisted index; ss03/ss04
-    // timings measure the probe, not index construction).
-    try SparkEntry.queries("q05_group_count")(spark, sfDir).count()
-    catch { case _: Throwable => () }
-    try graft.analytics.IvfIndex.ensure(spark, sfDir)
-    catch { case _: Throwable => () }
-    // PQ codebooks are offline metadata by the same contract — ss05
-    // timings measure the ADC scan + re-rank, not codebook training
-    try graft.analytics.Similarity.pqCodebooksFor(spark, sfDir)
-    catch { case _: Throwable => () }
-    // sem01's corpus-scaled index (k ∝ N) is offline by the same
-    // contract; at verify-fixture sizes this is the same index as above
-    try graft.analytics.IvfIndex.ensure(spark, sfDir,
-      graft.analytics.Similarity.semLists(spark, sfDir))
-    catch { case _: Throwable => () }
-    // the persisted int8 codes (ss11) are offline by the same contract
-    try graft.analytics.Int8Index.ensure(spark, sfDir)
-    catch { case _: Throwable => () }
-    // the spilled multi-assignment index (ss20) shares the offline
-    // once-per-corpus-epoch build contract
-    try graft.analytics.IvfIndex.ensureSpilled(
-      spark, sfDir, graft.analytics.IvfIndex.DefaultLists, margin = 0.3)
-    catch { case _: Throwable => () }
-    // ss21's probe-latency-bound spilled index (margin 0.05) shares
-    // the same offline build contract
-    try graft.analytics.IvfIndex.ensureSpilled(
-      spark, sfDir, graft.analytics.IvfIndex.DefaultLists, margin = 0.05)
-    catch { case _: Throwable => () }
-    // ss18's lifecycle staging (private copy + append + drift rebuild)
-    // is offline maintenance by the same contract — the entry times the
-    // refreshed serve + audit, not the one-time rebuild
-    try graft.analytics.Similarity.stageDriftRefresh(spark, sfDir)
-    catch { case _: Throwable => () }
-    // the MinHash band seed index (dd09/st19/st20 gates) is offline by
-    // the same once-per-corpus-epoch contract
-    try graft.analytics.MinHashBandIndex.ensure(spark, sfDir)
-    catch { case _: Throwable => () }
-    // the corpus-gram bloom filter (id02) is offline by the same
-    // contract — one filter build per corpus epoch, probed per batch
-    try graft.analytics.BloomGramIndex.ensure(spark, sfDir)
-    catch { case _: Throwable => () }
-    // the sharded family (id03) is offline by the same epoch contract
-    try graft.analytics.BloomGramIndex.ensureSharded(
-      spark, sfDir, graft.analytics.DataQuality.ShardedK)
-    catch { case _: Throwable => () }
-    // catalog column stats (tp02's CBO planning input) are refreshed on
-    // the ingest schedule by the same contract — the entry times the
-    // stats-steered query, not the ANALYZE
-    try graft.analytics.TableStats.ensure(
-      spark, sfDir, Seq("customer", "orders", "lineitem"))
-    catch { case _: Throwable => () }
-    // tp03's skewed derived table + its histogram-grade column stats
-    // are staged on the same ingest schedule (the entry times the
-    // histogram-steered plan, not the stage/ANALYZE)
-    try graft.analytics.TableStats.ensureSkewedOrders(
-      spark, sfDir, histogram = true)
-    catch { case _: Throwable => () }
-    // the BPE merges table (tok01) is trained once per corpus epoch by
-    // the same contract — dm02b/dm06b timings measure tokenization
-    try graft.analytics.BpeTokenizer.loadOrLearn(spark, sfDir)
-    catch { case _: Throwable => () }
-    // the production-depth table (tok01b/tok04) shares that contract
-    try graft.analytics.BpeTokenizer.loadOrLearn(
-      spark, sfDir, graft.analytics.BpeTokenizer.DeepMerges, "bigram")
-    catch { case _: Throwable => () }
+    warmUp(spark, sfDir)
 
     // optional args = run only these queries (isolation/profiling runs);
     // the driver invokes with no args → every headline operator. The

@@ -20,12 +20,11 @@ import graft.queries.QueryDef
   * gate would drop — the direction a dedup gate must err in, pinned by
   * the id02x anchor.
   *
-  * Same offline-index contract as [[IvfIndex]]/[[Int8Index]]: the file
-  * key folds in a content stamp of documents.parquet so a regenerated
-  * dataset invalidates the filter; the build is one distributed
-  * aggregate (executors build partial filters, merge is a bit-OR) with
-  * only the final serialized filter crossing to the driver — the same
-  * bytes every executor then receives back as a probe-side literal.
+  * The filter is an [[OfflineArtifact]] over documents.parquet; the
+  * build is one distributed aggregate (executors build partial
+  * filters, merge is a bit-OR) with only the final serialized filter
+  * crossing to the driver — the same bytes every executor then
+  * receives back as a probe-side literal.
   * Membership semantics make the filter append-friendly: a batch's
   * accepted grams can be OR-ed in without touching corpus data, the
   * property that keeps per-batch increments affordable (st11
@@ -36,28 +35,16 @@ object BloomGramIndex {
   /** ~9.585 bits/item → 1% false-positive rate (−ln p / ln²2). */
   private val BitsPerItem = 9.585
 
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val Artifact = OfflineArtifact.Kind("bloomgram", "documents", "v3")
 
-  private def contentStamp(sfDir: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).map(_.toSeq).getOrElse(Seq.empty).flatMap(walk)
-      else Seq(f)
-    val sig = walk(new java.io.File(s"$sfDir/documents.parquet"))
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .sorted.mkString("|")
-    Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(sig, 0x9747b28c))
-  }
+  /** The single filter's file inside its artifact dir. */
+  def filterPath(sfDir: String): String = s"${Artifact.dir(sfDir)}/filter.bf"
 
-  def filterPath(sfDir: String): String = {
-    val key = Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(sfDir, 0x9747b28c))
-    s"${sys.props("java.io.tmpdir")}/graft-bloomgram-$key-${contentStamp(sfDir)}-v2.bf"
-  }
+  /** The sharded family's BASE path (shard `i` at `{base}-s{i}`). */
+  def shardedPath(sfDir: String, k: Int): String =
+    s"${Artifact.dir(sfDir, s"k$k")}/filter.bf"
 
-  /** Builds (once per dataset + content stamp) and persists the
+  /** Builds (once per corpus epoch) and persists the
     * corpus-gram filter; returns its PATH. The probe side loads it
     * through [[graft.functions.BloomFilterCache]] — once per executor,
     * never embedded in the plan (an in-plan literal is re-deserialized
@@ -66,34 +53,30 @@ object BloomGramIndex {
     * documents outside the arriving batch (`source != 'src19'`, id01's
     * standing-corpus convention). */
   def ensure(spark: SparkSession, sfDir: String): String = {
-    val path = filterPath(sfDir)
-    built.computeIfAbsent(path, { _ =>
-      val f = new java.io.File(path)
-      if (!f.exists()) {
-        val corpus = QueryDef.table(spark, sfDir, "documents")
-          .filter(col("source") =!= "src19")
-        val grams = DataQuality.gramKeys(corpus).select("g")
-        // Size from the gram-row count (an overestimate of distinct
-        // grams — extra rows only LOWER the realized fpp). One extra
-        // corpus pass, paid once per epoch by the offline contract.
-        val est = math.max(1024L, grams.count())
-        val bits = math.ceil(est * BitsPerItem).toLong
-        // The stock expression caps size at the runtime-filter confs
-        // (defaults: 4M items / 67M bits — sized for join pruning, not
-        // corpus indexes). Raise them so a large corpus gets the bits
-        // its fpp needs instead of a silent cap.
-        spark.conf.set(
-          "spark.sql.optimizer.runtime.bloomFilter.maxNumItems", est max 4000000L)
-        spark.conf.set(
-          "spark.sql.optimizer.runtime.bloomFilter.maxNumBits", bits max 67108864L)
-        val bytes = grams
-          .agg(BloomFns.bloomAgg(spark, xxhash64(col("g")),
-                                 lit(est), lit(bits)).as("bf"))
-          .head().getAs[Array[Byte]](0)
-        writeFilter(path, bytes, est, bits)
-      }
-      path
-    })
+    val dir = Artifact.ensure(spark, sfDir) { dir =>
+      val corpus = QueryDef.table(spark, sfDir, "documents")
+        .filter(col("source") =!= "src19")
+      val grams = DataQuality.gramKeys(corpus).select("g")
+      // Size from the gram-row count (an overestimate of distinct
+      // grams — extra rows only LOWER the realized fpp). One extra
+      // corpus pass, paid once per epoch by the offline contract.
+      val est = math.max(1024L, grams.count())
+      val bits = math.ceil(est * BitsPerItem).toLong
+      // The stock expression caps size at the runtime-filter confs
+      // (defaults: 4M items / 67M bits — sized for join pruning, not
+      // corpus indexes). Raise them so a large corpus gets the bits
+      // its fpp needs instead of a silent cap.
+      spark.conf.set(
+        "spark.sql.optimizer.runtime.bloomFilter.maxNumItems", est max 4000000L)
+      spark.conf.set(
+        "spark.sql.optimizer.runtime.bloomFilter.maxNumBits", bits max 67108864L)
+      val bytes = grams
+        .agg(BloomFns.bloomAgg(spark, xxhash64(col("g")),
+                               lit(est), lit(bits)).as("bf"))
+        .head().getAs[Array[Byte]](0)
+      writeFilter(s"$dir/filter.bf", bytes, est, bits)
+    }
+    s"$dir/filter.bf"
   }
 
   /** Hash-prefix-SHARDED corpus filter family — the documented growth
@@ -116,53 +99,51 @@ object BloomGramIndex {
     * missing file. Returns the BASE path. */
   def ensureSharded(spark: SparkSession, sfDir: String, k: Int): String = {
     require(k >= 1 && k <= 64, s"shard count out of range: $k")
-    val key = Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(sfDir, 0x9747b28c))
-    val base = s"${sys.props("java.io.tmpdir")}/graft-bloomgram-" +
-      s"$key-${contentStamp(sfDir)}-k$k-v1.bf"
-    built.computeIfAbsent(base, { _ =>
-      if (!new java.io.File(s"$base-s0").exists()) {
-        val corpus = QueryDef.table(spark, sfDir, "documents")
-          .filter(col("source") =!= "src19")
-        val grams = DataQuality.gramKeys(corpus).select("g")
-        val total = math.max(1024L * k, grams.count())
-        val est = math.ceil(total * 1.25 / k).toLong
-        val bits = math.ceil(est * BitsPerItem).toLong
-        spark.conf.set(
-          "spark.sql.optimizer.runtime.bloomFilter.maxNumItems", est max 4000000L)
-        spark.conf.set(
-          "spark.sql.optimizer.runtime.bloomFilter.maxNumBits", bits max 67108864L)
-        val shards = grams
-          .withColumn("h", xxhash64(col("g")))
-          .withColumn("shard", pmod(col("h"), lit(k.toLong)).cast("int"))
-          .groupBy("shard")
-          .agg(BloomFns.bloomAgg(spark, col("h"),
-                                 lit(est), lit(bits)).as("bf"))
-          .collect()
-          .map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap
-        (0 until k).foreach { i =>
-          shards.get(i) match {
-            case Some(bytes) => writeFilter(s"$base-s$i", bytes, est, bits)
-            case None        => emptyFilter(s"$base-s$i", est, bits)
-          }
+    val dir = Artifact.ensure(spark, sfDir, s"k$k") { dir =>
+      val corpus = QueryDef.table(spark, sfDir, "documents")
+        .filter(col("source") =!= "src19")
+      val grams = DataQuality.gramKeys(corpus).select("g")
+      val total = math.max(1024L * k, grams.count())
+      val est = math.ceil(total * 1.25 / k).toLong
+      val bits = math.ceil(est * BitsPerItem).toLong
+      spark.conf.set(
+        "spark.sql.optimizer.runtime.bloomFilter.maxNumItems", est max 4000000L)
+      spark.conf.set(
+        "spark.sql.optimizer.runtime.bloomFilter.maxNumBits", bits max 67108864L)
+      val shards = grams
+        .withColumn("h", xxhash64(col("g")))
+        .withColumn("shard", pmod(col("h"), lit(k.toLong)).cast("int"))
+        .groupBy("shard")
+        .agg(BloomFns.bloomAgg(spark, col("h"),
+                               lit(est), lit(bits)).as("bf"))
+        .collect()
+        .map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap
+      (0 until k).foreach { i =>
+        shards.get(i) match {
+          case Some(bytes) => writeFilter(s"$dir/filter.bf-s$i", bytes, est, bits)
+          case None        => emptyFilter(s"$dir/filter.bf-s$i", est, bits)
         }
       }
-      base
-    })
+    }
+    s"$dir/filter.bf"
   }
 
-  /** Atomic write of filter bytes + a `.meta` sidecar recording the
-    * (estItems, numBits) the filter was created with — a later
-    * incremental merge must build its delta with the SAME sizing or
-    * `mergeInPlace` rejects it as incompatible. */
+  /** Write of filter bytes + a `.meta` sidecar recording the (estItems,
+    * numBits) the filter was created with — a later incremental merge
+    * must build its delta with the SAME sizing or `mergeInPlace`
+    * rejects it as incompatible. The sidecar lands FIRST and the filter
+    * becomes visible last, by one atomic rename: a visible filter
+    * always has its sizing. */
   private def writeFilter(path: String, bytes: Array[Byte],
                           est: Long, bits: Long): Unit = {
-    val tmp = new java.io.File(path + ".tmp")
-    java.nio.file.Files.write(tmp.toPath, bytes)
-    tmp.renameTo(new java.io.File(path))
     java.nio.file.Files.write(
       java.nio.file.Paths.get(path + ".meta"),
       s"$est:$bits".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val tmp = java.nio.file.Paths.get(path + ".tmp")
+    java.nio.file.Files.write(tmp, bytes)
+    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(path),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    ()
   }
 
   /** The (estItems, numBits) sizing recorded beside a filter file. */

@@ -34,16 +34,7 @@ object Bounded {
     * job) runs OUTSIDE the map's compute lambda: get-then-putIfAbsent
     * instead of computeIfAbsent, so no ConcurrentHashMap bin lock is
     * held for the job's duration (a concurrent duplicate count is
-    * harmless; a stalled bin is not).
-    *
-    * The stamp resolves each file through Hadoop's `FileSystem` — not
-    * `java.io.File`, which silently returns 0 for every non-local
-    * scheme (hdfs://, s3a://) and would reduce the regenerated-in-place
-    * guard to a no-op off local disk. `getModificationTime` is ms
-    * precision from the store's own metadata; a file the stamp cannot
-    * stat (deleted between planning and stamping) contributes a
-    * distinct marker rather than a fake zero, so the key still changes
-    * when the data does. */
+    * harmless; a stalled bin is not). The stamp is [[planStamp]]. */
   def broadcastBench(df: DataFrame, tag: String,
                      maxRows: Long = MaxBenchRows): DataFrame = {
     checkedRowCount(df, tag, maxRows)
@@ -57,26 +48,15 @@ object Bounded {
     * cache, so asking for the count and then broadcasting under the
     * same tag pays one count job, not two. */
   /** Identity of a frame's PLAN + DATA: the logical plan's semantic
-    * hash joined with a content stamp of every scanned file (path,
-    * mtime, length via Hadoop FileSystem — java.io.File returns fake
-    * zeros off local disk). The key the bounded-count cache uses, and
-    * the key any driver-side memo of a frame-derived value must use —
-    * data regenerated in place changes the stamp, so a memo can never
-    * serve a stale value for a changed corpus. */
-  private[analytics] def planStamp(df: DataFrame): String = {
-    val hconf = df.sparkSession.sparkContext.hadoopConfiguration
-    val files = df.inputFiles.sorted.map { p =>
-      val path = new org.apache.hadoop.fs.Path(p)
-      try {
-        val st = path.getFileSystem(hconf).getFileStatus(path)
-        s"$p@${st.getModificationTime}:${st.getLen}"
-      } catch {
-        case _: java.io.FileNotFoundException => s"$p@missing"
-      }
-    }
-    df.queryExecution.logical.semanticHash() +
-      ":" + java.util.Arrays.hashCode(files.asInstanceOf[Array[AnyRef]])
-  }
+    * hash joined with [[OfflineArtifact.filesStamp]] of every scanned
+    * file (path, length, mtime via Hadoop FileSystem — java.io.File
+    * returns fake zeros off local disk). The key the bounded-count
+    * cache uses, and the key any driver-side memo of a frame-derived
+    * value must use — data regenerated in place changes the stamp, so
+    * a memo can never serve a stale value for a changed corpus. */
+  private[analytics] def planStamp(df: DataFrame): String =
+    df.queryExecution.logical.semanticHash() + ":" +
+      OfflineArtifact.filesStamp(df.sparkSession, df.inputFiles.toSeq)
 
   def checkedRowCount(df: DataFrame, tag: String,
                       maxRows: Long = MaxBenchRows): Long = {

@@ -1,7 +1,5 @@
 package graft.analytics
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -38,9 +36,8 @@ import graft.queries.QueryDef
   * ([[graft.functions.BpeTokenCount]]) over the merge table passed as
   * foldable literals (map-only, no shuffle, no UDF, no per-merge
   * expression nodes): token counts ride the same scan that reads the
-  * text, at any merge count. The merges table is persisted
-  * content-stamped (same contract as the ANN indexes) so a round's
-  * queries learn at most once.
+  * text, at any merge count. The merges table is an
+  * [[OfflineArtifact]], so a round's queries learn at most once.
   */
 object BpeTokenizer {
   import QueryDef.table
@@ -219,54 +216,37 @@ object BpeTokenizer {
     merges.result()
   }
 
-  // -- persistence (content-stamped, IvfIndex contract) ------------------
+  // -- persistence (OfflineArtifact contract) ---------------------------
 
-  private val built = new ConcurrentHashMap[String, Seq[Merge]]()
+  private val Artifact = OfflineArtifact.Kind("bpe", "documents", "v1")
 
-  private def stamp(sfDir: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).map(_.toSeq).getOrElse(Seq.empty).flatMap(walk)
-      else Seq(f)
-    val sig = walk(new java.io.File(s"$sfDir/documents.parquet"))
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .sorted.mkString("|")
-    Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(sig, 0x9747b28c))
-  }
+  private def variant(nMerges: Int, unitKind: String): String =
+    if (unitKind == "word") s"$nMerges" else s"$nMerges-$unitKind"
 
   def mergesDir(sfDir: String, nMerges: Int = Merges,
-                unitKind: String = "word"): String = {
-    val key = Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(sfDir, 0x9747b28c))
-    val u = if (unitKind == "word") "" else s"-$unitKind"
-    s"${sys.props("java.io.tmpdir")}/graft-bpe-$key-${stamp(sfDir)}-$nMerges$u-v1"
-  }
+                unitKind: String = "word"): String =
+    Artifact.dir(sfDir, variant(nMerges, unitKind))
 
-  /** Learned merges for a corpus dir: JVM-cached, then the persisted
-    * content-stamped parquet, then a fresh learn+persist. A regenerated
-    * dataset at the same path changes the stamp and forces a relearn.
-    * `unitKind` "word" learns over whitespace words (the production
-    * table); "bigram" over [[bigramUnitsOf]] (the deep table). */
+  /** Learned merges for a corpus dir: learned and persisted once per
+    * corpus epoch ([[OfflineArtifact]]), read into driver memory once
+    * per JVM. `unitKind` "word" learns over whitespace words (the
+    * production table); "bigram" over [[bigramUnitsOf]] (the deep
+    * table). */
   def loadOrLearn(spark: SparkSession, sfDir: String,
                   nMerges: Int = Merges,
                   unitKind: String = "word"): Seq[Merge] = {
     graft.functions.BpeFns.register(spark)
-    val dir = mergesDir(sfDir, nMerges, unitKind)
-    built.computeIfAbsent(dir, { _ =>
-      val f = new java.io.File(dir)
-      if (!f.exists()) {
-        val merges = learnMerges(spark, sfDir, nMerges, unitKind)
-        import spark.implicits._
-        merges.toDF("rank", "l", "r", "cnt")
-          .coalesce(1).write.mode("overwrite").parquet(dir)
-        merges
-      } else {
-        spark.read.parquet(dir).orderBy("rank").collect()
-          .map(r => Merge(r.getAs[Int]("rank"), r.getAs[String]("l"),
-                          r.getAs[String]("r"), r.getAs[Long]("cnt"))).toSeq
-      }
-    })
+    Artifact.load(spark, sfDir, variant(nMerges, unitKind)) { dir =>
+      import spark.implicits._
+      val merges = learnMerges(spark, sfDir, nMerges, unitKind)
+      merges.toDF("rank", "l", "r", "cnt")
+        .coalesce(1).write.mode("overwrite").parquet(dir)
+      merges
+    } { dir =>
+      spark.read.parquet(dir).orderBy("rank").collect()
+        .map(r => Merge(r.getAs[Int]("rank"), r.getAs[String]("l"),
+                        r.getAs[String]("r"), r.getAs[Long]("cnt"))).toSeq
+    }
   }
 
   // -- application -------------------------------------------------------

@@ -6,40 +6,26 @@ import org.apache.spark.sql.functions._
 import graft.queries.QueryDef
 
 /** Persisted int8 serving index: the (vec_id, scale, q) quantized form
-  * behind ss09/st13, computed ONCE offline and stored as parquet with
-  * `q` as `array<tinyint>` — the scan then reads 1-byte codes instead
-  * of 4-byte floats (the memory-bandwidth win the in-plan quantization
-  * recomputes per query). Same offline-index contract as [[IvfIndex]]:
-  * the dir key folds in a content stamp of the embeddings files, so a
-  * regenerated dataset invalidates the index instead of silently
-  * serving stale codes; queries quantize their own vector in-plan (one
-  * row) and never retrain anything. */
+  * behind ss09/st13, computed ONCE offline ([[OfflineArtifact]]) and
+  * stored as parquet with `q` as `array<tinyint>` — the scan then reads
+  * 1-byte codes instead of 4-byte floats (the memory-bandwidth win the
+  * in-plan quantization recomputes per query). Queries quantize their
+  * own vector in-plan (one row) and never retrain anything. */
 object Int8Index {
 
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val Artifact = OfflineArtifact.Kind("int8", "embeddings", "v1")
 
-  def indexDir(sfDir: String): String = {
-    val key = Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(sfDir, 0x9747b28c))
-    s"${sys.props("java.io.tmpdir")}/graft-int8-$key-${IvfIndex.contentStamp(sfDir)}-v1"
-  }
+  def indexDir(sfDir: String): String = Artifact.dir(sfDir)
 
   /** Build once per (dataset, content stamp); quantized values are in
     * [-127, 127] by construction, so the tinyint narrowing is lossless. */
-  def ensure(spark: SparkSession, sfDir: String): String = {
-    val dir = indexDir(sfDir)
-    built.computeIfAbsent(dir, { _ =>
-      val done = new java.io.File(s"$dir/codes/_SUCCESS")
-      if (!done.exists()) {
-        Similarity.int8Quantized(QueryDef.table(spark, sfDir, "embeddings"))
-          .select(col("vec_id"), col("__scale").as("scale"),
-                  expr("transform(__q, x -> cast(x as tinyint))").as("q"))
-          .write.mode("overwrite").parquet(s"$dir/codes")
-      }
-      dir
-    })
-  }
+  def ensure(spark: SparkSession, sfDir: String): String =
+    Artifact.ensure(spark, sfDir) { dir =>
+      Similarity.int8Quantized(QueryDef.table(spark, sfDir, "embeddings"))
+        .select(col("vec_id"), col("__scale").as("scale"),
+                expr("transform(__q, x -> cast(x as tinyint))").as("q"))
+        .write.mode("overwrite").parquet(s"$dir/codes")
+    }
 
   /** The persisted codes in the (vec_id, __scale, __q) shape the int8
     * scoring path consumes. `__q` stays `array<tinyint>` — the scorer

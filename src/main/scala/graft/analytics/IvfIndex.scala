@@ -1,7 +1,6 @@
 package graft.analytics
 
-import java.util.concurrent.ConcurrentHashMap
-
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -34,40 +33,14 @@ object IvfIndex {
 
   val DefaultLists = 16
 
-  /** index dir → index dir, built at most once per JVM; the on-disk
-    * index is reused across JVMs of the same round. Keyed by the full
-    * content-stamped dir (not just sfDir), so regenerating the dataset
-    * mid-JVM changes the key and triggers a rebuild. */
-  private val built = new ConcurrentHashMap[String, String]()
+  /** Version history: v2 added the PQ residual codes + `pq_codebooks`,
+    * v3 the joint single-pass codebook fit, v4 per-iteration centroid
+    * rounding, v5 the build-time drift baseline and append log. */
+  private val Artifact = OfflineArtifact.Kind("ivf", "embeddings", "v5")
+  private val SpilledArtifact = OfflineArtifact.Kind("ivfspill", "embeddings", "v1")
 
-  /** Fingerprint of the embeddings table's CONTENT (per-part name,
-    * length, mtime) — included in the index dir key so a regenerated
-    * dataset at the same path can never silently reuse a stale persisted
-    * index. Local-FS walk (the test corpora are local); an HDFS/object
-    * store deployment would fold FileStatus length+mtime the same way. */
-  private[analytics] def contentStamp(sfDir: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).map(_.toSeq).getOrElse(Seq.empty).flatMap(walk)
-      else Seq(f)
-    val root = new java.io.File(s"$sfDir/embeddings.parquet")
-    val sig = walk(root)
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .sorted.mkString("|")
-    Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(sig, 0x9747b28c))
-  }
-
-  def indexDir(sfDir: String, nLists: Int): String = {
-    val key = Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(sfDir, 0x9747b28c))
-    // v5: assignments carry PQ residual codes + pq_codebooks dir (v2),
-    // codebooks from the joint single-pass fit (v3), per-iteration
-    // centroid rounding (v4), build-time drift baseline + append log
-    // (v5) — a format marker in the name retires older dirs instead of
-    // half-reading them
-    s"${sys.props("java.io.tmpdir")}/graft-ivf-$key-${contentStamp(sfDir)}-$nLists-v5"
-  }
+  def indexDir(sfDir: String, nLists: Int): String =
+    Artifact.dir(sfDir, s"$nLists")
 
   /** Squared L2 distance between an `array<float>` column and a literal
     * centroid (double math, codegen'd HOFs — small fixed arrays). */
@@ -118,14 +91,10 @@ object IvfIndex {
 
   /** Build + persist the index if absent; returns the index dir. */
   def ensure(spark: SparkSession, sfDir: String,
-             nLists: Int = DefaultLists, lloydIters: Int = 2): String = {
-    val dir = indexDir(sfDir, nLists)
-    built.computeIfAbsent(dir, { _ =>
-      val done = new java.io.File(s"$dir/assignments/_SUCCESS")
-      if (!done.exists()) buildIndex(spark, sfDir, dir, nLists, lloydIters)
-      dir
-    })
-  }
+             nLists: Int = DefaultLists, lloydIters: Int = 2): String =
+    Artifact.ensure(spark, sfDir, s"$nLists") {
+      dir => buildIndex(spark, sfDir, dir, nLists, lloydIters)
+    }
 
   /** A PRIVATE copy of the shared content-stamped index, for entries
     * that MUTATE index state (tombstone deletes): the shared
@@ -139,28 +108,16 @@ object IvfIndex {
     * tag) like the index itself. */
   def ensurePrivate(spark: SparkSession, sfDir: String, nLists: Int,
                     tag: String): String = {
-    val src = ensure(spark, sfDir, nLists)
-    val dst = s"$src-$tag"
-    built.computeIfAbsent(dst, { _ =>
-      if (!new java.io.File(s"$dst/assignments/_SUCCESS").exists()) {
-        def copy(from: java.io.File, to: java.io.File): Unit = {
-          if (from.isDirectory) {
-            to.mkdirs()
-            Option(from.listFiles()).getOrElse(Array.empty)
-              .foreach(f => copy(f, new java.io.File(to, f.getName)))
-          } else {
-            java.nio.file.Files.copy(from.toPath, to.toPath,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            ()
-          }
-        }
-        StagedSwap.rmrf(new java.io.File(dst))
-        Option(new java.io.File(src).listFiles()).getOrElse(Array.empty)
-          .filter(f => !f.getName.startsWith("tombstone"))
-          .foreach(f => copy(f, new java.io.File(dst, f.getName)))
-      }
-      dst
-    })
+    val src = new Path(ensure(spark, sfDir, nLists))
+    Artifact.ensure(spark, sfDir, s"$nLists-$tag") { dst =>
+      val hconf = spark.sparkContext.hadoopConfiguration
+      val fs = src.getFileSystem(hconf)
+      fs.listStatus(src)
+        .filter(st => !st.getPath.getName.startsWith("tombstone") &&
+                      st.getPath.getName != OfflineArtifact.Marker)
+        .foreach(st => FileUtil.copy(fs, st.getPath, fs,
+          new Path(dst, st.getPath.getName), false, hconf))
+    }
   }
 
   /** Learn the coarse quantizer: deterministic hashed-id seed sample
@@ -554,6 +511,9 @@ object IvfIndex {
       .coalesce(1)
       .write.mode("append").parquet(s"${fresh.getPath}/rebuild_log")
     live.unpersist(false)
+    // the staged index is a complete artifact in its own right, so the
+    // dir swapped in keeps counting as built for OfflineArtifact.ensure
+    OfflineArtifact.markComplete(spark, fresh.getPath)
     // commit point: the staged index is complete — swap it in
     java.nio.file.Files.createFile(
       new java.io.File(fresh, "_COMPLETE").toPath)
@@ -561,64 +521,16 @@ object IvfIndex {
     true
   }
 
-  /** Per-JVM memo of driver-side index METADATA reads (centroids,
-    * codebooks), keyed by the subdir's file-level content stamp
-    * (name + length + mtime): every IVF/PQ entry re-read the same
-    * nLists-row parquet with a fresh-plan collect job (FloorProf r15
-    * — a fixed slice of each entry's BUILD floor). Drift rebuilds and
-    * staged swaps rewrite the part files, changing the stamp, so a
+  /** Driver-side index METADATA reads (centroids, codebooks), memoized
+    * per subdir on its content stamp: every IVF/PQ entry re-read the
+    * same nLists-row parquet with a fresh-plan collect job (FloorProf
+    * r15 — a fixed slice of each entry's BUILD floor). Drift rebuilds
+    * and staged swaps rewrite the part files, changing the stamp, so a
     * mutated index can never serve stale metadata from the memo. */
-  private val metaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-
-  /** Content stamp of a metadata dir through Hadoop FileSystem —
-    * NOT java.io.File, which sees nothing on hdfs:// / s3a:// and
-    * would freeze the stamp there, letting drift rebuilds serve stale
-    * centroids/codebooks from the memo (ADVICE r15; same hazard
-    * [[Bounded.planStamp]] documents and resolves the same way).
-    * A path the FS cannot stat contributes a distinct marker, so the
-    * key still changes when a dir appears or vanishes. */
-  private def fsStamp(spark: SparkSession, path: String): String = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    try {
-      val fs = p.getFileSystem(hconf)
-      val it = fs.listFiles(p, true)
-      val sig = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (it.hasNext) {
-        val st = it.next()
-        sig += s"${st.getPath}:${st.getLen}:${st.getModificationTime}"
-      }
-      val s = sig.sorted.mkString("|")
-      f"${scala.util.hashing.MurmurHash3.stringHash(s, 0x9747b28c)}%08x" +
-        f"${scala.util.hashing.MurmurHash3.stringHash(s, 0x5bd1e995)}%08x"
-    } catch {
-      case _: java.io.FileNotFoundException => "missing"
-      // Transient listing failures on remote filesystems (s3a/hdfs
-      // hiccups) FAIL the read rather than silently serving whatever
-      // the memo holds — deliberately stricter than the old
-      // java.io.File stamp, which never threw (and never saw remote
-      // dirs at all). Rethrow with the index dir named so the new
-      // failure mode is diagnosable at the call site (ADVICE r16).
-      case e: java.io.IOException =>
-        throw new java.io.IOException(
-          s"fsStamp: cannot list index metadata dir '$path' — " +
-            "transient FS error fails the metadata read instead of " +
-            "risking a stale memo serve; retry the query", e)
-    }
-  }
-
-  private def cachedMeta[T <: AnyRef](spark: SparkSession, path: String)
-                                     (compute: => T): T = {
-    val key = s"$path@${fsStamp(spark, path)}"
-    val c = metaCache.get(key)
-    if (c != null) c.asInstanceOf[T]
-    else {
-      val v = compute // collect job outside any map bin lock
-      val p = metaCache.putIfAbsent(key, v)
-      if (p != null) p.asInstanceOf[T] else v
-    }
-  }
+  private def cachedMeta[T](spark: SparkSession, path: String)
+                           (compute: => T): T =
+    OfflineArtifact.memo(s"ivf-meta|$path",
+                         OfflineArtifact.stamp(spark, path))(compute)
 
   def readCentroids(spark: SparkSession, dir: String): Seq[(Int, Array[Double])] =
     cachedMeta(spark, s"$dir/centroids") {
@@ -684,8 +596,8 @@ object IvfIndex {
                col("__a.spilled").as("spilled")): _*)
   }
 
-  /** Build + persist the spilled index if absent (own content-stamped
-    * dir per margin; centroids are the SAME fit as the plain index so
+  /** Build + persist the spilled index if absent (own artifact dir per
+    * margin; centroids are the SAME fit as the plain index so
     * the two serve variants differ only in assignment multiplicity).
     * Layout: centroids + assignments(…, list, spilled) partitioned by
     * list — no PQ codes; the spilled serve re-ranks exactly from the
@@ -693,21 +605,17 @@ object IvfIndex {
   def ensureSpilled(spark: SparkSession, sfDir: String, nLists: Int,
                     margin: Double, lloydIters: Int = 2): String = {
     val mTag = math.round(margin * 100).toInt
-    val dir = s"${indexDir(sfDir, nLists)}-spill$mTag-v1"
-    built.computeIfAbsent(dir, { _ =>
-      if (!new java.io.File(s"$dir/assignments/_SUCCESS").exists()) {
-        val emb = table(spark, sfDir, "embeddings")
-        val centroids = fit(emb, nLists, lloydIters)
-        import spark.implicits._
-        centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-          .toDF("list", "centroid")
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$dir/centroids")
-        assignSpilled(emb, centroids, margin)
-          .write.mode("overwrite").partitionBy("list")
-          .parquet(s"$dir/assignments")
-      }
-      dir
-    })
+    SpilledArtifact.ensure(spark, sfDir, s"$nLists-m$mTag") { dir =>
+      val emb = table(spark, sfDir, "embeddings")
+      val centroids = fit(emb, nLists, lloydIters)
+      import spark.implicits._
+      centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
+        .toDF("list", "centroid")
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$dir/centroids")
+      assignSpilled(emb, centroids, margin)
+        .write.mode("overwrite").partitionBy("list")
+        .parquet(s"$dir/assignments")
+    }
   }
 }

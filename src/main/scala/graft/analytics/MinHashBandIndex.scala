@@ -1,7 +1,5 @@
 package graft.analytics
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,7 +13,7 @@ import graft.queries.QueryDef
   * near-duplicate means word-2-gram Jaccard ≥ [[MinJaccard]] (dd02's
   * metric, same shingling, same signatures).
   *
-  * Index layout (content-stamped dir, built once offline):
+  * Index layout (an [[OfflineArtifact]] dir):
   *  - `bands/`  — one row per (corpus doc × LSH band): (corpus_id,
   *    band, key), written PARTITIONED BY `kp = key mod [[KeyParts]]`.
   *    A small arriving batch probes few distinct keys, so its kp set
@@ -70,28 +68,9 @@ object MinHashBandIndex {
   def corpusOf(docs: DataFrame): DataFrame =
     docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
 
-  private val built = new ConcurrentHashMap[String, String]()
+  private val Artifact = OfflineArtifact.Kind("mhband", "documents", "v1")
 
-  /** Content fingerprint of the documents table (per-part name, length,
-    * mtime) — a regenerated dataset at the same path can never silently
-    * reuse a stale index. */
-  private def contentStamp(sfDir: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).map(_.toSeq).getOrElse(Seq.empty).flatMap(walk)
-      else Seq(f)
-    val sig = walk(new java.io.File(s"$sfDir/documents.parquet"))
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .sorted.mkString("|")
-    Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(sig, 0x9747b28c))
-  }
-
-  def indexDir(sfDir: String): String = {
-    val key = Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(sfDir, 0x9747b28c))
-    s"${sys.props("java.io.tmpdir")}/graft-mhband-$key-${contentStamp(sfDir)}-v1"
-  }
+  def indexDir(sfDir: String): String = Artifact.dir(sfDir)
 
   /** (doc_id, sh, band, key) — shingle set + the 12 LSH band keys of
     * each doc; one row per (doc, band). */
@@ -152,14 +131,10 @@ object MinHashBandIndex {
 
   /** Build + persist the index over `sfDir`'s standing corpus if
     * absent; returns the index dir. */
-  def ensure(spark: SparkSession, sfDir: String): String = {
-    val dir = indexDir(sfDir)
-    built.computeIfAbsent(dir, { _ =>
-      if (!new java.io.File(s"$dir/bands/_SUCCESS").exists())
-        buildFrom(spark, dir, corpusOf(table(spark, sfDir, "documents")))
-      dir
-    })
-  }
+  def ensure(spark: SparkSession, sfDir: String): String =
+    Artifact.ensure(spark, sfDir) {
+      dir => buildFrom(spark, dir, corpusOf(table(spark, sfDir, "documents")))
+    }
 
   /** Build the index into `dir` from an explicit corpus frame (the
     * spec's chain probes rebuild over corpus+accepted this way). */

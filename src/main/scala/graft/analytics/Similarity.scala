@@ -739,17 +739,15 @@ object Similarity {
       .orderBy("query_id", "rk")
   }
 
-  /** Per-dataset PQ codebooks, fit once per JVM and keyed on the same
-    * content stamp as the IVF index (a regenerated dataset re-fits; in
+  /** Per-dataset PQ codebooks, fit once per JVM and corpus epoch
+    * ([[OfflineArtifact.memo]] on the embeddings' content stamp; in
     * production the codebooks persist next to the IVF index — they are
     * SubSpaces × CodebookSize × dSub doubles of metadata). */
-  private val pqCodebooks =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Seq[Array[Double]]]]()
-
   def pqCodebooksFor(spark: SparkSession, sfDir: String): Seq[Seq[Array[Double]]] =
-    pqCodebooks.computeIfAbsent(
-      s"$sfDir|${IvfIndex.contentStamp(sfDir)}",
-      _ => PqIndex.fitCodebooks(table(spark, sfDir, "embeddings")))
+    OfflineArtifact.memo(s"pq|$sfDir",
+      OfflineArtifact.stamp(spark, s"$sfDir/embeddings.parquet")) {
+      PqIndex.fitCodebooks(table(spark, sfDir, "embeddings"))
+    }
 
   /** DuckDB replay of the int8 top-k (ss09/ss11): derives the codes
     * from raw embeddings — identical math whether the Spark side

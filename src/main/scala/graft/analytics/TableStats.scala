@@ -66,63 +66,6 @@ object TableStats {
         cols.mkString(", "))
   }
 
-  private val analyzedDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Per-table locks for [[memoized]] — interning through a map (not
-    * `t.intern.synchronized`) keeps the lock objects private to this
-    * memo. Bounded: one entry per distinct table name per JVM. */
-  private val memoLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** At-most-once-per-key claim WITH retry-after-failure (ADVICE r16):
-    * the bare get→analyze→put sequence let two concurrent same-JVM
-    * callers both run ANALYZE (or both stage an overwrite write to the
-    * same external-table path); a put-first claim made a mid-ANALYZE
-    * throw poison the memo (ADVICE r15). Serializing the check+work+
-    * record per TABLE KEY gives both properties: the second caller
-    * blocks, re-checks under the lock, and sees either the completed
-    * memo (skip) or — if the first caller threw — an unset memo
-    * (retry). Distinct tables still proceed in parallel. */
-  private def memoized(t: String, key: String)(work: => Unit): Unit = {
-    val lock = memoLocks.computeIfAbsent(t, _ => new Object)
-    lock.synchronized {
-      if (analyzedDir.get(t) != key) {
-        work
-        analyzedDir.put(t, key)
-      }
-    }
-  }
-
-  /** Fingerprint of one table's parquet CONTENT (per-part name,
-    * length, mtime — the same form [[IvfIndex.contentStamp]] uses for
-    * index dirs). Folded into [[ensure]]'s memo key so regenerating or
-    * appending data at the SAME path re-ANALYZEs instead of leaving
-    * tp02 planning under stale row counts / NDV (the r13 memo was
-    * path-only — a 100×-stale NDV can make CBO pick a WORSE join
-    * order than no stats, silently). Local-FS walk; an HDFS/object
-    * store deployment folds FileStatus length+mtime the same way. */
-  private[analytics] def contentStamp(path: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).map(_.toSeq).getOrElse(Seq.empty).flatMap(walk)
-      else Seq(f)
-    val root = new java.io.File(path).toPath.toAbsolutePath
-    // the signature keys each file by its path RELATIVE TO THE TABLE
-    // ROOT, not just its name (ADVICE r14: same-named parts moved
-    // between subdirectories — partition re-layout — must re-ANALYZE),
-    // and folds through a 64-bit hash (two independent murmur seeds)
-    // so a stamp collision needs ~2^32 distinct states, not ~2^16
-    val sig = walk(root.toFile)
-      .map { f =>
-        val rel = root.relativize(f.toPath.toAbsolutePath)
-        s"$rel:${f.length}:${f.lastModified}"
-      }
-      .sorted.mkString("|")
-    f"${scala.util.hashing.MurmurHash3.stringHash(sig, 0x9747b28c)}%08x" +
-      f"${scala.util.hashing.MurmurHash3.stringHash(sig, 0x5bd1e995)}%08x"
-  }
-
   /** Idempotent per-JVM [[analyze]]: one ANALYZE per (table, data dir,
     * content stamp) per JVM lifetime — the ingest-schedule contract the
     * CBO-planned registry entry (tp02) relies on. ANALYZE is an OFFLINE
@@ -133,12 +76,19 @@ object TableStats {
     * serve a changed corpus. */
   def ensure(spark: SparkSession, sfDir: String,
              tables: Seq[String]): Unit = tables.foreach { t =>
-    val key = s"$sfDir@${contentStamp(s"$sfDir/$t.parquet")}"
-    // memo AFTER success, under the per-table lock: a throw leaves the
-    // memo unset (retry next call), and concurrent same-JVM callers
-    // cannot both run ANALYZE (ADVICE r15 + r16)
-    memoized(t, key) { analyze(spark, sfDir, Seq(t)) }
+    memoized(spark, t, s"$sfDir/$t.parquet") { analyze(spark, sfDir, Seq(t)) }
   }
+
+  /** One [[OfflineArtifact.memo]] slot per catalog table, keyed by the
+    * source data dir and its content stamp: a throw leaves the slot
+    * unset (retry next call; ADVICE r15), concurrent same-JVM callers
+    * cannot both run ANALYZE or both stage an overwrite write to the
+    * same external-table path (ADVICE r16), and re-pointing the table
+    * at another corpus — or regenerating the data in place — re-runs. */
+  private def memoized(spark: SparkSession, t: String, source: String)
+                      (work: => Unit): Unit =
+    OfflineArtifact.memo(s"stats|$t",
+      s"$source@${OfflineArtifact.stamp(spark, source)}")(work)
 
   /** Stage the PLANTED-ZIPF derived table (orders + `skey`, see
     * [[graft.operators.SkewData]]) as a managed [[StatsDb]] table and
@@ -153,14 +103,9 @@ object TableStats {
   def ensureSkewedOrders(spark: SparkSession, sfDir: String,
                          histogram: Boolean): String = {
     val t = if (histogram) "orders_skewed" else "orders_skewed_basic"
-    val key = s"$sfDir@${contentStamp(s"$sfDir/orders.parquet")}@h=$histogram"
-    // memo is recorded only after the staging write + ANALYZE complete
-    // (end of the memoized block): a throw mid-stage leaves the memo
-    // unset so the next same-JVM call re-stages instead of planning
-    // tp03 against a partial or stats-less table (ADVICE r15); the
-    // per-table lock keeps two concurrent callers from both staging an
-    // overwrite write to the same external-table path (ADVICE r16)
-    memoized(t, key) {
+    // a throw mid-stage leaves the slot unset, so the next call
+    // re-stages instead of planning tp03 against a partial table
+    memoized(spark, t, s"$sfDir/orders.parquet") {
       // external-table staging (the analyzePath form): a managed
       // saveAsTable trips over a previous JVM's leftover warehouse
       // directory (DROP TABLE clears only the in-memory catalog) —

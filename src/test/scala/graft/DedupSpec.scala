@@ -835,26 +835,74 @@ class DedupSpec extends SparkSpec {
   }
 
   test("IVF index dir key tracks dataset content, not just its path") {
+    // every dir-based offline artifact, keyed by the corpus table it
+    // derives from
+    import graft.analytics.{BloomGramIndex, BpeTokenizer, Int8Index,
+                            MinHashBandIndex}
+    val kinds: Seq[(String, String => String)] = Seq(
+      "ivf" -> (d => IvfIndex.indexDir(d, 4)),
+      "int8" -> (d => Int8Index.indexDir(d)),
+      "mhband" -> (d => MinHashBandIndex.indexDir(d)),
+      "bpe" -> (d => BpeTokenizer.mergesDir(d)),
+      "bloom" -> (d => BloomGramIndex.filterPath(d)))
     val dir = java.nio.file.Files.createTempDirectory("ivfstamp").toString
-    val emb1 = (0L to 20L).map(i => (i, Array(i.toFloat, 1f)))
-      .toDF("vec_id", "embedding")
-    emb1.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val k1 = IvfIndex.indexDir(dir, 4)
-    val i1 = graft.analytics.Int8Index.indexDir(dir)
-    assert(k1 == IvfIndex.indexDir(dir, 4), "stamp must be stable")
-    assert(i1 == graft.analytics.Int8Index.indexDir(dir))
+    // both tables laid out in subdirectories (p=0, p=1), so a part
+    // file can move between them
+    def write(n: Long, y: Float): Unit = {
+      (0L to n).map(i => (i, Array(i.toFloat, y), i % 2))
+        .toDF("vec_id", "embedding", "p")
+        .write.mode("overwrite").partitionBy("p")
+        .parquet(s"$dir/embeddings.parquet")
+      (0L to n).map(i => (i, s"doc $i $y", i % 2))
+        .toDF("doc_id", "text", "p")
+        .write.mode("overwrite").partitionBy("p")
+        .parquet(s"$dir/documents.parquet")
+    }
+    def parts(table: String, p: Int): Seq[java.io.File] =
+      new java.io.File(s"$dir/$table.parquet/p=$p").listFiles().toSeq
+        .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
+    // the same corpus read through a non-`file:` scheme: the stamp must
+    // resolve through Hadoop FS, not a local-file walk that lists
+    // nothing there
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftlocal.impl", classOf[SchemeLocalFs].getName)
+    val sfDirs = Seq(dir, s"graftlocal://$dir")
+    def keys(): Map[(String, String), String] =
+      (for (d <- sfDirs; (k, f) <- kinds) yield (d, k) -> f(d)).toMap
+    write(20, 1f)
+    var prev = keys()
+    assert(prev == keys(), "stamp must be stable")
+    def mustChange(what: String): Unit = {
+      val now = keys()
+      now.foreach { case (id, v) =>
+        assert(v != prev(id), s"$what must invalidate the $id key")
+      }
+      prev = now
+    }
     // regenerate the dataset at the SAME path → the key must change,
     // otherwise a stale persisted index would be silently reused
     Thread.sleep(1100) // mtime granularity on some filesystems is 1s
-    (0L to 30L).map(i => (i, Array(i.toFloat, 2f)))
-      .toDF("vec_id", "embedding")
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    assert(IvfIndex.indexDir(dir, 4) != k1,
-           "regenerated data must invalidate the index key")
-    // the int8 codes share the stamp discipline — regeneration must
-    // invalidate that key too
-    assert(graft.analytics.Int8Index.indexDir(dir) != i1,
-           "regenerated data must invalidate the int8 codes key")
+    write(30, 2f)
+    mustChange("regenerated data")
+    // a part file rewritten in place under the same name (same length)
+    Seq("embeddings", "documents").foreach { t =>
+      val f = parts(t, 0).head
+      val bytes = java.nio.file.Files.readAllBytes(f.toPath)
+      bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 1).toByte
+      val mtime = f.lastModified()
+      java.nio.file.Files.write(f.toPath, bytes)
+      f.setLastModified(mtime + 2000)
+    }
+    mustChange("a part file rewritten in place")
+    // a part file moved between subdirectories: same name, length and
+    // mtime — only its path relative to the table root changes
+    Seq("embeddings", "documents").foreach { t =>
+      val f = parts(t, 0).head
+      val to = java.nio.file.Files.createDirectories(
+        java.nio.file.Paths.get(s"$dir/$t.parquet/p=2"))
+      java.nio.file.Files.move(f.toPath, to.resolve(f.getName))
+    }
+    mustChange("a part file moved between subdirectories")
   }
 
   test("PQ: codebooks deterministic; ADC equals reconstruction distance") {
@@ -1279,4 +1327,23 @@ class DedupSpec extends SparkSpec {
     assert(missBound < 1e-4,
       s"band config too weak for a recall anchor: miss=$missBound")
   }
+}
+
+/** Local files under a non-`file:` scheme (`graftlocal:///…`), as an
+  * offline stand-in for a remote store: a `java.io.File` walk sees
+  * nothing under this scheme, a Hadoop `FileSystem` listing sees the
+  * files. */
+class SchemeLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+  override def getUri: java.net.URI = java.net.URI.create("graftlocal:///")
+  override def getScheme: String = "graftlocal"
+  // plain statuses: the raw local ones load permissions lazily through
+  // a `file:`-only URI conversion
+  private def plain(st: FileStatus): FileStatus =
+    new FileStatus(st.getLen, st.isDirectory, st.getReplication,
+                   st.getBlockSize, st.getModificationTime, st.getPath)
+  override def listStatus(f: Path): Array[FileStatus] =
+    super.listStatus(f).map(plain)
+  override def getFileStatus(f: Path): FileStatus =
+    plain(super.getFileStatus(f))
 }

@@ -760,6 +760,17 @@ class PlanAuditSpec extends SparkSpec {
     TableStats.ensure(spark, path, Seq("stale_probe"))
     assert(statRows() == 250L,
       "regenerated data at the same path must refresh catalog stats")
+    // the memo is slot → LAST key, not a set of keys seen: pointing the
+    // table at B and then back at A must re-ANALYZE both times, or the
+    // catalog keeps serving B's stats for A
+    val other = java.nio.file.Files
+      .createTempDirectory("graft-stats-other").toFile.getAbsolutePath
+    spark.range(40).selectExpr("id AS k", "id % 7 AS v")
+      .write.mode("overwrite").parquet(s"$other/stale_probe.parquet")
+    TableStats.ensure(spark, other, Seq("stale_probe"))
+    assert(statRows() == 40L, "re-pointing at B must re-ANALYZE")
+    TableStats.ensure(spark, path, Seq("stale_probe"))
+    assert(statRows() == 250L, "re-pointing back at A must re-ANALYZE")
   }
 
   test("ScanSpread sites: nothing order-sensitive downstream of a round-robin spread") {

@@ -577,7 +577,8 @@ object DataMix {
           () => SelfAudit.once {
             val (trBands, trSh) = MinHashBandIndex.segmentFrames(s, tr)
             MinHashBandIndex.scoredPairs(s, trBands, trSh,
-                ev, minJaccard = SplitLeakJaccard)
+                MinHashBandIndex.signatures(s, ev),
+                minJaccard = SplitLeakJaccard)
               .select(col("doc_id"), col("corpus_id").as("train_id"),
                       col("j").as("jaccard"))
           },

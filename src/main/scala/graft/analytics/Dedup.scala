@@ -149,7 +149,15 @@ object Dedup {
     * are dropped via the same map-side census as the MinHash path —
     * pairs whose ONLY shared chunk was hot lose the recall guarantee,
     * which is the standard trade (run dd01 exact dedup first; the
-    * residual fingerprint distribution is high-entropy). */
+    * residual fingerprint distribution is high-entropy).
+    *
+    * Invariant: the candidate set depends on `maxBucket` and the chunk
+    * blocking only, never on `maxHamming` — the Hamming bound is the
+    * final filter. So for h ≤ k, `simhashPairs(…, maxHamming = k)
+    * .filter(hamming <= h)` equals `simhashPairs(…, maxHamming = h)`
+    * row for row (dd03 derives its near-identity set this way;
+    * DedupSpec pins it). Keep any future pruning by `maxHamming` out of
+    * the candidate stage, or that derivation breaks. */
   def simhashPairs(spark: SparkSession, docs: DataFrame, maxHamming: Int,
                    maxBucket: Int = 1000,
                    fingerprints: Option[DataFrame] = None): DataFrame = {
@@ -407,7 +415,8 @@ object Dedup {
         // time for the brute-force side. One materialized fingerprint
         // pass + ONE blocked chain at hamming ≤ 7 now serves all three
         // consumers (near-identity = filter(hamming ≤ 1) of the same
-        // candidates — same blocking, so row-identical); the three
+        // candidates — row-identical to a maxHamming = 1 call by the
+        // simhashPairs candidate invariant); the three
         // independent eager audit chains overlap from driver threads
         // (guide §2.6) so the slice audits hide behind the full-corpus
         // serve's tail.

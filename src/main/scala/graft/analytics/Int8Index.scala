@@ -98,7 +98,7 @@ object Int8Index {
       StagedSwap.swapIn(codes, tmp)
     }
     tombs.unpersist(false)
-    Tombstones.clear(dir)
+    Tombstones.clear(spark, dir)
     masked
   }
 }

@@ -414,7 +414,7 @@ object IvfIndex {
     tombs.unpersist(false)
     // clear LAST: tombstones outlive every rewrite, so a crash above
     // can only leave rows that are still masked by [[liveAssignments]]
-    Tombstones.clear(dir)
+    Tombstones.clear(spark, dir)
     touched.length
   }
 

@@ -72,30 +72,37 @@ object MinHashBandIndex {
 
   def indexDir(sfDir: String): String = Artifact.dir(sfDir)
 
-  /** (doc_id, sh, band, key) — shingle set + the 12 LSH band keys of
-    * each doc; one row per (doc, band). */
-  private def bandRows(spark: SparkSession, docs: DataFrame): DataFrame = {
+  /** (doc_id, sh, keys) — each doc's shingle set + its 12 LSH band
+    * keys, one row per doc: the batch side of [[scoredPairs]] and the
+    * source of both index-side frames ([[bandsOf]], [[shinglesOf]]). */
+  def signatures(spark: SparkSession, docs: DataFrame): DataFrame =
+    withKeys(spark, docs.select(col("doc_id"),
+      Dedup.shingleHashes(spark, col("text"), 2).as("sh")))
+
+  private def withKeys(spark: SparkSession, sh: DataFrame): DataFrame = {
     MinHashSig.register(spark)
-    docs
-      .select(col("doc_id"),
-              Dedup.shingleHashes(spark, col("text"), 2).as("sh"))
-      .withColumn("sig", call_function(MinHashSig.fnName, col("sh")))
-      .select(col("doc_id"), col("sh"),
-              posexplode(Dedup.bandKeys(col("sig"))).as(Seq("band", "key")))
+    sh.withColumn("keys",
+      Dedup.bandKeys(call_function(MinHashSig.fnName, col("sh"))))
   }
 
-  /** Index-side band rows of `docs` — (corpus_id, band, key, kp), the
-    * payload a build/append/streaming-delta write lands. */
-  def segmentBands(spark: SparkSession, docs: DataFrame): DataFrame =
-    bandRows(spark, docs)
-      .select(col("doc_id").as("corpus_id"), col("band"), col("key"),
-              pmod(col("key"), lit(KeyParts.toLong)).cast("int").as("kp"))
+  /** Index-side band rows — (corpus_id, band, key, kp), the payload a
+    * build/append/streaming-delta write lands — of [[signatures]]. */
+  def bandsOf(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id").as("corpus_id"),
+                posexplode(col("keys")).as(Seq("band", "key")))
+      .withColumn("kp", pmod(col("key"), lit(KeyParts.toLong)).cast("int"))
 
-  /** Index-side shingle rows of `docs` — (corpus_id, sh). */
+  /** Index-side shingle rows — (corpus_id, sh) — of [[signatures]]. */
+  def shinglesOf(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id").as("corpus_id"), col("sh"))
+
+  /** [[bandsOf]] `docs`' [[signatures]]. */
+  def segmentBands(spark: SparkSession, docs: DataFrame): DataFrame =
+    bandsOf(signatures(spark, docs))
+
+  /** [[shinglesOf]] `docs`' [[signatures]], one row per corpus_id. */
   def segmentShingles(spark: SparkSession, docs: DataFrame): DataFrame =
-    bandRows(spark, docs)
-      .select(col("doc_id").as("corpus_id"), col("sh"))
-      .dropDuplicates("corpus_id")
+    shinglesOf(signatures(spark, docs)).dropDuplicates("corpus_id")
 
   /** Both index-side frames from ONE materialized SHINGLE pass — for
     * IN-PLAN (unpersisted) corpora, where calling [[segmentBands]] and
@@ -110,7 +117,6 @@ object MinHashBandIndex {
     * for sk03's two derived-corpus gate stages. */
   def segmentFrames(spark: SparkSession, docs: DataFrame)
       : (DataFrame, DataFrame) = {
-    MinHashSig.register(spark)
     // persist with lineage INTACT, not localCheckpoint: callers pass
     // corpus-scale frames here (dm10's train side, sk03's derived
     // corpus), and a lineage-truncated corpus-wide frame turns an
@@ -120,13 +126,7 @@ object MinHashBandIndex {
     val base = docs
       .select(col("doc_id"), Dedup.shingleHashes(spark, col("text"), 2).as("sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bands = base
-      .withColumn("sig", call_function(MinHashSig.fnName, col("sh")))
-      .select(col("doc_id"),
-              posexplode(Dedup.bandKeys(col("sig"))).as(Seq("band", "key")))
-      .select(col("doc_id").as("corpus_id"), col("band"), col("key"),
-              pmod(col("key"), lit(KeyParts.toLong)).cast("int").as("kp"))
-    (bands, base.select(col("doc_id").as("corpus_id"), col("sh")))
+    (bandsOf(withKeys(spark, base)), shinglesOf(base))
   }
 
   /** Build + persist the index over `sfDir`'s standing corpus if
@@ -139,20 +139,18 @@ object MinHashBandIndex {
   /** Build the index into `dir` from an explicit corpus frame (the
     * spec's chain probes rebuild over corpus+accepted this way). */
   def buildFrom(spark: SparkSession, dir: String, corpus: DataFrame): Unit = {
-    val rows = bandRows(spark, corpus).persist()
+    val sigs = signatures(spark, corpus).persist()
     try {
-      rows.select(col("doc_id").as("corpus_id"), col("band"), col("key"),
-                  pmod(col("key"), lit(KeyParts.toLong)).cast("int").as("kp"))
+      bandsOf(sigs)
         .repartition(KeyParts, col("kp")) // one file per kp dir; hash
                                           // collisions leave ~1/e of the
                                           // 64 tasks empty, so writer
                                           // parallelism is ~40-way, not
                                           // 64 (see mergeSegments)
         .write.mode("overwrite").partitionBy("kp").parquet(s"$dir/bands")
-      rows.select(col("doc_id").as("corpus_id"), col("sh"))
-        .dropDuplicates("corpus_id")
+      shinglesOf(sigs).dropDuplicates("corpus_id")
         .write.mode("overwrite").parquet(s"$dir/shingles")
-    } finally { rows.unpersist(false); () }
+    } finally { sigs.unpersist(false); () }
   }
 
   /** Assignment-only APPEND of accepted docs: their bands + shingles
@@ -168,15 +166,13 @@ object MinHashBandIndex {
     * naturally (each micro-batch is materialized before its append). */
   def appendAccepted(spark: SparkSession, dir: String,
                      docs: DataFrame): Long = {
-    val rows = bandRows(spark, docs).persist()
+    val sigs = signatures(spark, docs).persist()
     try {
-      rows.select(col("doc_id").as("corpus_id"), col("band"), col("key"),
-                  pmod(col("key"), lit(KeyParts.toLong)).cast("int").as("kp"))
+      bandsOf(sigs)
         .repartition(KeyParts, col("kp")) // one file per kp dir, ~40-way
                                           // writers (see buildFrom note)
         .write.mode("append").partitionBy("kp").parquet(s"$dir/bands")
-      val sh = rows.select(col("doc_id").as("corpus_id"), col("sh"))
-        .dropDuplicates("corpus_id")
+      val sh = shinglesOf(sigs).dropDuplicates("corpus_id")
       sh.write.mode("append").parquet(s"$dir/shingles")
       val prov = sh.agg(
         count(lit(1)).as("n_docs"),
@@ -186,7 +182,7 @@ object MinHashBandIndex {
           .as("batch_stamp"))
       prov.coalesce(1).write.mode("append").parquet(s"$dir/append_log")
       prov.head().getLong(0)
-    } finally { rows.unpersist(false); () }
+    } finally { sigs.unpersist(false); () }
   }
 
   /** Fold streaming delta SEGMENTS (st19/st20's accepted-doc state,
@@ -329,7 +325,7 @@ object MinHashBandIndex {
       StagedSwap.swapIn(shDir, tmp)
     }
     tombs.unpersist(false)
-    Tombstones.clear(dir)
+    Tombstones.clear(spark, dir)
     touched.length
   }
 
@@ -350,62 +346,63 @@ object MinHashBandIndex {
       spark.read.parquet(s"$dir/shingles"),
       batch, minJaccard, maxBucket)
 
-  /** [[gate]] with the index passed as FRAMES — the seam the streaming
-    * gate (st19 / EventStreams.neardupIngestGate) needs: its index side
-    * is the seed scan UNIONED with the accepted-segment delta table, and
-    * the kp filter applied here still prunes partitions of every member
-    * scan of the union. `bands` carries (corpus_id, band, key, kp),
-    * `shingles` (corpus_id, sh). */
+  /** [[gate]] with the index passed as FRAMES — the seam the batch
+    * twins need: their index side is the seed scan UNIONED with an
+    * accepted segment, and the kp filter applied in [[scoredPairs]]
+    * still prunes partitions of every member scan of the union.
+    * `bands` carries (corpus_id, band, key, kp), `shingles`
+    * (corpus_id, sh). */
   def gateFrames(spark: SparkSession, bands: DataFrame, shingles: DataFrame,
                  batch: DataFrame,
                  minJaccard: Double = MinJaccard,
                  maxBucket: Int = MaxBucket): DataFrame =
-    verdicts(batch,
-             scoredPairs(spark, bands, shingles, batch, minJaccard, maxBucket))
+    verdicts(batch, scoredPairs(spark, bands, shingles,
+                                signatures(spark, batch), minJaccard, maxBucket))
+      .orderBy("doc_id")
 
   /** Banded candidate pairs with their EXACT Jaccard — the stage
     * [[gateFrames]] folds into per-arrival verdicts, exposed for
     * pair-level consumers (the dm10 split-leakage audit reports every
     * leaking (eval, train) pair, not just each doc's best witness).
-    * Returns (doc_id, corpus_id, j) for every banded candidate whose
-    * exact Jaccard clears `minJaccard`; the refine is exact, so each
-    * returned pair is a TRUE match regardless of what banding missed. */
+    * `sigs` = the batch's [[signatures]], read by the kp collect, the
+    * probe and the refine: the streaming gates pass it materialized,
+    * lazy callers keep lineage and recompute it. Returns (doc_id,
+    * corpus_id, j) for every banded candidate whose exact Jaccard
+    * clears `minJaccard`; the refine is exact, so each returned pair is
+    * a TRUE match regardless of what banding missed. */
   def scoredPairs(spark: SparkSession, bands: DataFrame, shingles: DataFrame,
-                  batch: DataFrame,
+                  sigs: DataFrame,
                   minJaccard: Double = MinJaccard,
                   maxBucket: Int = MaxBucket): DataFrame = {
-    val rows = bandRows(spark, batch)
-      .persist() // two consumers (kp set + candidate join); tiny frame
-    try {
-      // kp partitions this batch actually probes — driver-side metadata
-      // (≤ KeyParts ints); isin on the partition column prunes the
-      // bands scan to those directories.
-      val kps = rows
-        .select(pmod(col("key"), lit(KeyParts.toLong)).cast("int").as("kp"))
-        .distinct().collect().map(_.getInt(0)).toSeq
-      val ib = bands.filter(col("kp").isin(kps: _*))
-      // corpus rows in probed buckets; hot buckets capped BEFORE the
-      // candidate join (map-side-combinable census over matched rows).
-      val probed = ib.join(
-        rows.select("band", "key").distinct(), Seq("band", "key"))
-      val small = probed.groupBy("band", "key")
-        .agg(count(lit(1)).as("__bn"))
-        .filter(col("__bn") <= maxBucket)
-        .select("band", "key")
-      val cand = rows.select(col("doc_id"), col("band"), col("key"))
-        .join(probed.join(small, Seq("band", "key")), Seq("band", "key"))
-        .select(col("doc_id"), col("corpus_id")).distinct()
-      // exact-Jaccard refine on candidates only; shingles of the few
-      // candidate corpus docs come from the persisted set via equi-join.
-      val shC = shingles.withColumnRenamed("sh", "sh_c")
-      cand
-        .join(rows.select(col("doc_id"), col("sh")).dropDuplicates("doc_id"),
-              Seq("doc_id"))
-        .join(shC, Seq("corpus_id"))
-        .select(col("doc_id"), col("corpus_id"),
-                round(Dedup.jaccard(col("sh"), col("sh_c")), 6).as("j"))
-        .filter(col("j") >= minJaccard)
-    } finally { rows.unpersist(false); () }
+    val rows = sigs.select(col("doc_id"),
+                           posexplode(col("keys")).as(Seq("band", "key")))
+    // kp partitions this batch actually probes — driver-side metadata
+    // (≤ KeyParts ints); isin on the partition column prunes the
+    // bands scan to those directories.
+    val kps = rows
+      .select(pmod(col("key"), lit(KeyParts.toLong)).cast("int").as("kp"))
+      .distinct().collect().map(_.getInt(0)).toSeq
+    val ib = bands.filter(col("kp").isin(kps: _*))
+    // corpus rows in probed buckets; hot buckets capped BEFORE the
+    // candidate join (map-side-combinable census over matched rows).
+    val probed = ib.join(
+      rows.select("band", "key").distinct(), Seq("band", "key"))
+    val small = probed.groupBy("band", "key")
+      .agg(count(lit(1)).as("__bn"))
+      .filter(col("__bn") <= maxBucket)
+      .select("band", "key")
+    val cand = rows.select(col("doc_id"), col("band"), col("key"))
+      .join(probed.join(small, Seq("band", "key")), Seq("band", "key"))
+      .select(col("doc_id"), col("corpus_id")).distinct()
+    // exact-Jaccard refine on candidates only; shingles of the few
+    // candidate corpus docs come from the persisted set via equi-join.
+    val shC = shingles.withColumnRenamed("sh", "sh_c")
+    cand
+      .join(sigs.select(col("doc_id"), col("sh")), Seq("doc_id"))
+      .join(shC, Seq("corpus_id"))
+      .select(col("doc_id"), col("corpus_id"),
+              round(Dedup.jaccard(col("sh"), col("sh_c")), 6).as("j"))
+      .filter(col("j") >= minJaccard)
   }
 
   /** Exhaustive reference gate (no banding): candidates are every
@@ -442,23 +439,22 @@ object MinHashBandIndex {
               round(col("__i") * lit(1.0) /
                     (col("__na") + col("__nb") - col("__i")), 6).as("j"))
       .filter(col("j") >= minJaccard)
-    verdicts(batch, scored)
+    verdicts(batch, scored).orderBy("doc_id")
   }
 
   /** Fold scored (doc_id, corpus_id, j) matches into per-arrival
     * verdicts: one row per batch doc, reject iff any match, witness =
-    * (max j, then min corpus_id) via a partial-aggregable struct max. */
-  private def verdicts(batch: DataFrame, scored: DataFrame): DataFrame = {
-    val best = scored
-      .groupBy("doc_id")
-      .agg(max(struct(col("j"), (-col("corpus_id")).as("__nid"))).as("__b"))
-      .select(col("doc_id"), (-col("__b.__nid")).as("match_id"),
+    * (max j, then min corpus_id) via a struct max. Every batch doc joins
+    * the fold with a NULL witness, which max skips — one shuffle on
+    * doc_id, no outer join back to the batch. Unordered — the public
+    * gates sort by doc_id. */
+  private[graft] def verdicts(batch: DataFrame, scored: DataFrame): DataFrame =
+    scored.select(col("doc_id"),
+                  struct(col("j"), (-col("corpus_id")).as("__nid")).as("__m"))
+      .unionByName(batch.select(col("doc_id"),
+        lit(null).cast("struct<j:double,__nid:bigint>").as("__m")))
+      .groupBy("doc_id").agg(max("__m").as("__b"))
+      .select(col("doc_id"), col("__b").isNull.cast("int").as("keep"),
+              (-col("__b.__nid")).as("match_id"),
               col("__b.j").as("match_jaccard"))
-    batch.select("doc_id")
-      .join(best, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-              col("match_id").isNull.cast("int").as("keep"),
-              col("match_id"), col("match_jaccard"))
-      .orderBy("doc_id")
-  }
 }

@@ -1,7 +1,9 @@
 package graft.analytics
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Shared tombstone-delete segment for the persisted serving indexes
   * ([[IvfIndex]], [[Int8Index]]): deleted ids land as an append-only
@@ -12,8 +14,22 @@ import org.apache.spark.sql.functions._
   * `dir/tombstone_log` and already-logged batches are skipped — the
   * same replay-idempotence discipline as [[IvfIndex.appendBatch]]'s
   * append log, which is what makes a crash-replayed streaming takedown
-  * batch safe ([[graft.streaming.EventStreams.takedownStream]]). */
+  * batch safe ([[graft.streaming.EventStreams.takedownStream]]).
+  * Every path check goes through the dir's Hadoop `FileSystem` (as in
+  * [[OfflineArtifact]]): a `java.io.File` check sees nothing under a
+  * non-`file:` scheme, which would silently drop every retraction from
+  * the live views and append a replayed delete twice. */
 object Tombstones {
+
+  private def path(spark: SparkSession, dir: String, sub: String) = {
+    val p = new Path(dir, sub)
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+
+  private def exists(spark: SparkSession, dir: String, sub: String) = {
+    val (fs, p) = path(spark, dir, sub)
+    fs.exists(p)
+  }
 
   /** Tombstone the ids (one `idCol` column — stored canonically as
     * `vec_id` regardless); returns the number of newly tombstoned ids
@@ -27,9 +43,8 @@ object Tombstones {
                      .as("batch_stamp")).head()
     val (n, stamp) = (st.getLong(0), st.getLong(1))
     if (n == 0L) return 0L
-    val logDir = new java.io.File(s"$dir/tombstone_log")
-    val replay = logDir.exists() &&
-      spark.read.parquet(logDir.getPath)
+    val replay = exists(spark, dir, "tombstone_log") &&
+      spark.read.parquet(s"$dir/tombstone_log")
         .filter(col("n_rows") === n && col("batch_stamp") === stamp)
         .limit(1).count() > 0
     if (replay) return 0L
@@ -39,23 +54,24 @@ object Tombstones {
     n
   }
 
-  /** The tombstoned id set (empty frame when none exist yet), surfaced
-    * under the caller's id column name. */
+  /** The tombstoned id set, surfaced under the caller's id column name.
+    * With none yet it is an empty LOCAL relation: the optimizer folds
+    * it out of the live views' anti-joins, so they run no broadcast job
+    * for an empty side. */
   def read(spark: SparkSession, dir: String,
            idCol: String = "vec_id"): DataFrame =
-    if (new java.io.File(s"$dir/tombstones").exists())
+    if (exists(spark, dir, "tombstones"))
       spark.read.parquet(s"$dir/tombstones")
         .select(col("vec_id").as(idCol))
-    else spark.range(0).select(col("id").as(idCol))
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      StructType(Seq(StructField(idCol, LongType))))
 
   /** Drop the tombstone segment + log — called by an index's physical
     * purge AFTER every masked row is rewritten away, so a crash at any
     * earlier point leaves rows that are still masked by the live view. */
-  def clear(dir: String): Unit = {
-    def rmrf(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmrf)); f.delete(); ()
+  def clear(spark: SparkSession, dir: String): Unit =
+    Seq("tombstones", "tombstone_log").foreach { sub =>
+      val (fs, p) = path(spark, dir, sub)
+      fs.delete(p, true)
     }
-    rmrf(new java.io.File(s"$dir/tombstones"))
-    rmrf(new java.io.File(s"$dir/tombstone_log"))
-  }
 }

@@ -599,95 +599,29 @@ object EventStreams {
 
   /** STREAMING near-dup ingest gate (st19's continuous form): each
     * micro-batch of arriving docs is gated against the persisted SEED
-    * MinHash band index unioned with the accepted-doc segments of all
-    * EARLIER batches, then its own accepted docs land as a new segment.
-    * State is two delta tables (band rows and shingle sets of accepted
-    * docs), both batch-id-partitioned with dynamic overwrite — and the
-    * gate for batch N reads only segments with batch_id < N, so a
-    * crash-replayed batch can never see its own half-written segment
-    * (it would otherwise reject every accepted doc against itself).
-    * Per-batch cost: the batch's own band/shingle computation + a
-    * kp-pruned probe of seed ∪ segments — the standing corpus is never
-    * re-scanned, segments only ever grow by accepted-batch size. */
+    * MinHash band index ∪ the accepted-doc segments of all EARLIER
+    * batches; its accepted docs land as a new segment, its verdicts in
+    * `outDir`. The seed is opened once per query start (a restarted
+    * query picks up a rewritten seed), tombstones are re-read every
+    * batch — see [[nearDupStream]]. */
   def neardupIngestGate(stream: DataFrame, seedDir: String,
                         bandsDeltaDir: String, shinglesDeltaDir: String,
                         outDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          import org.apache.spark.sql.types._
-          val mh = graft.analytics.MinHashBandIndex
-          val bandSchema = StructType(Seq(
-            StructField("corpus_id", LongType),
-            StructField("band", IntegerType),
-            StructField("key", LongType),
-            StructField("kp", IntegerType),
-            StructField("batch_id", LongType)))
-          val shSchema = StructType(Seq(
-            StructField("corpus_id", LongType),
-            StructField("sh", ArrayType(LongType, containsNull = false)),
-            StructField("batch_id", LongType)))
-          val segBands = readDelta(spark, bandsDeltaDir, bandSchema)
-            .filter(col("batch_id") < batchId).drop("batch_id")
-          val segSh = readDelta(spark, shinglesDeltaDir, shSchema)
-            .filter(col("batch_id") < batchId).drop("batch_id")
-          // LIVE seed view: retracted corpus docs (band-index takedown,
-          // MinHashBandIndex.deleteDocs) must stop gating arrivals on
-          // the streaming path exactly as they do on the batch gate —
-          // with no tombstones the anti-join is against an empty frame
-          val bands = spark.read.parquet(s"$seedDir/bands")
-            .select("corpus_id", "band", "key", "kp")
-            .join(graft.analytics.Tombstones.read(spark, seedDir, "corpus_id"),
-                  Seq("corpus_id"), "left_anti")
-            .unionByName(segBands)
-          val shingles = spark.read.parquet(s"$seedDir/shingles")
-            .unionByName(segSh)
-          // materialize the verdicts BEFORE the segment writes mutate
-          // the delta dirs the gate plan reads (MinHashBandIndex
-          // .appendAccepted's caller contract)
-          val verdicts = mh.gateFrames(
-            spark, bands, shingles, batch.select("doc_id", "text"))
-            .localCheckpoint(true)
-          verdicts.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(outDir)
-          val accepted = batch
-            .join(verdicts.filter(col("keep") === 1).select("doc_id"),
-                  Seq("doc_id"))
-            .localCheckpoint(true)
-          if (!accepted.isEmpty) {
-            mh.segmentBands(spark, accepted)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id").parquet(bandsDeltaDir)
-            mh.segmentShingles(spark, accepted)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id").parquet(shinglesDeltaDir)
-          }
-        }
-        ()
-      }
-      .start()
+    nearDupStream(stream, seedDir, bandsDeltaDir, shinglesDeltaDir, outDir,
+                  checkpointDir)((_, nd) => nd)
 
   /** STREAMING joint curation (st20's continuous form): each arriving
     * micro-batch of docs gets the full three-stage ledger — quality
-    * rules (stateless), near-dup ingest gate against the seed band
-    * index ∪ the accepted-doc segments of earlier batches (the st19
-    * state discipline, same delta tables, same batch_id < N replay
-    * guard), semantic decon of the doc's vector against the static
-    * benchmark (stateless stream-static) — and only docs passing ALL
-    * stages land a new index segment. The ledger rows (first-drop
-    * stage attribution, cp06's conservation discipline) land
-    * batch-id-partitioned with dynamic overwrite. `emb` is the static
-    * vector side (vec_id aligned with doc_id; label 0 = benchmark). */
+    * rules, the [[neardupIngestGate]] step (same seed opened once per
+    * query start, same tombstones re-read every batch, same delta
+    * tables — see [[nearDupStream]]), semantic decon of the doc's
+    * vector against the static benchmark — and only docs passing ALL
+    * stages land a new index segment. Ledger rows (first-drop stage
+    * attribution) land batch-id-partitioned in `outDir`. `emb` is the
+    * static vector side (vec_id aligned with doc_id; label 0 =
+    * benchmark): persisted unless the caller already has, and released
+    * with the decon bucket map when the query terminates. */
   def curationStream(stream: DataFrame, seedDir: String, emb: DataFrame,
                      bandsDeltaDir: String, shinglesDeltaDir: String,
                      outDir: String, checkpointDir: String,
@@ -706,6 +640,8 @@ object EventStreams {
     // here before the query starts
     graft.functions.CosineSim.register(stream.sparkSession)
     graft.functions.DeconScore.register(stream.sparkSession)
+    val ownsEmb =
+      emb.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     val embP = emb.persist()
     val benchFrame = embP.filter(col("label") === 0)
       .select(col("vec_id").as("bench_id"), col("embedding"))
@@ -716,71 +652,131 @@ object EventStreams {
           benchFrame, "decon.band-index", maxRows = 100000L))
     // decon bucket map built + materialized ONCE before the stream
     // starts (same hoist as deconGate — r12 rebuilt it per batch)
-    val benchChunks = Some(graft.analytics.DataQuality
+    val chunks = graft.analytics.DataQuality
       .deconBenchBucketChunks(benchFrame, bands = b, rows = r)
-      .map(_.localCheckpoint(true)))
+      .map(_.localCheckpoint(true))
+    val q = nearDupStream(stream, seedDir, bandsDeltaDir, shinglesDeltaDir,
+                          outDir, checkpointDir) { (batch, nd) =>
+      StreamShapes.curationLedgerOf(
+        batch.sparkSession, batch, nd, embP, banded = true, Some(chunks),
+        deconBands = b, deconRows = r)
+    }
+    onTermination(q) { () =>
+      if (ownsEmb) embP.unpersist(false)
+      chunks.foreach(releaseCheckpoint)
+    }
+  }
+
+  /** The per-batch step of both near-dup gates.
+    *  - Seed: `bands/` and `shingles/` are opened ONCE, at query start —
+    *    their 64-`kp=`-dir listing is paid per query, not per batch. Its
+    *    rewriters (MinHashBandIndex.mergeSegments / maintainSegments /
+    *    purgeTombstones) run only while the stream is down, so a
+    *    restarted query reads the rewritten seed.
+    *  - Tombstones are re-read EVERY batch: a takedown (deleteDocs)
+    *    masks the gate from the next batch on, as on the batch gate.
+    *  - One read per batch: the micro-batch is materialized once (an
+    *    eager localCheckpoint — batch-sized, bounded), its shingles +
+    *    band keys (MinHashBandIndex.signatures) once; every consumer
+    *    reads those blocks, dropped when the batch ends.
+    *  - State: `decide(batch, nd)` is what lands in `outDir` (doc_id,
+    *    keep, …); its keep = 1 docs land as the batch's segment in the
+    *    two batch-id-partitioned delta tables. Batch N reads only
+    *    segments with batch_id < N, so a crash-replayed batch never
+    *    rejects against its own half-written segment. */
+  private def nearDupStream(stream: DataFrame, seedDir: String,
+                            bandsDeltaDir: String, shinglesDeltaDir: String,
+                            outDir: String, checkpointDir: String)
+                           (decide: (DataFrame, DataFrame) => DataFrame)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val mh = graft.analytics.MinHashBandIndex
+    val seedBands = stream.sparkSession.read.parquet(s"$seedDir/bands")
+      .select("corpus_id", "band", "key", "kp")
+    val seedSh = stream.sparkSession.read.parquet(s"$seedDir/shingles")
+      .select("corpus_id", "sh")
+    def segment(spark: org.apache.spark.sql.SparkSession, dir: String,
+                seed: DataFrame, batchId: Long) = // the seed's columns
+      readDelta(spark, dir, seed.schema.add("batch_id", "long"))
+        .filter(col("batch_id") < batchId).drop("batch_id")
+    def land(df: DataFrame, batchId: Long, dir: String): Unit =
+      df.withColumn("batch_id", lit(batchId))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id").parquet(dir)
     stream.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          import org.apache.spark.sql.types._
-          val mh = graft.analytics.MinHashBandIndex
-          val bandSchema = StructType(Seq(
-            StructField("corpus_id", LongType),
-            StructField("band", IntegerType),
-            StructField("key", LongType),
-            StructField("kp", IntegerType),
-            StructField("batch_id", LongType)))
-          val shSchema = StructType(Seq(
-            StructField("corpus_id", LongType),
-            StructField("sh", ArrayType(LongType, containsNull = false)),
-            StructField("batch_id", LongType)))
-          val segBands = readDelta(spark, bandsDeltaDir, bandSchema)
-            .filter(col("batch_id") < batchId).drop("batch_id")
-          val segSh = readDelta(spark, shinglesDeltaDir, shSchema)
-            .filter(col("batch_id") < batchId).drop("batch_id")
-          // live seed view (same takedown anti-join as neardupIngestGate)
-          val nd = mh.gateFrames(
-            spark,
-            spark.read.parquet(s"$seedDir/bands")
-              .select("corpus_id", "band", "key", "kp")
+      .foreachBatch { (landed: DataFrame, batchId: Long) =>
+        val spark = landed.sparkSession
+        val batch = landed.localCheckpoint(true)
+        val held = scala.collection.mutable.ArrayBuffer(batch)
+        try {
+          // empty micro-batch = no-op (nothing to gate)
+          if (!batch.isEmpty) {
+            val bands = seedBands
               .join(graft.analytics.Tombstones.read(spark, seedDir, "corpus_id"),
                     Seq("corpus_id"), "left_anti")
-              .unionByName(segBands),
-            spark.read.parquet(s"$seedDir/shingles").unionByName(segSh),
-            batch.select("doc_id", "text"))
-          // materialize the ledger BEFORE segment writes mutate the
-          // delta dirs its near-dup stage reads
-          val ledger = StreamShapes.curationLedgerOf(
-            spark, batch, nd, embP, banded = true, benchChunks,
-            deconBands = b, deconRows = r)
-            .localCheckpoint(true)
-          ledger.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(outDir)
-          val accepted = batch
-            .join(ledger.filter(col("keep") === 1).select("doc_id"),
-                  Seq("doc_id"))
-            .localCheckpoint(true)
-          if (!accepted.isEmpty) {
-            mh.segmentBands(spark, accepted)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id").parquet(bandsDeltaDir)
-            mh.segmentShingles(spark, accepted)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id").parquet(shinglesDeltaDir)
+              .unionByName(segment(spark, bandsDeltaDir, seedBands, batchId))
+            val shingles = seedSh.unionByName(
+              segment(spark, shinglesDeltaDir, seedSh, batchId))
+            val sigs = mh.signatures(spark, batch).localCheckpoint(true)
+            held += sigs
+            // materialize the decisions BEFORE the segment writes mutate
+            // the delta dirs their plan reads
+            val out = decide(batch,
+                mh.verdicts(batch, mh.scoredPairs(spark, bands, shingles, sigs)))
+              .localCheckpoint(true)
+            held += out
+            // the output and the two segment writes only read `out` and
+            // `sigs` blocks: independent, so they overlap
+            val accepted = out.filter(col("keep") === 1).select("doc_id")
+            val acc = sigs.join(accepted, Seq("doc_id"))
+            graft.analytics.ParActions.run(
+              Seq(() => land(out, batchId, outDir)) ++
+                (if (accepted.isEmpty) Nil
+                 else Seq(() => land(mh.bandsOf(acc), batchId, bandsDeltaDir),
+                          () => land(mh.shinglesOf(acc), batchId, shinglesDeltaDir))))
           }
-        }
+        } finally held.foreach(releaseCheckpoint)
         ()
       }
       .start()
+  }
+
+  /** Drop the blocks behind an eager localCheckpoint — they ARE the
+    * frame's data, so only once nothing reads it any more. */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false); ()
+      case _ => ()
+    }
+
+  /** Run `release` once when this run of `q` terminates, so what the
+    * query pins does not outlive it: a self-removing listener matched
+    * on the run id, re-checked after registration for a query already
+    * dead. Events are asynchronous — it lands shortly after `stop()`. */
+  private def onTermination(q: org.apache.spark.sql.streaming.StreamingQuery)
+                           (release: () => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import StreamingQueryListener._
+    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val streams = q.sparkSession.streams
+    lazy val listener: StreamingQueryListener = new StreamingQueryListener {
+      def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (e.runId == q.runId) fire()
+    }
+    def fire(): Unit =
+      if (fired.compareAndSet(false, true)) {
+        streams.removeListener(listener)
+        release()
+      }
+    streams.addListener(listener)
+    if (!q.isActive) fire()
+    q
   }
 
   /** STREAMING takedown (st21's continuous form): each micro-batch of

@@ -1959,14 +1959,15 @@ object StreamShapes {
       case None =>
         exactDeconDropsOf(s, cvecs, bench, "cp.ledger.bench-vecs")
     }
-    val dropIds = drops
-      .unionByName(emb.filter(col("label") === 0).select("vec_id")
-        .join(ids, Seq("vec_id")))
-      .distinct()
-      .select(col("vec_id").as("doc_id"), lit(0).as("keep_vec"))
-    val vecKeep = slice.select("doc_id").join(dropIds, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-              coalesce(col("keep_vec"), lit(1)).cast("int").as("keep_vec"))
+    // every slice doc enters with keep 1, every drop id (all ⊆ the
+    // slice) with 0, and the min per doc is the verdict: one shuffle,
+    // not a distinct + an outer join back to the slice
+    val vecKeep = slice.select(col("doc_id"), lit(1).as("keep_vec"))
+      .unionByName(drops
+        .unionByName(emb.filter(col("label") === 0).select("vec_id")
+          .join(ids, Seq("vec_id")))
+        .select(col("vec_id").as("doc_id"), lit(0).as("keep_vec")))
+      .groupBy("doc_id").agg(min("keep_vec").cast("int").as("keep_vec"))
     // qualityFlags threads `source` through for downstream gates; the
     // keep bit itself never reads it, so a source-less stream slice
     // gets a placeholder

@@ -44,6 +44,27 @@ class DedupSpec extends SparkSpec {
     assert(!pairs.contains((2L, 3L)))
   }
 
+  test("dd03: hamming filter of the ≤ 7 candidates equals a maxHamming = 1 call, row for row") {
+    // dd03 serves its near-identity set as blocked7.filter(hamming <= 1);
+    // that is only sound while simhashPairs' candidate set depends on
+    // maxBucket and chunk blocking, never on maxHamming
+    val docs500 = graft.queries.QueryDef.table(spark, sf0001, "documents")
+      .filter(col("doc_id") < 500)
+    val fp = Dedup.simhashFingerprints(docs500).localCheckpoint(true)
+    val blocked7 = Dedup.simhashPairs(spark, docs500, maxHamming = 7,
+                                      fingerprints = Some(fp))
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.select("id_a", "id_b", "hamming").as[(Long, Long, Int)]
+        .collect().toSeq.sorted
+    val filtered = sorted(blocked7.filter(col("hamming") <= 1))
+    val direct = sorted(Dedup.simhashPairs(spark, docs500, maxHamming = 1))
+    assert(filtered == direct,
+      s"filter(hamming <= 1) diverges from maxHamming = 1: $filtered vs $direct")
+    // non-vacuous: the fixture has pairs on both sides of the filter
+    assert(direct.nonEmpty && sorted(blocked7).size > direct.size,
+      s"fixture does not exercise the filter: ${direct.size} pairs")
+  }
+
   test("native minhash_sig is exactly equal to the HOF reference") {
     graft.functions.MinHashSig.register(spark)
     val sigs = docs
@@ -1235,6 +1256,31 @@ class DedupSpec extends SparkSpec {
     val nd2 = Seq((11L, other + " addendum")).toDF("doc_id", "text")
     val r2 = MinHashBandIndex.gate(spark, dir, nd2).collect().head
     assert(r2.getInt(1) == 0 && r2.getLong(2) == 2L, s"doc 2 lost: $r2")
+    // the same takedown through a non-`file:` scheme: the tombstone
+    // checks must go through Hadoop FS, or the retraction is silently
+    // ignored and a replayed delete appends twice
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftlocal.impl", classOf[SchemeLocalFs].getName)
+    val local = java.nio.file.Files.createTempDirectory("mhband-tomb-fs").toString
+    MinHashBandIndex.buildFrom(spark, local,
+      Seq((1L, base), (2L, other)).toDF("doc_id", "text"))
+    val remote = s"graftlocal://$local"
+    def verdictAt(d: String): (Int, Long) = {
+      val r = MinHashBandIndex.gate(spark, d, batch).collect().head
+      (r.getInt(1), if (r.isNullAt(2)) -1L else r.getLong(2))
+    }
+    assert(verdictAt(remote) == ((0, 1L)), s"scheme fixture: ${verdictAt(remote)}")
+    assert(MinHashBandIndex.deleteDocs(spark, remote,
+      Seq(1L).toDF("corpus_id")) == 1L)
+    assert(verdictAt(remote) == ((1, -1L)),
+      s"retraction through the scheme ignored: ${verdictAt(remote)}")
+    assert(MinHashBandIndex.deleteDocs(spark, remote,
+      Seq(1L).toDF("corpus_id")) == 0L, "replayed retraction through the scheme appended")
+    graft.analytics.Tombstones.clear(spark, remote)
+    assert(!new java.io.File(s"$local/tombstones").exists() &&
+           !new java.io.File(s"$local/tombstone_log").exists(),
+           "clear through the scheme left the tombstone segment")
+    assert(verdictAt(remote) == ((0, 1L)), "cleared tombstones still mask")
   }
 
   test("ss17 tombstone probe: recall floor against the tombstone-exact anchor") {

@@ -1560,6 +1560,116 @@ class StreamingSpec extends SparkSpec {
     assert(out(40L) == ((1, "kept")), s"$out")
   }
 
+  /** Poll `cond` for up to 30 s — Spark and streaming listener events
+    * are delivered asynchronously. */
+  private def awaitTrue(what: String)(cond: => Boolean): Unit = {
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (!cond && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(cond, s"timed out waiting for: $what")
+  }
+
+  test("streaming near-dup gates: each micro-batch read once, seed listed once per query") {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val seed = graft.analytics.MinHashBandIndex.ensure(spark, sf0001)
+    // the seed must cross Spark's parallel-discovery threshold, or a
+    // per-batch relisting would run on the driver and go unseen here
+    val kpDirs = new java.io.File(s"$seed/bands").listFiles()
+      .count(_.getName.startsWith("kp="))
+    assert(kpDirs > spark.conf
+      .get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt,
+      s"seed has only $kpDirs kp dirs")
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val arr = graft.analytics.MinHashBandIndex.arrivalsOf(
+        spark.read.parquet(s"$sf0001/documents.parquet"))
+      .select("doc_id", "text").as[(Long, String)].collect().toSeq
+    val slices = (0 until 3).map(i => arr.filter(_._1 % 3 == i))
+    assert(slices.forall(_.nonEmpty))
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(jobs.add)
+    }
+    // run a tagged job and wait until the listener has seen it: every
+    // job started before it has then been delivered too
+    def drain(): Unit = {
+      val tag = s"drain-${System.nanoTime()}"
+      sc.setJobDescription(tag)
+      try spark.range(1).count() finally sc.setJobDescription(null)
+      awaitTrue(s"job $tag delivered")(jobs.contains(tag))
+    }
+    sc.addSparkListener(listener)
+    try Seq("gate", "curation").foreach { kind =>
+      val tmp = Files.createTempDirectory(s"readonce-$kind").toString
+      val landing = s"$tmp/landing"
+      def land(i: Int): Unit = slices(i).toDF("doc_id", "text").coalesce(1)
+        .write.mode("append").parquet(landing)
+      land(0)
+      val src = spark.readStream
+        .schema(spark.read.parquet(landing).schema)
+        .option("maxFilesPerTrigger", "1").parquet(landing)
+      val q =
+        if (kind == "gate")
+          EventStreams.neardupIngestGate(src, seed, s"$tmp/bands",
+            s"$tmp/shingles", s"$tmp/out", s"$tmp/ckpt")
+        else
+          EventStreams.curationStream(src, seed, emb, s"$tmp/bands",
+            s"$tmp/shingles", s"$tmp/out", s"$tmp/ckpt")
+      try {
+        q.processAllAvailable()
+        drain(); jobs.clear()
+        land(1); q.processAllAvailable()
+        land(2); q.processAllAvailable()
+        drain()
+        val relisted = jobs.asScala.filter(_.startsWith("Listing leaf files"))
+        val inputRows = q.recentProgress
+          .filter(_.durationMs.containsKey("addBatch")).map(_.numInputRows).toSeq
+        val problems = Seq(
+          Option.when(relisted.nonEmpty)(
+            s"file listing re-run after the first batch: $relisted"),
+          Option.when(inputRows != slices.map(_.size.toLong))(
+            s"numInputRows $inputRows for landed ${slices.map(_.size)}")
+        ).flatten
+        assert(problems.isEmpty, s"$kind: ${problems.mkString("; ")}")
+      } finally q.stop()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("streaming curation: stop() releases the persisted static side and every batch's blocks") {
+    implicit val sqlCtx = spark.sqlContext
+    val sc = spark.sparkContext
+    val seed = graft.analytics.MinHashBandIndex.ensure(spark, sf0001)
+    // a plan no other test caches, so the query owns its persist
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .filter(col("vec_id") >= 0L)
+    val none = org.apache.spark.storage.StorageLevel.NONE
+    assert(emb.storageLevel == none)
+    val arr = graft.analytics.MinHashBandIndex.arrivalsOf(
+        spark.read.parquet(s"$sf0001/documents.parquet"))
+      .select("doc_id", "text").as[(Long, String)].collect().toSeq
+    val tmp = java.nio.file.Files.createTempDirectory("st20-release").toString
+    val before = sc.getPersistentRDDs.keySet
+    val mem = MemoryStream[(Long, String)]
+    val q = EventStreams.curationStream(
+      mem.toDF().toDF("doc_id", "text"), seed, emb,
+      s"$tmp/bands", s"$tmp/shingles", s"$tmp/out", s"$tmp/ckpt")
+    try {
+      arr.grouped(arr.size / 2 + 1).foreach { b =>
+        mem.addData(b: _*)
+        q.processAllAvailable()
+      }
+      assert(emb.storageLevel != none, "the running query pins its static side")
+    } finally q.stop()
+    awaitTrue("static side released") {
+      emb.storageLevel == none &&
+        (sc.getPersistentRDDs.keySet -- before).isEmpty
+    }
+  }
+
   test("st23: batch watermark-drop accounting equals the streaming engine's drops") {
     implicit val sqlCtx = spark.sqlContext
     // replay the entry's exact arrival schedule (batch = event_id

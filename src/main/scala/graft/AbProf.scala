@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Stable A/B harness for optimization rounds: runs each named entry
   * K times inside ONE warmed session (noop sink, Bench's state
   * hygiene between samples) and prints every sample. Isolated
@@ -21,16 +19,10 @@ object AbProf {
     require(k >= 2, s"k must be >= 2 (warm median drops sample 1): got $k")
     val names = args.drop(1).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val builder = GraftSession.builder()
     // config A/B seam: SPARK_GRAFT_AB_CONF="k=v;k=v" overlays extra
     // session confs so candidate settings can be measured without
-    // touching Bench's committed session builder
+    // touching the committed GraftSession confs
     sys.env.get("SPARK_GRAFT_AB_CONF").foreach(
       _.split(';').filter(_.nonEmpty).foreach { kv =>
         require(kv.contains("="),
@@ -48,9 +40,7 @@ object AbProf {
         val t0 = System.nanoTime()
         q.df(spark, sfDir).write.format("noop").mode("overwrite").save()
         val dt = (System.nanoTime() - t0) / 1e9
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(false))
-        spark.catalog.clearCache()
+        GraftSession.release(spark)
         dt
       }
       val warm = samples.drop(1).sorted

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.analytics.{ClusteredEmbeddings, IvfIndex, Similarity}
@@ -32,15 +31,7 @@ object AnnCrossover {
     val nLists = args.lift(1).map(_.toInt).getOrElse(256)
     val nq = args.lift(2).map(_.toLong).getOrElse(64L)
     val k = args.lift(3).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     def timed[A](body: => A): (A, Double) = {
       val t0 = System.nanoTime()
@@ -54,7 +45,7 @@ object AnnCrossover {
         if (fname == "clustered")
           ClusteredEmbeddings.generate(spark, nVecs)
         else ClusteredEmbeddings.generate(spark, nVecs, sigma = 1e6)
-      emb.repartition(cpus.toInt).write.mode("overwrite")
+      emb.repartition(GraftSession.cpus).write.mode("overwrite")
         .parquet(s"$dir/embeddings.parquet")
       val (_, buildSec) = timed { IvfIndex.ensure(spark, dir, nLists) }
       println(s"""{"probe":"ann_stage","fixture":"$fname","n":$nVecs,""" +

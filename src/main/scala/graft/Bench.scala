@@ -1,5 +1,10 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths}
+
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every registry query on
@@ -57,22 +62,77 @@ object Bench {
   def warmUp(spark: SparkSession, sfDir: String): Unit =
     warmUps(sfDir).foreach { case (name, step) =>
       try step(spark)
-      catch { case scala.util.control.NonFatal(e) =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] warm-up $name failed: $e")
       }
     }
 
+  /** Committed history files of the current generation, most recent
+    * first: the working map (last full run, any sf), then the committed
+    * same-tree pair (sf0.1 / staged sf1). Only a SAME-sf map can vouch
+    * for a sample — without the pair files the staged-sf1 leg ran
+    * unguarded and a single slow window booked a diffuse +150 s across
+    * ~40 untouched entries (r16 first sf1 run, 569 s vs the committed
+    * 420). */
+  private[graft] val HistoryFiles =
+    Seq("BENCH_QUERIES.json", "BENCH_SF01.json", "BENCH_SF1.json")
+
+  /** The previous generation's twin of a history file. */
+  private[graft] def previous(file: String): String =
+    file.stripSuffix(".json") + "_PREV.json"
+
+  private val HistoryEntry = "\"([A-Za-z0-9_]+)\":([0-9.]+)".r
+
+  /** One history generation: the per-query map of the first of `files`
+    * under `baseDir` written at `sfDir`. A missing file is skipped
+    * quietly and another sf's file is ignored; an unreadable or
+    * malformed file is skipped with one `warn` line naming it. A
+    * generation with no same-sf map is reported on `warn` with what
+    * the guard loses (`degraded`): the guard silently falling back to
+    * the absolute threshold is how the r16 staged-sf1 leg absorbed a
+    * slow window (ADVICE r16). */
+  private[graft] def history(baseDir: String, files: Seq[String],
+      sfDir: String, degraded: String,
+      warn: String => Unit = System.err.println(_)): Map[String, Double] = {
+    def parse(f: Path): Map[String, Double] =
+      if (!Files.exists(f)) Map.empty
+      else try {
+        val txt = new String(Files.readAllBytes(f), UTF_8)
+        val qi = txt.indexOf("\"queries\":{")
+        // anchor the end of the queries object on the `,"failed"` key
+        // that always follows it in our own artifact format — a bare
+        // indexOf("}") breaks silently if the object ever stops being
+        // flat (ADVICE r16); fall back to the flat delimiter for
+        // hand-trimmed history files
+        val qe =
+          if (qi < 0) -1
+          else {
+            val anchored = txt.indexOf("},\"failed\"", qi)
+            if (anchored >= 0) anchored else txt.indexOf("}", qi)
+          }
+        if (qe < 0 || !txt.contains("\"sf\":\"")) {
+          warn(s"[bench] history $f skipped: no \"queries\" object or " +
+            "no \"sf\" key")
+          Map.empty
+        } else if (!txt.contains("\"sf\":\"" + sfDir + "\"")) Map.empty
+        else HistoryEntry.findAllMatchIn(txt.substring(qi + 11, qe))
+          .map(m => m.group(1) -> m.group(2).toDouble).toMap
+      } catch { case NonFatal(e) =>
+        warn(s"[bench] history $f skipped: $e")
+        Map.empty
+      }
+    val h = files.iterator.map(f => parse(Paths.get(baseDir, f)))
+      .find(_.nonEmpty).getOrElse(Map.empty)
+    if (h.isEmpty)
+      warn(s"[bench] NO same-sf committed history in " +
+        s"${files.mkString(", ")} for $sfDir — $degraded")
+    h
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cwd = sys.props.getOrElse("user.dir", ".")
+    val spark = GraftSession()
 
     warmUp(spark, sfDir)
 
@@ -127,8 +187,7 @@ object Bench {
       // state hygiene: a query must not tax its successors' numbers —
       // drop any blocks it persisted (localCheckpoint frames, ML caches)
       // once its own timing is booked.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      spark.catalog.clearCache()
+      GraftSession.release(spark)
       (dt, ok)
     }
     def timeOne(q: graft.queries.QueryDef): (Double, Boolean) =
@@ -138,52 +197,6 @@ object Bench {
     // UNCHANGED 1-3 s entries ~2x high — all below the absolute spike
     // threshold. The history file turns "is this sample plausible?"
     // from a fixed constant into a per-query question.
-    val history: Map[String, Double] = {
-      // candidate history files, most-recent-first: the working map
-      // (last full run, any sf), then the committed same-tree pair
-      // (sf0.1 / staged sf1). Only a SAME-sf map can vouch for a
-      // sample — without the pair files the staged-sf1 leg ran
-      // unguarded and a single slow window booked a diffuse +150 s
-      // across ~40 untouched entries (r16 first sf1 run, 569 s vs the
-      // committed 420).
-      val candidates = Seq("BENCH_QUERIES.json", "BENCH_SF01.json",
-                           "BENCH_SF1.json")
-      def parse(fname: String): Map[String, Double] = {
-        val f = java.nio.file.Paths.get(
-          sys.props.getOrElse("user.dir", "."), fname)
-        try {
-          val txt = new String(java.nio.file.Files.readAllBytes(f),
-            java.nio.charset.StandardCharsets.UTF_8)
-          if (!txt.contains("\"sf\":\"" + sfDir + "\"")) Map.empty
-          else {
-            val qi = txt.indexOf("\"queries\":{")
-            // anchor the end of the queries object on the `,"failed"`
-            // key that always follows it in our own artifact format —
-            // a bare indexOf("}") breaks silently if the object ever
-            // stops being flat (ADVICE r16); fall back to the flat
-            // delimiter for hand-trimmed history files
-            val qe = {
-              val anchored = txt.indexOf("},\"failed\"", qi)
-              if (anchored >= 0) anchored else txt.indexOf("}", qi)
-            }
-            if (qi < 0 || qe < 0) Map.empty
-            else "\"([A-Za-z0-9_]+)\":([0-9.]+)".r
-              .findAllMatchIn(txt.substring(qi + 11, qe))
-              .map(m => m.group(1) -> m.group(2).toDouble).toMap
-          }
-        } catch { case _: Throwable => Map.empty }
-      }
-      val h = candidates.iterator.map(parse).find(_.nonEmpty)
-        .getOrElse(Map.empty)
-      // The guard silently degrading to absolute-threshold-only is
-      // exactly how the r16 staged-sf1 leg absorbed a slow window —
-      // make the degraded mode loud (ADVICE r16).
-      if (h.isEmpty)
-        System.err.println(s"[bench] NO same-sf committed history for " +
-          s"$sfDir — slow-window re-measure guard is running on the " +
-          "absolute 3s threshold only")
-      h
-    }
     // PREVIOUS committed generation (VERDICT r16 #4): the per-run 1.5x
     // trigger has a compounding blind spot — two consecutive +20%
     // drifts each stay under 1.5x of the history THEY were measured
@@ -194,31 +207,12 @@ object Bench {
     // two (so a history that itself absorbed a bad window — the r16
     // sf1 leg — cannot raise the bar), and (b) re-measures any sample
     // >1.3x a history that is itself >1.3x its predecessor.
-    val prevHistory: Map[String, Double] = {
-      val candidates = Seq("BENCH_QUERIES_PREV.json",
-                           "BENCH_SF01_PREV.json", "BENCH_SF1_PREV.json")
-      def parse(fname: String): Map[String, Double] = {
-        val f = java.nio.file.Paths.get(
-          sys.props.getOrElse("user.dir", "."), fname)
-        try {
-          val txt = new String(java.nio.file.Files.readAllBytes(f),
-            java.nio.charset.StandardCharsets.UTF_8)
-          if (!txt.contains("\"sf\":\"" + sfDir + "\"")) Map.empty
-          else {
-            val qi = txt.indexOf("\"queries\":{")
-            val qe = {
-              val anchored = txt.indexOf("},\"failed\"", qi)
-              if (anchored >= 0) anchored else txt.indexOf("}", qi)
-            }
-            if (qi < 0 || qe < 0) Map.empty
-            else "\"([A-Za-z0-9_]+)\":([0-9.]+)".r
-              .findAllMatchIn(txt.substring(qi + 11, qe))
-              .map(m => m.group(1) -> m.group(2).toDouble).toMap
-          }
-        } catch { case _: Throwable => Map.empty }
-      }
-      candidates.iterator.map(parse).find(_.nonEmpty).getOrElse(Map.empty)
-    }
+    val history = Bench.history(cwd, HistoryFiles, sfDir,
+      "slow-window re-measure guard is running on the absolute 3s " +
+      "threshold only")
+    val prevHistory = Bench.history(cwd, HistoryFiles.map(previous), sfDir,
+      "the 1.5x trigger vouches on the current generation alone and " +
+      "the trend clause is off")
     // Spike / window re-measurement: this box shows transient
     // multi-second CPU stalls AND slow multi-minute windows where
     // IDENTICAL same-tree runs differ by ~36 s (measured r15 band). A
@@ -280,13 +274,11 @@ object Bench {
     val qs = entries.mkString("{", ",", "}")
     val fullJson =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir"}"""
-    val outFile = java.nio.file.Paths.get(
-      sys.props.getOrElse("user.dir", "."), "BENCH_QUERIES.json")
+    val outFile = Paths.get(cwd, "BENCH_QUERIES.json")
     // the committed full map comes only from whole-registry runs; a
     // subset (isolation/profiling) invocation must not clobber it
     if (names.isEmpty) {
-      java.nio.file.Files.write(outFile,
-        (fullJson + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      Files.write(outFile, (fullJson + "\n").getBytes(UTF_8))
     }
     val chunks = entries.grouped(20).toSeq
     chunks.zipWithIndex.foreach { case (c, i) =>

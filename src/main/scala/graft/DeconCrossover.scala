@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.analytics.{ClusteredEmbeddings, DataQuality}
@@ -49,15 +49,7 @@ object DeconCrossover {
   def main(args: Array[String]): Unit = {
     val nVecs = args.headOption.map(_.toLong).getOrElse(200000L)
     val benchOdds = args.lift(1).map(_.toInt).getOrElse(400)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val tau = DataQuality.SemanticDeconTau
     val strongTau = 0.9

@@ -1,0 +1,39 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one session configuration of the driver tools (Bench, Verify,
+  * AbProf, JobProf, ScaleProbe, Explain, the two crossover probes) and
+  * of the test suite: `local[n]` with `n` shuffle partitions, AQE on,
+  * UTC session time zone, UI off. `n` is `SPARK_GRAFT_CPUS` when set,
+  * else the cores the JVM may use — so no tool oversubscribes a box by
+  * default, and every tool measures under the same confs. */
+object GraftSession {
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim).filter(_.nonEmpty)
+    .map(_.toInt).getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The configured builder; a caller may add its own confs (AbProf's
+    * A/B overlay, the tests' warehouse) before `getOrCreate`. */
+  def builder(n: Int = cpus): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$n]")
+      .config("spark.sql.shuffle.partitions", n.toLong)
+      .config("spark.sql.adaptive.enabled", true)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", false)
+
+  def apply(logLevel: String = "WARN"): SparkSession = {
+    val spark = builder().getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
+  /** State hygiene between measured or dumped entries: drop every block
+    * the session persisted (localCheckpoint frames, ML caches) and the
+    * cached-table registry, so one entry never taxes its successors or
+    * grows the session's cache across a registry run. */
+  def release(spark: SparkSession): Unit = {
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    spark.catalog.clearCache()
+  }
+}

@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB wall-time profile of one registry entry — the tool behind
   * the "orchestration-bound vs compute-bound" calls the round verdicts
@@ -22,18 +21,11 @@ object JobProf {
     require(args.nonEmpty, "usage: JobProf <queryName> [sfDir]")
     val name = args(0)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession("ERROR")
 
     val starts = new ConcurrentHashMap[Int, (Long, String)]()
     val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Double, String)]()
+    @volatile var profiling = false // stage lines for the entry only
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         val desc = Option(j.properties)
@@ -52,7 +44,7 @@ object JobProf {
         val si = e.stageInfo
         val wall = (for {a <- si.completionTime; b <- si.submissionTime}
                     yield (a - b) / 1e3).getOrElse(-1.0)
-        if (wall > 0.5)
+        if (profiling && wall > 0.5)
           println(f"   [stage ${si.stageId}%4d] $wall%7.3f s  " +
             f"${si.numTasks}%4d tasks  run=${si.taskMetrics.executorRunTime / 1e3}%.2f s  " +
             s"${si.name.take(160)}")
@@ -61,31 +53,27 @@ object JobProf {
 
     val q = SparkEntry.registry.find(_.name == name)
       .getOrElse(sys.error(s"unknown query: $name"))
-    // warm-up on an unrelated light entry so codegen/classloading noise
-    // doesn't book against the profiled one
-    try SparkEntry.queries("q05_group_count")(spark, sfDir).count()
-    catch { case _: Throwable => () }
-    Thread.sleep(200)
-    done.clear()
+    // Bench's warm-up (loud, all steps): JVM/codegen noise and every
+    // offline artifact build happen here, so an entry that probes an
+    // artifact books the probe, never the build (Bench's contract)
+    Bench.warmUp(spark, sfDir)
+    // the listener bus is asynchronous: let it deliver, then take what
+    // has ended since the last drain
+    def drain(): Seq[(Int, Double, String)] = {
+      Thread.sleep(200)
+      Iterator.continually(done.poll()).takeWhile(_ != null).toSeq
+    }
+    drain()
+    profiling = true
 
     val t0 = System.nanoTime()
     val frame = q.df(spark, sfDir)
     val tBuild = (System.nanoTime() - t0) / 1e9
-    val buildJobs = {
-      Thread.sleep(100)
-      val xs = new scala.collection.mutable.ArrayBuffer[(Int, Double, String)]
-      var x = done.poll(); while (x != null) { xs += x; x = done.poll() }
-      xs.toSeq
-    }
+    val buildJobs = drain()
     val t1 = System.nanoTime()
     frame.write.format("noop").mode("overwrite").save()
     val tWrite = (System.nanoTime() - t1) / 1e9
-    Thread.sleep(200)
-    val writeJobs = {
-      val xs = new scala.collection.mutable.ArrayBuffer[(Int, Double, String)]
-      var x = done.poll(); while (x != null) { xs += x; x = done.poll() }
-      xs.toSeq
-    }
+    val writeJobs = drain()
 
     def show(tag: String, wall: Double, jobs: Seq[(Int, Double, String)]): Unit = {
       println(f"== $tag: wall $wall%.2f s, ${jobs.size} jobs, " +
@@ -100,18 +88,12 @@ object JobProf {
 
     // warm repeat: same entry, same JVM — the codegen/JIT-amortized
     // number a long-lived session (or the bench's spike re-run) sees
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    spark.catalog.clearCache()
-    done.clear()
+    GraftSession.release(spark)
+    drain()
     val t2 = System.nanoTime()
     q.df(spark, sfDir).write.format("noop").mode("overwrite").save()
     val tWarm = (System.nanoTime() - t2) / 1e9
-    Thread.sleep(200)
-    val warmJobs = {
-      val xs = new scala.collection.mutable.ArrayBuffer[(Int, Double, String)]
-      var x = done.poll(); while (x != null) { xs += x; x = done.poll() }
-      xs.toSeq
-    }
+    val warmJobs = drain()
     show("WARM REPEAT (build+write)", tWarm, warmJobs)
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up probe: materializes an N×-replicated copy of the
@@ -22,15 +22,7 @@ object ScaleProbe {
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val workDir = args.lift(2).getOrElse(
       s"${sys.props("java.io.tmpdir")}/graft-scale$factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val rawNames = if (args.length > 3) args.drop(3).toSet else Set.empty[String]
     // stageonly: materialize every table group and run NO probes — used
@@ -92,7 +84,7 @@ object ScaleProbe {
       // it into one 50 MB parquet file would hand explode-amplified
       // text pipelines (dq03/dc01/bp01) a SINGLE input task — measuring
       // the fixture's file layout, not the operator's plan
-      df.repartition(math.max(factor, cpus.toInt))
+      df.repartition(math.max(factor, GraftSession.cpus))
         .write.mode("overwrite").parquet(s"$workDir/$name.parquet")
 
     // inputs are replicated lazily, per enabled probe group — a
@@ -176,8 +168,7 @@ object ScaleProbe {
       val n = body
       val dt = (System.nanoTime() - t0) / 1e9
       println(f"""{"probe":"$name","sec":$dt%.2f,"rows":$n,"factor":$factor}""")
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      spark.catalog.clearCache()
+      GraftSession.release(spark)
     }
 
     import graft.analytics.{Dedup, IvfIndex, Similarity}
@@ -450,7 +441,7 @@ object ScaleProbe {
           df.count()
         }
       }
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
+      spark.conf.set("spark.sql.shuffle.partitions", GraftSession.cpus.toLong)
     }
     spark.stop()
   }

@@ -81,12 +81,15 @@ object GraphOps {
     * gr03 lineage reason (O(rounds²) re-peel otherwise — measured
     * 38.7 → 3.8 s at 30×). */
   def peelSummary(e0in: DataFrame, c0in: DataFrame, k: Int): DataFrame = {
-    // skip the defensive copy when the caller already materialized the
+    // skip the defensive copy when the caller already checkpointed the
     // frame (st27 checkpoints both inputs for its own cross-consumers;
-    // re-checkpointing them was a redundant full-copy job per input)
+    // re-checkpointing them was a redundant full-copy job per input). A
+    // plain RDD-backed frame (`createDataFrame(rdd)`) is a LogicalRDD
+    // too, but its RDD recomputes on every round — it gets the copy.
     def ensureEager(df: DataFrame): DataFrame =
       df.queryExecution.analyzed match {
-        case _: org.apache.spark.sql.execution.LogicalRDD => df
+        case r: org.apache.spark.sql.execution.LogicalRDD
+            if r.rdd.isCheckpointed => df
         case _ => df.localCheckpoint(true)
       }
     val e0 = ensureEager(e0in)

@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.SparkEntry
+import graft.analytics.GraphOps
 
 /** gr01 — join-based iterative PageRank with scaled-integer
   * determinism. The reference truth is an independent in-memory
@@ -125,6 +129,40 @@ class GraphOpsSpec extends SparkSpec {
     // fixpoint: rounds 2 and 3 identical — the 4-core is K5
     assert(rows(2) == ((2, 5L, 10L, 5L)) && rows(3) == ((3, 5L, 10L, 5L)),
            rows.toString)
+  }
+
+  test("peelSummary: an RDD-backed edge frame is evaluated once, not once per round") {
+    // the gr03 graph (K5 plus the tendril f—g—h off a) as a < b edges
+    val k5 = for {
+      x <- Seq("a", "b", "c", "d", "e")
+      y <- Seq("a", "b", "c", "d", "e") if x < y
+    } yield (x, y)
+    val edges = k5 ++ Seq(("a", "f"), ("f", "g"), ("g", "h"))
+    val census = GraphOps.degreeCensus(edges.toDF("a", "b"))
+      .localCheckpoint(true)
+    // a LogicalRDD whose RDD is not checkpointed: every read re-runs
+    // the source's map
+    val reads = spark.sparkContext.longAccumulator("peel-source-reads")
+    val rdd = spark.sparkContext.parallelize(edges, 2)
+      .map { case (a, b) => reads.add(1); Row(a, b) }
+    val fromRdd = spark.createDataFrame(rdd,
+      StructType.fromDDL("a STRING, b STRING"))
+    val got = GraphOps.peelSummary(fromRdd, census, 4)
+      .as[(Int, Long, Long, Long)].collect().toSet
+    assert(reads.sum == edges.size,
+      s"source evaluated ${reads.sum.toDouble / edges.size}x, want 1x")
+    // st27's inputs: an eagerly checkpointed frame is a LogicalRDD over
+    // a checkpointed RDD, the one shape that skips the defensive copy
+    val checkpointed = edges.toDF("a", "b").localCheckpoint(true)
+    assert(checkpointed.queryExecution.analyzed match {
+      case r: LogicalRDD => r.rdd.isCheckpointed
+      case _ => false
+    })
+    val want = GraphOps.peelSummary(checkpointed, census, 4)
+      .as[(Int, Long, Long, Long)].collect().toSet
+    assert(want == Set((0, 8L, 13L, 5L), (1, 5L, 10L, 5L), (2, 5L, 10L, 5L)),
+      want.toString)
+    assert(got == want, s"$got vs $want")
   }
 
   test("st27 streaming twin: row-equal to the batch entry; a replayed batch is a no-op") {

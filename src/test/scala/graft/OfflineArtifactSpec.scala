@@ -146,4 +146,22 @@ class OfflineArtifactSpec extends SparkSpec {
     assert(hits.isEmpty, "route these through OfflineArtifact:\n" +
       hits.mkString("\n"))
   }
+
+  test("tripwire: no SparkSession.builder outside GraftSession") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"source dir not found from ${root.getAbsolutePath}")
+    def scalaFiles(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.sortBy(_.getName).flatMap { f =>
+        if (f.isDirectory) scalaFiles(f)
+        else if (f.getName.endsWith(".scala")) Seq(f)
+        else Nil
+      }
+    val hits = for {
+      f <- scalaFiles(root)
+      (line, i) <- Files.readAllLines(f.toPath).asScala.zipWithIndex
+      if line.contains("SparkSession.builder")
+    } yield s"${root.toPath.relativize(f.toPath)}:${i + 1}: ${line.trim}"
+    assert(hits.map(_.takeWhile(_ != ':')) == Seq("graft/GraftSession.scala"),
+      "build sessions through GraftSession:\n" + hits.mkString("\n"))
+  }
 }

@@ -7,12 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * forks a single test JVM). */
 object SparkTestBase {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    // the tools' session confs at a fixed local[4]
+    val s = GraftSession.builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       // fresh throwaway warehouse per JVM: saveAsTable tests must not
       // collide with a previous run's leftover spark-warehouse dir
       .config("spark.sql.warehouse.dir",

@@ -125,7 +125,7 @@ object Bench {
       .find(_.nonEmpty).getOrElse(Map.empty)
     if (h.isEmpty)
       warn(s"[bench] NO same-sf committed history in " +
-        s"${files.mkString(", ")} for $sfDir — $degraded")
+        s"${files.mkString(", ")} for $sfDir -- $degraded")
     h
   }
 

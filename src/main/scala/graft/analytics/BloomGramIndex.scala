@@ -1,5 +1,8 @@
 package graft.analytics
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -132,26 +135,36 @@ object BloomGramIndex {
     * numBits) the filter was created with — a later incremental merge
     * must build its delta with the SAME sizing or `mergeInPlace`
     * rejects it as incompatible. The sidecar lands FIRST and the filter
-    * becomes visible last, by one atomic rename: a visible filter
-    * always has its sizing. */
+    * becomes visible last, by one rename: a visible filter always has
+    * its sizing and is never partial. A replayed batch rewrites an
+    * existing version: where `rename` does not overwrite (HDFS) that
+    * version is deleted first, so it is briefly absent, never torn. */
   private def writeFilter(path: String, bytes: Array[Byte],
                           est: Long, bits: Long): Unit = {
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(path + ".meta"),
-      s"$est:$bits".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val tmp = java.nio.file.Paths.get(path + ".tmp")
-    java.nio.file.Files.write(tmp, bytes)
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(path),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    ()
+    val (fs, p) = OfflineArtifact.fsPath(SparkSession.active, path)
+    def write(to: Path, b: Array[Byte]): Unit = {
+      val out = fs.create(to, true)
+      try out.write(b) finally out.close()
+    }
+    write(new Path(path + ".meta"), s"$est:$bits".getBytes(UTF_8))
+    val tmp = new Path(path + ".tmp")
+    write(tmp, bytes)
+    if (!fs.rename(tmp, p)) {
+      OfflineArtifact.remove(fs, p)
+      OfflineArtifact.move(fs, tmp, p)
+    }
+  }
+
+  private def readBytes(path: String): Array[Byte] = {
+    val (fs, p) = OfflineArtifact.fsPath(SparkSession.active, path)
+    val in = fs.open(p)
+    try in.readAllBytes() finally in.close()
   }
 
   /** The (estItems, numBits) sizing recorded beside a filter file. */
   def sizing(path: String): (Long, Long) = {
-    val Array(est, bits) = new String(
-      java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path + ".meta")),
-      java.nio.charset.StandardCharsets.UTF_8).split(":")
+    val Array(est, bits) =
+      new String(readBytes(path + ".meta"), UTF_8).split(":")
     (est.toLong, bits.toLong)
   }
 
@@ -185,11 +198,10 @@ object BloomGramIndex {
       .head().getAs[Array[Byte]](0)
     val merged =
       if (deltaBytes == null) // empty batch: nothing to insert
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(prevPath))
+        readBytes(prevPath)
       else {
         val prev = org.apache.spark.util.sketch.BloomFilter.readFrom(
-          java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(prevPath)))
+          readBytes(prevPath))
         prev.mergeInPlace(
           org.apache.spark.util.sketch.BloomFilter.readFrom(deltaBytes))
         val out = new java.io.ByteArrayOutputStream()
@@ -219,10 +231,10 @@ object BloomGramIndex {
     *
     * Returns the number of versions deleted. */
   def pruneChain(filterDir: String, keepLast: Int = 2): Int = {
-    val dir = new java.io.File(filterDir)
+    val (fs, dir) = OfflineArtifact.fsPath(SparkSession.active, filterDir)
     val pat = "filter_(\\d+)\\.bf".r
-    val versions = Option(dir.listFiles()).getOrElse(Array.empty)
-      .flatMap(f => f.getName match {
+    val versions = OfflineArtifact.children(SparkSession.active, filterDir)
+      .flatMap(st => st.getPath.getName match {
         case pat(v) => Some(v.toLong)
         case _      => None
       })
@@ -231,8 +243,8 @@ object BloomGramIndex {
       val horizon = versions.max - keepLast
       val doomed = versions.filter(_ <= horizon)
       doomed.foreach { v =>
-        new java.io.File(dir, s"filter_$v.bf").delete()
-        new java.io.File(dir, s"filter_$v.bf.meta").delete()
+        OfflineArtifact.remove(fs, new Path(dir, s"filter_$v.bf"))
+        OfflineArtifact.remove(fs, new Path(dir, s"filter_$v.bf.meta"))
       }
       doomed.length
     }

@@ -72,31 +72,24 @@ object Int8Index {
 
   /** Physically apply the tombstones: codes are per-vector (no
     * partition structure to preserve), so the purge is one filtered
-    * staging rewrite of the codes dir, swapped in via [[StagedSwap]]'s
-    * move-first protocol before the tombstone segment is cleared — a
-    * crash at any point leaves the old codes, the rewritten ones, or a
-    * transient old ∪ staged duplicate state (deleted rows still masked
-    * by the intact tombstones; never a state where the codes exist
-    * only in the reader-invisible staging dir), and replaying the
-    * purge converges (staging recovery + the deduplicating rewrite).
-    * Returns the number of rows dropped. */
+    * rewrite of the codes dir through [[OfflineArtifact.stagedSwap]],
+    * before the tombstone segment is cleared — deleted rows stay masked
+    * through every crash window. Returns the number of rows dropped. */
   def purgeTombstones(spark: SparkSession, dir: String): Long = {
     val recovered =
-      StagedSwap.recover(new java.io.File(dir), "purge").contains("codes")
+      OfflineArtifact.recover(spark, dir, "purge").contains("codes")
     val tombs = Tombstones.read(spark, dir).persist()
     val masked =
       try spark.read.parquet(s"$dir/codes")
         .join(tombs, Seq("vec_id"), "left_semi").count()
       finally ()
-    if (masked > 0L || recovered) {
-      val codes = new java.io.File(s"$dir/codes")
-      val tmp = StagedSwap.stagingFor(new java.io.File(dir), "purge", "codes")
-      spark.read.parquet(codes.getPath)
-        .join(tombs, Seq("vec_id"), "left_anti")
-        .dropDuplicates("vec_id") // converges a crash-recovered duplicate dir
-        .write.mode("overwrite").parquet(tmp.getPath)
-      StagedSwap.swapIn(codes, tmp)
-    }
+    if (masked > 0L || recovered)
+      OfflineArtifact.stagedSwap(spark, s"$dir/codes", "purge") { tmp =>
+        spark.read.parquet(s"$dir/codes")
+          .join(tombs, Seq("vec_id"), "left_anti")
+          .dropDuplicates("vec_id") // converges a crash-recovered duplicate dir
+          .write.mode("overwrite").parquet(tmp)
+      }
     tombs.unpersist(false)
     Tombstones.clear(spark, dir)
     masked

@@ -257,9 +257,8 @@ object IvfIndex {
     val stamp = batch.agg(
       bit_xor(xxhash64(col("vec_id"), to_json(col("embedding")))))
       .head().getLong(0)
-    val logF = new java.io.File(s"$dir/append_log")
-    val seen = logF.exists() &&
-      spark.read.parquet(logF.getPath)
+    val seen = OfflineArtifact.exists(spark, s"$dir/append_log") &&
+      spark.read.parquet(s"$dir/append_log")
         .filter(col("batch_stamp") === stamp).limit(1).count() > 0
     if (seen) 0L else appendBatch(spark, dir, batch)
   }
@@ -294,20 +293,18 @@ object IvfIndex {
   /** Compact the small files [[appendBatch]] accumulates inside hot
     * list partitions: every list with more than `maxFilesPerList`
     * parquet files is rewritten IN PLACE (partition-local read →
-    * coalesced rewrite into a dot-prefixed staging dir Spark ignores →
-    * file swap); cold lists are untouched, so cost ∝ the hot lists'
-    * data, never the index. Content-neutral by construction — a pure
-    * file-layout operation, pinned in DedupSpec by row-set equality
-    * and an unchanged exact probe across the compaction. This is the
+    * coalesced rewrite through [[OfflineArtifact.stagedSwap]]); cold
+    * lists are untouched, so cost ∝ the hot lists' data, never the
+    * index. Content-neutral by construction — a pure file-layout
+    * operation, pinned in DedupSpec by row-set equality and an
+    * unchanged exact probe across the compaction. This is the
     * maintenance half of the daily-ingest story: appends keep the
     * index fresh at batch cost, the compactor keeps per-probe file
     * counts bounded without ever re-running assignment or training.
-    * (An object-store deployment writes new segments under a fresh
-    * prefix and flips a manifest pointer instead of renaming — same
-    * per-list independence.) Returns the number of lists compacted. */
+    * Returns the number of lists compacted. */
   def compactLists(spark: SparkSession, dir: String,
                    maxFilesPerList: Int = 8): Int = {
-    val base = new java.io.File(s"$dir/assignments")
+    val base = s"$dir/assignments"
     // complete any interrupted swap first; a recovered leaf may hold
     // old ∪ staged DUPLICATES, so it is force-recompacted below and the
     // rewrite's vec_id dedup converges its row set. "purge" staging is
@@ -316,25 +313,20 @@ object IvfIndex {
     // swap here is safe — its tombstones were never cleared, so the
     // moved-in rows stay masked by [[liveAssignments]], and the forced
     // recompaction dedups the leaf.
-    val recovered = (StagedSwap.recover(base, "compact") ++
-                     StagedSwap.recover(base, "purge")).toSet
-    val hot = Option(base.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("list="))
-      .filter(d => recovered(d.getName) ||
-                   StagedSwap.dataFiles(d).length > maxFilesPerList)
-    hot.foreach { leaf =>
-      val tmp = StagedSwap.stagingFor(base, "compact", leaf.getName)
-      // the write below is an action, so the leaf is fully read and
-      // materialized into the staging dir BEFORE any old file is
-      // touched — a crash before the staged _SUCCESS leaves the leaf
-      // intact; [[StagedSwap.swapIn]] then moves the staged files IN
-      // before deleting the superseded ones, so no crash point leaves
-      // the data only in a reader-invisible staging dir
-      spark.read.parquet(leaf.getPath)
-        .dropDuplicates("vec_id") // converges a crash-recovered duplicate leaf
-        .coalesce(1)
-        .write.mode("overwrite").parquet(tmp.getPath)
-      StagedSwap.swapIn(leaf, tmp)
+    val recovered = (OfflineArtifact.recover(spark, base, "compact") ++
+                     OfflineArtifact.recover(spark, base, "purge")).toSet
+    val hot = OfflineArtifact.children(spark, base)
+      .filter(_.isDirectory).map(_.getPath.getName)
+      .filter(_.startsWith("list="))
+      .filter(l => recovered(l) || OfflineArtifact.dataFiles(
+        spark, s"$base/$l").length > maxFilesPerList)
+    hot.foreach { l =>
+      OfflineArtifact.stagedSwap(spark, s"$base/$l", "compact") { tmp =>
+        spark.read.parquet(s"$base/$l")
+          .dropDuplicates("vec_id") // converges a crash-recovered duplicate leaf
+          .coalesce(1)
+          .write.mode("overwrite").parquet(tmp)
+      }
     }
     hot.length
   }
@@ -368,20 +360,14 @@ object IvfIndex {
   /** Physically apply the tombstones: rewrite ONLY the list partitions
     * that still hold tombstoned rows (discovered by one column-pruned
     * semi-join — the touched-list set is ≤ nLists ints of driver
-    * metadata), then clear the tombstone segment. Same partition-local
-    * [[StagedSwap]] move-first discipline as [[compactLists]]: a crash
-    * at any point leaves the old leaf, the rewritten one, or a
-    * transient old ∪ staged duplicate state — never a leaf whose data
-    * exists only in the reader-invisible staging dir — with tombstones
-    * intact (cleared last) so deleted rows stay masked throughout, and
-    * replaying the purge converges (staging recovery + a deduplicating
-    * rewrite). Cost ∝ the touched lists' data, never the index.
-    * Returns the number of lists rewritten. */
+    * metadata), then clear the tombstone segment. Each list goes
+    * through [[OfflineArtifact.stagedSwap]], like [[compactLists]];
+    * tombstones are cleared last, so deleted rows stay masked through
+    * every crash window. Cost ∝ the touched lists' data, never the
+    * index. Returns the number of lists rewritten. */
   def purgeTombstones(spark: SparkSession, dir: String): Int = {
-    val base = new java.io.File(s"$dir/assignments")
-    // complete any interrupted swap first ([[StagedSwap]]'s move-first
-    // protocol: no crash point ever leaves a leaf's data only in the
-    // reader-invisible staging dir); recovered leaves may hold
+    val base = s"$dir/assignments"
+    // complete any interrupted swap first; recovered leaves may hold
     // old ∪ staged duplicates, so they are force-rewritten below and
     // the rewrite's vec_id dedup converges their row set.
     // BOTH ops' staging is recovered here, not just "purge": a
@@ -391,8 +377,8 @@ object IvfIndex {
     // tombstoned vec_ids back into the leaf with nothing left to mask
     // them. Folding those leaves into `touched` rewrites them under
     // the tombstone anti-join before the clear.
-    val recovered = (StagedSwap.recover(base, "purge") ++
-                     StagedSwap.recover(base, "compact"))
+    val recovered = (OfflineArtifact.recover(spark, base, "purge") ++
+                     OfflineArtifact.recover(spark, base, "compact"))
       .filter(_.startsWith("list="))
       .map(_.stripPrefix("list=").toInt)
     val tombs = readTombstones(spark, dir).persist()
@@ -402,14 +388,13 @@ object IvfIndex {
         .select("list").distinct().collect().map(_.getInt(0)) ++
         recovered).distinct
     touched.foreach { l =>
-      val leaf = new java.io.File(base, s"list=$l")
-      val tmp = StagedSwap.stagingFor(base, "purge", s"list=$l")
-      spark.read.parquet(leaf.getPath)
-        .join(tombs, Seq("vec_id"), "left_anti")
-        .dropDuplicates("vec_id") // converges a crash-recovered duplicate leaf
-        .coalesce(1)
-        .write.mode("overwrite").parquet(tmp.getPath)
-      StagedSwap.swapIn(leaf, tmp)
+      OfflineArtifact.stagedSwap(spark, s"$base/list=$l", "purge") { tmp =>
+        spark.read.parquet(s"$base/list=$l")
+          .join(tombs, Seq("vec_id"), "left_anti")
+          .dropDuplicates("vec_id") // converges a crash-recovered duplicate leaf
+          .coalesce(1)
+          .write.mode("overwrite").parquet(tmp)
+      }
     }
     tombs.unpersist(false)
     // clear LAST: tombstones outlive every rewrite, so a crash above
@@ -449,47 +434,22 @@ object IvfIndex {
     * OWN live content — base ∪ appended segments with tombstoned rows
     * excluded, so the rebuild doubles as the terminal purge — into a
     * sibling staging dir with freshly learned centroids, codebooks,
-    * and drift baseline, then swapped in under a marker protocol whose
-    * every crash state the next call recovers:
-    *
-    *  - staged dir without `_COMPLETE` → discarded (old index intact);
-    *  - `_COMPLETE` present, target present → the swap re-runs;
-    *  - `_COMPLETE` present, target already moved aside → the staged
-    *    index is moved in and the stale copy dropped;
-    *  - leftover stale/trash dirs → dropped.
+    * and drift baseline, then swapped in by
+    * [[OfflineArtifact.swapDir]], whose every crash state the next call
+    * recovers.
     *
     * The append log is carried forward (its rows are folded into the
     * rebuilt base; the log keeps [[appendBatchOnce]] replay-idempotent
     * across the rebuild), and one `rebuild_log` provenance row records
     * (row count, content stamp, pre-rebuild drift ratio). Single-
-    * maintenance-writer discipline like every index mutation here; an
-    * object store implements the same swap as a manifest-pointer flip.
+    * maintenance-writer discipline like every index mutation here.
     * Returns true iff a rebuild (or the completion of an interrupted
     * swap) happened. */
   def ensureFresh(spark: SparkSession, dir: String,
                   nLists: Int = DefaultLists, lloydIters: Int = 2,
                   force: Boolean = false): Boolean = {
-    val target = new java.io.File(dir)
-    val fresh = new java.io.File(dir + "-fresh")
-    val trash = new java.io.File(dir + "-stale")
-    def swapIn(): Unit = {
-      if (target.exists()) {
-        StagedSwap.rmrf(trash)
-        java.nio.file.Files.move(target.toPath, trash.toPath)
-        ()
-      }
-      java.nio.file.Files.move(fresh.toPath, target.toPath)
-      new java.io.File(target, "_COMPLETE").delete()
-      StagedSwap.rmrf(trash)
-    }
     // recover an interrupted swap before anything else
-    if (new java.io.File(fresh, "_COMPLETE").exists()) {
-      swapIn()
-      return true
-    }
-    if (fresh.exists()) StagedSwap.rmrf(fresh) // uncommitted stage
-    if (trash.exists()) StagedSwap.rmrf(trash) // completed swap's leftovers
-    new java.io.File(target, "_COMPLETE").delete() // stray marker
+    if (OfflineArtifact.swapDir(spark, dir)) return true
     val st = driftStatus(spark, dir)
     if (!force && !st.needsRebuild) return false
     // materialize the live rows once: the build runs several actions
@@ -497,28 +457,23 @@ object IvfIndex {
     // decoupled from the dir about to be swapped
     val live = liveAssignments(spark, dir).drop("list", "res_codes")
       .localCheckpoint(true)
-    buildIndexFrom(spark, live, fresh.getPath, nLists, lloydIters)
-    if (new java.io.File(s"$dir/append_log").exists())
-      spark.read.parquet(s"$dir/append_log")
-        .write.mode("overwrite").parquet(s"${fresh.getPath}/append_log")
-    if (new java.io.File(s"$dir/rebuild_log").exists())
-      spark.read.parquet(s"$dir/rebuild_log")
-        .write.mode("overwrite").parquet(s"${fresh.getPath}/rebuild_log")
+    val fresh = s"$dir-fresh"
+    buildIndexFrom(spark, live, fresh, nLists, lloydIters)
+    Seq("append_log", "rebuild_log")
+      .filter(log => OfflineArtifact.exists(spark, s"$dir/$log"))
+      .foreach(log => spark.read.parquet(s"$dir/$log")
+        .write.mode("overwrite").parquet(s"$fresh/$log"))
     live.agg(count(lit(1)).as("n_rows"),
              bit_xor(xxhash64(col("vec_id"))).as("content_stamp"))
       .select(col("n_rows"), col("content_stamp"),
               lit(st.ratio).as("drift_ratio_before"))
       .coalesce(1)
-      .write.mode("append").parquet(s"${fresh.getPath}/rebuild_log")
+      .write.mode("append").parquet(s"$fresh/rebuild_log")
     live.unpersist(false)
-    // the staged index is a complete artifact in its own right, so the
-    // dir swapped in keeps counting as built for OfflineArtifact.ensure
-    OfflineArtifact.markComplete(spark, fresh.getPath)
-    // commit point: the staged index is complete — swap it in
-    java.nio.file.Files.createFile(
-      new java.io.File(fresh, "_COMPLETE").toPath)
-    swapIn()
-    true
+    // commit point: the marker makes the stage a complete artifact (the
+    // dir swapped in keeps counting as built for OfflineArtifact.ensure)
+    OfflineArtifact.markComplete(spark, fresh)
+    OfflineArtifact.swapDir(spark, dir)
   }
 
   /** Driver-side index METADATA reads (centroids, codebooks), memoized

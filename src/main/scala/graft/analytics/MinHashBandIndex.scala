@@ -199,12 +199,7 @@ object MinHashBandIndex {
     * stream is DOWN (it mutates state the running query reads). */
   def mergeSegments(spark: SparkSession, seedDir: String,
                     bandsDeltaDir: String, shinglesDeltaDir: String): Long = {
-    def rmrf(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmrf)); f.delete(); ()
-    }
-    val bandsDelta = new java.io.File(bandsDeltaDir)
-    val shDelta = new java.io.File(shinglesDeltaDir)
-    if (!bandsDelta.exists()) return 0L
+    if (!OfflineArtifact.exists(spark, bandsDeltaDir)) return 0L
     // the two delta reads, and then the two seed appends, are
     // independent action pairs — overlap each pair (ParActions; the
     // jobs are small and nowhere near fill the executor slots)
@@ -228,7 +223,8 @@ object MinHashBandIndex {
         .parquet(s"$seedDir/bands"),
       () => segSh.write.mode("append").parquet(s"$seedDir/shingles"))
     val n = segSh.count()
-    rmrf(bandsDelta); rmrf(shDelta)
+    OfflineArtifact.delete(spark, bandsDeltaDir)
+    OfflineArtifact.delete(spark, shinglesDeltaDir)
     n
   }
 
@@ -255,8 +251,8 @@ object MinHashBandIndex {
 
   /** Landed batch partitions in a delta dir (the retention trigger). */
   def segmentCount(deltaDir: String): Int =
-    Option(new java.io.File(deltaDir).listFiles()).getOrElse(Array.empty)
-      .count(f => f.isDirectory && f.getName.startsWith("batch_id="))
+    OfflineArtifact.children(SparkSession.active, deltaDir)
+      .count(st => st.isDirectory && st.getPath.getName.startsWith("batch_id="))
 
   /** Tombstone DELETE ([[Tombstones]] parity with the serving
     * indexes): a RETRACTED corpus doc must stop gating arrivals — its
@@ -272,25 +268,24 @@ object MinHashBandIndex {
     * rewritten kp-partition-locally — only partitions holding a
     * tombstoned row — and the SHINGLES (the retracted docs' derived
     * content, which a takedown must not outlive) in one filtered
-    * staging rewrite, each swapped in via [[StagedSwap]]'s move-first
-    * protocol; tombstones cleared last, so a crash at any point leaves
-    * rows still masked by the gate and never a state where data exists
-    * only in a reader-invisible staging dir. The shingles rewrite is
-    * decided INDEPENDENTLY of the bands (its own tombstone semi-join +
-    * staging-leftover check) — a purge replayed after all band
-    * partitions were already rewritten still rewrites the shingles, so
-    * purge convergence holds for both segments. Batch takedowns
+    * rewrite, each through [[OfflineArtifact.stagedSwap]]; tombstones
+    * cleared last, so every crash window leaves rows still masked by
+    * the gate. The shingles rewrite is decided INDEPENDENTLY of the
+    * bands (its own tombstone semi-join + staging-leftover check) — a
+    * purge replayed after all band partitions were already rewritten
+    * still rewrites the shingles, so purge convergence holds for both
+    * segments. Batch takedowns
     * amortize: many tombstones, one rewrite. Returns the number of
     * band partitions rewritten. */
   def purgeTombstones(spark: SparkSession, dir: String): Int = {
-    val bandsBase = new java.io.File(s"$dir/bands")
+    val bandsBase = s"$dir/bands"
     // complete interrupted swaps first; recovered targets may hold
     // old ∪ staged duplicates, so they are force-rewritten below and
     // the rewrites' natural-key dedup converges their row sets
-    val recoveredKps = StagedSwap.recover(bandsBase, "purge")
+    val recoveredKps = OfflineArtifact.recover(spark, bandsBase, "purge")
       .filter(_.startsWith("kp=")).map(_.stripPrefix("kp=").toInt)
     val recoveredSh =
-      StagedSwap.recover(new java.io.File(dir), "purge").contains("shingles")
+      OfflineArtifact.recover(spark, dir, "purge").contains("shingles")
     val tombs = Tombstones.read(spark, dir, "corpus_id").persist()
     val touched =
       (spark.read.parquet(s"$dir/bands")
@@ -298,32 +293,30 @@ object MinHashBandIndex {
         .select("kp").distinct().collect().map(_.getInt(0)) ++
         recoveredKps).distinct
     touched.foreach { kp =>
-      val leaf = new java.io.File(bandsBase, s"kp=$kp")
-      val tmp = StagedSwap.stagingFor(bandsBase, "purge", s"kp=$kp")
-      spark.read.parquet(leaf.getPath)
-        .join(tombs, Seq("corpus_id"), "left_anti")
-        .distinct() // converges a crash-recovered duplicate partition
-        .coalesce(1)
-        .write.mode("overwrite").parquet(tmp.getPath)
-      StagedSwap.swapIn(leaf, tmp)
+      OfflineArtifact.stagedSwap(spark, s"$bandsBase/kp=$kp", "purge") { tmp =>
+        spark.read.parquet(s"$bandsBase/kp=$kp")
+          .join(tombs, Seq("corpus_id"), "left_anti")
+          .distinct() // converges a crash-recovered duplicate partition
+          .coalesce(1)
+          .write.mode("overwrite").parquet(tmp)
+      }
     }
     // shingles decided on their OWN evidence, never the bands-derived
     // touched set: after a crash between the band and shingle rewrites
     // the replayed purge finds no touched band partition but the
     // retracted docs' shingles still need to go
-    val shDir = new java.io.File(s"$dir/shingles")
+    val shDir = s"$dir/shingles"
     val needShingles = recoveredSh ||
-      spark.read.parquet(shDir.getPath)
+      spark.read.parquet(shDir)
         .join(tombs, Seq("corpus_id"), "left_semi")
         .limit(1).count() > 0
-    if (needShingles) {
-      val tmp = StagedSwap.stagingFor(new java.io.File(dir), "purge", "shingles")
-      spark.read.parquet(shDir.getPath)
-        .join(tombs, Seq("corpus_id"), "left_anti")
-        .dropDuplicates("corpus_id") // converges a crash-recovered duplicate dir
-        .write.mode("overwrite").parquet(tmp.getPath)
-      StagedSwap.swapIn(shDir, tmp)
-    }
+    if (needShingles)
+      OfflineArtifact.stagedSwap(spark, shDir, "purge") { tmp =>
+        spark.read.parquet(shDir)
+          .join(tombs, Seq("corpus_id"), "left_anti")
+          .dropDuplicates("corpus_id") // converges a crash-recovered duplicate dir
+          .write.mode("overwrite").parquet(tmp)
+      }
     tombs.unpersist(false)
     Tombstones.clear(spark, dir)
     touched.length

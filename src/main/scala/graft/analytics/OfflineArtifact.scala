@@ -1,10 +1,11 @@
 package graft.analytics
 
+import java.io.IOException
 import java.util.concurrent.ConcurrentHashMap
 
 import scala.util.hashing.MurmurHash3
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** The offline-artifact contract: every derived structure a query probes
@@ -46,6 +47,49 @@ import org.apache.spark.sql.SparkSession
   * writes, and writes the marker LAST — so a crash at any point leaves
   * a dir the next [[Kind.ensure]] rebuilds, never one it reads.
   *
+  * '''Staged swap.''' Index MAINTENANCE (compaction, tombstone purge,
+  * drift rebuild) rewrites part of a built dir in place through one
+  * step, on the dir's Hadoop `FileSystem` like everything above:
+  *
+  *  1. [[recover]] runs at the START of every op that stages: a
+  *     leftover staging dir WITH its commit record has its swap
+  *     completed (step 3); one without is discarded (the target was
+  *     never touched).
+  *  2. Stage: the rewrite lands in a STAGING dir next to the target —
+  *     `.<op>-<target>` for [[stagedSwap]], dot-prefixed so Spark
+  *     readers ignore it while it is half-written.
+  *  3. Commit, then swap: the staged dir's commit record (Spark's
+  *     `_SUCCESS`) marks it complete; the swap snapshots the target's
+  *     data files, MOVES the staged data files in FIRST (part-file
+  *     names carry task UUIDs, never colliding with existing names),
+  *     then deletes the snapshot and drops the staging dir.
+  *
+  * Crash-window analysis — why no state is ever lost:
+  *  - before the commit record: target untouched; recovery discards
+  *    the staging dir.
+  *  - between the commit record and the last move: target holds old ∪
+  *    some staged files — DUPLICATES of surviving rows (deleted rows
+  *    are still masked: a purge clears its tombstones only after every
+  *    swap). Recovery completes the moves and returns the target's
+  *    name; the caller's rewrite of it is natural-key-deduplicating, so
+  *    it converges to the exact row set.
+  *  - between the last move and the snapshot delete: same duplicate
+  *    state, same convergence.
+  * A delete-then-move order would have a window where the data exists
+  * ONLY in the (reader-invisible) staging dir; this order never has.
+  *
+  * A drift rebuild replaces a WHOLE artifact dir, whose subdirs keep
+  * their names, so its files cannot move in first: [[swapDir]] stages
+  * at `<dir>-fresh`, commits with [[Marker]] (the staged dir is a
+  * complete artifact in its own right), moves the target aside to
+  * `<dir>-stale`, moves the stage in and drops the stale copy. A crash
+  * between the two moves leaves no target, and the committed stage
+  * that the next [[swapDir]] moves in.
+  *
+  * Every Hadoop `rename` or `delete` that answers `false` throws,
+  * naming the path (a delete of a path that is already gone is not a
+  * failure): a maintenance step never half-runs quietly.
+  *
   * '''Memo.''' [[memo]] runs work at most once per (slot, key) per JVM:
   * one lock per slot (not a `ConcurrentHashMap.computeIfAbsent` bin
   * lock, which would stall unrelated keys for a multi-second Spark
@@ -56,10 +100,10 @@ import org.apache.spark.sql.SparkSession
   */
 object OfflineArtifact {
 
-  /** Completion marker at the root of a built artifact dir. Distinct
-    * from Spark's `_SUCCESS` (written per output subdir, long before a
-    * multi-output build is done) and from the `_COMPLETE` commit record
-    * of [[IvfIndex.ensureFresh]]'s staging protocol. */
+  /** Completion marker at the root of a built artifact dir, and the
+    * commit record of a [[swapDir]] stage. Distinct from Spark's
+    * `_SUCCESS` (written per output subdir, long before a multi-output
+    * build is done). */
   val Marker = "_ARTIFACT_COMPLETE"
 
   private val stampSeeds = (0x9747b28c, 0x5bd1e995)
@@ -109,30 +153,128 @@ object OfflineArtifact {
     }.mkString("|"))
   }
 
-  /** True iff `dir`'s completion [[Marker]] exists. */
-  def isComplete(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir, Marker)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  /** `path` and its Hadoop `FileSystem` under the session's conf. */
+  private[analytics] def fsPath(spark: SparkSession,
+                                path: String): (FileSystem, Path) = {
+    val p = new Path(path)
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
+
+  private[graft] def exists(spark: SparkSession, path: String): Boolean = {
+    val (fs, p) = fsPath(spark, path)
+    fs.exists(p)
+  }
+
+  /** Recursive delete of `path` (see the loud-failure rule above). */
+  private[graft] def delete(spark: SparkSession, path: String): Unit = {
+    val (fs, p) = fsPath(spark, path)
+    remove(fs, p)
+  }
+
+  private[analytics] def remove(fs: FileSystem, p: Path): Unit =
+    if (!fs.delete(p, true) && fs.exists(p))
+      throw new IOException(s"cannot delete $p")
+
+  private[analytics] def move(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to))
+      throw new IOException(s"cannot rename $from to $to")
+
+  /** The entries of dir `path` (none when it does not exist). */
+  private[analytics] def children(spark: SparkSession,
+                                  path: String): Seq[FileStatus] = {
+    val (fs, p) = fsPath(spark, path)
+    if (fs.exists(p)) fs.listStatus(p).toSeq else Nil
+  }
+
+  /** Parquet data files of a dir (skips `_SUCCESS` and dot sidecars). */
+  private[analytics] def dataFiles(spark: SparkSession,
+                                   dir: String): Seq[Path] =
+    children(spark, dir).filter(_.isFile).map(_.getPath)
+      .filter(p => !p.getName.startsWith(".") && !p.getName.startsWith("_"))
+
+  /** True iff `dir`'s completion [[Marker]] exists. */
+  def isComplete(spark: SparkSession, dir: String): Boolean =
+    exists(spark, new Path(dir, Marker).toString)
 
   /** Write `dir`'s completion marker — the last step of any build that
     * produces a whole artifact dir. */
   private[analytics] def markComplete(spark: SparkSession, dir: String): Unit = {
-    val p = new Path(dir, Marker)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .create(p, true).close()
+    val (fs, p) = fsPath(spark, new Path(dir, Marker).toString)
+    fs.create(p, true).close()
   }
 
   /** Build `dir` from scratch: clear any partial leftovers, run `build`
     * into an empty dir, then write the marker. */
   private def publish[T](spark: SparkSession, dir: String)(build: => T): T = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
+    val (fs, p) = fsPath(spark, dir)
+    remove(fs, p)
     fs.mkdirs(p)
     val v = build
     markComplete(spark, dir)
     v
+  }
+
+  /** The staged-swap step for the data-file dir `target` (see the
+    * protocol above): `stage` writes the replacement with Spark into
+    * the staging dir whose path it receives, then the committed stage
+    * is swapped in. */
+  private[analytics] def stagedSwap(spark: SparkSession, target: String,
+                                    op: String)(stage: String => Unit): Unit = {
+    val (fs, t) = fsPath(spark, target)
+    val staged = new Path(t.getParent, s".$op-${t.getName}")
+    stage(staged.toString)
+    if (!fs.exists(new Path(staged, "_SUCCESS")))
+      throw new IOException(s"staging dir $staged has no _SUCCESS")
+    swapIn(spark, fs, staged, t, dataFiles(spark, target))
+  }
+
+  /** Move the committed stage's data files into `target`, then delete
+    * the `superseded` files and the stage. */
+  private def swapIn(spark: SparkSession, fs: FileSystem, staged: Path,
+                     target: Path, superseded: Seq[Path]): Unit = {
+    fs.mkdirs(target)
+    dataFiles(spark, staged.toString)
+      .foreach(f => move(fs, f, new Path(target, f.getName)))
+    superseded.foreach(remove(fs, _))
+    remove(fs, staged)
+  }
+
+  /** Complete (or discard) interrupted [[stagedSwap]]s of `op` under
+    * `parent`. Returns the target names whose swap was COMPLETED from a
+    * committed stage: callers must force a deduplicating rewrite of
+    * those targets (they may hold old ∪ staged duplicates). */
+  private[analytics] def recover(spark: SparkSession, parent: String,
+                                 op: String): Seq[String] = {
+    val (fs, p) = fsPath(spark, parent)
+    val prefix = s".$op-"
+    children(spark, parent).filter(_.isDirectory).map(_.getPath)
+      .filter(_.getName.startsWith(prefix))
+      .flatMap { staged =>
+        if (fs.exists(new Path(staged, "_SUCCESS"))) {
+          val name = staged.getName.stripPrefix(prefix)
+          swapIn(spark, fs, staged, new Path(p, name), Nil)
+          Some(name)
+        } else { remove(fs, staged); None }
+      }
+  }
+
+  /** The whole-dir form (see the protocol above): if `<dir>-fresh` is
+    * committed, move `dir` aside and the stage in, and return true;
+    * otherwise discard an uncommitted stage and return false. Leftover
+    * `<dir>-stale` copies go either way. A rebuild stages into
+    * `<dir>-fresh`, writes its [[Marker]] and calls this; calling it
+    * before the rebuild recovers an interrupted swap. */
+  private[analytics] def swapDir(spark: SparkSession, dir: String): Boolean = {
+    val (fs, target) = fsPath(spark, dir)
+    val fresh = new Path(s"$dir-fresh")
+    val stale = new Path(s"$dir-stale")
+    val committed = fs.exists(new Path(fresh, Marker))
+    if (committed) {
+      if (fs.exists(target)) { remove(fs, stale); move(fs, target, stale) }
+      move(fs, fresh, target)
+    } else remove(fs, fresh)
+    remove(fs, stale)
+    committed
   }
 
   /** One artifact family: its `name` (the `kind` of the layout), the

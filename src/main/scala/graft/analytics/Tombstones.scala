@@ -1,6 +1,5 @@
 package graft.analytics
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -21,16 +20,6 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * the live views and append a replayed delete twice. */
 object Tombstones {
 
-  private def path(spark: SparkSession, dir: String, sub: String) = {
-    val p = new Path(dir, sub)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  private def exists(spark: SparkSession, dir: String, sub: String) = {
-    val (fs, p) = path(spark, dir, sub)
-    fs.exists(p)
-  }
-
   /** Tombstone the ids (one `idCol` column — stored canonically as
     * `vec_id` regardless); returns the number of newly tombstoned ids
     * (0 on a replayed batch). */
@@ -43,7 +32,7 @@ object Tombstones {
                      .as("batch_stamp")).head()
     val (n, stamp) = (st.getLong(0), st.getLong(1))
     if (n == 0L) return 0L
-    val replay = exists(spark, dir, "tombstone_log") &&
+    val replay = OfflineArtifact.exists(spark, s"$dir/tombstone_log") &&
       spark.read.parquet(s"$dir/tombstone_log")
         .filter(col("n_rows") === n && col("batch_stamp") === stamp)
         .limit(1).count() > 0
@@ -60,7 +49,7 @@ object Tombstones {
     * for an empty side. */
   def read(spark: SparkSession, dir: String,
            idCol: String = "vec_id"): DataFrame =
-    if (exists(spark, dir, "tombstones"))
+    if (OfflineArtifact.exists(spark, s"$dir/tombstones"))
       spark.read.parquet(s"$dir/tombstones")
         .select(col("vec_id").as(idCol))
     else spark.createDataFrame(java.util.Collections.emptyList[Row](),
@@ -71,7 +60,6 @@ object Tombstones {
     * earlier point leaves rows that are still masked by the live view. */
   def clear(spark: SparkSession, dir: String): Unit =
     Seq("tombstones", "tombstone_log").foreach { sub =>
-      val (fs, p) = path(spark, dir, sub)
-      fs.delete(p, true)
+      OfflineArtifact.delete(spark, s"$dir/$sub")
     }
 }

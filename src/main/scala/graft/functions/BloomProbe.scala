@@ -17,7 +17,11 @@ import org.apache.spark.util.sketch.BloomFilter
   * independent of batch task count. On a cluster the path must be
   * executor-readable (shared storage, or shipped via
   * `SparkContext.addFile`); the build side stays the in-plan
-  * distributed aggregate ([[BloomFns.bloomAgg]]).
+  * distributed aggregate ([[BloomFns.bloomAgg]]). The read is a plain
+  * local-file read, not Hadoop FS like the filter's writes and
+  * maintenance ([[graft.analytics.BloomGramIndex]]): a task has no
+  * session Hadoop conf to resolve another scheme with, so the probe
+  * path must be a local (or locally mounted) path.
   */
 object BloomFilterCache {
   /** Bounded cache: a long-running streaming gate probes a NEW

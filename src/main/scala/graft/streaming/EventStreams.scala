@@ -208,7 +208,6 @@ object EventStreams {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        new java.io.File(filterDir).mkdirs()
         val prevPath =
           if (batchId == 0) seedFilterPath
           else s"$filterDir/filter_${batchId - 1}.bf"
@@ -356,13 +355,11 @@ object EventStreams {
   private def readDelta(spark: org.apache.spark.sql.SparkSession,
                         dir: String,
                         schema: org.apache.spark.sql.types.StructType)
-      : DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) spark.read.schema(schema).parquet(dir)
+      : DataFrame =
+    if (graft.analytics.OfflineArtifact.exists(spark, dir))
+      spark.read.schema(schema).parquet(dir)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
 
   /** Read versioned cross-batch state, distinguishing a GENUINE cold
     * start — the state path does not exist (batch 0, or a retention
@@ -375,11 +372,9 @@ object EventStreams {
     * contract of the incremental* helpers is compute-state_b-from-
     * state_{b-1}, never recompute-from-nothing. */
   private def readStateOrCold(spark: org.apache.spark.sql.SparkSession,
-                              dir: String)(cold: => DataFrame): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) spark.read.parquet(dir) else cold
-  }
+                              dir: String)(cold: => DataFrame): DataFrame =
+    if (graft.analytics.OfflineArtifact.exists(spark, dir)) spark.read.parquet(dir)
+    else cold
 
   /** STREAMING source-reputation routing (st16's continuous form):
     * each micro-batch's per-source (n, n_keep) quality evidence lands

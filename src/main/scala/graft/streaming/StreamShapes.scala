@@ -1839,8 +1839,9 @@ object StreamShapes {
            a.getAs[Boolean]("slice_dominated_ok"),
            a.getAs[Boolean]("no_doomed_served"))
         }
-        // the audits are driver rows now — the staged index is dead
-        rmrfDir(new java.io.File(dir))
+        // the audits are driver rows now — the staged index is dead;
+        // repeated Verify/Bench sweeps must not accumulate its copies
+        graft.analytics.OfflineArtifact.delete(s, dir)
         epochRows
           .toDF("epoch", "n_served", "exact_best_slice",
                 "slice_dominated_ok", "no_doomed_served")
@@ -1880,14 +1881,6 @@ object StreamShapes {
               |ORDER BY epoch""".stripMargin)
     )
   )
-
-  /** Delete a staged per-invocation work dir once every frame the
-    * entry returns has been materialized off it — repeated Verify/
-    * Bench sweeps (208-entry runs, staged-scale gates) must not
-    * accumulate a full index copy per invocation. */
-  private def rmrfDir(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmrfDir)); f.delete(); ()
-  }
 
   /** One slice's curation ledger — quality gate × supplied near-dup
     * verdicts × semantic decon of the slice's vectors against `emb`'s
@@ -2163,7 +2156,7 @@ object StreamShapes {
     // nothing lazy reads $work anymore, so the staged seed copy is
     // dead; delete it (ADVICE r10: unbounded temp-dir accumulation
     // across repeated sweeps)
-    rmrfDir(new java.io.File(work))
+    graft.analytics.OfflineArtifact.delete(s, work)
     val served = g1.withColumn("batch", lit(1))
       .unionByName(g2Fold.withColumn("batch", lit(2)))
     g2TwinOpt match {

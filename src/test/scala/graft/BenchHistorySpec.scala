@@ -26,6 +26,10 @@ class BenchHistorySpec extends AnyFunSuite {
     (h, lines.result())
   }
 
+  /** Every warning line is ASCII: a tool main's console stream may not
+    * be UTF-8, where any other character prints as `?`. */
+  private def ascii(warns: Seq[String]): Boolean = warns.forall(_.forall(_ < 128))
+
   private def bench(queries: String, sfDir: String = sf): String =
     s"""{"metric":"total","value":9.0,"unit":"sec","queries":{$queries},""" +
       s""""failed":[],"sf":"$sfDir"}"""
@@ -40,7 +44,8 @@ class BenchHistorySpec extends AnyFunSuite {
     val (h, warns) = run(dir("A.json" -> bench(""""q1":1.5""", "/data/sf1")))
     assert(h.isEmpty)
     assert(warns.size == 1 && warns.head.contains("NO same-sf committed history") &&
-      warns.head.contains(sf) && warns.head.contains("degraded"), warns)
+      warns.head.contains(sf) && warns.head.contains("degraded") &&
+      ascii(warns), warns)
   }
 
   test("the queries object ends at the `},\"failed\"` anchor, not the first brace") {
@@ -68,7 +73,8 @@ class BenchHistorySpec extends AnyFunSuite {
     val (h, warns) = run(dir("A.json" -> """{"metric":"total","value":1"""))
     assert(h.isEmpty)
     assert(warns.size == 2 && warns.head.contains("A.json") &&
-      warns.head.contains("skipped") && warns(1).contains("NO same-sf"), warns)
+      warns.head.contains("skipped") && warns(1).contains("NO same-sf") &&
+      ascii(warns), warns)
     // an unparsable number is malformed too, and a later good file vouches
     val (h2, warns2) = run(dir("A.json" -> bench(""""q1":1.2.3"""),
       "B.json" -> bench(""""q1":2.0""")))

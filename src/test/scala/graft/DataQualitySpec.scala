@@ -158,6 +158,47 @@ class DataQualitySpec extends SparkSpec {
     }
   }
 
+  test("bloom chain through a non-file: scheme: merged, sizing, pruneChain, replayed rewrite") {
+    // filter writes, sizing reads and retention go through Hadoop FS;
+    // the scheme's rename never overwrites (as on HDFS), so rewriting
+    // an existing version (a replayed batch) needs its own step
+    import graft.analytics.BloomGramIndex
+    import org.apache.spark.util.sketch.BloomFilter
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftlocal.impl", classOf[SchemeLocalFs].getName)
+    val local = java.nio.file.Files.createTempDirectory("bloom-scheme").toString
+    val remote = s"graftlocal://$local"
+    def bytes(v: Int): Array[Byte] =
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$local/filter_$v.bf"))
+    def hash(g: String): Long =
+      spark.range(1).select(xxhash64(lit(g))).head().getLong(0)
+    BloomGramIndex.emptyFilter(s"$remote/filter_0.bf", 1024L, 16384L)
+    (1 to 3).foreach { v =>
+      BloomGramIndex.merged(spark, s"$remote/filter_${v - 1}.bf",
+        Seq(s"gram$v").toDF("g"), s"$remote/filter_$v.bf")
+      assert(BloomGramIndex.sizing(s"$remote/filter_$v.bf") == ((1024L, 16384L)))
+    }
+    val f3 = bytes(3)
+    assert((1 to 3).forall(v =>
+      BloomFilter.readFrom(f3).mightContainLong(hash(s"gram$v"))))
+    // a replayed batch rewrites identical bytes over the existing file
+    BloomGramIndex.merged(spark, s"$remote/filter_2.bf",
+      Seq("gram3").toDF("g"), s"$remote/filter_3.bf")
+    assert(java.util.Arrays.equals(bytes(3), f3))
+    // a rewrite with other content replaces the file, never appends to it
+    BloomGramIndex.merged(spark, s"$remote/filter_2.bf",
+      Seq("gram4").toDF("g"), s"$remote/filter_3.bf")
+    assert(bytes(3).length == f3.length)
+    assert(BloomFilter.readFrom(bytes(3)).mightContainLong(hash("gram4")))
+    // keep-last-2 retention: versions 0 and 1 go with their sidecars
+    assert(BloomGramIndex.pruneChain(remote) == 2)
+    val left = new java.io.File(local).listFiles().map(_.getName)
+      .filterNot(_.startsWith(".")).sorted.toSeq
+    assert(left == Seq("filter_2.bf", "filter_2.bf.meta",
+                       "filter_3.bf", "filter_3.bf.meta"), s"$left")
+  }
+
   test("dc03: 1e5-row benchmark probe — candidate pairs bounded below the exact product") {
     // the reason dc03 exists: past ~1e5 benchmark rows dc02's exact
     // corpus x benchmark product is the cost driver. Bucket a synthetic

@@ -696,8 +696,9 @@ class DedupSpec extends SparkSpec {
   }
 
   test("ensureFresh crash recovery: committed staging swaps in; mid-swap states converge") {
-    // crash window 1: staged rebuild complete (_COMPLETE) but no move
-    // happened — the next call must finish the swap, not re-rebuild.
+    // crash window 1: staged rebuild committed (its copied artifact
+    // marker) but no move happened — the next call must finish the
+    // swap, not re-rebuild.
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
     def stage(mod: Int, tag: String): String = {
       val src = java.nio.file.Files.createTempDirectory(s"ivfc-$tag").toString
@@ -720,23 +721,19 @@ class DedupSpec extends SparkSpec {
     val newIds = spark.read.parquet(s"$newContent/assignments")
       .select("vec_id").as[Long].collect().toSet
     copyDir(new java.io.File(newContent), new java.io.File(oldDir + "-fresh"))
-    java.nio.file.Files.createFile(
-      new java.io.File(oldDir + "-fresh", "_COMPLETE").toPath)
     assert(IvfIndex.ensureFresh(spark, oldDir),
       "committed staging must complete the swap")
     assert(spark.read.parquet(s"$oldDir/assignments")
       .select("vec_id").as[Long].collect().toSet == newIds)
     assert(!new java.io.File(oldDir + "-fresh").exists())
     assert(!new java.io.File(oldDir + "-stale").exists())
-    assert(!new java.io.File(oldDir, "_COMPLETE").exists())
+    assert(graft.analytics.OfflineArtifact.isComplete(spark, oldDir))
     // crash window 2: target already moved aside, staged dir committed
     // — the recovery moves the staged index in and drops the stale copy
     val dir2 = stage(2, "mid")
     val ids2 = spark.read.parquet(s"$dir2/assignments")
       .select("vec_id").as[Long].collect().toSet
     copyDir(new java.io.File(dir2), new java.io.File(dir2 + "-fresh"))
-    java.nio.file.Files.createFile(
-      new java.io.File(dir2 + "-fresh", "_COMPLETE").toPath)
     java.nio.file.Files.move(new java.io.File(dir2).toPath,
                              new java.io.File(dir2 + "-stale").toPath)
     assert(IvfIndex.ensureFresh(spark, dir2))
@@ -775,6 +772,142 @@ class DedupSpec extends SparkSpec {
     assert(rowsAfter == rows, "recovery changed index content")
     assert(IvfIndex.readAssignments(spark, dir).count() == rows.size,
       "duplicates survived the recovery rewrite")
+  }
+
+  test("IVF appendBatchOnce: a replayed batch appends nothing, also through a non-file: scheme") {
+    // the append-log check goes through Hadoop FS: a local-file check
+    // sees no log under `graftlocal://`, so a replayed batch would
+    // append twice
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftlocal.impl", classOf[SchemeLocalFs].getName)
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val batch = emb.filter(col("vec_id") % 2 === 1)
+    Seq("", "graftlocal://").foreach { scheme =>
+      val srcDir = java.nio.file.Files.createTempDirectory("ivf-once").toString
+      emb.filter(col("vec_id") % 2 === 0)
+        .write.mode("overwrite").parquet(s"$srcDir/embeddings.parquet")
+      val dir = scheme + IvfIndex.ensure(spark, srcDir)
+      assert(IvfIndex.appendBatchOnce(spark, dir, batch) == batch.count())
+      val rows = IvfIndex.readAssignments(spark, dir).count()
+      assert(IvfIndex.appendBatchOnce(spark, dir, batch) == 0L,
+        s"$scheme: replayed batch appended")
+      assert(IvfIndex.readAssignments(spark, dir).count() == rows)
+    }
+  }
+
+  test("IVF compaction and purge through a non-file: scheme, with a committed staging recovery") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftlocal.impl", classOf[SchemeLocalFs].getName)
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val srcDir = java.nio.file.Files.createTempDirectory("ivf-scheme").toString
+    emb.filter(col("vec_id") % 2 === 0)
+      .write.mode("overwrite").parquet(s"$srcDir/embeddings.parquet")
+    val local = IvfIndex.ensure(spark, srcDir)
+    val dir = s"graftlocal://$local"
+    val rest = emb.filter(col("vec_id") % 2 === 1).collect()
+    rest.grouped(math.max(1, rest.length / 4)).foreach { chunk =>
+      IvfIndex.appendBatch(spark, dir, spark.createDataFrame(
+        spark.sparkContext.parallelize(chunk.toSeq, 1), emb.schema))
+    }
+    val base = new java.io.File(s"$local/assignments")
+    def leaves(): Seq[java.io.File] =
+      base.listFiles().toSeq.filter(_.getName.startsWith("list="))
+    def maxFiles(): Int = leaves().map(_.listFiles().count(f =>
+      f.isFile && !f.getName.startsWith(".") &&
+      !f.getName.startsWith("_"))).max
+    def rowSet(): Set[(Long, Int)] = IvfIndex.readAssignments(spark, dir)
+      .select("vec_id", "list").as[(Long, Int)].collect().toSet
+    val rows = rowSet()
+    assert(maxFiles() > 2, "fixture never fragmented")
+    assert(IvfIndex.compactLists(spark, dir, maxFilesPerList = 2) > 0)
+    assert(maxFiles() <= 2, "compaction through the scheme left the leaves")
+    assert(rowSet() == rows, "compaction changed index content")
+    // a committed `.compact-list=N` stage, crash before any move
+    val leaf = leaves().maxBy(d => spark.read.parquet(d.getPath).count())
+    spark.read.parquet(leaf.getPath).coalesce(1)
+      .write.parquet(s"${base.getPath}/.compact-${leaf.getName}")
+    assert(IvfIndex.compactLists(spark, dir, maxFilesPerList = 1000) == 1)
+    assert(rowSet() == rows &&
+      IvfIndex.readAssignments(spark, dir).count() == rows.size,
+      "recovery through the scheme lost or duplicated rows")
+    // purge: only the lists holding the doomed ids are rewritten
+    val doomed = rows.map(_._1).toSeq.sorted.take(2)
+    assert(IvfIndex.deleteIds(spark, dir, doomed.toDF("vec_id")) == 2L)
+    assert(IvfIndex.purgeTombstones(spark, dir) ==
+      rows.filter(r => doomed.contains(r._1)).map(_._2).size)
+    assert(rowSet() == rows.filter(r => !doomed.contains(r._1)))
+    assert(!new java.io.File(s"$local/tombstones").exists())
+    assert(!base.listFiles().exists(f =>
+      f.isDirectory && f.getName.startsWith(".")), "staging dirs left behind")
+  }
+
+  test("int8 and band purges through a non-file: scheme") {
+    import graft.analytics.{Int8Index, MinHashBandIndex}
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftlocal.impl", classOf[SchemeLocalFs].getName)
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val n = emb.count()
+    val int8 = java.nio.file.Files.createTempDirectory("int8-scheme").toString
+    Similarity.int8Quantized(emb)
+      .select(col("vec_id"), col("__scale").as("scale"),
+              expr("transform(__q, x -> cast(x as tinyint))").as("q"))
+      .write.parquet(s"$int8/codes")
+    val doomed = Seq(3L, 7L)
+    val remote8 = s"graftlocal://$int8"
+    assert(Int8Index.deleteIds(spark, remote8, doomed.toDF("vec_id")) == 2L)
+    assert(Int8Index.purgeTombstones(spark, remote8) == 2L)
+    val codes = Int8Index.readCodes(spark, int8)
+    assert(codes.count() == n - 2 &&
+      codes.filter(col("vec_id").isin(doomed: _*)).count() == 0)
+    assert(!new java.io.File(s"$int8/tombstones").exists() &&
+      !new java.io.File(s"$int8/.purge-codes").exists())
+    // band index: the retracted doc's bands and shingles both go
+    val other = "completely different words about spark catalyst tungsten"
+    val band = java.nio.file.Files.createTempDirectory("mhband-scheme").toString
+    MinHashBandIndex.buildFrom(spark, band,
+      Seq((1L, base), (2L, other)).toDF("doc_id", "text"))
+    val remote = s"graftlocal://$band"
+    assert(MinHashBandIndex.deleteDocs(spark, remote,
+      Seq(1L).toDF("corpus_id")) == 1L)
+    assert(MinHashBandIndex.purgeTombstones(spark, remote) >= 1)
+    Seq("bands", "shingles").foreach { sub =>
+      val ids = spark.read.parquet(s"$band/$sub").select("corpus_id")
+        .as[Long].collect().toSet
+      assert(ids == Set(2L), s"$sub after the purge: $ids")
+    }
+    assert(!new java.io.File(s"$band/tombstones").exists())
+  }
+
+  test("ensureFresh through a non-file: scheme: rebuild, then a committed-stage recovery") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftlocal.impl", classOf[SchemeLocalFs].getName)
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    def stage(mod: Int): String = {
+      val src = java.nio.file.Files.createTempDirectory("ivff-scheme").toString
+      emb.filter(col("vec_id") % 2 === mod)
+        .write.mode("overwrite").parquet(s"$src/embeddings.parquet")
+      IvfIndex.ensure(spark, src)
+    }
+    def ids(d: String): Set[Long] = IvfIndex.readAssignments(spark, d)
+      .select("vec_id").as[Long].collect().toSet
+    val local = stage(0)
+    val dir = s"graftlocal://$local"
+    val before = ids(dir)
+    assert(IvfIndex.ensureFresh(spark, dir, force = true))
+    assert(ids(dir) == before, "rebuild through the scheme changed the rows")
+    assert(spark.read.parquet(s"$dir/rebuild_log").count() == 1)
+    assert(graft.analytics.OfflineArtifact.isComplete(spark, dir))
+    Seq("-fresh", "-stale").foreach(sfx =>
+      assert(!new java.io.File(local + sfx).exists(), s"$sfx left behind"))
+    // a committed stage (a complete artifact copied in), crash before
+    // any move: the next call swaps it in instead of rebuilding
+    val other = stage(1)
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(other), new java.io.File(s"$local-fresh"))
+    assert(IvfIndex.ensureFresh(spark, dir), "committed stage not swapped in")
+    assert(ids(dir) == ids(other))
+    Seq("-fresh", "-stale").foreach(sfx =>
+      assert(!new java.io.File(local + sfx).exists(), s"$sfx left behind"))
   }
 
   test("emb02: learned-cluster labels match a brute recount") {
@@ -1392,4 +1525,8 @@ class SchemeLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
     super.listStatus(f).map(plain)
   override def getFileStatus(f: Path): FileStatus =
     plain(super.getFileStatus(f))
+  // as on HDFS, a rename never replaces an existing file
+  override def rename(src: Path, dst: Path): Boolean =
+    if (exists(dst) && getFileStatus(dst).isFile) false
+    else super.rename(src, dst)
 }

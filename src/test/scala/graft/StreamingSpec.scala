@@ -1364,45 +1364,53 @@ class StreamingSpec extends SparkSpec {
   test("neardup segment merge: folding deltas into the seed preserves gate semantics") {
     import spark.implicits._
     val mh = graft.analytics.MinHashBandIndex
-    val tmp = java.nio.file.Files.createTempDirectory("mhmerge").toString
-    val base = (1 to 25).map(i =>
-      s"corpus$i sentence about the quick brown fox").mkString(" ")
-    val novel = (1 to 25).map(i =>
-      s"novel$i topic on distributed systems theory").mkString(" ")
-    val seedDir = s"$tmp/seed"
-    mh.buildFrom(spark, seedDir, Seq((1L, base)).toDF("doc_id", "text"))
-    // simulate one streamed batch's accepted segment in the delta dirs
-    val acc = Seq((20L, novel)).toDF("doc_id", "text")
-    mh.segmentBands(spark, acc).withColumn("batch_id", lit(0L))
-      .write.partitionBy("batch_id").parquet(s"$tmp/bands")
-    mh.segmentShingles(spark, acc).withColumn("batch_id", lit(0L))
-      .write.partitionBy("batch_id").parquet(s"$tmp/shingles")
-    val b2 = Seq(
-      (30L, novel + " addendum"), // near-dup of the SEGMENT doc
-      (40L, base + " again"),     // near-dup of the SEED doc
-      (50L, "entirely fresh content about olap engines and columnar scans")
-    ).toDF("doc_id", "text")
-    val expected = mh.gateFrames(spark,
-      spark.read.parquet(s"$seedDir/bands")
-        .select("corpus_id", "band", "key", "kp")
-        .unionByName(spark.read.parquet(s"$tmp/bands")
-          .select("corpus_id", "band", "key", "kp")),
-      spark.read.parquet(s"$seedDir/shingles")
-        .unionByName(spark.read.parquet(s"$tmp/shingles")
-          .select("corpus_id", "sh")),
-      b2).collect().toSeq
-    val n = mh.mergeSegments(spark, seedDir, s"$tmp/bands", s"$tmp/shingles")
-    assert(n == 1, s"folded $n docs")
-    assert(!new java.io.File(s"$tmp/bands").exists() &&
-           !new java.io.File(s"$tmp/shingles").exists(),
-           "delta dirs must be dropped after the merge")
-    val merged = mh.gate(spark, seedDir, b2).collect().toSeq
-    assert(merged == expected,
-      s"merged-seed gate diverges from seed+delta gate: $merged vs $expected")
-    // the segment doc really gates: 30 rejects against 20, 40 against 1
-    val m = merged.map(r => r.getLong(0) ->
-      (if (r.isNullAt(2)) -1L else r.getLong(2))).toMap
-    assert(m == Map(30L -> 20L, 40L -> 1L, 50L -> -1L), s"$m")
+    // the same fold through a non-`file:` scheme: the delta listing and
+    // drop must go through Hadoop FS, or no segment is ever folded
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftlocal.impl", classOf[SchemeLocalFs].getName)
+    Seq("", "graftlocal://").foreach { scheme =>
+      val local = java.nio.file.Files.createTempDirectory("mhmerge").toString
+      val tmp = scheme + local
+      val base = (1 to 25).map(i =>
+        s"corpus$i sentence about the quick brown fox").mkString(" ")
+      val novel = (1 to 25).map(i =>
+        s"novel$i topic on distributed systems theory").mkString(" ")
+      val seedDir = s"$tmp/seed"
+      mh.buildFrom(spark, seedDir, Seq((1L, base)).toDF("doc_id", "text"))
+      // simulate one streamed batch's accepted segment in the delta dirs
+      val acc = Seq((20L, novel)).toDF("doc_id", "text")
+      mh.segmentBands(spark, acc).withColumn("batch_id", lit(0L))
+        .write.partitionBy("batch_id").parquet(s"$tmp/bands")
+      mh.segmentShingles(spark, acc).withColumn("batch_id", lit(0L))
+        .write.partitionBy("batch_id").parquet(s"$tmp/shingles")
+      val b2 = Seq(
+        (30L, novel + " addendum"), // near-dup of the SEGMENT doc
+        (40L, base + " again"),     // near-dup of the SEED doc
+        (50L, "entirely fresh content about olap engines and columnar scans")
+      ).toDF("doc_id", "text")
+      val expected = mh.gateFrames(spark,
+        spark.read.parquet(s"$seedDir/bands")
+          .select("corpus_id", "band", "key", "kp")
+          .unionByName(spark.read.parquet(s"$tmp/bands")
+            .select("corpus_id", "band", "key", "kp")),
+        spark.read.parquet(s"$seedDir/shingles")
+          .unionByName(spark.read.parquet(s"$tmp/shingles")
+            .select("corpus_id", "sh")),
+        b2).collect().toSeq
+      assert(mh.segmentCount(s"$tmp/bands") == 1, s"$scheme: segment not listed")
+      val n = mh.mergeSegments(spark, seedDir, s"$tmp/bands", s"$tmp/shingles")
+      assert(n == 1, s"$scheme: folded $n docs")
+      assert(!new java.io.File(s"$local/bands").exists() &&
+             !new java.io.File(s"$local/shingles").exists(),
+             "delta dirs must be dropped after the merge")
+      val merged = mh.gate(spark, seedDir, b2).collect().toSeq
+      assert(merged == expected,
+        s"merged-seed gate diverges from seed+delta gate: $merged vs $expected")
+      // the segment doc really gates: 30 rejects against 20, 40 against 1
+      val m = merged.map(r => r.getLong(0) ->
+        (if (r.isNullAt(2)) -1L else r.getLong(2))).toMap
+      assert(m == Map(30L -> 20L, 40L -> 1L, 50L -> -1L), s"$m")
+    }
   }
 
   test("segment retention: maintenance cycles bound the delta count; decisions match a never-merged twin") {

@@ -37,9 +37,11 @@ object AbProf {
       .getOrElse(sys.error(s"unknown query: $n")))
     qs.foreach { q =>
       val samples = (1 to k).map { _ =>
-        val t0 = System.nanoTime()
-        q.df(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
+        val dt = graft.analytics.Materialize.scoped {
+          val t0 = System.nanoTime()
+          q.df(spark, sfDir).write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - t0) / 1e9
+        }
         GraftSession.release(spark)
         dt
       }

@@ -173,20 +173,22 @@ object Bench {
     def timeFrame(name: String,
                   mk: () => org.apache.spark.sql.DataFrame)
         : (Double, Boolean) = {
-      val t0 = System.nanoTime()
-      val ok =
-        try {
-          mk().write.format("noop").mode("overwrite").save()
-          true
-        }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          false
-        }
-      val dt = (System.nanoTime() - t0) / 1e9
       // state hygiene: a query must not tax its successors' numbers —
-      // drop any blocks it persisted (localCheckpoint frames, ML caches)
-      // once its own timing is booked.
+      // its scope, then the session, drop its blocks once its own
+      // timing is booked
+      val (dt, ok) = Materialize.scoped {
+        val t0 = System.nanoTime()
+        val ok =
+          try {
+            mk().write.format("noop").mode("overwrite").save()
+            true
+          }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            false
+          }
+        ((System.nanoTime() - t0) / 1e9, ok)
+      }
       GraftSession.release(spark)
       (dt, ok)
     }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.analytics.{ClusteredEmbeddings, DataQuality}
+import graft.analytics.{ClusteredEmbeddings, DataQuality, Materialize}
 import graft.functions.VectorOps
 
 /** Banded-vs-exact decon crossover measurement on STRUCTURED vs NOISE
@@ -74,8 +74,8 @@ object DeconCrossover {
                                                   benchOdds = benchOdds),
       "noise" -> noiseFixture)
 
-    for ((fname, embRaw) <- fixtures) {
-      val emb = embRaw.localCheckpoint(true)
+    for ((fname, embRaw) <- fixtures) Materialize.scoped {
+      val emb = Materialize.once(embRaw)
       val corpus = emb.filter(col("label") =!= 0)
         .select("vec_id", "embedding")
       val bench = emb.filter(col("label") === 0)
@@ -92,26 +92,25 @@ object DeconCrossover {
       // exact pass: broadcast bench, map-side partial max, one row per
       // corpus vector — the dc02 production shape
       val (exactCk, exactSec) = timed {
-        corpus
+        Materialize.once(corpus
           .crossJoin(broadcast(bench.select(col("embedding").as("qvec"))))
           .groupBy("vec_id")
           .agg(max(VectorOps.cosineNative(spark, col("embedding"),
-                                          col("qvec"))).as("mc"))
-          .localCheckpoint(true)
+                                          col("qvec"))).as("mc")))
       }
       val exactTau = exactCk.filter(col("mc") >= tau).count()
       val exactStrong = exactCk.filter(col("mc") >= strongTau).count()
       println(f"""{"probe":"exact","fixture":"$fname","sec":$exactSec%.2f,""" +
         s""""drops_tau":$exactTau,"drops_strong":$exactStrong}""")
 
-      for ((b, r) <- Seq((12, 4), (10, 6), (8, 7), (6, 8))) {
+      for ((b, r) <- Seq((12, 4), (10, 6), (8, 7), (6, 8))) Materialize.scoped {
         val (chunks, buildSec) = timed {
           DataQuality.deconBenchBucketChunks(bench, bands = b, rows = r)
-            .map(_.localCheckpoint(true))
+            .map(Materialize.once)
         }
         val (ck, scoreSec) = timed {
-          DataQuality.semanticDeconScoredWith(spark, corpus, chunks, b, r)
-            .localCheckpoint(true)
+          Materialize.once(
+            DataQuality.semanticDeconScoredWith(spark, corpus, chunks, b, r))
         }
         val agg = ck.agg(
           sum("n_cand").as("cand"),
@@ -132,11 +131,7 @@ object DeconCrossover {
           f""""drops_strong":$dStrong,""" +
           f""""recall_strong":${recall(dStrong, exactStrong)}%.4f,""" +
           f""""speedup_vs_exact":${exactSec / scoreSec}%.2f}""")
-        ck.unpersist()
-        chunks.foreach(_.unpersist())
       }
-      exactCk.unpersist()
-      emb.unpersist()
     }
     spark.stop()
   }

@@ -28,10 +28,10 @@ object GraftSession {
     spark
   }
 
-  /** State hygiene between measured or dumped entries: drop every block
-    * the session persisted (localCheckpoint frames, ML caches) and the
-    * cached-table registry, so one entry never taxes its successors or
-    * grows the session's cache across a registry run. */
+  /** State hygiene between measured or dumped entries, after the
+    * entry's `Materialize.scoped` released what it made: drop every
+    * block the session still holds (ML caches, frames made with no
+    * scope open) and the cached-table registry. */
   def release(spark: SparkSession): Unit = {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     spark.catalog.clearCache()

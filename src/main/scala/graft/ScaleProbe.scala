@@ -165,7 +165,7 @@ object ScaleProbe {
 
     def time(name: String)(body: => Long): Unit = {
       val t0 = System.nanoTime()
-      val n = body
+      val n = graft.analytics.Materialize.scoped(body)
       val dt = (System.nanoTime() - t0) / 1e9
       println(f"""{"probe":"$name","sec":$dt%.2f,"rows":$n,"factor":$factor}""")
       GraftSession.release(spark)
@@ -393,11 +393,10 @@ object ScaleProbe {
         time(s"st20_ndgate_b1_$tag") {
           force(MinHashBandIndex.gateFrames(spark, seedBands, seedSh, b1))
         }
-        val g1 = MinHashBandIndex.gateFrames(spark, seedBands, seedSh, b1)
-          .localCheckpoint(true)
-        val acc1 = b1.join(
-          g1.filter(col("keep") === 1).select("doc_id"), Seq("doc_id"))
-          .localCheckpoint(true)
+        val g1 = graft.analytics.Materialize.once(
+          MinHashBandIndex.gateFrames(spark, seedBands, seedSh, b1))
+        val acc1 = graft.analytics.Materialize.once(b1.join(
+          g1.filter(col("keep") === 1).select("doc_id"), Seq("doc_id")))
         time(s"st20_ndgate_b2_$tag") {
           force(MinHashBandIndex.gateFrames(spark,
             seedBands.unionByName(MinHashBandIndex.segmentBands(spark, acc1)),

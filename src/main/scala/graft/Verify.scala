@@ -13,15 +13,14 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      // state hygiene (Bench's discipline): the entry's scope, then the
+      // session, drop its blocks once its dump is written, so a run
+      // never accumulates them across 200+ entries
+      try graft.analytics.Materialize.scoped(fn(spark, sfDir).coalesce(1)
+        .write.mode("overwrite").parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // state hygiene (Bench's discipline): self-auditing entries
-      // localCheckpoint their serve/audit frames — drop the blocks once
-      // the entry's dump is written so a staged-scale run never
-      // accumulates them across 200+ entries
       GraftSession.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -2,7 +2,7 @@ package graft.analytics
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -141,7 +141,7 @@ object BloomGramIndex {
     * version is deleted first, so it is briefly absent, never torn. */
   private def writeFilter(path: String, bytes: Array[Byte],
                           est: Long, bits: Long): Unit = {
-    val (fs, p) = OfflineArtifact.fsPath(SparkSession.active, path)
+    val (fs, p) = filterFs(path)
     def write(to: Path, b: Array[Byte]): Unit = {
       val out = fs.create(to, true)
       try out.write(b) finally out.close()
@@ -155,8 +155,16 @@ object BloomGramIndex {
     }
   }
 
+  /** The raw FS beneath a checksummed one (the local FS): filter bytes
+    * get no `.crc` sidecars, and their reads no checksum pass. */
+  private def filterFs(path: String): (FileSystem, Path) =
+    OfflineArtifact.fsPath(SparkSession.active, path) match {
+      case (fs: ChecksumFileSystem, p) => (fs.getRawFileSystem, p)
+      case other => other
+    }
+
   private def readBytes(path: String): Array[Byte] = {
-    val (fs, p) = OfflineArtifact.fsPath(SparkSession.active, path)
+    val (fs, p) = filterFs(path)
     val in = fs.open(p)
     try in.readAllBytes() finally in.close()
   }

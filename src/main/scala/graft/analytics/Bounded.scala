@@ -41,12 +41,6 @@ object Bounded {
     broadcast(df)
   }
 
-  /** The count-and-assert half of [[broadcastBench]], exposed for
-    * callers that need the bounded frame's ROW COUNT as well as the
-    * contract (e.g. the decon serve sizing its band-bucket map chunks,
-    * [[DataQuality.deconBenchBucketChunks]]) — same content-stamped
-    * cache, so asking for the count and then broadcasting under the
-    * same tag pays one count job, not two. */
   /** Identity of a frame's PLAN + DATA: the logical plan's semantic
     * hash joined with [[OfflineArtifact.filesStamp]] of every scanned
     * file (path, length, mtime via Hadoop FileSystem — java.io.File
@@ -58,6 +52,12 @@ object Bounded {
     df.queryExecution.logical.semanticHash() + ":" +
       OfflineArtifact.filesStamp(df.sparkSession, df.inputFiles.toSeq)
 
+  /** The count-and-assert half of [[broadcastBench]], exposed for
+    * callers that need the bounded frame's ROW COUNT as well as the
+    * contract (e.g. the decon serve sizing its band-bucket map chunks,
+    * [[DataQuality.deconBenchBucketChunks]]) — same content-stamped
+    * cache, so asking for the count and then broadcasting under the
+    * same tag pays one count job, not two. */
   def checkedRowCount(df: DataFrame, tag: String,
                       maxRows: Long = MaxBenchRows): Long = {
     val key = tag + ":" + planStamp(df)

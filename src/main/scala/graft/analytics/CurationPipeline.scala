@@ -47,16 +47,11 @@ object CurationPipeline {
          |            i -> concat_ws(' ', slice(words, i + 1, $L)))
          |ELSE cast(array() as array<string>) END""".stripMargin
     // `words` is consumed twice (gram derivation + the final SpanStrip
-    // join) — materialize the tokenized frame so the pass runs once,
-    // spread off the one-split scan first (ScanSpread guard; r17).
-    // persist with lineage INTACT, not localCheckpoint: this frame is
-    // CORPUS-WIDE, so on a real cluster an executor loss must be able
-    // to recompute its blocks instead of killing the query (VERDICT
-    // r17 #2 / guide §5; the batch-sized gate-side checkpoints keep
-    // the eager form)
-    val words = ScanSpread.forMapPass(table(s, d, "documents"))
-      .select(col("doc_id"), col("lang"), expr(wordsExpr).as("words"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // join) — the tokenized frame is materialized so the pass runs once,
+    // spread off the one-split scan first (ScanSpread guard; r17)
+    val words = Materialize.shared(
+      ScanSpread.forMapPass(table(s, d, "documents"))
+        .select(col("doc_id"), col("lang"), expr(wordsExpr).as("words")))
     val grams = words
       .select(col("doc_id"), posexplode(expr(grams8)).as(Seq("p", "gram")))
       .withColumn("h1", xxhash64(col("gram")))
@@ -98,11 +93,8 @@ object CurationPipeline {
     // The strip lineage ([[cp02Cleaned]]: 8-gram explode → census
     // semi-join → native span strip) feeds BOTH the threshold
     // aggregate and the gated frame — without a barrier it
-    // re-executes per consumer. The dq05 recipe: the narrow
-    // per-doc rows are eagerly localCheckpoint'd once; every later
-    // stage derives from the materialization. At cluster scale the
-    // same barrier is a persist to executor storage.
-    val cleaned = cp02Cleaned(s, d).localCheckpoint(true)
+    // re-executes per consumer (the dq05 recipe).
+    val cleaned = Materialize.once(cp02Cleaned(s, d))
     // stage 2: adaptive gate over the cleaned corpus (dq04)
     val th = cleaned.agg(
       expr("percentile(n_tokens, 0.25)").as("p25w"),
@@ -115,11 +107,10 @@ object CurationPipeline {
     // budget, and the final selection — materialize the (already
     // narrow) survivor rows once instead of re-running gate + dedup
     // per consumer
-    val deduped = gated
+    val deduped = Materialize.once(gated
       .withColumn("rk", row_number().over(dw))
       .filter(col("rk") === 1)
-      .select("doc_id", "lang", "n_tokens")
-      .localCheckpoint(true)
+      .select("doc_id", "lang", "n_tokens"))
     // stage 4: per-language token-budget selection (dm06)
     val totals = deduped.groupBy("lang").agg(sum("n_tokens").as("tok_lang"))
     val budget = totals.agg(expr("min(tok_lang) div 16").as("shard_budget"))
@@ -777,7 +768,7 @@ object CurationPipeline {
         import graft.analytics.{BpeTokenizer => bpe}
         val deep = bpe.loadOrLearn(s, d, bpe.DeepMerges, "bigram")
         val prefix = deep.take(bpe.Merges)
-        val sel = cp02Selection(s, d).localCheckpoint(true)
+        val sel = Materialize.once(cp02Selection(s, d))
         // the selected corpus arrives as the fixture's one-split scan
         // behind a broadcast join, so the whole per-unit deep+prefix
         // tokenization ran as ONE task (r17 JobProf: three ~0.8 s
@@ -796,7 +787,7 @@ object CurationPipeline {
                   bpe.bpeWordTokens(col("u"), deep).cast("long").as("td"),
                   bpe.bpeWordTokens(col("u"), prefix).cast("long").as("tp"))
         // per-doc totals (docs with < 2 words have no units → 0 tokens)
-        val perDoc = sel.select("doc_id", "shard")
+        val perDoc = Materialize.once(sel.select("doc_id", "shard")
           .join(units.groupBy("doc_id")
                   .agg(sum("td").as("n_deep"), sum("tp").as("n_prefix"),
                        bool_and(col("td") <= col("tp")).as("mono"),
@@ -806,8 +797,7 @@ object CurationPipeline {
                   coalesce(col("n_deep"), lit(0L)).as("n_deep"),
                   coalesce(col("n_prefix"), lit(0L)).as("n_prefix"),
                   coalesce(col("mono"), lit(true)).as("mono"),
-                  coalesce(col("flr"), lit(true)).as("flr"))
-          .localCheckpoint(true)
+                  coalesce(col("flr"), lit(true)).as("flr")))
         // the training-file layout at FULL depth: dm08's greedy pack
         // over deep-token counts, shard-local windows
         val w = Window.partitionBy("shard").orderBy("doc_id")
@@ -1069,16 +1059,13 @@ object CurationPipeline {
     // The staged lineage (quality flags + dedup window + decon join) is
     // consumed by the budget stage, the layout stage, and the final
     // ledger join — the dq05/cp02 barrier discipline: compute the token
-    // count once, reduce to narrow rows (text dropped), and eagerly
-    // localCheckpoint so downstream stages derive from the
-    // materialization instead of re-running the whole prefix.
-    val s3 = staged.join(vecKeep, Seq("doc_id"), "left")
+    // count once and reduce to narrow rows (text dropped).
+    val s3 = Materialize.once(staged.join(vecKeep, Seq("doc_id"), "left")
       .withColumn("keep_vec", coalesce(col("keep_vec"), lit(1)))
       .withColumn("n_tokens",
         TextAnalysis.tokenCount(col("text")).cast("long"))
       .select("doc_id", "source", "lang", "n_chars",
-              "keep_q", "is_dup", "keep_vec", "n_tokens")
-      .localCheckpoint(true)
+              "keep_q", "is_dup", "keep_vec", "n_tokens"))
     // stage 4: dm06 token-budget mixture over the survivors
     val toks = s3
       .filter(col("keep_q") === 1 && col("is_dup") === 0 &&
@@ -1101,9 +1088,8 @@ object CurationPipeline {
     // third barrier: s4 feeds the kept-set layout planning AND the
     // final ledger join — keptB's double window would otherwise run
     // per consumer
-    val s4 = s3.join(keptB, Seq("doc_id"), "left")
-      .withColumn("keep_b", coalesce(col("keep_b"), lit(0)))
-      .localCheckpoint(true)
+    val s4 = Materialize.once(s3.join(keptB, Seq("doc_id"), "left")
+      .withColumn("keep_b", coalesce(col("keep_b"), lit(0))))
     // layout (cp04) over the kept docs only
     val kept = s4
       .filter(col("keep_q") === 1 && col("is_dup") === 0 &&

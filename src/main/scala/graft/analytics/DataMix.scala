@@ -574,7 +574,7 @@ object DataMix {
         // serve + exact-slice audit are independent eager chains —
         // overlap them from driver threads (guide §2.6)
         val (served, exact) = graft.analytics.ParActions.both(
-          () => SelfAudit.once {
+          () => Materialize.once {
             val (trBands, trSh) = MinHashBandIndex.segmentFrames(s, tr)
             MinHashBandIndex.scoredPairs(s, trBands, trSh,
                 MinHashBandIndex.signatures(s, ev),
@@ -582,7 +582,7 @@ object DataMix {
               .select(col("doc_id"), col("corpus_id").as("train_id"),
                       col("j").as("jaccard"))
           },
-          () => SelfAudit.once(
+          () => Materialize.once(
             leakPairsExact(s, d, col("doc_id") % 16 === 1)
               .select("doc_id", "train_id", "jaccard")))
         val sAud = served.filter(col("doc_id") % 16 === 1)
@@ -766,18 +766,16 @@ object DataMix {
                 .when(hf < SplitTestCut, "test")
                 .otherwise("train").as("split"))
     // both shingle frames feed three consumers each (gram explode, hot
-    // semi-join, the size join) — persist with lineage INTACT so each
-    // side tokenizes once per plan instead of three times; the train
-    // side is corpus-wide, so recomputability on executor loss matters
-    // (guide §5)
-    val ev = docs.filter(col("split") =!= "train").filter(evalSlice)
-      .select(col("doc_id"), col("split"),
-              Dedup.shingleHashes(s, col("text"), 2).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tr = docs.filter(col("split") === "train")
+    // semi-join, the size join) — materialize them so each side
+    // tokenizes once per plan instead of three times (the train side is
+    // corpus-wide)
+    val ev = Materialize.shared(
+      docs.filter(col("split") =!= "train").filter(evalSlice)
+        .select(col("doc_id"), col("split"),
+                Dedup.shingleHashes(s, col("text"), 2).as("sh")))
+    val tr = Materialize.shared(docs.filter(col("split") === "train")
       .select(col("doc_id").as("train_id"),
-              Dedup.shingleHashes(s, col("text"), 2).as("sh_t"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+              Dedup.shingleHashes(s, col("text"), 2).as("sh_t")))
     val evG = ev.select(col("doc_id"), explode(col("sh")).as("g"))
     val trG = tr.select(col("train_id"), explode(col("sh_t")).as("g"))
     // the HOT set (grams above the cap) is tiny — near-empty on a

@@ -233,7 +233,7 @@ object DataQuality {
     * scorer ([[graft.functions.DeconScore]]) are spec-pinned against).
     * Build ONCE per gate/stream, then score any number of slices with
     * [[semanticDeconLshDropsWith]]; callers that serve many batches
-    * should `.localCheckpoint(true)` each frame so the simhash →
+    * should [[Materialize.once]] each frame so the simhash →
     * band-explode → groupBy → dense-table aggregation runs once, not
     * per micro-batch. */
   def deconBenchBucketChunks(benchIn: org.apache.spark.sql.DataFrame,
@@ -742,13 +742,10 @@ object DataQuality {
         // the narrow flag frame feeds BOTH the per-source aggregate and
         // the final join; without materialization Spark recomputes the
         // whole regex flag suite on each side (measured 9.9 s vs dq02's
-        // own 7 s at sf1 — i.e. 2× the dominant map cost). An eager
-        // localCheckpoint (the dd06 pattern) runs the expensive pass
-        // once and both consumers read its blocks; at 100 TB this is
-        // the persisted narrow intermediate a two-pass algorithm wants.
-        val flags = qualityFlags(table(s, d, "documents"))
-          .select("doc_id", "source", "keep")
-          .localCheckpoint(true)
+        // own 7 s at sf1 — i.e. 2× the dominant map cost; the dd06
+        // pattern).
+        val flags = Materialize.once(qualityFlags(table(s, d, "documents"))
+          .select("doc_id", "source", "keep"))
         val srcStats = flags.groupBy("source")
           .agg(count(lit(1)).as("n_docs"), sum("keep").as("n_keep"))
           .select(col("source"),
@@ -1222,9 +1219,9 @@ object DataQuality {
       "dc03_semantic_decon_lsh",
       (s, d) => {
         val emb = table(s, d, "embeddings")
-        val served = SelfAudit.once(semanticDeconLshDrops(s, emb))
+        val served = Materialize.once(semanticDeconLshDrops(s, emb))
         val audit = emb.filter(col("label") =!= 0 && col("vec_id") % 4 === 1)
-        val exact = SelfAudit.once(
+        val exact = Materialize.once(
           audit.crossJoin(Bounded.broadcastBench(
               emb.filter(col("label") === 0)
                 .select(col("embedding").as("qvec")), "dc03.bench-vecs"))
@@ -1397,11 +1394,11 @@ object DataQuality {
           .select(col("vec_id").as("bench_id"), col("embedding"))
         val chunks = deconBenchBucketChunks(
           bench, bands = DeconSelBands, rows = DeconSelRows)
-        val scored = SelfAudit.once(semanticDeconScoredWith(
+        val scored = Materialize.once(semanticDeconScoredWith(
           s, corpus, chunks, DeconSelBands, DeconSelRows))
         val served = scored.filter(col("mc") >= SemanticDeconTau)
           .select(col("vec_id"), round(col("mc"), 6).as("max_cand_sim"))
-        val exact = SelfAudit.once(
+        val exact = Materialize.once(
           corpus.filter(col("vec_id") % 4 === 1)
             .crossJoin(Bounded.broadcastBench(
               emb.filter(col("label") === 0)
@@ -1512,13 +1509,13 @@ object DataQuality {
           math.pow(1.0 - math.pow(p, r), b)
         }
         val chunks = deconBenchBucketChunks(bench, bands = b, rows = r)
-        val scored = SelfAudit.once(semanticDeconScoredWith(
+        val scored = Materialize.once(semanticDeconScoredWith(
           s, corpus, chunks, b, r))
         val served = scored.filter(col("mc") >= SemanticDeconTau)
           .select(col("vec_id"), round(col("mc"), 6).as("max_cand_sim"))
         // exact audit side scores the ORIGINAL bench: replicas cannot
         // change a max, so this is the same frame at 1/k the cost
-        val exact = SelfAudit.once(
+        val exact = Materialize.once(
           corpus.filter(col("vec_id") % 4 === 1)
             .crossJoin(Bounded.broadcastBench(
               emb.filter(col("label") === 0)
@@ -1817,10 +1814,10 @@ object DataQuality {
         val docs = table(s, d, "documents")
         val batch = docs.filter(col("source") === "src19")
         val bf = BloomGramIndex.ensure(s, d)
-        val served = SelfAudit.once(bloomGate(s, batch, bf))
+        val served = Materialize.once(bloomGate(s, batch, bf))
         val audBatch = batch.filter(col("doc_id") % 4 === 0)
         val corpusGrams = gramKeys(docs.filter(col("source") =!= "src19"))
-        val exactKeep = SelfAudit.once(
+        val exactKeep = Materialize.once(
           gramGate(audBatch, corpusGrams).filter(col("keep") === 1)
             .select("doc_id"))
         val leaked = served
@@ -1956,11 +1953,11 @@ object DataQuality {
         val docs = table(s, d, "documents")
         val batch = docs.filter(col("source") === "src19")
         val base = BloomGramIndex.ensureSharded(s, d, ShardedK)
-        val served = SelfAudit.once(
+        val served = Materialize.once(
           bloomGateSharded(s, batch, base, ShardedK))
         val audBatch = batch.filter(col("doc_id") % 4 === 0)
         val corpusGrams = gramKeys(docs.filter(col("source") =!= "src19"))
-        val exactKeep = SelfAudit.once(
+        val exactKeep = Materialize.once(
           gramGate(audBatch, corpusGrams).filter(col("keep") === 1)
             .select("doc_id"))
         val leaked = served

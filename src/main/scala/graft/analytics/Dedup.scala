@@ -194,29 +194,13 @@ object Dedup {
     *
     * Each iteration is one distributed join+aggregate; the driver loop
     * only checks the converged-count (O(component diameter) iterations
-    * — near-dup components are shallow in practice). `localCheckpoint`
+    * — near-dup components are shallow in practice). [[Materialize.once]]
     * cuts lineage so plans don't grow exponentially across iterations.
     */
-  /** Eager localCheckpoint that also reports which persisted RDD ids it
-    * created, so superseded iteration frames can be dropped (a
-    * checkpointed frame's blocks ARE its data — only unpersist once
-    * nothing downstream reads it). */
-  private def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    val out = df.localCheckpoint(true)
-    (out, sc.getPersistentRDDs.keySet.toSet -- before)
-  }
-
-  private def unpersistIds(spark: SparkSession, ids: Set[Int]): Unit = {
-    val live = spark.sparkContext.getPersistentRDDs
-    ids.foreach(id => live.get(id).foreach(_.unpersist(false)))
-  }
-
   def clusterPairs(pairs: DataFrame): DataFrame = {
     val spark = pairs.sparkSession
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-    val (symRaw, symIds) = checkpointTracked(
+    val symRaw = Materialize.once(
       edges.union(edges.select(col("dst").as("src"), col("src").as("dst"))))
     // Size iteration frames to the edge count: near-dup edge sets are
     // usually tiny relative to the corpus (a handful of partitions keeps
@@ -231,10 +215,9 @@ object Dedup {
     // the localCheckpoint's LogicalRDD keeps its outputPartitioning, so
     // every iteration's sym⋈labels join reuses this one shuffle instead
     // of re-exchanging the (big) edge side per round.
-    val (sym, symIds2) = checkpointTracked(
-      symRaw.repartition(parts, col("dst")))
-    unpersistIds(spark, symIds) // superseded by the partitioned copy
-    var (labels, labelIds) = checkpointTracked(
+    val sym = Materialize.once(symRaw.repartition(parts, col("dst")))
+    Materialize.release(symRaw) // superseded by the partitioned copy
+    var labels = Materialize.once(
       sym.select(col("src").as("id")).distinct()
         .withColumn("label", col("id")).coalesce(parts))
     var changed = 1L
@@ -258,7 +241,7 @@ object Dedup {
       // convergence is O(log diameter). At a 10× scale probe this cut
       // the clustering from ~38 rounds to ~7.
       val l2 = stepped.select(col("id").as("jid"), col("nl").as("jl"))
-      val (updated, updatedIds) = checkpointTracked(
+      val updated = Materialize.once(
         stepped
           .join(l2, stepped("nl") === l2("jid"), "left")
           .select(col("id"), col("label"),
@@ -266,11 +249,10 @@ object Dedup {
                     .as("new_label"))
           .coalesce(parts))
       changed = updated.filter(col("new_label") =!= col("label")).count()
-      unpersistIds(spark, labelIds) // superseded by `updated`
+      Materialize.release(labels) // superseded by `updated`
       labels = updated.select(col("id"), col("new_label").as("label"))
-      labelIds = updatedIds
     }
-    unpersistIds(spark, symIds2) // loop exited; result reads only `labels`
+    Materialize.release(sym) // loop exited; result reads only `labels`
     labels.select(col("id").as("doc_id"), col("label").as("canonical_id"))
   }
 
@@ -358,12 +340,12 @@ object Dedup {
         // driver threads (guide §2.6, the dd03 pattern): the slice
         // audits hide behind the full-corpus serve's tail
         val frames = ParActions.run(Seq[() => Any](
-          () => SelfAudit.once(
+          () => Materialize.once(
             minhashPairs(docs, shingleN = 3, minJaccard = 0.3)),
-          () => SelfAudit.once(
+          () => Materialize.once(
             minhashPairs(docs.filter(col("doc_id") < 500),
                          shingleN = 2, minJaccard = 0.3)),
-          () => SelfAudit.once(exactNgramPairs(s, d))))
+          () => Materialize.once(exactNgramPairs(s, d))))
         val served = frames(0).asInstanceOf[DataFrame]
         val sliceLsh = frames(1).asInstanceOf[DataFrame]
         val exact = frames(2).asInstanceOf[DataFrame]
@@ -421,13 +403,13 @@ object Dedup {
         // (guide §2.6) so the slice audits hide behind the full-corpus
         // serve's tail.
         val frames = ParActions.run(Seq[() => Any](
-          () => SelfAudit.once(simhashPairs(s, docs, maxHamming = 7)),
+          () => Materialize.once(simhashPairs(s, docs, maxHamming = 7)),
           () => {
-            val f = SelfAudit.once(simhashFingerprints(docs500))
-            (f, SelfAudit.once(simhashPairs(s, docs500, maxHamming = 7,
-                                            fingerprints = Some(f))))
+            val f = Materialize.once(simhashFingerprints(docs500))
+            (f, Materialize.once(simhashPairs(s, docs500, maxHamming = 7,
+                                              fingerprints = Some(f))))
           },
-          () => SelfAudit.once(exactNgramPairs(s, d, minJaccard = 0.8))))
+          () => Materialize.once(exactNgramPairs(s, d, minJaccard = 0.8))))
         val served = frames(0).asInstanceOf[DataFrame]
         val (fp, blocked7) = frames(1).asInstanceOf[(DataFrame, DataFrame)]
         val exact08 = frames(2).asInstanceOf[DataFrame]
@@ -603,22 +585,17 @@ object Dedup {
         // `words` feeds the gram explode AND the final per-doc join;
         // `grams` feeds the census AND the dup-position semi-join —
         // without a barrier each subtree re-runs per consumer (the
-        // split pass twice, the 20-gram explode+hash twice). persist
-        // with lineage INTACT (not localCheckpoint): both frames are
-        // corpus-wide, so on a real cluster an executor loss must be
-        // able to recompute them (guide §5); within this one action
-        // each still computes exactly once.
-        val words = table(s, d, "documents")
+        // split pass twice, the 20-gram explode+hash twice). Both frames
+        // are corpus-wide; within this one action each computes once.
+        val words = Materialize.shared(table(s, d, "documents")
           .select(col("doc_id"),
                   expr("filter(split(text, '\\\\s+'), w -> length(w) > 0)")
-                    .as("words"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val grams = words
+                    .as("words")))
+        val grams = Materialize.shared(words
           .select(col("doc_id"), posexplode(expr(gramsL)).as(Seq("p", "gram")))
           .withColumn("h1", xxhash64(col("gram")))
           .withColumn("h2", xxhash64(col("gram"), lit(1)))
-          .select("doc_id", "p", "h1", "h2")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .select("doc_id", "p", "h1", "h2"))
         val flagged = grams.groupBy("h1", "h2")
           .agg(countDistinct("doc_id").as("n_docs"))
           .filter(col("n_docs") >= 2)
@@ -722,9 +699,9 @@ object Dedup {
         // serve and exhaustive-slice audit are independent eager chains
         // — overlap them from driver threads (guide §2.6)
         val (served, exact) = ParActions.both(
-          () => SelfAudit.once(
+          () => Materialize.once(
             MinHashBandIndex.gate(s, dir, MinHashBandIndex.arrivalsOf(docs))),
-          () => SelfAudit.once(MinHashBandIndex.exhaustiveGate(
+          () => Materialize.once(MinHashBandIndex.exhaustiveGate(
             s, MinHashBandIndex.corpusOf(docs),
             MinHashBandIndex.arrivalsOf(docs)
               .filter(col("doc_id") % 40 === 0))))

@@ -160,7 +160,7 @@ object FrequentItems {
           call_function(MisraGriesAgg.fnName, col("ngram"), lit(K2))
             .as("mg"),
           count(lit(1)).as("n_stream"))
-        val cands = SelfAudit.once(sketch.select(
+        val cands = Materialize.once(sketch.select(
           col("source"), explode(col("mg")).as("c"), col("n_stream"))
           .select(col("source"), col("c.item").as("ngram"),
                   col("n_stream")))

@@ -77,33 +77,22 @@ object GraphOps {
     * state (st27's additive census), round 0 reports it and round 1
     * peels WITH ITS keep set (the state is load-bearing, not
     * decorative); later rounds recount from survivors, as any peel
-    * must (peeling changes degrees). Per-round localCheckpoint for the
-    * gr03 lineage reason (O(rounds²) re-peel otherwise — measured
-    * 38.7 → 3.8 s at 30×). */
+    * must (peeling changes degrees). Per-round [[Materialize.once]]
+    * for the gr03 lineage reason (O(rounds²) re-peel otherwise —
+    * measured 38.7 → 3.8 s at 30×). */
   def peelSummary(e0in: DataFrame, c0in: DataFrame, k: Int): DataFrame = {
-    // skip the defensive copy when the caller already checkpointed the
-    // frame (st27 checkpoints both inputs for its own cross-consumers;
-    // re-checkpointing them was a redundant full-copy job per input). A
-    // plain RDD-backed frame (`createDataFrame(rdd)`) is a LogicalRDD
-    // too, but its RDD recomputes on every round — it gets the copy.
-    def ensureEager(df: DataFrame): DataFrame =
-      df.queryExecution.analyzed match {
-        case r: org.apache.spark.sql.execution.LogicalRDD
-            if r.rdd.isCheckpointed => df
-        case _ => df.localCheckpoint(true)
-      }
-    val e0 = ensureEager(e0in)
-    val c0 = ensureEager(c0in)
+    val e0 = Materialize.once(e0in) // st27's inputs are checkpoints
+    val c0 = Materialize.once(c0in)
     def restrict(e: DataFrame, keep: DataFrame) =
       e.join(keep.withColumnRenamed("tk", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("tk", "b"), Seq("b"), "left_semi")
         .select("a", "b")
-    val e1 = restrict(e0, c0.filter(col("dg") >= k).select("tk"))
-      .localCheckpoint(true)
-    val c1 = degreeCensus(e1).localCheckpoint(true)
-    val e2 = restrict(e1, c1.filter(col("dg") >= k).select("tk"))
-      .localCheckpoint(true)
-    val c2 = degreeCensus(e2).localCheckpoint(true)
+    val e1 = Materialize.once(
+      restrict(e0, c0.filter(col("dg") >= k).select("tk")))
+    val c1 = Materialize.once(degreeCensus(e1))
+    val e2 = Materialize.once(
+      restrict(e1, c1.filter(col("dg") >= k).select("tk")))
+    val c2 = Materialize.once(degreeCensus(e2))
     Seq((0, e0, c0), (1, e1, c1), (2, e2, c2)).map { case (i, e, c) =>
       e.agg(count(lit(1)).as("n_edges"))
         .crossJoin(c.agg(count(lit(1)).as("n_nodes"),
@@ -316,11 +305,11 @@ object GraphOps {
       // the exact anchor the estimates bracket (measured 2.4–13%
       // error at p = 1/2 on the fixtures).
       (s, d) => {
-        val und = {
+        val und = Materialize.once {
           val e = tokenEdges(table(s, d, "documents"))
           e.select(least(col("u"), col("v")).as("a"),
                    greatest(col("u"), col("v")).as("b")).distinct()
-        }.localCheckpoint(true)
+        }
         val m = und.count()
         val p = math.min(0.5, 12.0 / math.sqrt(m.toDouble))
         def hf(salted: org.apache.spark.sql.Column) =
@@ -468,8 +457,8 @@ object GraphOps {
         // list — measured 38.7 s → 3.8 s at the 30× corpus); with it
         // each round is computed exactly once, which is also how a
         // real fixpoint loop must run (lineage cannot grow per round)
-        val rounds = Iterator.iterate(e0.localCheckpoint())(e =>
-          peel(e).localCheckpoint()).take(4).toSeq
+        val rounds = Iterator.iterate(Materialize.once(e0))(e =>
+          Materialize.once(peel(e))).take(4).toSeq
         rounds.zipWithIndex.map { case (e, i) =>
           e.agg(count(lit(1)).as("n_edges"))
             .crossJoin(census(e).agg(
@@ -568,13 +557,13 @@ object GraphOps {
         // the two epochs' edge materializations are independent eager
         // jobs — overlap them from driver threads (guide §2.6)
         val (e1, eAll) = ParActions.both(
-          () => undirectedEdges(docs.filter(col("doc_id") % 2 === 0))
-            .localCheckpoint(true),
-          () => undirectedEdges(docs).localCheckpoint(true))
+          () => Materialize.once(
+            undirectedEdges(docs.filter(col("doc_id") % 2 === 0))),
+          () => Materialize.once(undirectedEdges(docs)))
         val delta = eAll.join(e1, Seq("a", "b"), "left_anti")
-        val c1 = degreeCensus(e1).localCheckpoint(true)
-        val c2inc = c1.unionByName(degreeCensus(delta))
-          .groupBy("tk").agg(sum("dg").as("dg")).localCheckpoint(true)
+        val c1 = Materialize.once(degreeCensus(e1))
+        val c2inc = Materialize.once(c1.unionByName(degreeCensus(delta))
+          .groupBy("tk").agg(sum("dg").as("dg")))
         val mergeDiff = c2inc
           .join(degreeCensus(eAll).withColumnRenamed("dg", "dg2"),
                 Seq("tk"), "full_outer")

@@ -75,23 +75,21 @@ object Int8Index {
     * rewrite of the codes dir through [[OfflineArtifact.stagedSwap]],
     * before the tombstone segment is cleared — deleted rows stay masked
     * through every crash window. Returns the number of rows dropped. */
-  def purgeTombstones(spark: SparkSession, dir: String): Long = {
-    val recovered =
-      OfflineArtifact.recover(spark, dir, "purge").contains("codes")
-    val tombs = Tombstones.read(spark, dir).persist()
-    val masked =
-      try spark.read.parquet(s"$dir/codes")
+  def purgeTombstones(spark: SparkSession, dir: String): Long =
+    Materialize.scoped {
+      val recovered =
+        OfflineArtifact.recover(spark, dir, "purge").contains("codes")
+      val tombs = Materialize.shared(Tombstones.read(spark, dir))
+      val masked = spark.read.parquet(s"$dir/codes")
         .join(tombs, Seq("vec_id"), "left_semi").count()
-      finally ()
-    if (masked > 0L || recovered)
-      OfflineArtifact.stagedSwap(spark, s"$dir/codes", "purge") { tmp =>
-        spark.read.parquet(s"$dir/codes")
-          .join(tombs, Seq("vec_id"), "left_anti")
-          .dropDuplicates("vec_id") // converges a crash-recovered duplicate dir
-          .write.mode("overwrite").parquet(tmp)
-      }
-    tombs.unpersist(false)
-    Tombstones.clear(spark, dir)
-    masked
-  }
+      if (masked > 0L || recovered)
+        OfflineArtifact.stagedSwap(spark, s"$dir/codes", "purge") { tmp =>
+          spark.read.parquet(s"$dir/codes")
+            .join(tombs, Seq("vec_id"), "left_anti")
+            .dropDuplicates("vec_id") // converges a crash-recovered duplicate dir
+            .write.mode("overwrite").parquet(tmp)
+        }
+      Tombstones.clear(spark, dir)
+      masked
+    }
 }

@@ -173,8 +173,8 @@ object IvfIndex {
 
   private def buildIndex(spark: SparkSession, sfDir: String, dir: String,
                          nLists: Int, lloydIters: Int): Unit =
-    buildIndexFrom(spark, table(spark, sfDir, "embeddings"), dir,
-                   nLists, lloydIters)
+    Materialize.scoped(buildIndexFrom(
+      spark, table(spark, sfDir, "embeddings"), dir, nLists, lloydIters))
 
   /** [[buildIndex]] over an explicit source frame — the form
     * [[ensureFresh]] needs (a rebuild's source is the index's own live
@@ -203,7 +203,8 @@ object IvfIndex {
     // count, a seed collect, and one aggregate per Lloyd iteration
     // against it — without the persist each action re-scans the corpus
     // and re-runs the argmin/residual math (~5 redundant passes)
-    val assigned = assign(emb, centroids).withColumn("__res", resid).persist()
+    val assigned = Materialize.shared(
+      assign(emb, centroids).withColumn("__res", resid))
     val residCbs = PqIndex.fitCodebooks(
       assigned.select(col("vec_id"), col("__res").as("embedding")))
     residCbs.zipWithIndex.flatMap { case (cb, m) =>
@@ -226,7 +227,6 @@ object IvfIndex {
            count(lit(1)).as("n_build"))
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/drift_base")
-    assigned.unpersist(false)
   }
 
   /** Assignment-only APPEND of a batch of new vectors to an existing
@@ -271,11 +271,10 @@ object IvfIndex {
       zip_with(col("embedding"), element_at(centLit, col("list") + 1),
                (x, y) => x.cast("double") - y),
       v => v.cast("float"))
-    val assigned = assign(batch, centroids)
-      .withColumn("res_codes",
-        PqIndex.encodeExpr(spark, resid, residCbs))
-      .persist()
-    try {
+    Materialize.scoped {
+      val assigned = Materialize.shared(assign(batch, centroids)
+        .withColumn("res_codes",
+          PqIndex.encodeExpr(spark, resid, residCbs)))
       assigned.write.mode("append").partitionBy("list")
         .parquet(s"$dir/assignments")
       val prov = assigned.agg(
@@ -287,7 +286,7 @@ object IvfIndex {
           .as("batch_stamp"))
       prov.coalesce(1).write.mode("append").parquet(s"$dir/append_log")
       prov.head().getLong(0)
-    } finally { assigned.unpersist(false); () }
+    }
   }
 
   /** Compact the small files [[appendBatch]] accumulates inside hot
@@ -365,43 +364,43 @@ object IvfIndex {
     * tombstones are cleared last, so deleted rows stay masked through
     * every crash window. Cost ∝ the touched lists' data, never the
     * index. Returns the number of lists rewritten. */
-  def purgeTombstones(spark: SparkSession, dir: String): Int = {
-    val base = s"$dir/assignments"
-    // complete any interrupted swap first; recovered leaves may hold
-    // old ∪ staged duplicates, so they are force-rewritten below and
-    // the rewrite's vec_id dedup converges their row set.
-    // BOTH ops' staging is recovered here, not just "purge": a
-    // committed `.compact-list=N` left by a crashed [[compactLists]]
-    // holds PRE-PURGE rows — if it survived this purge (which clears
-    // the tombstones at the end), the next compact would move
-    // tombstoned vec_ids back into the leaf with nothing left to mask
-    // them. Folding those leaves into `touched` rewrites them under
-    // the tombstone anti-join before the clear.
-    val recovered = (OfflineArtifact.recover(spark, base, "purge") ++
-                     OfflineArtifact.recover(spark, base, "compact"))
-      .filter(_.startsWith("list="))
-      .map(_.stripPrefix("list=").toInt)
-    val tombs = readTombstones(spark, dir).persist()
-    val touched =
-      (readAssignments(spark, dir)
-        .join(tombs, Seq("vec_id"), "left_semi")
-        .select("list").distinct().collect().map(_.getInt(0)) ++
-        recovered).distinct
-    touched.foreach { l =>
-      OfflineArtifact.stagedSwap(spark, s"$base/list=$l", "purge") { tmp =>
-        spark.read.parquet(s"$base/list=$l")
-          .join(tombs, Seq("vec_id"), "left_anti")
-          .dropDuplicates("vec_id") // converges a crash-recovered duplicate leaf
-          .coalesce(1)
-          .write.mode("overwrite").parquet(tmp)
+  def purgeTombstones(spark: SparkSession, dir: String): Int =
+    Materialize.scoped {
+      val base = s"$dir/assignments"
+      // complete any interrupted swap first; recovered leaves may hold
+      // old ∪ staged duplicates, so they are force-rewritten below and
+      // the rewrite's vec_id dedup converges their row set.
+      // BOTH ops' staging is recovered here, not just "purge": a
+      // committed `.compact-list=N` left by a crashed [[compactLists]]
+      // holds PRE-PURGE rows — if it survived this purge (which clears
+      // the tombstones at the end), the next compact would move
+      // tombstoned vec_ids back into the leaf with nothing left to mask
+      // them. Folding those leaves into `touched` rewrites them under
+      // the tombstone anti-join before the clear.
+      val recovered = (OfflineArtifact.recover(spark, base, "purge") ++
+                       OfflineArtifact.recover(spark, base, "compact"))
+        .filter(_.startsWith("list="))
+        .map(_.stripPrefix("list=").toInt)
+      val tombs = Materialize.shared(readTombstones(spark, dir))
+      val touched =
+        (readAssignments(spark, dir)
+          .join(tombs, Seq("vec_id"), "left_semi")
+          .select("list").distinct().collect().map(_.getInt(0)) ++
+          recovered).distinct
+      touched.foreach { l =>
+        OfflineArtifact.stagedSwap(spark, s"$base/list=$l", "purge") { tmp =>
+          spark.read.parquet(s"$base/list=$l")
+            .join(tombs, Seq("vec_id"), "left_anti")
+            .dropDuplicates("vec_id") // converges a crash-recovered duplicate leaf
+            .coalesce(1)
+            .write.mode("overwrite").parquet(tmp)
+        }
       }
+      // clear LAST: tombstones outlive every rewrite, so a crash above
+      // can only leave rows that are still masked by [[liveAssignments]]
+      Tombstones.clear(spark, dir)
+      touched.length
     }
-    tombs.unpersist(false)
-    // clear LAST: tombstones outlive every rewrite, so a crash above
-    // can only leave rows that are still masked by [[liveAssignments]]
-    Tombstones.clear(spark, dir)
-    touched.length
-  }
 
   /** Staleness statistic for the frozen-centroid append path: the mean
     * squared distance-to-centroid of the CURRENT assignments (base +
@@ -452,24 +451,25 @@ object IvfIndex {
     if (OfflineArtifact.swapDir(spark, dir)) return true
     val st = driftStatus(spark, dir)
     if (!force && !st.needsRebuild) return false
-    // materialize the live rows once: the build runs several actions
-    // over them (fit, codebooks, assignment, baseline) and must be
-    // decoupled from the dir about to be swapped
-    val live = liveAssignments(spark, dir).drop("list", "res_codes")
-      .localCheckpoint(true)
     val fresh = s"$dir-fresh"
-    buildIndexFrom(spark, live, fresh, nLists, lloydIters)
-    Seq("append_log", "rebuild_log")
-      .filter(log => OfflineArtifact.exists(spark, s"$dir/$log"))
-      .foreach(log => spark.read.parquet(s"$dir/$log")
-        .write.mode("overwrite").parquet(s"$fresh/$log"))
-    live.agg(count(lit(1)).as("n_rows"),
-             bit_xor(xxhash64(col("vec_id"))).as("content_stamp"))
-      .select(col("n_rows"), col("content_stamp"),
-              lit(st.ratio).as("drift_ratio_before"))
-      .coalesce(1)
-      .write.mode("append").parquet(s"$fresh/rebuild_log")
-    live.unpersist(false)
+    Materialize.scoped {
+      // materialize the live rows once: the build runs several actions
+      // over them (fit, codebooks, assignment, baseline) and must be
+      // decoupled from the dir about to be swapped
+      val live = Materialize.once(
+        liveAssignments(spark, dir).drop("list", "res_codes"))
+      buildIndexFrom(spark, live, fresh, nLists, lloydIters)
+      Seq("append_log", "rebuild_log")
+        .filter(log => OfflineArtifact.exists(spark, s"$dir/$log"))
+        .foreach(log => spark.read.parquet(s"$dir/$log")
+          .write.mode("overwrite").parquet(s"$fresh/$log"))
+      live.agg(count(lit(1)).as("n_rows"),
+               bit_xor(xxhash64(col("vec_id"))).as("content_stamp"))
+        .select(col("n_rows"), col("content_stamp"),
+                lit(st.ratio).as("drift_ratio_before"))
+        .coalesce(1)
+        .write.mode("append").parquet(s"$fresh/rebuild_log")
+    }
     // commit point: the marker makes the stage a complete artifact (the
     // dir swapped in keeps counting as built for OfflineArtifact.ensure)
     OfflineArtifact.markComplete(spark, fresh)

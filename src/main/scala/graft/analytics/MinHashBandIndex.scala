@@ -117,15 +117,10 @@ object MinHashBandIndex {
     * for sk03's two derived-corpus gate stages. */
   def segmentFrames(spark: SparkSession, docs: DataFrame)
       : (DataFrame, DataFrame) = {
-    // persist with lineage INTACT, not localCheckpoint: callers pass
-    // corpus-scale frames here (dm10's train side, sk03's derived
-    // corpus), and a lineage-truncated corpus-wide frame turns an
-    // executor loss into a dead query at cluster scale (VERDICT r17
-    // #2 / guide §5). Both returned frames still derive from ONE
-    // materialized pass — the first consumer fills the blocks.
-    val base = docs
-      .select(col("doc_id"), Dedup.shingleHashes(spark, col("text"), 2).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // corpus-scale callers (dm10's train side, sk03's derived corpus):
+    // both returned frames derive from ONE materialized pass
+    val base = Materialize.shared(docs
+      .select(col("doc_id"), Dedup.shingleHashes(spark, col("text"), 2).as("sh")))
     (bandsOf(withKeys(spark, base)), shinglesOf(base))
   }
 
@@ -138,9 +133,9 @@ object MinHashBandIndex {
 
   /** Build the index into `dir` from an explicit corpus frame (the
     * spec's chain probes rebuild over corpus+accepted this way). */
-  def buildFrom(spark: SparkSession, dir: String, corpus: DataFrame): Unit = {
-    val sigs = signatures(spark, corpus).persist()
-    try {
+  def buildFrom(spark: SparkSession, dir: String, corpus: DataFrame): Unit =
+    Materialize.scoped {
+      val sigs = Materialize.shared(signatures(spark, corpus))
       bandsOf(sigs)
         .repartition(KeyParts, col("kp")) // one file per kp dir; hash
                                           // collisions leave ~1/e of the
@@ -150,8 +145,7 @@ object MinHashBandIndex {
         .write.mode("overwrite").partitionBy("kp").parquet(s"$dir/bands")
       shinglesOf(sigs).dropDuplicates("corpus_id")
         .write.mode("overwrite").parquet(s"$dir/shingles")
-    } finally { sigs.unpersist(false); () }
-  }
+    }
 
   /** Assignment-only APPEND of accepted docs: their bands + shingles
     * land as new files (cost ∝ batch; the standing index is never read
@@ -165,9 +159,9 @@ object MinHashBandIndex {
     * then rejects against itself). The streaming driver satisfies this
     * naturally (each micro-batch is materialized before its append). */
   def appendAccepted(spark: SparkSession, dir: String,
-                     docs: DataFrame): Long = {
-    val sigs = signatures(spark, docs).persist()
-    try {
+                     docs: DataFrame): Long =
+    Materialize.scoped {
+      val sigs = Materialize.shared(signatures(spark, docs))
       bandsOf(sigs)
         .repartition(KeyParts, col("kp")) // one file per kp dir, ~40-way
                                           // writers (see buildFrom note)
@@ -182,8 +176,7 @@ object MinHashBandIndex {
           .as("batch_stamp"))
       prov.coalesce(1).write.mode("append").parquet(s"$dir/append_log")
       prov.head().getLong(0)
-    } finally { sigs.unpersist(false); () }
-  }
+    }
 
   /** Fold streaming delta SEGMENTS (st19/st20's accepted-doc state,
     * batch-id-partitioned under the two delta roots) into the seed
@@ -199,33 +192,34 @@ object MinHashBandIndex {
     * stream is DOWN (it mutates state the running query reads). */
   def mergeSegments(spark: SparkSession, seedDir: String,
                     bandsDeltaDir: String, shinglesDeltaDir: String): Long = {
-    if (!OfflineArtifact.exists(spark, bandsDeltaDir)) return 0L
-    // the two delta reads, and then the two seed appends, are
-    // independent action pairs — overlap each pair (ParActions; the
-    // jobs are small and nowhere near fill the executor slots)
-    val (segBands, segSh) = ParActions.both(
-      () => spark.read.parquet(bandsDeltaDir)
-        .select("corpus_id", "band", "key", "kp")
-        .localCheckpoint(true), // sever from the dirs we are about to drop
-      () => spark.read.parquet(shinglesDeltaDir)
-        .select("corpus_id", "sh")
-        .localCheckpoint(true))
-    // spread the append across the kp dirs it lands in: a delta read
-    // back from few landed files is 1-2 partitions, so the partitioned
-    // write was ONE task sequentially opening all 64 kp writers (r17
-    // JobProf: a 1.1 s single-task job inside st22's fold). Hashing on
-    // the partition column keeps exactly one file per kp dir per fold
-    // (each kp lives in one task) while the opens run in parallel —
-    // same file count, same rows, straggler gone at every scale.
-    ParActions.both(
-      () => segBands.repartition(KeyParts, col("kp"))
-        .write.mode("append").partitionBy("kp")
-        .parquet(s"$seedDir/bands"),
-      () => segSh.write.mode("append").parquet(s"$seedDir/shingles"))
-    val n = segSh.count()
-    OfflineArtifact.delete(spark, bandsDeltaDir)
-    OfflineArtifact.delete(spark, shinglesDeltaDir)
-    n
+    if (!OfflineArtifact.exists(spark, bandsDeltaDir)) 0L
+    else Materialize.scoped {
+      // the two delta reads, and then the two seed appends, are
+      // independent action pairs — overlap each pair (ParActions; the
+      // jobs are small and nowhere near fill the executor slots); each
+      // read is materialized to sever it from the dirs about to go
+      val (segBands, segSh) = ParActions.both(
+        () => Materialize.once(spark.read.parquet(bandsDeltaDir)
+          .select("corpus_id", "band", "key", "kp")),
+        () => Materialize.once(spark.read.parquet(shinglesDeltaDir)
+          .select("corpus_id", "sh")))
+      // spread the append across the kp dirs it lands in: a delta read
+      // back from few landed files is 1-2 partitions, so the partitioned
+      // write was ONE task sequentially opening all 64 kp writers (r17
+      // JobProf: a 1.1 s single-task job inside st22's fold). Hashing on
+      // the partition column keeps exactly one file per kp dir per fold
+      // (each kp lives in one task) while the opens run in parallel —
+      // same file count, same rows, straggler gone at every scale.
+      ParActions.both(
+        () => segBands.repartition(KeyParts, col("kp"))
+          .write.mode("append").partitionBy("kp")
+          .parquet(s"$seedDir/bands"),
+        () => segSh.write.mode("append").parquet(s"$seedDir/shingles"))
+      val n = segSh.count()
+      OfflineArtifact.delete(spark, bandsDeltaDir)
+      OfflineArtifact.delete(spark, shinglesDeltaDir)
+      n
+    }
   }
 
   /** Segment-RETENTION policy — the scheduler [[mergeSegments]] was
@@ -277,50 +271,50 @@ object MinHashBandIndex {
     * segments. Batch takedowns
     * amortize: many tombstones, one rewrite. Returns the number of
     * band partitions rewritten. */
-  def purgeTombstones(spark: SparkSession, dir: String): Int = {
-    val bandsBase = s"$dir/bands"
-    // complete interrupted swaps first; recovered targets may hold
-    // old ∪ staged duplicates, so they are force-rewritten below and
-    // the rewrites' natural-key dedup converges their row sets
-    val recoveredKps = OfflineArtifact.recover(spark, bandsBase, "purge")
-      .filter(_.startsWith("kp=")).map(_.stripPrefix("kp=").toInt)
-    val recoveredSh =
-      OfflineArtifact.recover(spark, dir, "purge").contains("shingles")
-    val tombs = Tombstones.read(spark, dir, "corpus_id").persist()
-    val touched =
-      (spark.read.parquet(s"$dir/bands")
-        .join(tombs, Seq("corpus_id"), "left_semi")
-        .select("kp").distinct().collect().map(_.getInt(0)) ++
-        recoveredKps).distinct
-    touched.foreach { kp =>
-      OfflineArtifact.stagedSwap(spark, s"$bandsBase/kp=$kp", "purge") { tmp =>
-        spark.read.parquet(s"$bandsBase/kp=$kp")
-          .join(tombs, Seq("corpus_id"), "left_anti")
-          .distinct() // converges a crash-recovered duplicate partition
-          .coalesce(1)
-          .write.mode("overwrite").parquet(tmp)
+  def purgeTombstones(spark: SparkSession, dir: String): Int =
+    Materialize.scoped {
+      val bandsBase = s"$dir/bands"
+      // complete interrupted swaps first; recovered targets may hold
+      // old ∪ staged duplicates, so they are force-rewritten below and
+      // the rewrites' natural-key dedup converges their row sets
+      val recoveredKps = OfflineArtifact.recover(spark, bandsBase, "purge")
+        .filter(_.startsWith("kp=")).map(_.stripPrefix("kp=").toInt)
+      val recoveredSh =
+        OfflineArtifact.recover(spark, dir, "purge").contains("shingles")
+      val tombs = Materialize.shared(Tombstones.read(spark, dir, "corpus_id"))
+      val touched =
+        (spark.read.parquet(s"$dir/bands")
+          .join(tombs, Seq("corpus_id"), "left_semi")
+          .select("kp").distinct().collect().map(_.getInt(0)) ++
+          recoveredKps).distinct
+      touched.foreach { kp =>
+        OfflineArtifact.stagedSwap(spark, s"$bandsBase/kp=$kp", "purge") { tmp =>
+          spark.read.parquet(s"$bandsBase/kp=$kp")
+            .join(tombs, Seq("corpus_id"), "left_anti")
+            .distinct() // converges a crash-recovered duplicate partition
+            .coalesce(1)
+            .write.mode("overwrite").parquet(tmp)
+        }
       }
-    }
-    // shingles decided on their OWN evidence, never the bands-derived
-    // touched set: after a crash between the band and shingle rewrites
-    // the replayed purge finds no touched band partition but the
-    // retracted docs' shingles still need to go
-    val shDir = s"$dir/shingles"
-    val needShingles = recoveredSh ||
-      spark.read.parquet(shDir)
-        .join(tombs, Seq("corpus_id"), "left_semi")
-        .limit(1).count() > 0
-    if (needShingles)
-      OfflineArtifact.stagedSwap(spark, shDir, "purge") { tmp =>
+      // shingles decided on their OWN evidence, never the bands-derived
+      // touched set: after a crash between the band and shingle rewrites
+      // the replayed purge finds no touched band partition but the
+      // retracted docs' shingles still need to go
+      val shDir = s"$dir/shingles"
+      val needShingles = recoveredSh ||
         spark.read.parquet(shDir)
-          .join(tombs, Seq("corpus_id"), "left_anti")
-          .dropDuplicates("corpus_id") // converges a crash-recovered duplicate dir
-          .write.mode("overwrite").parquet(tmp)
-      }
-    tombs.unpersist(false)
-    Tombstones.clear(spark, dir)
-    touched.length
-  }
+          .join(tombs, Seq("corpus_id"), "left_semi")
+          .limit(1).count() > 0
+      if (needShingles)
+        OfflineArtifact.stagedSwap(spark, shDir, "purge") { tmp =>
+          spark.read.parquet(shDir)
+            .join(tombs, Seq("corpus_id"), "left_anti")
+            .dropDuplicates("corpus_id") // converges a crash-recovered duplicate dir
+            .write.mode("overwrite").parquet(tmp)
+        }
+      Tombstones.clear(spark, dir)
+      touched.length
+    }
 
   /** Gate an arriving batch against the persisted index.
     * Output: (doc_id, keep, match_id, match_jaccard) — keep = 0 iff a
@@ -412,14 +406,11 @@ object MinHashBandIndex {
     // the concurrent planning contends on session state for no overlap
     // gain; callers that want overlap get it one level up (dd09's
     // serve ∥ audit pair)
-    val bsh = batch // batch-sized (an arriving micro-batch) — the eager
-      // checkpoint is bounded state, fine to pin (VERDICT r17 #2)
-      .select(col("doc_id"), Dedup.shingleHashes(spark, col("text"), 2).as("sh"))
-      .localCheckpoint(true)
-    val csh = corpus // CORPUS-wide — lineage stays intact (guide §5)
+    val bsh = Materialize.once(batch // batch-sized: an arriving micro-batch
+      .select(col("doc_id"), Dedup.shingleHashes(spark, col("text"), 2).as("sh")))
+    val csh = Materialize.shared(corpus // corpus-wide
       .select(col("doc_id").as("corpus_id"),
-              Dedup.shingleHashes(spark, col("text"), 2).as("sh_c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+              Dedup.shingleHashes(spark, col("text"), 2).as("sh_c")))
     val inter = bsh.select(col("doc_id"), explode(col("sh")).as("g"))
       .join(csh.select(col("corpus_id"), explode(col("sh_c")).as("g")),
             Seq("g"))

@@ -13,15 +13,17 @@ package graft.analytics
   * another writes) — results are then identical to any sequential
   * order. Threads are per-call and joined before return, so no pool
   * outlives its call site; the first failure is rethrown unwrapped.
+  * Each thread works in the caller's [[Materialize]] scope.
   */
 private[graft] object ParActions {
   def run[T](thunks: Seq[() => T]): Seq[T] = {
     if (thunks.sizeIs <= 1) return thunks.map(_())
     val results = new Array[Either[Throwable, T]](thunks.size)
+    val scope = Materialize.scope
     val ts = thunks.zipWithIndex.map { case (f, i) =>
       val t = new Thread(() => {
         results(i) =
-          try Right(f())
+          try Right(Materialize.within(scope)(f()))
           catch { case e: Throwable => Left(e) }
       }, s"graft-par-$i")
       t.setDaemon(true)

@@ -86,11 +86,11 @@ object Quantiles {
     // the stats frame is consumed by BOTH the rank pass and the refine
     // long-form — without materialization Spark re-executes the whole
     // sketch scan for each consumer (no subplan CSE across joins).
-    // Eager localCheckpoint (the cp02/dq03 discipline) pins the ≤
+    // Materialize.once (the cp02/dq03 discipline) pins the ≤
     // #groups-row summary once; the value stream itself is never
     // cached, so total cost is exactly three scans: sketch, rank,
     // refine.
-    val withBrackets = ps.zipWithIndex.foldLeft(stats) {
+    val withBrackets = Materialize.once(ps.zipWithIndex.foldLeft(stats) {
       case (df, ((_, _, _, p), i)) =>
         val pLo = math.max(0.0, p - 4.0 / acc)
         val pHi = math.min(1.0, p + 4.0 / acc)
@@ -103,7 +103,7 @@ object Quantiles {
           else when(col("n") <= acc, col("vmax"))
             .otherwise(col("bk").getItem(2 * i + 1))
         df.withColumn(s"lo$i", lo).withColumn(s"hi$i", hi)
-    }.drop("bk", "vmin", "vmax").localCheckpoint(true)
+    }.drop("bk", "vmin", "vmax"))
     // pass 2: exact bracket ranks, one scan, conditional partial sums.
     // Unhinted join (fi02's rule): the group count is a corpus
     // property; AQE broadcasts the 20-source fixture on its own.
@@ -357,7 +357,7 @@ object Quantiles {
         // h1 is the persisted cross-batch state: materialize the ≤
         // domain/8-row summary once (epoch-1 CDF + the epoch-2 merge
         // both read it; without this the e1 scan re-runs per consumer)
-        val h1 = hist(e1).localCheckpoint(true)
+        val h1 = Materialize.once(hist(e1))
         // the hand-off: epoch 2's summary = h1 merged with the new
         // batch's histogram — pure addition on ≤ domain/8 rows
         val h12 = h1.unionByName(hist(e2))

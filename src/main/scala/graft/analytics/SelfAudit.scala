@@ -30,15 +30,11 @@ import org.apache.spark.sql.functions._
   * Floors are deliberately LOOSE collapse detectors (a real break
   * yields ~0 hits); the tight measured floors live in the specs
   * (DedupSpec et al.) where the fixture is pinned. Cost discipline:
-  * each serve/exact frame is k rows — materialized once via eager
-  * `localCheckpoint` (the dq05 recipe) so the audit never re-runs the
-  * probe or the exact scan.
+  * each serve/exact frame is k rows — materialized once (the dq05
+  * recipe, [[Materialize.once]]) so the audit never re-runs the probe
+  * or the exact scan.
   */
 object SelfAudit {
-
-  /** Materialize a small (≤ k·queries rows) frame exactly once; every
-    * audit aggregate derives from the materialization, not the lineage. */
-  def once(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
   /** Audit a single-query top-k serve against the exact scores of a
     * deterministic CORPUS SLICE — the [[batchTopK]] modulus discipline
@@ -72,7 +68,7 @@ object SelfAudit {
                  simCol: String, higherIsBetter: Boolean,
                  beatCap: Int = 10,
                  extras: Seq[(String, Column)] = Nil): DataFrame = {
-    val s = once(served)
+    val s = Materialize.once(served)
     def best(c: Column): Column = if (higherIsBetter) max(c) else min(c)
     val sAggCols = Seq(best(col(simCol)).as("__served_best")) ++
       extras.map { case (n, c) => c.as(n) }
@@ -103,8 +99,8 @@ object SelfAudit {
   def batchTopK(served: DataFrame, exactAudit: DataFrame,
                 auditQueryIds: Seq[Long], minHitsTotal: Int,
                 simCol: String, higherIsBetter: Boolean): DataFrame = {
-    val s = once(served)
-    val e = once(exactAudit)
+    val s = Materialize.once(served)
+    val e = Materialize.once(exactAudit)
     def best(c: Column): Column = if (higherIsBetter) max(c) else min(c)
     val sAud = s.filter(col("query_id").isin(auditQueryIds.map(Long.box): _*))
     val nAgg = s.agg(countDistinct(col("query_id")).as("n_queries"),

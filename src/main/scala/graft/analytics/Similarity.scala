@@ -1436,7 +1436,7 @@ object Similarity {
       // size + token count are the oracle's deterministic scalars.
       (s, d) => {
         val dir = IvfIndex.ensure(s, d, IvfIndex.DefaultLists)
-        val served = SelfAudit.once(clusterTerms(
+        val served = Materialize.once(clusterTerms(
           IvfIndex.readAssignments(s, dir)
             .select(col("vec_id"), col("list").cast("int").as("cluster")),
           table(s, d, "documents"), k = 3))
@@ -1566,9 +1566,9 @@ object Similarity {
       // recomputes it) complete the row.
       (s, d) => {
         val dir = IvfIndex.ensure(s, d, semLists(s, d))
-        val served = SelfAudit.once(
+        val served = Materialize.once(
           semDedupCapped(IvfIndex.readAssignments(s, dir), tau = 0.35))
-        val exact = SelfAudit.once(semDedup(
+        val exact = Materialize.once(semDedup(
           table(s, d, "embeddings").filter(col("vec_id") < 800)
             .withColumn("list", lit(0)),
           tau = 0.35))
@@ -1723,11 +1723,11 @@ object Similarity {
       (s, d) => {
         val qids = Seq(1L, 9L, 17L, 25L)
         val emb = table(s, d, "embeddings")
-        val exactAudit = SelfAudit.once(
+        val exactAudit = Materialize.once(
           batchBruteCosTopK(emb, queryIds = qids, k = 10))
         // serve materialized ONCE; the batchTopK audit and the
         // dominance scalar both derive from the same 320-row frame
-        val servedSpilled = SelfAudit.once(
+        val servedSpilled = Materialize.once(
           batchAnnTopKSpilled(s, d, queryMaxId = 32L, k = 10,
                               nLists = IvfIndex.DefaultLists, nProbe = 2,
                               margin = 0.05))

@@ -203,9 +203,7 @@ object EtlOps {
         // the template join) that each re-ran the whole raw→ETL chain
         // (r18 JobProf: 8 concurrent ~6 s broadcast builds, ~90 s of
         // executor time for a ~9 s wall — and the entry's 2.7-5.8 s
-        // noise band, VERDICT r17 #3). Eager checkpoint = the dq05
-        // barrier recipe; at cluster scale the store load this models
-        // is a parquet write anyway.
+        // noise band, VERDICT r17 #3).
         val docs = graft.analytics.ScanSpread
           .forMapPass(table(s, d, "documents").select("doc_id"))
         val rawJs = docs
@@ -216,9 +214,8 @@ object EtlOps {
         val raw = rawJs
           .select(from_json(col("js"), rawSchema).as("r"), col("arrival"))
           .select(col("r.*"), col("arrival"))
-        val deduped = ArtifactEtl
-          .dedupKeepFirst(raw, "id", col("arrival")).drop("arrival")
-          .localCheckpoint(true)
+        val deduped = graft.analytics.Materialize.shared(ArtifactEtl
+          .dedupKeepFirst(raw, "id", col("arrival")).drop("arrival"))
         val (meta, media, colors) = ArtifactEtl.transform(deduped)
         // pre-existing epoch (an earlier run of the same crawl):
         // identical rows for ids % 10 = 0 already sit in the store

@@ -77,11 +77,10 @@ object ScaleExtensions {
       // convert the shuffle join back to broadcast after the restore
       // and dissolve the skew this pair measures (the first cut of this
       // entry benched plain == salted to the millisecond that way)
-      joined.groupBy("skey")
+      graft.analytics.Materialize.once(joined.groupBy("skey")
         .agg(count(lit(1)).as("n_items"),
              round(sum(col("l_quantity") * col("w")), 2).as("wsum"))
-        .orderBy("skey")
-        .localCheckpoint(true)
+        .orderBy("skey"))
     }
   }
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.analytics.Materialize
+
 /** Structured Streaming surface over the `events` stream
   * (`event_id, ts, user_id, event_type, value, props`) — the streaming
   * extension the reference lacks (SURVEY.md §2.4 "absent"; its ingest is
@@ -561,13 +563,13 @@ object EventStreams {
     // frames resolve the native cosine against the driving session
     graft.functions.CosineSim.register(stream.sparkSession)
     graft.functions.DeconScore.register(stream.sparkSession)
-    // localCheckpoint(eager) truncates each one-row map frame to its
-    // materialized blocks — micro-batch plans re-broadcast a cached
-    // row instead of re-running the bench aggregation
-    val benchChunks = graft.analytics.DataQuality
-      .deconBenchBucketChunks(bench, bands = b, rows = r)
-      .map(_.localCheckpoint(true))
-    stream.writeStream
+    // each one-row map frame is materialized once, in a scope the query
+    // owns — micro-batch plans re-broadcast a cached row instead of
+    // re-running the bench aggregation
+    val owned = new Materialize.Scope
+    val benchChunks = Materialize.within(owned)(graft.analytics.DataQuality
+      .deconBenchBucketChunks(bench, bands = b, rows = r).map(Materialize.once))
+    val q = stream.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -590,6 +592,7 @@ object EventStreams {
         ()
       }
       .start()
+    onTermination(q, owned)
   }
 
   /** STREAMING near-dup ingest gate (st19's continuous form): each
@@ -635,31 +638,30 @@ object EventStreams {
     // here before the query starts
     graft.functions.CosineSim.register(stream.sparkSession)
     graft.functions.DeconScore.register(stream.sparkSession)
-    val ownsEmb =
-      emb.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val embP = emb.persist()
-    val benchFrame = embP.filter(col("label") === 0)
-      .select(col("vec_id").as("bench_id"), col("embedding"))
-    val (b, r) =
-      if (bands != 0) (bands, rows)
-      else graft.analytics.DataQuality.deconConfigFor(
-        graft.analytics.Bounded.checkedRowCount(
-          benchFrame, "decon.band-index", maxRows = 100000L))
-    // decon bucket map built + materialized ONCE before the stream
-    // starts (same hoist as deconGate — r12 rebuilt it per batch)
-    val chunks = graft.analytics.DataQuality
-      .deconBenchBucketChunks(benchFrame, bands = b, rows = r)
-      .map(_.localCheckpoint(true))
+    // the static side lives in a scope the query owns
+    val owned = new Materialize.Scope
+    val (embP, chunks, b, r) = Materialize.within(owned) {
+      val embP = Materialize.shared(emb)
+      val benchFrame = embP.filter(col("label") === 0)
+        .select(col("vec_id").as("bench_id"), col("embedding"))
+      val (b, r) =
+        if (bands != 0) (bands, rows)
+        else graft.analytics.DataQuality.deconConfigFor(
+          graft.analytics.Bounded.checkedRowCount(
+            benchFrame, "decon.band-index", maxRows = 100000L))
+      // decon bucket map built + materialized ONCE before the stream
+      // starts (same hoist as deconGate — r12 rebuilt it per batch)
+      (embP, graft.analytics.DataQuality
+        .deconBenchBucketChunks(benchFrame, bands = b, rows = r)
+        .map(Materialize.once), b, r)
+    }
     val q = nearDupStream(stream, seedDir, bandsDeltaDir, shinglesDeltaDir,
                           outDir, checkpointDir) { (batch, nd) =>
       StreamShapes.curationLedgerOf(
         batch.sparkSession, batch, nd, embP, banded = true, Some(chunks),
         deconBands = b, deconRows = r)
     }
-    onTermination(q) { () =>
-      if (ownsEmb) embP.unpersist(false)
-      chunks.foreach(releaseCheckpoint)
-    }
+    onTermination(q, owned)
   }
 
   /** The per-batch step of both near-dup gates.
@@ -670,10 +672,10 @@ object EventStreams {
     *    restarted query reads the rewritten seed.
     *  - Tombstones are re-read EVERY batch: a takedown (deleteDocs)
     *    masks the gate from the next batch on, as on the batch gate.
-    *  - One read per batch: the micro-batch is materialized once (an
-    *    eager localCheckpoint — batch-sized, bounded), its shingles +
-    *    band keys (MinHashBandIndex.signatures) once; every consumer
-    *    reads those blocks, dropped when the batch ends.
+    *  - One read per batch: the micro-batch is materialized once
+    *    ([[Materialize.once]]), its shingles + band keys
+    *    (MinHashBandIndex.signatures) once; every consumer reads those
+    *    blocks, which the batch's scope drops when the batch ends.
     *  - State: `decide(batch, nd)` is what lands in `outDir` (doc_id,
     *    keep, …); its keep = 1 docs land as the batch's segment in the
     *    two batch-id-partitioned delta tables. Batch N reads only
@@ -703,9 +705,8 @@ object EventStreams {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (landed: DataFrame, batchId: Long) =>
         val spark = landed.sparkSession
-        val batch = landed.localCheckpoint(true)
-        val held = scala.collection.mutable.ArrayBuffer(batch)
-        try {
+        Materialize.scoped {
+          val batch = Materialize.once(landed)
           // empty micro-batch = no-op (nothing to gate)
           if (!batch.isEmpty) {
             val bands = seedBands
@@ -714,14 +715,11 @@ object EventStreams {
               .unionByName(segment(spark, bandsDeltaDir, seedBands, batchId))
             val shingles = seedSh.unionByName(
               segment(spark, shinglesDeltaDir, seedSh, batchId))
-            val sigs = mh.signatures(spark, batch).localCheckpoint(true)
-            held += sigs
+            val sigs = Materialize.once(mh.signatures(spark, batch))
             // materialize the decisions BEFORE the segment writes mutate
             // the delta dirs their plan reads
-            val out = decide(batch,
-                mh.verdicts(batch, mh.scoredPairs(spark, bands, shingles, sigs)))
-              .localCheckpoint(true)
-            held += out
+            val out = Materialize.once(decide(batch,
+                mh.verdicts(batch, mh.scoredPairs(spark, bands, shingles, sigs))))
             // the output and the two segment writes only read `out` and
             // `sigs` blocks: independent, so they overlap
             val accepted = out.filter(col("keep") === 1).select("doc_id")
@@ -732,27 +730,18 @@ object EventStreams {
                  else Seq(() => land(mh.bandsOf(acc), batchId, bandsDeltaDir),
                           () => land(mh.shinglesOf(acc), batchId, shinglesDeltaDir))))
           }
-        } finally held.foreach(releaseCheckpoint)
+        }
         ()
       }
       .start()
   }
 
-  /** Drop the blocks behind an eager localCheckpoint — they ARE the
-    * frame's data, so only once nothing reads it any more. */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(blocking = false); ()
-      case _ => ()
-    }
-
-  /** Run `release` once when this run of `q` terminates, so what the
+  /** Close `owned` once when this run of `q` terminates, so what the
     * query pins does not outlive it: a self-removing listener matched
     * on the run id, re-checked after registration for a query already
     * dead. Events are asynchronous — it lands shortly after `stop()`. */
-  private def onTermination(q: org.apache.spark.sql.streaming.StreamingQuery)
-                           (release: () => Unit)
+  private def onTermination(q: org.apache.spark.sql.streaming.StreamingQuery,
+                            owned: Materialize.Scope)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import org.apache.spark.sql.streaming.StreamingQueryListener
     import StreamingQueryListener._
@@ -767,7 +756,7 @@ object EventStreams {
     def fire(): Unit =
       if (fired.compareAndSet(false, true)) {
         streams.removeListener(listener)
-        release()
+        owned.close()
       }
     streams.addListener(listener)
     if (!q.isActive) fire()
@@ -794,14 +783,13 @@ object EventStreams {
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
+        if (!batch.isEmpty) Materialize.scoped {
           val spark = batch.sparkSession
           graft.analytics.IvfIndex.deleteIds(
             spark, indexDir, batch.select("vec_id"))
-          val serve = graft.analytics.Similarity.ivfProbe(
+          val serve = Materialize.once(graft.analytics.Similarity.ivfProbe(
               graft.analytics.IvfIndex.liveAssignments(spark, indexDir),
-              centroids, queryId, k, nProbe = centroids.size)
-            .localCheckpoint(true)
+              centroids, queryId, k, nProbe = centroids.size))
           serve.withColumn("batch_id", lit(batchId))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -1435,9 +1423,8 @@ object EventStreams {
         "batch_id", org.apache.spark.sql.types.LongType)))
     val prior = readDelta(spark, storeDir, storeSchema)
       .filter(col("batch_id") < batchId)
-    val delta = g.undirectedEdges(batch)
-      .join(prior.select("a", "b"), Seq("a", "b"), "left_anti")
-      .localCheckpoint(true)
+    val delta = Materialize.once(g.undirectedEdges(batch)
+      .join(prior.select("a", "b"), Seq("a", "b"), "left_anti"))
     delta.withColumn("batch_id", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -1472,8 +1459,8 @@ object EventStreams {
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyKCoreBatch(batch.sparkSession, batch, batchId,
-                        stateDir, storeDir, outDir, k)
+        Materialize.scoped(applyKCoreBatch(batch.sparkSession, batch,
+          batchId, stateDir, storeDir, outDir, k))
       }
       .start()
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.functions._
 
+import graft.analytics.Materialize
 import graft.queries.QueryDef
 
 /** The streaming transforms of [[EventStreams]] exercised in batch mode
@@ -504,31 +505,31 @@ object StreamShapes {
     QueryDef(
       "st14_bloom_stream_gate",
       (s, d) => {
-        import graft.analytics.{BloomGramIndex, DataQuality, SelfAudit}
+        import graft.analytics.{BloomGramIndex, DataQuality}
         val docs = table(s, d, "documents")
         val seed = BloomGramIndex.ensure(s, d)
         val b1 = docs.filter((col("source") === "src19") &&
                              (col("doc_id") % 2 === 0))
         val b2 = docs.filter((col("source") === "src19") &&
                              (col("doc_id") % 2 === 1))
-        val g1 = SelfAudit.once(DataQuality.bloomGate(s, b1, seed))
+        val g1 = Materialize.once(DataQuality.bloomGate(s, b1, seed))
         val acc1Grams = DataQuality.gramKeys(b1)
           .join(g1.filter(col("keep") === 1).select("doc_id"),
                 Seq("doc_id"), "left_semi")
           .select("g")
         val f1 = BloomGramIndex.merged(s, seed, acc1Grams, seed + ".b1")
-        val g2 = SelfAudit.once(DataQuality.bloomGate(s, b2, f1))
+        val g2 = Materialize.once(DataQuality.bloomGate(s, b2, f1))
         // exact-chain audit side
         val corpus = DataQuality.gramKeys(
           docs.filter(col("source") =!= "src19")).select("g")
-        val eg1 = SelfAudit.once(
+        val eg1 = Materialize.once(
           DataQuality.gramGate(b1, corpus).select("doc_id", "keep"))
         val eAcc1Grams = DataQuality.gramKeys(b1)
           .join(eg1.filter(col("keep") === 1).select("doc_id"),
                 Seq("doc_id"), "left_semi")
           .select("g")
         val audB2 = b2.filter(col("doc_id") % 8 === 1)
-        val eg2 = SelfAudit.once(
+        val eg2 = Materialize.once(
           DataQuality.gramGate(audB2, corpus.union(eAcc1Grams))
             .select("doc_id", "keep"))
         def keeps(df: org.apache.spark.sql.DataFrame) =
@@ -751,14 +752,12 @@ object StreamShapes {
         // ONE flag pass over the corpus: the regex flag suite is the
         // dominant map cost, and the naive form ran it once per batch
         // slice AND once per running census (2.5 corpus passes; st16
-        // booked 3.8x at the r08 sf1 pair because of it). The dq05
-        // pattern: eagerly materialize the narrow (doc_id, source,
-        // keep, par) frame once and derive every view from its blocks.
-        val allFlags = DataQuality
+        // booked 3.8x at the r08 sf1 pair because of it): the narrow
+        // frame is materialized once and every view derives from it.
+        val allFlags = Materialize.once(DataQuality
           .qualityFlags(table(s, d, "documents"))
           .select(col("doc_id"), col("source"), col("keep"),
-                  (col("doc_id") % 2).cast("int").as("par"))
-          .localCheckpoint(true)
+                  (col("doc_id") % 2).cast("int").as("par")))
         def out(batchNo: Int, batch: org.apache.spark.sql.DataFrame,
                 runningOver: org.apache.spark.sql.DataFrame) = {
           val srcs = runningOver
@@ -1021,11 +1020,11 @@ object StreamShapes {
     QueryDef(
       "st18a_streaming_decon_audit",
       (s, d) => {
-        import graft.analytics.{DataQuality, SelfAudit}
+        import graft.analytics.DataQuality
         val emb = table(s, d, "embeddings")
-        val served = SelfAudit.once(deconGateChain(s, d,
+        val served = Materialize.once(deconGateChain(s, d,
           DataQuality.DeconLshBands, DataQuality.DeconLshRows))
-        val exact = SelfAudit.once(
+        val exact = Materialize.once(
           emb.filter(col("label") =!= 0 && col("vec_id") % 8 === 1)
             .select("vec_id", "embedding")
             .crossJoin(graft.analytics.Bounded.broadcastBench(
@@ -1189,12 +1188,12 @@ object StreamShapes {
     QueryDef(
       "st19a_neardup_gate_audit",
       (s, d) => {
-        import graft.analytics.{MinHashBandIndex, SelfAudit}
+        import graft.analytics.MinHashBandIndex
         val docs = table(s, d, "documents")
         val arr = MinHashBandIndex.arrivalsOf(docs)
         val b1 = arr.filter(col("doc_id") % 20 === 0)
         val b2 = arr.filter(col("doc_id") % 20 =!= 0)
-        val served = SelfAudit.once(neardupGateChain(s, d))
+        val served = Materialize.once(neardupGateChain(s, d))
         val g1 = served.filter(col("batch") === 1)
         val g2 = served.filter(col("batch") === 2)
         val acc1 = b1.join(g1.filter(col("keep") === 1).select("doc_id"),
@@ -1202,9 +1201,9 @@ object StreamShapes {
         val corpusAud = MinHashBandIndex.corpusOf(docs)
           .select("doc_id", "text")
           .filter(col("doc_id") % 5 === 0)
-        val exact1 = SelfAudit.once(MinHashBandIndex.exhaustiveGate(
+        val exact1 = Materialize.once(MinHashBandIndex.exhaustiveGate(
           s, corpusAud, b1.filter(col("doc_id") % 160 === 0)))
-        val exact2 = SelfAudit.once(MinHashBandIndex.exhaustiveGate(
+        val exact2 = Materialize.once(MinHashBandIndex.exhaustiveGate(
           s, corpusAud.unionByName(acc1.select("doc_id", "text")),
           b2.filter(col("doc_id") % 160 === 30)))
         // per-batch audit against its sliced exact reference:
@@ -1463,10 +1462,10 @@ object StreamShapes {
     QueryDef(
       "st20a_streaming_curation_audit",
       (s, d) => {
-        import graft.analytics.{DataQuality, MinHashBandIndex, SelfAudit}
+        import graft.analytics.{DataQuality, MinHashBandIndex}
         val docs = table(s, d, "documents")
         val emb = table(s, d, "embeddings")
-        val served = SelfAudit.once(curationLedgerChain(s, d, banded = true,
+        val served = Materialize.once(curationLedgerChain(s, d, banded = true,
           DataQuality.DeconLshBands, DataQuality.DeconLshRows))
         val structAgg = served.agg(
           count(lit(1)).as("n_arrivals"),
@@ -1488,7 +1487,7 @@ object StreamShapes {
         val benchIds = emb.filter(col("label") === 0)
           .select(col("vec_id").as("doc_id"))
         val audDec = served.filter(col("doc_id") % 80 === 0)
-        val exactDec = SelfAudit.once(
+        val exactDec = Materialize.once(
           emb.filter(col("label") =!= 0 && col("vec_id") % 80 === 0)
             .crossJoin(graft.analytics.Bounded.broadcastBench(
               emb.filter(col("label") === 0)
@@ -1519,12 +1518,12 @@ object StreamShapes {
         val corpus = MinHashBandIndex.corpusOf(docs).select("doc_id", "text")
         val b1 = arr.filter(col("doc_id") % 20 === 0)
         val b2 = arr.filter(col("doc_id") % 20 =!= 0)
-        val exactNd1 = SelfAudit.once(MinHashBandIndex.exhaustiveGate(
+        val exactNd1 = Materialize.once(MinHashBandIndex.exhaustiveGate(
           s, corpus, b1.filter(col("doc_id") % 160 === 0)))
         val acc1 = b1.join(
           served.filter(col("batch") === 1 && col("keep") === 1)
             .select("doc_id"), Seq("doc_id"))
-        val exactNd2 = SelfAudit.once(MinHashBandIndex.exhaustiveGate(
+        val exactNd2 = Materialize.once(MinHashBandIndex.exhaustiveGate(
           s, corpus.unionByName(acc1.select("doc_id", "text")),
           b2.filter(col("doc_id") % 160 === 30)))
         def ndAudit(ex: org.apache.spark.sql.DataFrame, tag: String) = {
@@ -2020,7 +2019,7 @@ object StreamShapes {
     // form rebuilt it per out() call — the st18 regression)
     val benchChunks = DataQuality
       .deconBenchBucketChunks(bench, bands = bandsR, rows = rowsR)
-      .map(_.localCheckpoint(true))
+      .map(Materialize.once)
     // The gate is STATELESS (that is the entry's pinned claim: batch
     // slicing cannot change any decision), so the batch form scores the
     // WHOLE corpus in ONE pass and derives the batch tag afterwards —
@@ -2058,8 +2057,9 @@ object StreamShapes {
       .join(graft.analytics.Tombstones.read(s, seed, "corpus_id"),
             Seq("corpus_id"), "left_anti")
     val seedSh = s.read.parquet(s"$seed/shingles")
-    val g1 = MinHashBandIndex.gateFrames(s, seedBands, seedSh, b1)
-      .localCheckpoint(true) // acc1 feeds batch 2's reference side
+    // acc1 feeds batch 2's reference side
+    val g1 = Materialize.once(
+      MinHashBandIndex.gateFrames(s, seedBands, seedSh, b1))
     val acc1 = b1.join(g1.filter(col("keep") === 1).select("doc_id"),
                        Seq("doc_id"))
     // one shared shingle pass for batch 2's reference side — the
@@ -2089,9 +2089,8 @@ object StreamShapes {
       : org.apache.spark.sql.DataFrame = {
     import graft.analytics.{MinHashBandIndex => mh}
     val docs = table(s, d, "documents")
-    val arr = mh.arrivalsOf(docs)
-      .filter(col("doc_id") % 20 === 0)
-      .localCheckpoint(true)
+    val arr = Materialize.once(mh.arrivalsOf(docs)
+      .filter(col("doc_id") % 20 === 0))
     val b1 = arr.filter(col("doc_id") % 40 === 0)
     val b2 = arr.filter(col("doc_id") % 40 === 20)
     val seedSrc = mh.ensure(s, d)
@@ -2122,10 +2121,9 @@ object StreamShapes {
     def seedSh = s.read.parquet(s"$work/seed/shingles")
       .filter(live(col("corpus_id")))
     // batch 1 — shared by both chains (pre-fold state is identical)
-    val g1 = mh.gateFrames(s, seedBands, seedSh, b1)
-      .localCheckpoint(true)
-    val acc1 = b1.join(g1.filter(col("keep") === 1).select("doc_id"),
-                       Seq("doc_id")).localCheckpoint(true)
+    val g1 = Materialize.once(mh.gateFrames(s, seedBands, seedSh, b1))
+    val acc1 = Materialize.once(
+      b1.join(g1.filter(col("keep") === 1).select("doc_id"), Seq("doc_id")))
     // land the delta, then FOLD it into the copied seed. One shared
     // shingle pass (segmentFrames) instead of segmentBands +
     // segmentShingles each re-tokenizing acc1, and the two landing
@@ -2144,13 +2142,11 @@ object StreamShapes {
     val segsAfter = mh.segmentCount(s"$work/bands")
     // batch 2 against the folded seed (the serve); the audit twin
     // re-runs it against seed ∪ never-merged in-memory segments
-    val g2Fold = mh.gateFrames(s, seedBands, seedSh, b2)
-      .localCheckpoint(true)
+    val g2Fold = Materialize.once(mh.gateFrames(s, seedBands, seedSh, b2))
     val g2TwinOpt =
-      if (audit) Some(mh.gateFrames(s,
+      if (audit) Some(Materialize.once(mh.gateFrames(s,
         seedBands.unionByName(accBands),
-        seedSh.unionByName(accSh), b2)
-        .localCheckpoint(true))
+        seedSh.unionByName(accSh), b2)))
       else None
     // every frame below derives from eagerly-checkpointed blocks —
     // nothing lazy reads $work anymore, so the staged seed copy is
@@ -2222,17 +2218,16 @@ object StreamShapes {
           benchAll, "decon.band-index", maxRows = 100000L))
     val corpusVecs = emb.filter(col("label") =!= 0)
       .select("vec_id", "embedding")
-    val deconDropsAll = Some((
+    val deconDropsAll = Some(Materialize.once(
       if (banded)
         DataQuality.semanticDeconLshDropsWith(s, corpusVecs,
           DataQuality.deconBenchBucketChunks(benchAll,
               bands = dBands, rows = dRows)
-            .map(_.localCheckpoint(true)),
+            .map(Materialize.once),
           dBands, dRows)
           .select("vec_id")
       else
-        exactDeconDropsOf(s, corpusVecs, benchAll, "cp.ledger.bench-vecs")
-      ).localCheckpoint(true))
+        exactDeconDropsOf(s, corpusVecs, benchAll, "cp.ledger.bench-vecs")))
     def ledgerOf(batchNo: Int, slice: org.apache.spark.sql.DataFrame,
                  nd: org.apache.spark.sql.DataFrame)
         : org.apache.spark.sql.DataFrame =
@@ -2251,9 +2246,8 @@ object StreamShapes {
       val seedSh = s.read.parquet(s"$seed/shingles")
       // batch 1's ledger feeds batch 2's segment side AND the final
       // union — materialize it once (dq05 barrier recipe)
-      val led1 = ledgerOf(1, b1,
-        MinHashBandIndex.gateFrames(s, seedBands, seedSh, b1))
-        .localCheckpoint(true)
+      val led1 = Materialize.once(ledgerOf(1, b1,
+        MinHashBandIndex.gateFrames(s, seedBands, seedSh, b1)))
       val acc1 = b1.join(led1.filter(col("keep") === 1).select("doc_id"),
                          Seq("doc_id"))
       // one shared shingle pass for batch 2's reference side (r17;
@@ -2267,9 +2261,8 @@ object StreamShapes {
       led1.unionByName(led2).orderBy("doc_id")
     } else {
       val corpus = MinHashBandIndex.corpusOf(docs).select("doc_id", "text")
-      val led1 = ledgerOf(1, b1,
-        MinHashBandIndex.exhaustiveGate(s, corpus, b1))
-        .localCheckpoint(true)
+      val led1 = Materialize.once(ledgerOf(1, b1,
+        MinHashBandIndex.exhaustiveGate(s, corpus, b1)))
       val acc1 = b1.select("doc_id", "text")
         .join(led1.filter(col("keep") === 1).select("doc_id"), Seq("doc_id"))
       val led2 = ledgerOf(2, b2, MinHashBandIndex.exhaustiveGate(

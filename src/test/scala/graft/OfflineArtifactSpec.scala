@@ -154,6 +154,32 @@ class OfflineArtifactSpec extends SparkSpec {
       hits.mkString("\n"))
   }
 
+  test("tripwire: no checkpoint, persist, cache or unpersist outside " +
+       "Materialize and GraftSession.release") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"source dir not found from ${root.getAbsolutePath}")
+    def scalaFiles(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.sortBy(_.getName).flatMap { f =>
+        if (f.isDirectory) scalaFiles(f)
+        else if (f.getName.endsWith(".scala")) Seq(f)
+        else Nil
+      }
+    val allowed = Set("graft/analytics/Materialize.scala", "graft/GraftSession.scala")
+    val banned = Seq("localCheckpoint\\(", "\\.persist\\(", "\\.cache\\(\\)",
+                     "\\.unpersist\\(").map(_.r)
+    def isComment(line: String): Boolean =
+      Seq("*", "//", "/*").exists(line.trim.startsWith)
+    val hits = for {
+      f <- scalaFiles(root)
+      rel = root.toPath.relativize(f.toPath).toString
+      if !allowed(rel)
+      (line, i) <- Files.readAllLines(f.toPath).asScala.zipWithIndex
+      if !isComment(line) && banned.exists(_.findFirstIn(line).isDefined)
+    } yield s"$rel:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, s"route these ${hits.size} through Materialize:\n" +
+      hits.mkString("\n"))
+  }
+
   test("tripwire: no SparkSession.builder outside GraftSession") {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"source dir not found from ${root.getAbsolutePath}")

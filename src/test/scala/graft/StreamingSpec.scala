@@ -787,6 +787,11 @@ class StreamingSpec extends SparkSpec {
         .getOrElse(Array.empty).map(_.getName)
         .filter(_.endsWith(".meta")).sorted.toSeq
       assert(metas == Seq("filter_3.bf.meta", "filter_4.bf.meta"), s"$metas")
+      // filter bytes bypass the local FS's checksums: no .crc sidecars
+      val crcs = Seq(tmp, s"$tmp/filters").flatMap(d =>
+        Option(new java.io.File(d).listFiles()).getOrElse(Array.empty)
+          .map(_.getName).filter(_.endsWith(".crc")))
+      assert(crcs.isEmpty, s"checksum sidecars written: $crcs")
     } finally q.stop()
   }
 

@@ -29,7 +29,8 @@ object Materialize {
   /** The releases one scope owes. */
   final class Scope {
     private val owed = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-    private[Materialize] def owe(f: () => Unit): Unit = synchronized { owed += f; () }
+    private[Materialize] def owe(f: () => Unit): Unit =
+      synchronized { owed += f; () }
     def close(): Unit = synchronized { owed.foreach(_()); owed.clear() }
   }
 
@@ -71,7 +72,7 @@ object Materialize {
 
   /** `body` with `s` as this thread's scope: a [[ParActions]] thread,
     * or a stream's static side in the scope its query owns. */
-  def within[T](s: Scope)(body: => T): T = {
+  private[graft] def within[T](s: Scope)(body: => T): T = {
     val outer = current.get
     current.set(s)
     try body finally current.set(outer)

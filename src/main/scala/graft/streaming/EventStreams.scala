@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, StreamingQueryListener}
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.analytics.Materialize
 
@@ -128,56 +130,116 @@ object EventStreams {
       .drop("__fp")
   }
 
-  /** Streaming INCREMENTAL near-dup gate (st11): per micro-batch, gate
-    * arriving docs against the persisted gram store with
-    * [[graft.analytics.DataQuality.gramGate]],
-    * then append the ACCEPTED docs' grams to the store — so a doc
-    * arriving in batch N+1 is gated against everything accepted through
-    * batch N, not just the original corpus. The streaming plan itself
-    * is STATELESS (no state store, no watermark): the growing state
-    * lives in the gram-store table, exactly where a 1000-executor
-    * pipeline wants it (bucketed/broadcastable, shared with the batch
-    * id01 path, survives restarts for free).
+  /** The micro-batch protocol every `foreachBatch` stream below runs
+    * on: `step(batch, batchId)` per micro-batch, in Append mode, inside
+    * a [[Materialize.scoped]] that drops whatever the batch materialized
+    * (a no-op for steps that materialize nothing).
     *
-    * Idempotence on batch replay: decisions are written
-    * `partitionBy(batch_id)` with dynamic partition overwrite (a
-    * replayed batch overwrites its own partition, never duplicates),
-    * and re-appending a replayed batch's grams cannot change any later
-    * decision because the store has membership semantics. */
-  def incrementalGramGate(stream: DataFrame, storeDir: String,
-                          outDir: String, checkpointDir: String,
-                          threshold: Double = 0.5)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+    * The replay rule. The checkpoint commits a micro-batch only after
+    * its step returns, so a crash replays the batch with the same id and
+    * input. Every stream keeps four invariants that make that replay
+    * rewrite, never duplicate or drift:
+    *  - a batch's deltas go through [[land]], which overwrites the
+    *    batch's own `batch_id` partition;
+    *  - batch b reads earlier batches' deltas only (`batch_id < b`,
+    *    [[landedBefore]]), or its own partition only after [[land]]
+    *    rewrote it;
+    *  - versioned state `state_b` is computed from `state_{b-1}` and the
+    *    batch alone ([[priorState]] then [[commitState]]);
+    *  - a zero-row batch is a valid batch: it lands no rows, and every
+    *    read of a delta dir carries the landed frame's schema
+    *    ([[readDelta]]), so no read depends on data having arrived. */
+  private def perBatch(stream: DataFrame, checkpointDir: String)
+                      (step: (DataFrame, Long) => Unit): StreamingQuery =
     stream.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val store = readStateOrCold(spark, storeDir) {
-          // first batch: store not created yet
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField(
-                "g", org.apache.spark.sql.types.StringType))))
-        }
-        val decisions =
-          graft.analytics.DataQuality.gramGate(batch, store, threshold)
-          .withColumn("batch_id", lit(batchId))
-        decisions.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(outDir)
-        // read the decisions BACK from the sink (already materialized —
-        // avoids recomputing the gate plan) to select accepted grams
-        val accepted = spark.read.parquet(outDir)
-          .filter(col("batch_id") === batchId && col("keep") === 1)
-          .select("doc_id")
-        graft.analytics.DataQuality.gramKeys(batch)
-          .join(accepted, Seq("doc_id"), "left_semi")
-          .select("g")
-          .write.mode("append").parquet(storeDir)
+        Materialize.scoped(step(batch, batchId))
       }
       .start()
+
+  /** `df` as micro-batch `batchId`'s delta in `dir`: the one
+    * `batch_id`-partitioned, dynamic-overwrite write. */
+  private def land(df: DataFrame, batchId: Long, dir: String): Unit =
+    df.withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id").parquet(dir)
+
+  /** Every delta [[land]]ed in `dir`, read with `schema` (the landed
+    * frame's, or a projection of it) plus `batch_id`. Never infers: a
+    * dir not created yet, or holding only `_SUCCESS` after zero-row
+    * batches, reads as no rows. */
+  private def readDelta(spark: SparkSession, dir: String,
+                        schema: StructType): DataFrame = {
+    val withId = schema.add("batch_id", LongType)
+    if (graft.analytics.OfflineArtifact.exists(spark, dir))
+      spark.read.schema(withId).parquet(dir)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], withId)
+  }
+
+  /** The deltas batches before `batchId` landed in `dir`. */
+  private def landedBefore(spark: SparkSession, dir: String,
+                           schema: StructType, batchId: Long): DataFrame =
+    readDelta(spark, dir, schema).filter(col("batch_id") < batchId)
+      .drop("batch_id")
+
+  /** `state_{b-1}` in `stateDir`, read with `cold`'s schema — or `cold`
+    * when that version does not exist (batch 0, or a retention horizon
+    * pruned it). Only a MISSING path is a cold start: a transient FS
+    * error or corrupt parquet fails the query, so it restarts and
+    * replays against intact state instead of silently resetting the
+    * cumulative summary (MG counts, histogram, HLL table, SCD2 history)
+    * and making every later publish wrong. */
+  private def priorState(stateDir: String, b: Long)(cold: DataFrame): DataFrame = {
+    val spark = cold.sparkSession
+    val dir = s"$stateDir/state_${b - 1}"
+    if (graft.analytics.OfflineArtifact.exists(spark, dir))
+      spark.read.schema(cold.schema).parquet(dir)
+    else cold
+  }
+
+  /** `df` written as `state_b`, returned read back from the files. */
+  private def commitState(df: DataFrame, stateDir: String, b: Long): DataFrame = {
+    val dir = s"$stateDir/state_$b"
+    df.write.mode("overwrite").parquet(dir)
+    df.sparkSession.read.schema(df.schema).parquet(dir)
+  }
+
+  /** The docs a batch's gate decisions in `outDir` accepted, read back
+    * from the sink (already materialized: the gate plan is not re-run). */
+  private def acceptedIn(spark: SparkSession, outDir: String,
+                         decisions: DataFrame, batchId: Long): DataFrame =
+    readDelta(spark, outDir, decisions.schema)
+      .filter(col("batch_id") === batchId && col("keep") === 1)
+      .select("doc_id")
+
+  /** Streaming INCREMENTAL near-dup gate (st11): per micro-batch, gate
+    * arriving docs against the gram store with
+    * [[graft.analytics.DataQuality.gramGate]], then land the ACCEPTED
+    * docs' grams in the store — so a doc arriving in batch N+1 is gated
+    * against everything accepted through batch N. The streaming plan
+    * itself is STATELESS (no state store, no watermark): the growing
+    * state lives in the gram-store table, exactly where a 1000-executor
+    * pipeline wants it (broadcastable probe side, survives restarts for
+    * free). The store holds one delta per batch and the gate reads only
+    * earlier ones, so a replayed batch never rejects its own docs
+    * against grams its first run landed — the [[perBatch]] replay rule. */
+  def incrementalGramGate(stream: DataFrame, storeDir: String,
+                          outDir: String, checkpointDir: String,
+                          threshold: Double = 0.5): StreamingQuery =
+    perBatch(stream, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val grams = graft.analytics.DataQuality.gramKeys(batch)
+      val decisions = graft.analytics.DataQuality.gramGate(batch,
+        landedBefore(spark, storeDir, grams.select("g").schema, batchId),
+        threshold)
+      land(decisions, batchId, outDir)
+      land(grams.join(acceptedIn(spark, outDir, decisions, batchId),
+                      Seq("doc_id"), "left_semi").select("g"),
+           batchId, storeDir)
+    }
 
   /** STREAMING bloom ingest gate: [[incrementalGramGate]]'s containment
     * semantics with the standing state collapsed from a growing gram
@@ -190,8 +252,7 @@ object EventStreams {
     * is batch-sized regardless of how much was ever ingested; the only
     * growing artifact is the decision log.
     *
-    * Idempotence on replay: decisions overwrite their own batch_id
-    * partition (st11 discipline), and `filter_b` is a deterministic
+    * Replay: the [[perBatch]] rule, with `filter_b` a deterministic
     * function of (filter_{b-1}, batch) — a replayed batch rewrites
     * identical filter bytes. Versioned filter files keep
     * [[graft.functions.BloomFilterCache]] sound: a path's content
@@ -204,36 +265,27 @@ object EventStreams {
   def bloomIngestGate(stream: DataFrame, seedFilterPath: String,
                       filterDir: String, outDir: String,
                       checkpointDir: String, threshold: Double = 0.5)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val prevPath =
-          if (batchId == 0) seedFilterPath
-          else s"$filterDir/filter_${batchId - 1}.bf"
-        val decisions = graft.analytics.DataQuality
-          .bloomGate(spark, batch, prevPath, threshold)
-          .withColumn("batch_id", lit(batchId))
-        decisions.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(outDir)
-        val accepted = spark.read.parquet(outDir)
-          .filter(col("batch_id") === batchId && col("keep") === 1)
-          .select("doc_id")
-        graft.analytics.BloomGramIndex.merged(spark, prevPath,
-          graft.analytics.DataQuality.gramKeys(batch)
-            .join(accepted, Seq("doc_id"), "left_semi").select("g"),
-          s"$filterDir/filter_$batchId.bf")
-        // retention AFTER the new version is durable: superseded
-        // snapshots past the replay horizon go (each filter is the
-        // cumulative gram union, so membership is never lost — see
-        // BloomGramIndex.pruneChain for the soundness rule)
-        graft.analytics.BloomGramIndex.pruneChain(filterDir)
-        ()
-      }
-      .start()
+      : StreamingQuery =
+    perBatch(stream, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val prevPath =
+        if (batchId == 0) seedFilterPath
+        else s"$filterDir/filter_${batchId - 1}.bf"
+      val decisions = graft.analytics.DataQuality
+        .bloomGate(spark, batch, prevPath, threshold)
+      land(decisions, batchId, outDir)
+      graft.analytics.BloomGramIndex.merged(spark, prevPath,
+        graft.analytics.DataQuality.gramKeys(batch)
+          .join(acceptedIn(spark, outDir, decisions, batchId),
+                Seq("doc_id"), "left_semi").select("g"),
+        s"$filterDir/filter_$batchId.bf")
+      // retention AFTER the new version is durable: superseded
+      // snapshots past the replay horizon go (each filter is the
+      // cumulative gram union, so membership is never lost — see
+      // BloomGramIndex.pruneChain for the soundness rule)
+      graft.analytics.BloomGramIndex.pruneChain(filterDir)
+      ()
+    }
 
   /** STREAMING familiarity routing: arriving docs scored per
     * micro-batch under a PERSISTED corpus familiarity model
@@ -243,67 +295,49 @@ object EventStreams {
     * ([[graft.analytics.DataQuality.familiarityRouteFromModel]]).
     * Stateless: the model is epoch-static, the batch's bigrams
     * broadcast onto the dictionary scan, no state store exists;
-    * decisions land partitioned by batch_id with dynamic overwrite
-    * (replay-idempotent — the st11 discipline). */
+    * decisions land per batch under the [[perBatch]] replay rule. */
   def familiarityRouter(stream: DataFrame, modelDir: String,
                         outDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.analytics.DataQuality.familiarityRouteFromModel(batch,
-            spark.read.parquet(s"$modelDir/dict.parquet"),
-            spark.read.parquet(s"$modelDir/cuts.parquet"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(outDir)
-        ()
-      }
-      .start()
+      : StreamingQuery =
+    perBatch(stream, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      land(graft.analytics.DataQuality.familiarityRouteFromModel(batch,
+             spark.read.parquet(s"$modelDir/dict.parquet"),
+             spark.read.parquet(s"$modelDir/cuts.parquet")),
+           batchId, outDir)
+    }
 
   /** STREAMING ANN serving: arriving query vectors answered per
     * micro-batch against a STATIC corpus via the deterministic int8
     * batch plan ([[graft.analytics.Similarity.int8BatchTopK]]). The
     * streaming plan is stateless — the corpus is a static parquet table
     * the (small) query batch broadcasts onto, so nothing is re-shuffled
-    * per batch and no state store exists; results land partitioned by
-    * batch_id with dynamic overwrite (replayed batches overwrite their
-    * own partition — idempotent, the st11 discipline). */
+    * per batch and no state store exists; results land per batch under
+    * the [[perBatch]] replay rule. */
   def annServe(queries: DataFrame, corpusDir: String, outDir: String,
                checkpointDir: String, k: Int = 10,
                codesDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // with a persisted Int8Index the per-batch plan scans 1-byte
-        // codes and quantizes only the (tiny) query batch; without one
-        // it derives the corpus codes in-plan — same answers either
-        // way (deterministic quantization, pinned in DedupSpec).
-        // The indexed path serves the LIVE view, so a takedown
-        // ([[graft.analytics.Int8Index.deleteIds]]) takes effect at
-        // the next micro-batch; with no tombstones the anti-join is
-        // against an empty frame (free).
-        val result = codesDir match {
-          case Some(dir) =>
-            graft.analytics.Similarity.int8BatchServe(
-              graft.analytics.Int8Index.liveCodes(spark, dir), batch, k)
-          case None =>
-            graft.analytics.Similarity.int8BatchTopK(
-              spark.read.parquet(corpusDir), batch, k)
-        }
-        result
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(outDir)
+      : StreamingQuery =
+    perBatch(queries, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // with a persisted Int8Index the per-batch plan scans 1-byte
+      // codes and quantizes only the (tiny) query batch; without one
+      // it derives the corpus codes in-plan — same answers either
+      // way (deterministic quantization, pinned in DedupSpec).
+      // The indexed path serves the LIVE view, so a takedown
+      // ([[graft.analytics.Int8Index.deleteIds]]) takes effect at
+      // the next micro-batch; with no tombstones the anti-join is
+      // against an empty frame (free).
+      val result = codesDir match {
+        case Some(dir) =>
+          graft.analytics.Similarity.int8BatchServe(
+            graft.analytics.Int8Index.liveCodes(spark, dir), batch, k)
+        case None =>
+          graft.analytics.Similarity.int8BatchTopK(
+            spark.read.parquet(corpusDir), batch, k)
       }
-      .start()
+      land(result, batchId, outDir)
+    }
 
   /** STREAMING temperature mixture (dm05): per micro-batch, refresh the
     * α = 1/2 keep-rates from the RUNNING language counts (update counts
@@ -311,214 +345,122 @@ object EventStreams {
     * as the observed language distribution drifts. Architecture mirrors
     * [[incrementalGramGate]]: the streaming plan is stateless, the
     * running state is a tiny per-batch-delta parquet table
-    * (`countsDir`, one partition per batch_id, dynamic overwrite →
-    * replay-idempotent), and each batch writes its per-language census
-    * (n_running, rate, n_sampled) to `outDir` the same way. The counts
-    * table is language-cardinality-sized — reading and re-aggregating
-    * it per batch is O(languages × batches), trivial at any corpus
-    * scale. */
+    * (`countsDir`), and each batch writes its per-language census
+    * (n_running, rate, n_sampled) to `outDir` — both under the
+    * [[perBatch]] replay rule. The counts table is
+    * language-cardinality-sized — reading and re-aggregating it per
+    * batch is O(languages × batches), trivial at any corpus scale. */
   def temperatureMixture(stream: DataFrame, countsDir: String,
                          outDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        batch.groupBy("lang").agg(count(lit(1)).as("n_batch"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(countsDir)
-        val running = spark.read.parquet(countsDir)
-          .groupBy("lang").agg(sum("n_batch").cast("double").as("n_docs"))
-        val rates = graft.analytics.DataMix.temperatureRates(running)
-        val sampled = batch.join(broadcast(rates), Seq("lang"))
-          .filter(graft.analytics.DataMix.hashFraction(col("doc_id"))
-                    < col("rate"))
-          .groupBy("lang").agg(count(lit(1)).as("n_sampled"))
-        rates.join(broadcast(sampled), Seq("lang"), "left")
-          .select(col("lang"), col("n_docs").cast("long").as("n_running"),
-                  round(col("rate"), 6).as("rate"),
-                  coalesce(col("n_sampled"), lit(0L)).as("n_sampled"),
-                  lit(batchId).as("batch_id"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(outDir)
-      }
-      .start()
-
-  /** Read a batch-id-partitioned delta directory with an EXPLICIT
-    * schema, tolerating both a missing directory (no delta landed yet —
-    * e.g. every prior micro-batch was empty) and a directory holding
-    * only `_SUCCESS`. Schema inference on either kills the query with
-    * "Unable to infer schema for Parquet"; state reads must never
-    * depend on data having arrived. */
-  private def readDelta(spark: org.apache.spark.sql.SparkSession,
-                        dir: String,
-                        schema: org.apache.spark.sql.types.StructType)
-      : DataFrame =
-    if (graft.analytics.OfflineArtifact.exists(spark, dir))
-      spark.read.schema(schema).parquet(dir)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-  /** Read versioned cross-batch state, distinguishing a GENUINE cold
-    * start — the state path does not exist (batch 0, or a retention
-    * horizon that pruned it) — from a FAILED read. A transient FS error
-    * or corrupt parquet must fail the streaming query so the operator
-    * restarts and replays against intact state; swallowing it into the
-    * empty-state branch would silently reset the cumulative summary
-    * (MG counts, histogram, HLL table, SCD2 history) and make every
-    * later publish wrong with no signal — the documented crash-replay
-    * contract of the incremental* helpers is compute-state_b-from-
-    * state_{b-1}, never recompute-from-nothing. */
-  private def readStateOrCold(spark: org.apache.spark.sql.SparkSession,
-                              dir: String)(cold: => DataFrame): DataFrame =
-    if (graft.analytics.OfflineArtifact.exists(spark, dir)) spark.read.parquet(dir)
-    else cold
+      : StreamingQuery =
+    perBatch(stream, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val counts = batch.groupBy("lang").agg(count(lit(1)).as("n_batch"))
+      land(counts, batchId, countsDir)
+      val running = readDelta(spark, countsDir, counts.schema)
+        .groupBy("lang").agg(sum("n_batch").cast("double").as("n_docs"))
+      val rates = graft.analytics.DataMix.temperatureRates(running)
+      val sampled = batch.join(broadcast(rates), Seq("lang"))
+        .filter(graft.analytics.DataMix.hashFraction(col("doc_id"))
+                  < col("rate"))
+        .groupBy("lang").agg(count(lit(1)).as("n_sampled"))
+      land(rates.join(broadcast(sampled), Seq("lang"), "left")
+             .select(col("lang"), col("n_docs").cast("long").as("n_running"),
+                     round(col("rate"), 6).as("rate"),
+                     coalesce(col("n_sampled"), lit(0L)).as("n_sampled")),
+           batchId, outDir)
+    }
 
   /** STREAMING source-reputation routing (st16's continuous form):
     * each micro-batch's per-source (n, n_keep) quality evidence lands
-    * as a batch-id-partitioned delta in `countsDir` (dynamic overwrite
-    * — replay-idempotent, the dm05/st11 discipline), the RUNNING
+    * as a batch-id-partitioned delta in `countsDir`, the RUNNING
     * per-source reputation is re-aggregated from the deltas
     * (source-cardinality-sized — O(sources × batches) to read, trivial
     * at any corpus scale), and the batch's docs are gated by the
     * reputation THROUGH that batch. Decisions land partitioned by
-    * batch_id the same way. */
+    * batch_id the same way; replay: the [[perBatch]] rule. */
   def reputationRouter(stream: DataFrame, countsDir: String,
                        outDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // an empty micro-batch must be a no-op: a zero-row dynamic
-        // partitionBy write lands only _SUCCESS, and the state read
-        // back would then fail schema inference (reads below also use
-        // explicit schemas via readDelta for the same reason)
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          import org.apache.spark.sql.types._
-          val flags = graft.analytics.DataQuality.qualityFlags(batch)
-            .select("doc_id", "source", "keep")
-          flags.groupBy("source")
-            .agg(count(lit(1)).as("n_batch"), sum("keep").as("n_keep_batch"))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(countsDir)
-          val srcs = readDelta(spark, countsDir, StructType(Seq(
-              StructField("source", StringType),
-              StructField("n_batch", LongType),
-              StructField("n_keep_batch", LongType),
-              StructField("batch_id", LongType))))
-            .groupBy("source")
-            .agg(sum("n_batch").as("n_seen"), sum("n_keep_batch").as("n_keep"))
-            .select(col("source"), col("n_seen"),
-                    round(col("n_keep") * lit(1.0) / col("n_seen"), 6)
-                      .as("keep_rate"),
-                    (col("n_keep") * lit(1.0) / col("n_seen") >=
-                      graft.analytics.DataQuality.SourceKeepRateMin)
-                      .cast("int").as("source_ok"))
-          // no broadcast hint: the running reputation store is
-          // source-cardinality state that grows over the stream's
-          // lifetime (source = crawl domain); AQE decides per batch
-          flags.join(srcs, Seq("source"))
-            .select(col("doc_id"), col("source"), col("keep").as("keep_doc"),
-                    col("n_seen"), col("keep_rate"), col("source_ok"),
-                    (col("keep") * col("source_ok")).cast("int")
-                      .as("keep_final"),
-                    lit(batchId).as("batch_id"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(outDir)
-        }
-        ()
-      }
-      .start()
+      : StreamingQuery =
+    perBatch(stream, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val flags = graft.analytics.DataQuality.qualityFlags(batch)
+        .select("doc_id", "source", "keep")
+      val evidence = flags.groupBy("source")
+        .agg(count(lit(1)).as("n_batch"), sum("keep").as("n_keep_batch"))
+      land(evidence, batchId, countsDir)
+      val srcs = readDelta(spark, countsDir, evidence.schema)
+        .groupBy("source")
+        .agg(sum("n_batch").as("n_seen"), sum("n_keep_batch").as("n_keep"))
+        .select(col("source"), col("n_seen"),
+                round(col("n_keep") * lit(1.0) / col("n_seen"), 6)
+                  .as("keep_rate"),
+                (col("n_keep") * lit(1.0) / col("n_seen") >=
+                  graft.analytics.DataQuality.SourceKeepRateMin)
+                  .cast("int").as("source_ok"))
+      // no broadcast hint: the running reputation store is
+      // source-cardinality state that grows over the stream's
+      // lifetime (source = crawl domain); AQE decides per batch
+      land(flags.join(srcs, Seq("source"))
+             .select(col("doc_id"), col("source"), col("keep").as("keep_doc"),
+                     col("n_seen"), col("keep_rate"), col("source_ok"),
+                     (col("keep") * col("source_ok")).cast("int")
+                       .as("keep_final")),
+           batchId, outDir)
+    }
 
   /** STREAMING sequence packing (st17's continuous form): arriving
     * docs extend each shard's RUNNING token total and take sequence
     * ids continuing from where earlier batches left off. State is two
-    * delta tables, both replay-idempotent (batch-id-partitioned,
-    * dynamic overwrite): per-shard token totals in `countsDir` (one
-    * long per shard per batch) and the decision log itself in
-    * `outDir`, which doubles as the source of per-(shard, seq) doc
-    * counts so `pos_in_seq` continues across batches too. Per-batch
-    * cost is batch-sized + a shard-cardinality-sized read — nothing
-    * ever re-packs. */
+    * delta tables under the [[perBatch]] replay rule: per-shard token
+    * totals in `countsDir` (one long per shard per batch) and the
+    * decision log itself in `outDir`, which doubles as the source of
+    * per-(shard, seq) doc counts so `pos_in_seq` continues across
+    * batches too. Per-batch cost is batch-sized + a
+    * shard-cardinality-sized read — nothing ever re-packs. */
   def packStream(stream: DataFrame, countsDir: String, outDir: String,
                  checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // empty micro-batch = no-op (same rationale as
-        // reputationRouter: a zero-row dynamic write leaves a dir that
-        // breaks schema inference, and there is nothing to pack)
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          import org.apache.spark.sql.types._
-          val W = org.apache.spark.sql.expressions.Window
-          val toks = batch
-            .select(col("doc_id"),
-                    graft.analytics.TextAnalysis.tokenCount(col("text"))
-                      .cast("long").as("n_tokens"))
-            .withColumn("shard", (col("doc_id") / lit(1000)).cast("long"))
-          // write this batch's shard totals, then read ONLY earlier
-          // batches back as the base offsets — a replayed batch filters
-          // its own prior delta out, so replays assign identically
-          toks.groupBy("shard").agg(sum("n_tokens").as("n_batch"))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(countsDir)
-          val base = readDelta(spark, countsDir, StructType(Seq(
-              StructField("shard", LongType),
-              StructField("n_batch", LongType),
-              StructField("batch_id", LongType))))
-            .filter(col("batch_id") < batchId)
-            .groupBy("shard").agg(sum("n_batch").as("base"))
-          // the decision log doubles as per-(shard, seq) doc counts;
-          // readDelta tolerates outDir not existing yet (batch 0, or
-          // every earlier batch empty)
-          val nPrev = readDelta(spark, outDir, StructType(Seq(
-              StructField("shard", LongType),
-              StructField("seq_id", LongType),
-              StructField("batch_id", LongType))))
-            .filter(col("batch_id") < batchId)
-            .groupBy("shard", "seq_id")
-            .agg(count(lit(1)).as("n_prev"))
-          val wIn = W.partitionBy("shard").orderBy("doc_id")
-            .rowsBetween(W.unboundedPreceding, -1)
-          val wPos = W.partitionBy("shard", "seq_id").orderBy("doc_id")
-          // no broadcast hints on the state joins: per-shard offsets
-          // are corpus/1000 rows and the (shard, seq_id) history grows
-          // without bound over the stream's lifetime — AQE decides
-          toks
-            .withColumn("cum_in", coalesce(sum("n_tokens").over(wIn), lit(0L)))
-            .join(base, Seq("shard"), "left")
-            .withColumn("cum_before", col("cum_in") + coalesce(col("base"), lit(0L)))
-            .withColumn("seq_id",
-              (col("cum_before") / lit(graft.analytics.DataMix.PackBudget))
-                .cast("long"))
-            .join(nPrev, Seq("shard", "seq_id"), "left")
-            .withColumn("pos_in_seq",
-              (coalesce(col("n_prev"), lit(0L)) +
-               row_number().over(wPos)).cast("int"))
-            .select(col("doc_id"), col("n_tokens"), col("shard"),
-                    col("seq_id"), col("pos_in_seq"),
-                    lit(batchId).as("batch_id"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(outDir)
-        }
-        ()
-      }
-      .start()
+      : StreamingQuery =
+    perBatch(stream, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val W = org.apache.spark.sql.expressions.Window
+      val toks = batch
+        .select(col("doc_id"),
+                graft.analytics.TextAnalysis.tokenCount(col("text"))
+                  .cast("long").as("n_tokens"))
+        .withColumn("shard", (col("doc_id") / lit(1000)).cast("long"))
+      // this batch's shard totals land, then only EARLIER batches are
+      // read back as the base offsets
+      val totals = toks.groupBy("shard").agg(sum("n_tokens").as("n_batch"))
+      land(totals, batchId, countsDir)
+      val base = landedBefore(spark, countsDir, totals.schema, batchId)
+        .groupBy("shard").agg(sum("n_batch").as("base"))
+      val wIn = W.partitionBy("shard").orderBy("doc_id")
+        .rowsBetween(W.unboundedPreceding, -1)
+      val wPos = W.partitionBy("shard", "seq_id").orderBy("doc_id")
+      // no broadcast hints on the state joins: per-shard offsets
+      // are corpus/1000 rows and the (shard, seq_id) history grows
+      // without bound over the stream's lifetime — AQE decides
+      val seqs = toks
+        .withColumn("cum_in", coalesce(sum("n_tokens").over(wIn), lit(0L)))
+        .join(base, Seq("shard"), "left")
+        .withColumn("cum_before", col("cum_in") + coalesce(col("base"), lit(0L)))
+        .withColumn("seq_id",
+          (col("cum_before") / lit(graft.analytics.DataMix.PackBudget))
+            .cast("long"))
+      // the decision log doubles as per-(shard, seq) doc counts
+      val nPrev = landedBefore(spark, outDir,
+          seqs.select("shard", "seq_id").schema, batchId)
+        .groupBy("shard", "seq_id")
+        .agg(count(lit(1)).as("n_prev"))
+      land(seqs.join(nPrev, Seq("shard", "seq_id"), "left")
+             .withColumn("pos_in_seq",
+               (coalesce(col("n_prev"), lit(0L)) +
+                row_number().over(wPos)).cast("int"))
+             .select(col("doc_id"), col("n_tokens"), col("shard"),
+                     col("seq_id"), col("pos_in_seq")),
+           batchId, outDir)
+    }
 
   /** STREAMING semantic decontamination (st18's continuous form):
     * arriving vectors are gated per micro-batch against a STATIC
@@ -533,9 +475,9 @@ object EventStreams {
     * scoring plus a cached one-row re-broadcast (the st10/st11
     * stream-static discipline; at 100 TB the bench bucket map
     * broadcasts once per executor and the corpus only ever flows
-    * map-side). Decisions land batch-id-partitioned with dynamic
-    * overwrite — replay-idempotent. `bench` carries (bench_id,
-    * embedding); the stream (vec_id, embedding).
+    * map-side). Decisions land per batch under the [[perBatch]] replay
+    * rule. `bench` carries (bench_id, embedding); the stream (vec_id,
+    * embedding).
     *
     * `(bands, rows)` picks the banding config; the DEFAULT (0, 0) is
     * AUTO — [[graft.analytics.DataQuality.deconConfigFor]] applies the
@@ -550,7 +492,7 @@ object EventStreams {
   def deconGate(stream: DataFrame, bench: DataFrame, outDir: String,
                 checkpointDir: String,
                 bands: Int = 0, rows: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     require((bands == 0) == (rows == 0),
       s"pass both bands and rows, or neither (auto): got ($bands, $rows)")
     val (b, r) =
@@ -569,29 +511,19 @@ object EventStreams {
     val owned = new Materialize.Scope
     val benchChunks = Materialize.within(owned)(graft.analytics.DataQuality
       .deconBenchBucketChunks(bench, bands = b, rows = r).map(Materialize.once))
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // empty micro-batch = no-op (zero-row dynamic writes break the
-        // read side's schema inference; nothing to gate anyway)
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val drops = graft.analytics.DataQuality.semanticDeconLshDropsWith(
-            spark, batch.select("vec_id", "embedding"), benchChunks,
-            b, r)
-          batch.select("vec_id").join(drops, Seq("vec_id"), "left")
-            .select(col("vec_id"),
-                    coalesce(col("n_cand"), lit(0L)).as("n_cand"),
-                    col("max_cand_sim").isNull.cast("int").as("keep"),
-                    lit(batchId).as("batch_id"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(outDir)
-        }
-        ()
+    val q = perBatch(stream, checkpointDir) { (batch, batchId) =>
+      // empty micro-batch = no-op (nothing to gate)
+      if (!batch.isEmpty) {
+        val drops = graft.analytics.DataQuality.semanticDeconLshDropsWith(
+          batch.sparkSession, batch.select("vec_id", "embedding"),
+          benchChunks, b, r)
+        land(batch.select("vec_id").join(drops, Seq("vec_id"), "left")
+               .select(col("vec_id"),
+                       coalesce(col("n_cand"), lit(0L)).as("n_cand"),
+                       col("max_cand_sim").isNull.cast("int").as("keep")),
+             batchId, outDir)
       }
-      .start()
+    }
     onTermination(q, owned)
   }
 
@@ -605,7 +537,7 @@ object EventStreams {
   def neardupIngestGate(stream: DataFrame, seedDir: String,
                         bandsDeltaDir: String, shinglesDeltaDir: String,
                         outDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      : StreamingQuery =
     nearDupStream(stream, seedDir, bandsDeltaDir, shinglesDeltaDir, outDir,
                   checkpointDir)((_, nd) => nd)
 
@@ -624,7 +556,7 @@ object EventStreams {
                      bandsDeltaDir: String, shinglesDeltaDir: String,
                      outDir: String, checkpointDir: String,
                      bands: Int = 0, rows: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     // (bands, rows) picks the decon stage's banding config; the
     // DEFAULT (0, 0) is AUTO via deconConfigFor — the SAME default as
     // deconGate and the batch twin StreamShapes.curationLedgerChain,
@@ -678,72 +610,52 @@ object EventStreams {
     *    blocks, which the batch's scope drops when the batch ends.
     *  - State: `decide(batch, nd)` is what lands in `outDir` (doc_id,
     *    keep, …); its keep = 1 docs land as the batch's segment in the
-    *    two batch-id-partitioned delta tables. Batch N reads only
-    *    segments with batch_id < N, so a crash-replayed batch never
-    *    rejects against its own half-written segment. */
+    *    two delta tables, which later batches read ([[landedBefore]]). */
   private def nearDupStream(stream: DataFrame, seedDir: String,
                             bandsDeltaDir: String, shinglesDeltaDir: String,
                             outDir: String, checkpointDir: String)
                            (decide: (DataFrame, DataFrame) => DataFrame)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     val mh = graft.analytics.MinHashBandIndex
     val seedBands = stream.sparkSession.read.parquet(s"$seedDir/bands")
       .select("corpus_id", "band", "key", "kp")
     val seedSh = stream.sparkSession.read.parquet(s"$seedDir/shingles")
       .select("corpus_id", "sh")
-    def segment(spark: org.apache.spark.sql.SparkSession, dir: String,
-                seed: DataFrame, batchId: Long) = // the seed's columns
-      readDelta(spark, dir, seed.schema.add("batch_id", "long"))
-        .filter(col("batch_id") < batchId).drop("batch_id")
-    def land(df: DataFrame, batchId: Long, dir: String): Unit =
-      df.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(dir)
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (landed: DataFrame, batchId: Long) =>
-        val spark = landed.sparkSession
-        Materialize.scoped {
-          val batch = Materialize.once(landed)
-          // empty micro-batch = no-op (nothing to gate)
-          if (!batch.isEmpty) {
-            val bands = seedBands
-              .join(graft.analytics.Tombstones.read(spark, seedDir, "corpus_id"),
-                    Seq("corpus_id"), "left_anti")
-              .unionByName(segment(spark, bandsDeltaDir, seedBands, batchId))
-            val shingles = seedSh.unionByName(
-              segment(spark, shinglesDeltaDir, seedSh, batchId))
-            val sigs = Materialize.once(mh.signatures(spark, batch))
-            // materialize the decisions BEFORE the segment writes mutate
-            // the delta dirs their plan reads
-            val out = Materialize.once(decide(batch,
-                mh.verdicts(batch, mh.scoredPairs(spark, bands, shingles, sigs))))
-            // the output and the two segment writes only read `out` and
-            // `sigs` blocks: independent, so they overlap
-            val accepted = out.filter(col("keep") === 1).select("doc_id")
-            val acc = sigs.join(accepted, Seq("doc_id"))
-            graft.analytics.ParActions.run(
-              Seq(() => land(out, batchId, outDir)) ++
-                (if (accepted.isEmpty) Nil
-                 else Seq(() => land(mh.bandsOf(acc), batchId, bandsDeltaDir),
-                          () => land(mh.shinglesOf(acc), batchId, shinglesDeltaDir))))
-          }
-        }
-        ()
+    perBatch(stream, checkpointDir) { (landed, batchId) =>
+      val spark = landed.sparkSession
+      val batch = Materialize.once(landed)
+      // empty micro-batch = no-op (nothing to gate)
+      if (!batch.isEmpty) {
+        val bands = seedBands
+          .join(graft.analytics.Tombstones.read(spark, seedDir, "corpus_id"),
+                Seq("corpus_id"), "left_anti")
+          .unionByName(landedBefore(spark, bandsDeltaDir, seedBands.schema, batchId))
+        val shingles = seedSh.unionByName(
+          landedBefore(spark, shinglesDeltaDir, seedSh.schema, batchId))
+        val sigs = Materialize.once(mh.signatures(spark, batch))
+        // materialize the decisions BEFORE the segment writes mutate
+        // the delta dirs their plan reads
+        val out = Materialize.once(decide(batch,
+            mh.verdicts(batch, mh.scoredPairs(spark, bands, shingles, sigs))))
+        // the output and the two segment writes only read `out` and
+        // `sigs` blocks: independent, so they overlap
+        val accepted = out.filter(col("keep") === 1).select("doc_id")
+        val acc = sigs.join(accepted, Seq("doc_id"))
+        graft.analytics.ParActions.run(
+          Seq(() => land(out, batchId, outDir)) ++
+            (if (accepted.isEmpty) Nil
+             else Seq(() => land(mh.bandsOf(acc), batchId, bandsDeltaDir),
+                      () => land(mh.shinglesOf(acc), batchId, shinglesDeltaDir))))
       }
-      .start()
+    }
   }
 
   /** Close `owned` once when this run of `q` terminates, so what the
     * query pins does not outlive it: a self-removing listener matched
     * on the run id, re-checked after registration for a query already
     * dead. Events are asynchronous — it lands shortly after `stop()`. */
-  private def onTermination(q: org.apache.spark.sql.streaming.StreamingQuery,
-                            owned: Materialize.Scope)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.StreamingQueryListener
+  private def onTermination(q: StreamingQuery, owned: Materialize.Scope)
+      : StreamingQuery = {
     import StreamingQueryListener._
     val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
     val streams = q.sparkSession.streams
@@ -769,35 +681,26 @@ object EventStreams {
     * side segment, cost ∝ the batch, and replay-idempotent by batch
     * stamp, so a crash-replayed batch re-applies as a no-op — and the
     * post-batch top-k serve over [[graft.analytics.IvfIndex
-    * .liveAssignments]] lands batch-id-partitioned with dynamic
-    * overwrite (a replayed batch rewrites its own partition with the
-    * identical rows: batches are sequential, so the tombstone state at
-    * replay equals the state at first execution). The index itself is
+    * .liveAssignments]] lands per batch under the [[perBatch]] replay
+    * rule (batches are sequential, so the tombstone state at replay
+    * equals the state at first execution). The index itself is
     * never rewritten on the hot path; [[graft.analytics.IvfIndex
     * .purgeTombstones]] is the offline maintenance step. */
   def takedownStream(stream: DataFrame, indexDir: String,
                      centroids: Seq[(Int, Array[Double])], queryId: Long,
                      k: Int, outDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) Materialize.scoped {
-          val spark = batch.sparkSession
-          graft.analytics.IvfIndex.deleteIds(
-            spark, indexDir, batch.select("vec_id"))
-          val serve = Materialize.once(graft.analytics.Similarity.ivfProbe(
-              graft.analytics.IvfIndex.liveAssignments(spark, indexDir),
-              centroids, queryId, k, nProbe = centroids.size))
-          serve.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(outDir)
-        }
-        ()
+      : StreamingQuery =
+    perBatch(stream, checkpointDir) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val spark = batch.sparkSession
+        graft.analytics.IvfIndex.deleteIds(
+          spark, indexDir, batch.select("vec_id"))
+        land(Materialize.once(graft.analytics.Similarity.ivfProbe(
+               graft.analytics.IvfIndex.liveAssignments(spark, indexDir),
+               centroids, queryId, k, nProbe = centroids.size)),
+             batchId, outDir)
       }
-      .start()
+    }
 
   /** [[dedupedByFingerprint]] keyed on the native 64-bit simhash — the
     * fuzzy sibling of [[dedupedByContent]]. */
@@ -1091,11 +994,11 @@ object EventStreams {
     * filters); Complete/Update for watermarked windowed aggregates —
     * in Append a window only emits once the watermark passes its end,
     * so a static landing dir would emit nothing. */
-  def runStream(spark: org.apache.spark.sql.SparkSession, path: String,
+  def runStream(spark: SparkSession, path: String,
                 transform: DataFrame => DataFrame,
                 queryName: String,
                 mode: OutputMode = OutputMode.Append())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     val schema = spark.read.parquet(path).schema // infer once, batch-side
     val in = spark.readStream.schema(schema).parquet(path)
     transform(in).writeStream
@@ -1105,27 +1008,21 @@ object EventStreams {
       .start()
   }
 
-  /** Streaming INSERT-IGNORE into the artifact store: `foreachBatch`
-    * bridges the stream to the batch upsert path, so each micro-batch
-    * runs the same dedup/anti-join/append as a batch load — checkpoint
-    * plus the store's idempotent-append semantics give effective
-    * exactly-once even across batch replays. The standard shape for
-    * "stream into a table that batch jobs also write". */
-  def runStreamUpsert(spark: org.apache.spark.sql.SparkSession,
-                      landingPath: String, storePath: String,
-                      checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+  /** Streaming INSERT-IGNORE into the artifact store: each micro-batch
+    * ([[perBatch]]) runs the same dedup/anti-join/append as a batch
+    * load — checkpoint plus the store's idempotent-append semantics give
+    * effective exactly-once even across batch replays. The standard
+    * shape for "stream into a table that batch jobs also write". */
+  def runStreamUpsert(spark: SparkSession, landingPath: String,
+                      storePath: String, checkpointDir: String)
+      : StreamingQuery = {
     val schema = spark.read.parquet(landingPath).schema
     val in = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(landingPath)
-    in.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sinks.ArtifactStore.appendIgnore(spark, batch, storePath)
-      }
-      .start()
+    perBatch(in, checkpointDir) { (batch, _) =>
+      graft.sinks.ArtifactStore.appendIgnore(spark, batch, storePath)
+    }
   }
 
   /** Durable variant: parquet sink + WAL checkpoint — the
@@ -1136,10 +1033,10 @@ object EventStreams {
     * log; the restart test in `StreamingSpec` kills a query between
     * batches and asserts no loss and no duplication). Append-mode
     * transforms only (parquet is an append sink). */
-  def runStreamDurable(spark: org.apache.spark.sql.SparkSession, path: String,
+  def runStreamDurable(spark: SparkSession, path: String,
                        transform: DataFrame => DataFrame,
                        outDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     val schema = spark.read.parquet(path).schema
     val in = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1") // bounded batches → restartable mid-stream
@@ -1163,71 +1060,53 @@ object EventStreams {
     * deployment schedules that recount per N batches, st22-style, and
     * retains grams anyway for the id01/st11 gates).
     *
-    * Replay-idempotent: state is VERSIONED by batch id (batch b reads
-    * `state_{b-1}`, writes `state_b` — a replayed batch rewrites its
-    * own version from the same inputs), and both the gram store and the
-    * publish log are `partitionBy(batch_id)` with dynamic partition
-    * overwrite, so a replayed batch overwrites rather than duplicates.
-    * The streaming plan itself is stateless (no state store). */
+    * Replay: the [[perBatch]] rule — the summary is versioned state,
+    * the gram store and the publish log are batch deltas. The streaming
+    * plan itself is stateless (no state store). */
   def incrementalHeavyHitters(stream: DataFrame, stateDir: String,
                               storeDir: String, outDir: String,
                               checkpointDir: String, k: Int = 800)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.functions.MisraGriesAgg.register(spark)
-        val grams = graft.analytics.FrequentItems.bigrams(batch)
-          .withColumn("w", lit(1L)).withColumn("is_raw", lit(1L))
-        val (prevSum, prevN) = {
-          val st = readStateOrCold(spark, s"$stateDir/state_${batchId - 1}") {
-            spark.emptyDataFrame
-              .select(lit("").as("item"), lit(0L).as("est")).limit(0)
-          }
-          if (st.isEmpty) (st, 0L) // genuine cold start
-          else (st.filter(col("item").isNotNull).select("item", "est"),
-                st.filter(col("item").isNull).agg(sum("est")).head()
-                  .getLong(0))
-        }
-        val merged = prevSum
-          .select(col("item").as("ngram"), col("est").as("w"),
-                  lit(0L).as("is_raw"))
-          .unionByName(grams.select("ngram", "w", "is_raw"))
-          .agg(call_function(graft.functions.MisraGriesAgg.fnName,
-                             col("ngram"), col("w"), lit(k)).as("mg"),
-               coalesce(sum(col("w") * col("is_raw")), lit(0L)).as("nb"))
-        // state_b = summary rows + one NULL-item row carrying the new
-        // running total (single self-describing parquet dir)
+      : StreamingQuery =
+    perBatch(stream, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      graft.functions.MisraGriesAgg.register(spark)
+      val grams = graft.analytics.FrequentItems.bigrams(batch)
+        .withColumn("w", lit(1L)).withColumn("is_raw", lit(1L))
+      // state = summary rows + one NULL-item row carrying the running
+      // total (single self-describing parquet dir); cold: a zero total
+      val prev = priorState(stateDir, batchId)(spark.range(1)
+        .select(lit(null).cast("string").as("item"), lit(0L).as("est")))
+      val prevN = prev.filter(col("item").isNull).agg(sum("est")).head()
+        .getLong(0)
+      val merged = prev.filter(col("item").isNotNull)
+        .select(col("item").as("ngram"), col("est").as("w"),
+                lit(0L).as("is_raw"))
+        .unionByName(grams.select("ngram", "w", "is_raw"))
+        .agg(call_function(graft.functions.MisraGriesAgg.fnName,
+                           col("ngram"), col("w"), lit(k)).as("mg"),
+             coalesce(sum(col("w") * col("is_raw")), lit(0L)).as("nb"))
+      val st = commitState(
         merged.select(explode_outer(col("mg")).as("c"), col("nb"))
           .select(col("c.item").as("item"), col("c.est").as("est"))
           .filter(col("item").isNotNull)
           .unionByName(merged.select(
             lit(null).cast("string").as("item"),
-            (col("nb") + lit(prevN)).as("est")))
-          .write.mode("overwrite").parquet(s"$stateDir/state_$batchId")
-        grams.select(col("ngram")).withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(storeDir)
-        // publish: exact recount of the ≤k candidates over the
-        // retained stream-so-far, thresholded at 1/k
-        val st = spark.read.parquet(s"$stateDir/state_$batchId")
-        val nTotal = st.filter(col("item").isNull).head().getLong(1)
-        val cands = st.filter(col("item").isNotNull)
-          .select(col("item").as("ngram"))
-        spark.read.parquet(storeDir).select("ngram")
-          .join(broadcast(cands), "ngram")
-          .groupBy("ngram").agg(count(lit(1)).as("n_occ"))
-          .filter(col("n_occ") * lit(k) > lit(nTotal))
-          .select(col("ngram"), col("n_occ"), lit(nTotal).as("n_stream"),
-                  lit(batchId).as("batch_id"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(outDir)
-      }
-      .start()
+            (col("nb") + lit(prevN)).as("est"))),
+        stateDir, batchId)
+      val ngrams = grams.select(col("ngram"))
+      land(ngrams, batchId, storeDir)
+      // publish: exact recount of the ≤k candidates over the
+      // retained stream-so-far, thresholded at 1/k
+      val nTotal = st.filter(col("item").isNull).head().getLong(1)
+      val cands = st.filter(col("item").isNotNull)
+        .select(col("item").as("ngram"))
+      land(readDelta(spark, storeDir, ngrams.schema).select("ngram")
+             .join(broadcast(cands), "ngram")
+             .groupBy("ngram").agg(count(lit(1)).as("n_occ"))
+             .filter(col("n_occ") * lit(k) > lit(nTotal))
+             .select(col("ngram"), col("n_occ"), lit(nTotal).as("n_stream")),
+           batchId, outDir)
+    }
 
   /** st25's streaming twin: after each document micro-batch, publish
     * the EXACT p50/p90/p99 of token counts over the stream so far.
@@ -1235,45 +1114,31 @@ object EventStreams {
     * Cross-batch decision state is the bounded integer histogram alone
     * (`Quantiles.hist` — bin = v DIV 8 → count, exact and mergeable by
     * addition): batch b reads `state_{b-1}`, adds its own bin census,
-    * and writes `state_b` — a replayed batch recomputes the identical
-    * merge, so crash recovery is a plain re-run (the st24 protocol).
-    * Values land in a batch-id-partitioned store (dynamic overwrite →
-    * replay-idempotent); the publish step walks the persisted
-    * histogram's CDF and refines inside the one target bin per
+    * and writes `state_b` — the [[perBatch]] replay rule, as are the
+    * batch-delta value store and publish log. The publish step walks the
+    * persisted histogram's CDF and refines inside the one target bin per
     * percentile against the store (`Quantiles.histQuantiles`) — the
     * recount-against-retained-corpus discipline, scheduled per batch
     * here and per-N-batches at real scale. */
   def incrementalQuantiles(stream: DataFrame, stateDir: String,
                            storeDir: String, outDir: String,
                            checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val vals = batch.select(
-          graft.analytics.TextAnalysis.tokenCount(col("text"))
-            .cast("long").as("v"))
-        val hb = graft.analytics.Quantiles.hist(vals)
-        val prev = readStateOrCold(spark, s"$stateDir/state_${batchId - 1}")(
-          hb.limit(0)) // cold start: no prior histogram
-        prev.unionByName(hb)
-          .groupBy("bin").agg(sum("cnt").as("cnt"))
-          .write.mode("overwrite").parquet(s"$stateDir/state_$batchId")
-        vals.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(storeDir)
-        val h = spark.read.parquet(s"$stateDir/state_$batchId")
-        val sofar = spark.read.parquet(storeDir).select("v")
-        graft.analytics.Quantiles.histQuantiles(h, sofar)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(outDir)
-      }
-      .start()
+      : StreamingQuery =
+    perBatch(stream, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val vals = batch.select(
+        graft.analytics.TextAnalysis.tokenCount(col("text"))
+          .cast("long").as("v"))
+      val hb = graft.analytics.Quantiles.hist(vals)
+      val h = commitState(
+        priorState(stateDir, batchId)(hb.limit(0)).unionByName(hb)
+          .groupBy("bin").agg(sum("cnt").as("cnt")),
+        stateDir, batchId)
+      land(vals, batchId, storeDir)
+      land(graft.analytics.Quantiles.histQuantiles(h,
+             readDelta(spark, storeDir, vals.schema).select("v")),
+           batchId, outDir)
+    }
 
   /** st26's streaming twin: per-source distinct-bigram vocabulary
     * tracked across micro-batches where the ONLY cross-batch decision
@@ -1282,28 +1147,24 @@ object EventStreams {
     *
     * Batch b sketches its own grams, max-merges with `state_{b-1}` via
     * `hll_union` (full-outer: a source absent from a batch keeps its
-    * sketch verbatim), and writes `state_b` — replaying a batch
-    * recomputes the identical merge (registers max-merge, so the union
-    * is idempotent under replay: the st24/st25 crash protocol with
-    * set-semantics state). Raw grams also land in a batch-partitioned
-    * store, used here ONLY for the published exact audit (the batch
-    * entry's x14 discipline); a 100 TB deployment audits on a schedule
-    * and publishes the estimate, whose cost never grows. */
+    * sketch verbatim), and writes `state_b` — the [[perBatch]] replay
+    * rule, and registers max-merge, so the union is idempotent too.
+    * Raw grams also land in a batch-delta store, used here ONLY for the
+    * published exact audit (the batch entry's x14 discipline); a 100 TB
+    * deployment audits on a schedule and publishes the estimate, whose
+    * cost never grows. */
   def incrementalVocab(stream: DataFrame, stateDir: String,
                        storeDir: String, outDir: String,
                        checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val grams = graft.analytics.FrequentItems
-          .bigrams(batch, col("source"))
-        val sk = grams.groupBy("source")
-          .agg(hll_sketch_agg(col("ngram"), 12).as("sk"))
-        val prev = readStateOrCold(spark, s"$stateDir/state_${batchId - 1}")(
-          sk.limit(0)) // cold start: no prior sketch table
+      : StreamingQuery =
+    perBatch(stream, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val grams = graft.analytics.FrequentItems
+        .bigrams(batch, col("source"))
+      val sk = grams.groupBy("source")
+        .agg(hll_sketch_agg(col("ngram"), 12).as("sk"))
+      val prev = priorState(stateDir, batchId)(sk.limit(0))
+      val st = commitState(
         sk.select(col("source"), col("sk").as("sk_new"))
           .join(prev.select(col("source"), col("sk").as("sk_old")),
                 Seq("source"), "full_outer")
@@ -1311,29 +1172,21 @@ object EventStreams {
             when(col("sk_old").isNull, col("sk_new"))
               .when(col("sk_new").isNull, col("sk_old"))
               .otherwise(hll_union(col("sk_old"), col("sk_new")))
-              .as("sk"))
-          .write.mode("overwrite").parquet(s"$stateDir/state_$batchId")
-        grams.select("source", "ngram").distinct()
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(storeDir)
-        val st = spark.read.parquet(s"$stateDir/state_$batchId")
-        val exact = spark.read.parquet(storeDir)
-          .select("source", "ngram").distinct()
-          .groupBy("source").agg(count(lit(1)).as("ndv_exact"))
-        st.join(exact, "source")
-          .select(col("source"), col("ndv_exact"),
-            hll_sketch_estimate(col("sk")).as("ndv_est"),
-            (abs(hll_sketch_estimate(col("sk")) - col("ndv_exact")) <=
-              greatest(col("ndv_exact").cast("double") * 0.05,
-                       lit(8.0))).as("hll_ok"),
-            lit(batchId).as("batch_id"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(outDir)
-      }
-      .start()
+              .as("sk")),
+        stateDir, batchId)
+      val pairs = grams.select("source", "ngram").distinct()
+      land(pairs, batchId, storeDir)
+      val exact = readDelta(spark, storeDir, pairs.schema)
+        .select("source", "ngram").distinct()
+        .groupBy("source").agg(count(lit(1)).as("ndv_exact"))
+      land(st.join(exact, "source")
+             .select(col("source"), col("ndv_exact"),
+               hll_sketch_estimate(col("sk")).as("ndv_est"),
+               (abs(hll_sketch_estimate(col("sk")) - col("ndv_exact")) <=
+                 greatest(col("ndv_exact").cast("double") * 0.05,
+                          lit(8.0))).as("hll_ok")),
+           batchId, outDir)
+    }
 
   /** scd01's streaming twin — CDC apply: each micro-batch is a change
     * feed `(k, seg)` merged into a persisted SCD2 history table.
@@ -1342,55 +1195,46 @@ object EventStreams {
     * segment differs closes the open row at b and opens a new one; an
     * unseen key opens its first row at b; a no-op change (same
     * segment) and untouched keys pass through unchanged. The history
-    * snapshot is versioned per batch (`state_b` computed purely from
-    * `state_{b-1}` + the batch), so a crash-replayed batch recomputes
-    * the identical table — the st24/st25 replay protocol applied to a
-    * dimension table. A 100 TB deployment partitions the history by
-    * `is_current` and rewrites only the open partition (closed rows
-    * are append-only); the snapshot here keeps the test surface
-    * single-dir. Duplicate keys within one change batch must be
+    * snapshot is versioned state under the [[perBatch]] replay rule,
+    * applied to a dimension table. A 100 TB deployment partitions the
+    * history by `is_current` and rewrites only the open partition
+    * (closed rows are append-only); the snapshot here keeps the test
+    * surface single-dir. Duplicate keys within one change batch must be
     * pre-collapsed by the feed (this twin's contract; the batch entry
     * scd01 derives its delta deterministically so the condition holds
     * by construction). */
   def scdApply(stream: DataFrame, stateDir: String,
                checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val delta = batch.select(col("k"), col("seg"))
-        val hist = readStateOrCold(spark, s"$stateDir/state_${batchId - 1}") {
-          // cold start: empty history
-          delta.select(col("k"), col("seg"),
-            lit(0).as("valid_from"), lit(9999).as("valid_to"),
-            lit(true).as("is_current")).limit(0)
-        }
-        val open = hist.filter(col("is_current"))
-          .select(col("k"), col("seg"), col("valid_from"))
-        val closedRows = hist.filter(!col("is_current"))
-        val j = open.join(delta.select(col("k"), col("seg").as("seg_new")),
-                          Seq("k"), "full_outer")
-        val b = lit(batchId.toInt)
-        val stillOpen = j.filter(col("seg_new").isNull ||
-                                 col("seg_new") === col("seg"))
-          .select(col("k"), col("seg"), col("valid_from"),
-                  lit(9999).as("valid_to"), lit(true).as("is_current"))
-        val newlyClosed = j.filter(col("seg").isNotNull &&
-            col("seg_new").isNotNull && col("seg_new") =!= col("seg"))
-          .select(col("k"), col("seg"), col("valid_from"),
-                  b.as("valid_to"), lit(false).as("is_current"))
-        val newlyOpened = j.filter(col("seg_new").isNotNull &&
-            (col("seg").isNull || col("seg_new") =!= col("seg")))
-          .select(col("k"), col("seg_new").as("seg"),
-                  b.as("valid_from"), lit(9999).as("valid_to"),
-                  lit(true).as("is_current"))
-        closedRows.unionByName(newlyClosed).unionByName(stillOpen)
-          .unionByName(newlyOpened)
-          .write.mode("overwrite").parquet(s"$stateDir/state_$batchId")
-      }
-      .start()
+      : StreamingQuery =
+    perBatch(stream, checkpointDir) { (batch, batchId) =>
+      val delta = batch.select(col("k"), col("seg"))
+      val hist = priorState(stateDir, batchId)( // cold: empty history
+        delta.select(col("k"), col("seg"),
+          lit(0).as("valid_from"), lit(9999).as("valid_to"),
+          lit(true).as("is_current")).limit(0))
+      val open = hist.filter(col("is_current"))
+        .select(col("k"), col("seg"), col("valid_from"))
+      val closedRows = hist.filter(!col("is_current"))
+      val j = open.join(delta.select(col("k"), col("seg").as("seg_new")),
+                        Seq("k"), "full_outer")
+      val b = lit(batchId.toInt)
+      val stillOpen = j.filter(col("seg_new").isNull ||
+                               col("seg_new") === col("seg"))
+        .select(col("k"), col("seg"), col("valid_from"),
+                lit(9999).as("valid_to"), lit(true).as("is_current"))
+      val newlyClosed = j.filter(col("seg").isNotNull &&
+          col("seg_new").isNotNull && col("seg_new") =!= col("seg"))
+        .select(col("k"), col("seg"), col("valid_from"),
+                b.as("valid_to"), lit(false).as("is_current"))
+      val newlyOpened = j.filter(col("seg_new").isNotNull &&
+          (col("seg").isNull || col("seg_new") =!= col("seg")))
+        .select(col("k"), col("seg_new").as("seg"),
+                b.as("valid_from"), lit(9999).as("valid_to"),
+                lit(true).as("is_current"))
+      commitState(closedRows.unionByName(newlyClosed).unionByName(stillOpen)
+                    .unionByName(newlyOpened), stateDir, batchId)
+      ()
+    }
 
   /** One micro-batch step of the incremental k-core twin (st27's
     * protocol run continuously) — exposed as a named function so the
@@ -1399,68 +1243,47 @@ object EventStreams {
     *
     * Per batch b of `(doc_id, text)` documents: the batch's undirected
     * token edges are anti-joined against the edges PRIOR batches
-    * landed (`batch_id < b` — replay-stable: a replayed batch sees the
-    * same prior set) to form the NEW-edge delta; the delta lands
-    * `partitionBy(batch_id)` with dynamic overwrite (a replay
-    * overwrites its own partition); the cross-batch degree census is
+    * landed to form the NEW-edge delta, which lands as batch b's
+    * partition of the edge store; the cross-batch degree census is
     * `state_{b-1}` PLUS the delta's census (additive over disjoint
-    * deltas — never a recount of the store); and the publish is the
-    * 3-round k-core peel of the store-so-far with the maintained
-    * census injected as round 0 ([[graft.analytics.GraphOps
-    * .peelSummary]] — the same code path as the batch entry, so
-    * row-equality is structural). */
-  private[graft] def applyKCoreBatch(spark: org.apache.spark.sql.SparkSession,
+    * deltas — never a recount of the store), all under the [[perBatch]]
+    * replay rule; and the publish is the 3-round k-core peel of the
+    * store-so-far with the maintained census injected as round 0
+    * ([[graft.analytics.GraphOps.peelSummary]] — the same code path as
+    * the batch entry, so row-equality is structural). */
+  private[graft] def applyKCoreBatch(spark: SparkSession,
                                      batch: DataFrame, batchId: Long,
                                      stateDir: String, storeDir: String,
                                      outDir: String, k: Int): Unit = {
     import graft.analytics.{GraphOps => g}
-    val storeSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(
-        "a", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField(
-        "b", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField(
-        "batch_id", org.apache.spark.sql.types.LongType)))
-    val prior = readDelta(spark, storeDir, storeSchema)
-      .filter(col("batch_id") < batchId)
-    val delta = Materialize.once(g.undirectedEdges(batch)
-      .join(prior.select("a", "b"), Seq("a", "b"), "left_anti"))
-    delta.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(storeDir)
-    val prev = readStateOrCold(spark, s"$stateDir/state_${batchId - 1}")(
-      g.degreeCensus(delta).limit(0)) // cold start: no prior census
-    prev.unionByName(g.degreeCensus(delta))
-      .groupBy("tk").agg(sum("dg").as("dg"))
-      .write.mode("overwrite").parquet(s"$stateDir/state_$batchId")
-    val census = spark.read.parquet(s"$stateDir/state_$batchId")
-    val edges = spark.read.schema(storeSchema).parquet(storeDir)
+    val edges = g.undirectedEdges(batch)
+    val delta = Materialize.once(edges.join(
+      landedBefore(spark, storeDir, edges.schema, batchId), Seq("a", "b"),
+      "left_anti"))
+    land(delta, batchId, storeDir)
+    val census = commitState(
+      priorState(stateDir, batchId)(g.degreeCensus(delta).limit(0))
+        .unionByName(g.degreeCensus(delta))
+        .groupBy("tk").agg(sum("dg").as("dg")),
+      stateDir, batchId)
+    val store = readDelta(spark, storeDir, edges.schema)
       .filter(col("batch_id") <= batchId).select("a", "b")
-    g.peelSummary(edges, census, k)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(outDir)
+    land(g.peelSummary(store, census, k), batchId, outDir)
   }
 
   /** st27's streaming form: per micro-batch of `(doc_id, text)`
     * documents, maintain the additive degree census through versioned
-    * replay-idempotent state files and publish the 3-round k-core peel
-    * of the stream-so-far — see [[applyKCoreBatch]] for the per-batch
+    * state files and publish the 3-round k-core peel of the
+    * stream-so-far — see [[applyKCoreBatch]] for the per-batch
     * contract. The streaming plan itself is stateless (no state
     * store); every cross-batch byte lives in `state_b` / the
     * batch-id-partitioned edge store. */
   def incrementalKCore(stream: DataFrame, stateDir: String,
                        storeDir: String, outDir: String,
                        checkpointDir: String, k: Int = 4)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Materialize.scoped(applyKCoreBatch(batch.sparkSession, batch,
-          batchId, stateDir, storeDir, outDir, k))
-      }
-      .start()
+      : StreamingQuery =
+    perBatch(stream, checkpointDir) { (batch, batchId) =>
+      applyKCoreBatch(batch.sparkSession, batch, batchId, stateDir,
+                      storeDir, outDir, k)
+    }
 }

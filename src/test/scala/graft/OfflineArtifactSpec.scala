@@ -197,4 +197,37 @@ class OfflineArtifactSpec extends SparkSpec {
     assert(hits.map(_.takeWhile(_ != ':')) == Seq("graft/GraftSession.scala"),
       "build sessions through GraftSession:\n" + hits.mkString("\n"))
   }
+
+  test("tripwire: foreachBatch and partitionOverwriteMode only in the " +
+       "micro-batch protocol helpers") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"source dir not found from ${root.getAbsolutePath}")
+    def scalaFiles(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.sortBy(_.getName).flatMap { f =>
+        if (f.isDirectory) scalaFiles(f)
+        else if (f.getName.endsWith(".scala")) Seq(f)
+        else Nil
+      }
+    def isComment(line: String): Boolean =
+      Seq("*", "//", "/*").exists(line.trim.startsWith)
+    val defName = "\\bdef (\\w+)".r
+    // each code use, with the def it sits in
+    val hits = for {
+      f <- scalaFiles(root)
+      code = Files.readAllLines(f.toPath).asScala.toIndexedSeq
+        .map(l => if (isComment(l)) "" else l)
+      (line, i) <- code.zipWithIndex
+      token <- Seq("foreachBatch", "partitionOverwriteMode")
+      if line.contains(token)
+    } yield {
+      val owner = code.take(i + 1).reverseIterator
+        .flatMap(defName.findFirstMatchIn(_)).nextOption().fold("?")(_.group(1))
+      (s"${root.toPath.relativize(f.toPath)}", token, owner, i + 1)
+    }
+    assert(hits.map(h => (h._1, h._2, h._3)) == Seq(
+        ("graft/streaming/EventStreams.scala", "foreachBatch", "perBatch"),
+        ("graft/streaming/EventStreams.scala", "partitionOverwriteMode", "land")),
+      s"route these ${hits.size} through EventStreams.perBatch / land:\n" +
+        hits.map { case (f, t, o, n) => s"$f:$n: $t (in $o)" }.mkString("\n"))
+  }
 }

@@ -863,6 +863,33 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(s"$tmp/store").distinct().count() == 6)
   }
 
+  test("incremental gram gate: a crash-replayed batch decides as its first run did") {
+    // a crash after the step's writes but before the checkpoint commit
+    // replays the batch: it must not gate its own docs against the
+    // grams its first run already landed in the store
+    import java.nio.file.Files
+    val landing = Files.createTempDirectory("st11p-landing").toString
+    val tmp = Files.createTempDirectory("st11p-state").toString
+    Seq((1L, "alpha beta gamma delta epsilon zeta eta"),
+        (2L, "one two three four five six seven"))
+      .toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(landing)
+    val schema = spark.read.parquet(landing).schema
+    def run(): Map[Long, Int] = {
+      val q = EventStreams.incrementalGramGate(
+        spark.readStream.schema(schema).parquet(landing),
+        s"$tmp/store", s"$tmp/out", s"$tmp/ckpt")
+      try q.processAllAvailable() finally q.stop()
+      spark.read.parquet(s"$tmp/out").select("doc_id", "keep").collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    }
+    val first = run()
+    assert(first == Map(1L -> 1, 2L -> 1), s"$first")
+    // un-commit batch 0: the restarted query re-runs it
+    Seq("0", ".0.crc").foreach(f =>
+      Files.deleteIfExists(java.nio.file.Paths.get(s"$tmp/ckpt/commits/$f")))
+    assert(run() == first, "the replayed batch rejected its own docs")
+  }
+
   test("temperature mixture: kill + restart — counts resume, batches never double-counted") {
     import java.nio.file.Files
     val landing = Files.createTempDirectory("dm05r-landing").toString
@@ -1205,6 +1232,80 @@ class StreamingSpec extends SparkSpec {
       .select("doc_id", "keep_final").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(gated == Map(1L -> 1, 2L -> 0), s"$gated")
+  }
+
+  test("delta-reading streams: a zero-row first micro-batch is a valid batch") {
+    // every stream that reads back what it landed: a zero-row file
+    // lands first (its batch writes only _SUCCESS), then a real file
+    // under a restarted query; the real batch's output must equal the
+    // same batch run cold, with no empty batch before it
+    import java.nio.file.Files
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.StreamingQuery
+    val texts = Seq((1L, "alpha beta gamma delta epsilon zeta eta"),
+                    (2L, "alpha beta gamma delta epsilon zeta theta"),
+                    (3L, "tiny doc"),
+                    (4L, "one two three one two three four one two"))
+    val docs = texts.toDF("doc_id", "text")
+    case class Case(name: String, rows: DataFrame,
+                    start: (DataFrame, String) => StreamingQuery,
+                    output: (String, Long) => DataFrame = (d, b) =>
+                      spark.read.parquet(s"$d/out")
+                        .filter(col("batch_id") === b).drop("batch_id"))
+    val cases = Seq(
+      Case("incrementalGramGate", docs, (s, d) =>
+        EventStreams.incrementalGramGate(s, s"$d/store", s"$d/out", s"$d/ckpt")),
+      Case("bloomIngestGate", docs, (s, d) =>
+        EventStreams.bloomIngestGate(s,
+          graft.analytics.BloomGramIndex.emptyFilter(s"$d/seed.bf", 1024L, 16384L),
+          s"$d/filters", s"$d/out", s"$d/ckpt")),
+      Case("temperatureMixture",
+        Seq((1L, "en"), (2L, "en"), (3L, "en"), (4L, "fr")).toDF("doc_id", "lang"),
+        (s, d) => EventStreams.temperatureMixture(
+          s, s"$d/counts", s"$d/out", s"$d/ckpt")),
+      Case("incrementalHeavyHitters", docs, (s, d) =>
+        EventStreams.incrementalHeavyHitters(
+          s, s"$d/state", s"$d/store", s"$d/out", s"$d/ckpt", k = 10)),
+      Case("incrementalQuantiles", docs, (s, d) =>
+        EventStreams.incrementalQuantiles(
+          s, s"$d/state", s"$d/store", s"$d/out", s"$d/ckpt")),
+      Case("incrementalVocab",
+        texts.map { case (id, t) => (s"s${id % 2}", t) }.toDF("source", "text"),
+        (s, d) => EventStreams.incrementalVocab(
+          s, s"$d/state", s"$d/store", s"$d/out", s"$d/ckpt")),
+      Case("scdApply", Seq((1L, "A"), (2L, "B")).toDF("k", "seg"),
+        (s, d) => EventStreams.scdApply(s, s"$d/state", s"$d/ckpt"),
+        // the history stamps rows with the batch id that opened them
+        (d, b) => spark.read.parquet(s"$d/state/state_$b").drop("valid_from")),
+      Case("incrementalKCore", docs, (s, d) =>
+        EventStreams.incrementalKCore(
+          s, s"$d/state", s"$d/store", s"$d/out", s"$d/ckpt", k = 2)),
+      Case("packStream", docs, (s, d) =>
+        EventStreams.packStream(s, s"$d/counts", s"$d/out", s"$d/ckpt")))
+    // the sorted rows the real batch produced, after `files` landed one
+    // micro-batch each (a restarted query per file)
+    def run(c: Case, files: Seq[DataFrame]): Seq[String] = {
+      val landing = Files.createTempDirectory("zr-landing").toString
+      val dir = Files.createTempDirectory(s"zr-${c.name}").toString
+      files.foreach { f =>
+        f.coalesce(1).write.mode("append").parquet(landing)
+        val q = c.start(spark.readStream.schema(c.rows.schema)
+          .option("maxFilesPerTrigger", "1").parquet(landing), dir)
+        try q.processAllAvailable() finally q.stop()
+      }
+      c.output(dir, files.size - 1L).collect().map(_.toString).sorted.toSeq
+    }
+    val failures = cases.flatMap { c =>
+      try {
+        val cold = run(c, Seq(c.rows))
+        val afterEmpty = run(c, Seq(c.rows.limit(0), c.rows))
+        Option.when(cold.isEmpty || afterEmpty != cold)(
+          s"${c.name}: $afterEmpty vs cold $cold")
+      } catch {
+        case e: Exception => Some(s"${c.name}: ${e.getMessage.take(300)}")
+      }
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
   }
 
   test("streaming pack: kill + restart from checkpoint — one assignment per doc, offsets intact") {

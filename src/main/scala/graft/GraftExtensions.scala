@@ -1,78 +1,19 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 
-import graft.functions.{BloomFns, BloomProbeFile, BloomProbeSharded, CosineSim, MinHashSig, NearestCentroid, PqAdc, SimHash64, SpanStrip}
-
-/** SparkSessionExtensions entry point: makes the engine's native
-  * functions available to ANY session (including pure-SQL users) via
+/** SparkSessionExtensions entry point: makes every native function of
+  * [[graft.functions.Natives]] available to ANY session (including
+  * pure-SQL users) via
   *
   * {{{
   *   spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
-  * Injects `cosine_sim(array<float>, array<float>) → double` and
-  * `minhash_sig(array<bigint>) → array<bigint>`. Sessions built without
-  * the config can call the companions' `register(spark)` instead.
+  * Sessions built without the config get the same list from
+  * `Natives.register(spark)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier(CosineSim.fnName),
-      CosineSim.info,
-      exprs => CosineSim(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier(MinHashSig.fnName),
-      MinHashSig.info,
-      exprs => MinHashSig(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier(SimHash64.fnName),
-      SimHash64.info,
-      exprs => SimHash64(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier(NearestCentroid.fnName),
-      NearestCentroid.info,
-      exprs => NearestCentroid(exprs(0), exprs(1))))
-    // Spark's own runtime-filter bloom pair (see BloomFns): the build
-    // aggregate + probe predicate behind the id02 bloom ingest gate.
-    ext.injectFunction((
-      FunctionIdentifier(BloomFns.aggName),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate].getName, BloomFns.aggName),
-      exprs => new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier(BloomFns.containsName),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions
-          .BloomFilterMightContain].getName, BloomFns.containsName),
-      exprs => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier(PqAdc.fnName),
-      PqAdc.info,
-      exprs => PqAdc(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier(SpanStrip.fnName),
-      SpanStrip.info,
-      exprs => SpanStrip(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier(BloomProbeFile.fnName),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[BloomProbeFile].getName, BloomProbeFile.fnName),
-      exprs => BloomProbeFile(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier(BloomProbeSharded.fnName),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[BloomProbeSharded].getName, BloomProbeSharded.fnName),
-      exprs => BloomProbeSharded(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.DeconScore.fnName),
-      graft.functions.DeconScore.info,
-      exprs => graft.functions.DeconScore(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Int],
-        exprs(3).eval().asInstanceOf[Int])))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    graft.functions.Natives.inject(ext)
 }

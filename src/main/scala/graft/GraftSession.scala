@@ -28,6 +28,20 @@ object GraftSession {
     spark
   }
 
+  /** Runs `body` with the given SQL confs set on `spark`, then restores
+    * each to its previous value (or unsets it), also on a throw. Plans
+    * read confs when they are planned and executed, so `body` must run
+    * its action inside the scope. */
+  def withConfs[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** State hygiene between measured or dumped entries, after the
     * entry's `Materialize.scoped` released what it made: drop every
     * block the session still holds (ML caches, frames made with no

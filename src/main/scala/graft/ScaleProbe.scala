@@ -433,14 +433,14 @@ object ScaleProbe {
       for (p <- sweep;
            qn <- Seq("q14_join_notnull", "q17_join_full_sort",
                      "q20_join_group_multiagg")) {
-        spark.conf.set("spark.sql.shuffle.partitions", p)
-        time(s"$qn@p$p") {
-          val df = SparkEntry.queries(qn)(spark, workDir)
-          df.write.format("noop").mode("overwrite").save()
-          df.count()
+        GraftSession.withConfs(spark, "spark.sql.shuffle.partitions" -> p) {
+          time(s"$qn@p$p") {
+            val df = SparkEntry.queries(qn)(spark, workDir)
+            df.write.format("noop").mode("overwrite").save()
+            df.count()
+          }
         }
       }
-      spark.conf.set("spark.sql.shuffle.partitions", GraftSession.cpus.toLong)
     }
     spark.stop()
   }

@@ -3,10 +3,11 @@ package graft.analytics
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.BloomFns
+import graft.GraftSession
+import graft.functions.Natives
 import graft.queries.QueryDef
 
 /** Persisted bloom filter over the standing corpus' word-5-gram hashes —
@@ -40,6 +41,24 @@ object BloomGramIndex {
 
   private val Artifact = OfflineArtifact.Kind("bloomgram", "documents", "v3")
 
+  /** Runs `build` on the `bloom_agg` column of an (est items, bits)
+    * filter over `hashed`; `build` must run its action inside. The stock
+    * expression caps its size at the runtime-filter confs (defaults: 4M
+    * items / 67M bits — sized for join pruning, not corpus indexes), so
+    * they are raised for the build and restored after it: a large corpus
+    * gets the bits its fpp needs instead of a silent cap, and later
+    * runtime-filter joins in the session keep their own caps. */
+  private def withFilterAgg[T](spark: SparkSession, hashed: Column,
+                               est: Long, bits: Long)(build: Column => T): T =
+    GraftSession.withConfs(spark,
+      "spark.sql.optimizer.runtime.bloomFilter.maxNumItems" ->
+        (est max 4000000L).toString,
+      "spark.sql.optimizer.runtime.bloomFilter.maxNumBits" ->
+        (bits max 67108864L).toString) {
+      build(Natives.call(spark, "bloom_agg", hashed, lit(est), lit(bits))
+        .as("bf"))
+    }
+
   /** The single filter's file inside its artifact dir. */
   def filterPath(sfDir: String): String = s"${Artifact.dir(sfDir)}/filter.bf"
 
@@ -65,18 +84,9 @@ object BloomGramIndex {
       // corpus pass, paid once per epoch by the offline contract.
       val est = math.max(1024L, grams.count())
       val bits = math.ceil(est * BitsPerItem).toLong
-      // The stock expression caps size at the runtime-filter confs
-      // (defaults: 4M items / 67M bits — sized for join pruning, not
-      // corpus indexes). Raise them so a large corpus gets the bits
-      // its fpp needs instead of a silent cap.
-      spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.maxNumItems", est max 4000000L)
-      spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.maxNumBits", bits max 67108864L)
-      val bytes = grams
-        .agg(BloomFns.bloomAgg(spark, xxhash64(col("g")),
-                               lit(est), lit(bits)).as("bf"))
-        .head().getAs[Array[Byte]](0)
+      val bytes = withFilterAgg(spark, xxhash64(col("g")), est, bits) { bf =>
+        grams.agg(bf).head().getAs[Array[Byte]](0)
+      }
       writeFilter(s"$dir/filter.bf", bytes, est, bits)
     }
     s"$dir/filter.bf"
@@ -109,18 +119,13 @@ object BloomGramIndex {
       val total = math.max(1024L * k, grams.count())
       val est = math.ceil(total * 1.25 / k).toLong
       val bits = math.ceil(est * BitsPerItem).toLong
-      spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.maxNumItems", est max 4000000L)
-      spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.maxNumBits", bits max 67108864L)
-      val shards = grams
-        .withColumn("h", xxhash64(col("g")))
-        .withColumn("shard", pmod(col("h"), lit(k.toLong)).cast("int"))
-        .groupBy("shard")
-        .agg(BloomFns.bloomAgg(spark, col("h"),
-                               lit(est), lit(bits)).as("bf"))
-        .collect()
-        .map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap
+      val shards = withFilterAgg(spark, col("h"), est, bits) { bf =>
+        grams
+          .withColumn("h", xxhash64(col("g")))
+          .withColumn("shard", pmod(col("h"), lit(k.toLong)).cast("int"))
+          .groupBy("shard").agg(bf)
+          .collect()
+      }.map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap
       (0 until k).foreach { i =>
         shards.get(i) match {
           case Some(bytes) => writeFilter(s"$dir/filter.bf-s$i", bytes, est, bits)
@@ -200,10 +205,9 @@ object BloomGramIndex {
              grams: org.apache.spark.sql.DataFrame,
              outPath: String): String = {
     val (est, bits) = sizing(prevPath)
-    val deltaBytes = grams
-      .agg(BloomFns.bloomAgg(spark, xxhash64(col("g")),
-                             lit(est), lit(bits)).as("bf"))
-      .head().getAs[Array[Byte]](0)
+    val deltaBytes = withFilterAgg(spark, xxhash64(col("g")), est, bits) {
+      bf => grams.agg(bf).head().getAs[Array[Byte]](0)
+    }
     val merged =
       if (deltaBytes == null) // empty batch: nothing to insert
         readBytes(prevPath)

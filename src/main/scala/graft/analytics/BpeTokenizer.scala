@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Natives
 import graft.queries.QueryDef
 
 /** Learned byte-pair-merge tokenizer feeding the token-budget operators
@@ -136,7 +137,6 @@ object BpeTokenizer {
   def learnMerges(spark: SparkSession, sfDir: String,
                   nMerges: Int = Merges,
                   unitKind: String = "word"): Seq[Merge] = {
-    graft.functions.BpeFns.register(spark)
     val unitRows =
       if (unitKind == "bigram")
         table(spark, sfDir, "documents")
@@ -235,7 +235,6 @@ object BpeTokenizer {
   def loadOrLearn(spark: SparkSession, sfDir: String,
                   nMerges: Int = Merges,
                   unitKind: String = "word"): Seq[Merge] = {
-    graft.functions.BpeFns.register(spark)
     Artifact.load(spark, sfDir, variant(nMerges, unitKind)) { dir =>
       import spark.implicits._
       val merges = learnMerges(spark, sfDir, nMerges, unitKind)
@@ -256,15 +255,17 @@ object BpeTokenizer {
     * one codegen'd expression regardless of merge count, where the
     * replace chain built one nested `replace` node PER MERGE and broke
     * expression-tree/codegen limits past ~100 ranks. Bit-equal to the
-    * chain (spec-pinned at [[Merges]]; oracle-pinned via tok02). */
+    * chain (spec-pinned at [[Merges]]; oracle-pinned via tok02).
+    * Resolves against the active session. */
   def bpeWordTokens(w: Column, merges: Seq[Merge]): Column =
-    call_function(graft.functions.BpeFns.wordFnName, w,
+    Natives.call(SparkSession.active, "bpe_word_tokens", w,
       typedLit(merges.map(_.l)), typedLit(merges.map(_.r)))
 
   /** Per-document subword token count over `text` (native fused
-    * split+chain operator; bit-equal to the HOF aggregate form). */
+    * split+chain operator; bit-equal to the HOF aggregate form).
+    * Resolves against the active session. */
   def bpeTokenCount(text: Column, merges: Seq[Merge]): Column =
-    call_function(graft.functions.BpeFns.docFnName, text,
+    Natives.call(SparkSession.active, "bpe_token_count", text,
       typedLit(merges.map(_.l)), typedLit(merges.map(_.r)))
 
   /** The round-8 replace-chain application, kept as the bit-equality
@@ -448,7 +449,7 @@ object BpeTokenizer {
         import s.implicits._
         val vocabDf = deep.map(m => m.l + m.r).toDF("t")
         val closureEsc = units.filter(col("doc_id") % 20 === 0)
-          .select(explode(call_function(graft.functions.BpeFns.segFnName,
+          .select(explode(Natives.call(s, "bpe_word_segment",
             col("u"), typedLit(deep.map(_.l)), typedLit(deep.map(_.r))))
             .as("t"))
           .distinct()
@@ -680,7 +681,6 @@ object BpeTokenizer {
       "tok03_bpe_ids",
       (s, d) => {
         val merges = loadOrLearn(s, d)
-        graft.functions.BpeFns.register(s)
         val mL = typedLit(merges.map(_.l))
         val mR = typedLit(merges.map(_.r))
         val docs = table(s, d, "documents")
@@ -702,8 +702,8 @@ object BpeTokenizer {
           .select(col("doc_id"),
                   posexplode(expr(wordsExpr)).as(Seq("wpos", "w")))
           .select(col("doc_id"), col("wpos"),
-                  posexplode(call_function(
-                    graft.functions.BpeFns.segFnName, col("w"), mL, mR))
+                  posexplode(Natives.call(s, "bpe_word_segment",
+                    col("w"), mL, mR))
                     .as(Seq("spos", "token")))
           .select(col("doc_id"), col("wpos"), col("spos"), col("token"),
                   element_at(vmap, col("token")).as("token_id"))

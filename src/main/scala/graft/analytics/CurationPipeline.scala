@@ -66,12 +66,11 @@ object CurationPipeline {
       .agg(sort_array(collect_list(col("p"))).as("ps"))
     // native codegen'd two-pointer scan — same SpanStrip swap as bp02:
     // identical kept-set to the HOF fold, O(n + |ps|) per doc
-    graft.functions.SpanStrip.register(s)
     words.join(starts, Seq("doc_id"), "left")
       .withColumn("ps",
         coalesce(col("ps"), expr("cast(array() as array<int>)")))
       .withColumn("cleaned",
-        call_function(graft.functions.SpanStrip.fnName,
+        graft.functions.Natives.call(s, "span_strip",
                       col("words"), col("ps"), lit(L)))
       .select(col("doc_id"), col("lang"),
               size(col("cleaned")).cast("long").as("n_tokens"),

@@ -262,7 +262,6 @@ object DataQuality {
     // single-task stages at dc06's 10⁴-row bench and worse at the 100×
     // corpus' organic 2·10⁴ bench; SimhashSigSpec pins native ≡ HOF
     // bit-for-bit, nulls and empties included)
-    graft.functions.SimhashSig.register(benchIn.sparkSession)
     val benchSel = benchIn.select(col("bench_id"), col("embedding"))
     // same tag + content-stamped cache as a broadcastBench call, so
     // the count job is shared with any broadcast of the same frame
@@ -276,8 +275,8 @@ object DataQuality {
           pmod(xxhash64(col("bench_id")), lit(k.toLong)) === c)
       side
         .withColumn("__sig",
-          call_function(graft.functions.SimhashSig.fnName,
-                        col("embedding"), lit(nBits)))
+          graft.functions.Natives.call(benchIn.sparkSession,
+            "simhash_sig_n", col("embedding"), lit(nBits)))
         .select(explode(array((0 until bands).map { b =>
           struct((lit(b << rows) +
                   shiftright(col("__sig"), b * rows)
@@ -376,11 +375,6 @@ object DataQuality {
             "scoring call")
       }
     }
-    graft.functions.DeconScore.register(s)
-    // analysis resolves against the ROOT frame's session, which in the
-    // streaming gates is the driving session, not the micro-batch
-    // clone `s` — register on both (the CosineSim session-guard lesson)
-    graft.functions.DeconScore.register(corpus.sparkSession)
     // The scoring pass is COMPUTE-dense (~bench/2 cosines per corpus
     // row), so byte-sized parquet splits starve it: at sf10 the whole
     // 200k-row corpus is two 128 MB splits = two tasks for 2.7e9
@@ -392,10 +386,11 @@ object DataQuality {
       case (acc, (ch, c)) =>
         acc.crossJoin(broadcast(ch.select(col("bkts").as(s"__bkts_$c"))))
     }
-    def score(c: Int) = call_function(
-      graft.functions.DeconScore.fnName,
-      col("embedding"), col(s"__bkts_$c"),
-      lit(bands), lit(rows))
+    // analysis resolves against the ROOT frame's session, which in the
+    // streaming gates is the driving session, not the micro-batch clone `s`
+    def score(c: Int) = graft.functions.Natives.call(corpus.sparkSession,
+      "decon_score", col("embedding"), col(s"__bkts_$c"), lit(bands),
+      lit(rows))
     val scored = joined.select(
       col("vec_id") +: chunks.indices.map(c => score(c).as(s"__s_$c")): _*)
     val mcs = chunks.indices.map(c => col(s"__s_$c").getField("mc"))
@@ -526,8 +521,8 @@ object DataQuality {
                 filterPath: String, threshold: Double = 0.5)
       : org.apache.spark.sql.DataFrame =
     probeGate(newDocs,
-      graft.functions.BloomProbeFile.probe(
-        spark, lit(filterPath), xxhash64(col("g"))),
+      graft.functions.Natives.call(spark, "bloom_probe_file",
+        lit(filterPath), xxhash64(col("g"))),
       threshold)
 
   /** [[bloomGate]] against a K-sharded filter family
@@ -542,8 +537,8 @@ object DataQuality {
                        threshold: Double = 0.5)
       : org.apache.spark.sql.DataFrame =
     probeGate(newDocs,
-      graft.functions.BloomProbeSharded.probe(
-        spark, lit(basePath), lit(k), xxhash64(col("g"))),
+      graft.functions.Natives.call(spark, "bloom_probe_sharded",
+        lit(basePath), lit(k), xxhash64(col("g"))),
       threshold)
 
   /** lm01's scored frame, one row per corpus document: `(doc_id, lang,
@@ -906,10 +901,8 @@ object DataQuality {
         // interpreted fold cost ~0.25 s PER FOLD of this entry's 1.8 s
         // at sf0.1 (Dq03Prof), ∝ corpus tokens; the HOF form stays the
         // spec-pinned reference (TopRunSpec, walk-for-walk equality)
-        def topRun(arr: org.apache.spark.sql.Column) = {
-          graft.functions.TopRun.register(s)
-          call_function(graft.functions.TopRun.fnName, arr)
-        }
+        def topRun(arr: org.apache.spark.sql.Column) =
+          graft.functions.Natives.call(s, "top_run", arr)
         val bigramsCol =
           expr("""zip_with(slice(words, 1, greatest(size(words) - 1, 0)),
                  |         slice(words, 2, greatest(size(words) - 1, 0)),
@@ -1685,12 +1678,11 @@ object DataQuality {
         // identical kept-set to the interpreted HOF fold it replaced
         // (equality pinned in DataQualitySpec), O(n + |ps|) per doc vs
         // the fold's O(n²) element copies from concat-per-kept-word.
-        graft.functions.SpanStrip.register(s)
         words.join(starts, Seq("doc_id"), "left")
           .withColumn("ps",
             coalesce(col("ps"), expr("cast(array() as array<int>)")))
           .withColumn("cleaned",
-            call_function(graft.functions.SpanStrip.fnName,
+            graft.functions.Natives.call(s, "span_strip",
                           col("words"), col("ps"), lit(L)))
           .select(col("doc_id"),
                   size(col("words")).cast("long").as("n_tokens"),
@@ -1829,8 +1821,8 @@ object DataQuality {
         val matched = corpusGrams.select("g")
           .join(broadcast(newGset), Seq("g"), "left_semi").distinct()
         val absent = newGset.join(broadcast(matched), Seq("g"), "left_anti")
-        val hit = graft.functions.BloomProbeFile.probe(
-          s, lit(bf), xxhash64(col("g")))
+        val hit = graft.functions.Natives.call(s, "bloom_probe_file",
+          lit(bf), xxhash64(col("g")))
         val fp = absent.agg(
           count(lit(1)).as("n_absent_audit"),
           coalesce(avg(when(hit, 1.0).otherwise(0.0)) <= 0.05, lit(true))
@@ -1903,8 +1895,8 @@ object DataQuality {
         val matched = corpusGrams.select("g")
           .join(broadcast(newGset), Seq("g"), "left_semi").distinct()
         val absent = newGset.join(broadcast(matched), Seq("g"), "left_anti")
-        val hit = graft.functions.BloomProbeFile.probe(
-          s, lit(bf), xxhash64(col("g")))
+        val hit = graft.functions.Natives.call(s, "bloom_probe_file",
+          lit(bf), xxhash64(col("g")))
         val fp = absent.agg(
           count(lit(1)).as("n_absent"),
           coalesce(avg(when(hit, 1.0).otherwise(0.0)) <= 0.05, lit(true))
@@ -1969,8 +1961,8 @@ object DataQuality {
         val matched = corpusGrams.select("g")
           .join(broadcast(newGset), Seq("g"), "left_semi").distinct()
         val absent = newGset.join(broadcast(matched), Seq("g"), "left_anti")
-        val hit = graft.functions.BloomProbeSharded.probe(
-          s, lit(base), lit(ShardedK), xxhash64(col("g")))
+        val hit = graft.functions.Natives.call(s, "bloom_probe_sharded",
+          lit(base), lit(ShardedK), xxhash64(col("g")))
         val fp = absent.agg(
           count(lit(1)).as("n_absent_audit"),
           coalesce(avg(when(hit, 1.0).otherwise(0.0)) <= 0.05, lit(true))
@@ -2034,8 +2026,8 @@ object DataQuality {
         val matched = corpusGrams.select("g")
           .join(broadcast(newGset), Seq("g"), "left_semi").distinct()
         val absent = newGset.join(broadcast(matched), Seq("g"), "left_anti")
-        val hit = graft.functions.BloomProbeSharded.probe(
-          s, lit(base), lit(ShardedK), xxhash64(col("g")))
+        val hit = graft.functions.Natives.call(s, "bloom_probe_sharded",
+          lit(base), lit(ShardedK), xxhash64(col("g")))
         val fp = absent.agg(
           count(lit(1)).as("n_absent"),
           coalesce(avg(when(hit, 1.0).otherwise(0.0)) <= 0.05, lit(true))

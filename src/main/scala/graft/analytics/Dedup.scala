@@ -3,7 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorOps
+import graft.functions.{Natives, VectorOps}
 import graft.queries.QueryDef
 
 /** Deduplication operators for a training-data pipeline over the
@@ -26,10 +26,8 @@ object Dedup {
   /** Distinct hashes of word n-gram shingles — native single-pass
     * expression ([[graft.functions.ShingleHashes]]); docs shorter than
     * `n` tokens fall back to a single whole-text shingle. */
-  def shingleHashes(spark: SparkSession, text: Column, n: Int): Column = {
-    graft.functions.ShingleHashes.register(spark, n)
-    call_function(graft.functions.ShingleHashes.fnName(n), text)
-  }
+  def shingleHashes(spark: SparkSession, text: Column, n: Int): Column =
+    Natives.call(spark, "shingle_hashes", text, lit(n))
 
   /** Exact Jaccard similarity of two pre-computed shingle-hash sets. */
   def jaccard(a: Column, b: Column): Column = {
@@ -40,7 +38,6 @@ object Dedup {
   // --- MinHash ----------------------------------------------------------
 
   import graft.functions.MinHash.{Bands, NumPerm, P, Rows, permA, permB}
-  import graft.functions.MinHashSig
 
   /** MinHash signature (array of NumPerm longs) from shingle hashes —
     * HOF reference formulation; the pipeline uses the native
@@ -78,12 +75,12 @@ object Dedup {
     * to the dd01 hash-dedup pass that should precede LSH anyway). */
   def minhashPairs(docs: DataFrame, shingleN: Int, minJaccard: Double,
                    maxBucket: Int = 500): DataFrame = {
-    MinHashSig.register(docs.sparkSession)
     val base = docs
       .select(col("doc_id"),
               shingleHashes(docs.sparkSession, col("text"), shingleN).as("sh"))
     val keys = base
-      .withColumn("sig", call_function(MinHashSig.fnName, col("sh")))
+      .withColumn("sig",
+        Natives.call(docs.sparkSession, "minhash_sig", col("sh")))
       .select(col("doc_id"), posexplode(bandKeys(col("sig"))).as(Seq("band", "key")))
     val smallBuckets = keys.groupBy("band", "key")
       .agg(count(lit(1)).as("__bn"))
@@ -130,12 +127,10 @@ object Dedup {
       |     (va, vb) -> va + vb))""".stripMargin
 
   /** doc_id + packed 64-bit `fp` fingerprint column (native). */
-  def simhashFingerprints(docs: DataFrame): DataFrame = {
-    graft.functions.SimHash64.register(docs.sparkSession)
+  def simhashFingerprints(docs: DataFrame): DataFrame =
     docs.selectExpr("doc_id", s"$tokenHashesExpr AS th")
       .select(col("doc_id"),
-              call_function(graft.functions.SimHash64.fnName, col("th")).as("fp"))
-  }
+              Natives.call(docs.sparkSession, "simhash64", col("th")).as("fp"))
 
   /** SimHash near-dup pairs: block on 8×8-bit fingerprint chunks — by
     * pigeonhole any pair within Hamming distance 7 shares at least one

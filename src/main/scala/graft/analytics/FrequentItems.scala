@@ -3,7 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.MisraGriesAgg
+import graft.functions.Natives
 import graft.queries.QueryDef
 
 /** Sketch-based frequent-items operators: the scale path for the
@@ -96,10 +96,9 @@ object FrequentItems {
       // ≤k rows BY CONSTRUCTION (not a data-dependent census like
       // bp01's), so the broadcast hint is sound at any corpus size.
       (s, d) => {
-        MisraGriesAgg.register(s)
         val grams = bigrams(table(s, d, "documents"))
         val sketch = grams.agg(
-          call_function(MisraGriesAgg.fnName, col("ngram"), lit(K1))
+          Natives.call(s, "misra_gries", col("ngram"), lit(K1))
             .as("mg"),
           count(lit(1)).as("n_stream"))
         val cands = sketch.select(
@@ -154,10 +153,9 @@ object FrequentItems {
       // passes (sketch, gated recount) are the classic Misra–Gries
       // two-pass structure and cannot merge.
       (s, d) => {
-        MisraGriesAgg.register(s)
         val grams = bigrams(table(s, d, "documents"), col("source"))
         val sketch = grams.groupBy("source").agg(
-          call_function(MisraGriesAgg.fnName, col("ngram"), lit(K2))
+          Natives.call(s, "misra_gries", col("ngram"), lit(K2))
             .as("mg"),
           count(lit(1)).as("n_stream"))
         val cands = Materialize.once(sketch.select(
@@ -168,13 +166,13 @@ object FrequentItems {
           xxhash64(concat_ws("", src, ng))
         val nCand = cands.count()
         val blob = cands
-          .agg(graft.functions.BloomFns.bloomAgg(s,
+          .agg(Natives.call(s, "bloom_agg",
                  key(col("source"), col("ngram")),
                  lit(math.max(nCand, 1L)),
                  lit(math.max(nCand * 12L, 4096L))))
           .head().getAs[Array[Byte]](0)
         grams
-          .filter(graft.functions.BloomFns.bloomContains(s, lit(blob),
+          .filter(Natives.call(s, "bloom_might_contain", lit(blob),
                     key(col("source"), col("ngram"))))
           .join(cands, Seq("source", "ngram"))
           .groupBy("source", "ngram", "n_stream")
@@ -212,12 +210,11 @@ object FrequentItems {
       // micro-batch. Output (the thresholded exact recount) is
       // deterministic for any merge order, so the entry hash-checks.
       (s, d) => {
-        MisraGriesAgg.register(s)
         val docs = table(s, d, "documents")
         val e1 = bigrams(docs.filter(col("doc_id") % 2 === 0))
         val e2 = bigrams(docs.filter(col("doc_id") % 2 === 1))
         val s1 = e1.agg(
-          call_function(MisraGriesAgg.fnName, col("ngram"), lit(K1))
+          Natives.call(s, "misra_gries", col("ngram"), lit(K1))
             .as("mg"),
           count(lit(1)).as("n1"))
         val cand1 = s1.select(explode(col("mg")).as("c"), col("n1"))
@@ -235,7 +232,7 @@ object FrequentItems {
         val stream2 = e2.select(col("ngram"), lit(1L).as("w"),
                                 lit(1L).as("is_raw"))
         val s2 = replay.unionByName(stream2).agg(
-          call_function(MisraGriesAgg.fnName, col("ngram"), col("w"),
+          Natives.call(s, "misra_gries", col("ngram"), col("w"),
                         lit(K1)).as("mg"),
           sum(col("w") * col("is_raw")).as("n2"))
         val cand2 = s2.crossJoin(s1.select(col("n1")))

@@ -62,10 +62,8 @@ object IvfIndex {
   /** Codegen'd native twin of [[sqDistCol]]
     * ([[graft.functions.SqDist]]) — bit-identical double fold
     * (VecFoldsSpec), for corpus-scaled scan/serve frames. */
-  def sqDistNative(spark: SparkSession, v: Column, c: Column): Column = {
-    graft.functions.SqDist.register(spark)
-    call_function(graft.functions.SqDist.fnName, v, c)
-  }
+  def sqDistNative(spark: SparkSession, v: Column, c: Column): Column =
+    graft.functions.Natives.call(spark, "sq_dist", v, c)
 
   /** Index id (0-based) of the nearest centroid — pure per-row math, no
     * shuffle, identical on every executor. Native codegen'd expression
@@ -75,9 +73,8 @@ object IvfIndex {
     * bottleneck at scale. */
   def nearestList(spark: SparkSession, v: Column,
                   centroids: Seq[Array[Double]]): Column = {
-    graft.functions.NearestCentroid.register(spark)
     val cLit = array(centroids.map(c => array(c.map(lit): _*)): _*)
-    call_function(graft.functions.NearestCentroid.fnName, v, cLit)
+    graft.functions.Natives.call(spark, "nearest_centroid", v, cLit)
   }
 
   /** HOF reference formulation of [[nearestList]] (test oracle only —
@@ -534,10 +531,9 @@ object IvfIndex {
   def assignSpilled(emb: DataFrame, centroids: Seq[Array[Double]],
                     margin: Double): DataFrame = {
     require(margin >= 0, s"spill margin must be non-negative: $margin")
-    graft.functions.Nearest2Centroid.register(emb.sparkSession)
     val cLit = array(centroids.map(c => array(c.map(lit): _*)): _*)
-    val n2 = call_function(graft.functions.Nearest2Centroid.fnName,
-                           col("embedding"), cLit)
+    val n2 = graft.functions.Natives.call(emb.sparkSession,
+      "nearest2_centroid", col("embedding"), cLit)
     val primary = struct(col("__n2.l1").as("list"), lit(0).as("spilled"))
     val runnerUp = struct(col("__n2.l2").as("list"), lit(1).as("spilled"))
     emb.withColumn("__n2", n2)

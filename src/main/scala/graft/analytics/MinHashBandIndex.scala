@@ -3,7 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.MinHashSig
+import graft.functions.Natives
 import graft.queries.QueryDef
 
 /** Persisted MinHash band index over the existing corpus, and the
@@ -79,11 +79,9 @@ object MinHashBandIndex {
     withKeys(spark, docs.select(col("doc_id"),
       Dedup.shingleHashes(spark, col("text"), 2).as("sh")))
 
-  private def withKeys(spark: SparkSession, sh: DataFrame): DataFrame = {
-    MinHashSig.register(spark)
+  private def withKeys(spark: SparkSession, sh: DataFrame): DataFrame =
     sh.withColumn("keys",
-      Dedup.bandKeys(call_function(MinHashSig.fnName, col("sh"))))
-  }
+      Dedup.bandKeys(Natives.call(spark, "minhash_sig", col("sh"))))
 
   /** Index-side band rows — (corpus_id, band, key, kp), the payload a
     * build/append/streaming-delta write lands — of [[signatures]]. */

@@ -262,10 +262,9 @@ object Similarity {
     // nBits x dim interpreted lambdas per CORPUS row — the exact shape
     // whose cost stayed invisible at fixture scale and surfaced at
     // dc06's 10^4-row bench; bit-identical (SimhashSigSpec)
-    graft.functions.SimhashSig.register(spark)
     val bucketed = emb
-      .withColumn("bucket", call_function(
-        graft.functions.SimhashSig.fnName, col("embedding"), lit(nBits)))
+      .withColumn("bucket", graft.functions.Natives.call(spark,
+        "simhash_sig_n", col("embedding"), lit(nBits)))
     val q = bucketed.filter(col("vec_id") === queryId)
       .select(col("bucket").as("qbucket"), col("embedding").as("qvec"))
     bucketed.filter(col("vec_id") =!= queryId)
@@ -287,10 +286,9 @@ object Similarity {
                         nBits: Int): DataFrame = {
     val spark = emb.sparkSession
     // native signature — see lshTopK (bit-identical, SimhashSigSpec)
-    graft.functions.SimhashSig.register(spark)
     val bucketed = emb
-      .withColumn("bucket", call_function(
-        graft.functions.SimhashSig.fnName, col("embedding"), lit(nBits)))
+      .withColumn("bucket", graft.functions.Natives.call(spark,
+        "simhash_sig_n", col("embedding"), lit(nBits)))
     val q = bucketed.filter(col("vec_id") === queryId)
       .select(col("bucket").as("qbucket"), col("embedding").as("qvec"))
     // query bucket ⊕ single-bit flips, exploded to one probe row each
@@ -577,8 +575,7 @@ object Similarity {
     // (query, vector) pair. This is the corpus-sized stage of the
     // batch path; the HOF form ran entirely in the expression
     // interpreter (higher-order functions have no codegen).
-    graft.functions.PqAdc.register(spark)
-    val adc = call_function(graft.functions.PqAdc.fnName,
+    val adc = graft.functions.Natives.call(spark, "pq_adc",
                             col("qres"), col("res_codes"), cbLit)
     val shortRank = Window.partitionBy("query_id")
       .orderBy(asc("adc"), asc("vec_id"))

@@ -120,15 +120,10 @@ object TableStats {
       spark.sql(s"CREATE DATABASE IF NOT EXISTS $StatsDb")
       spark.sql(s"DROP TABLE IF EXISTS $StatsDb.$t")
       spark.catalog.createTable(s"$StatsDb.$t", loc, "parquet")
-      val conf = spark.conf
-      val hk = "spark.sql.statistics.histogram.enabled"
-      val saved = conf.getOption(hk)
-      conf.set(hk, histogram.toString)
-      try spark.sql(s"ANALYZE TABLE $StatsDb.$t COMPUTE STATISTICS " +
-                    "FOR COLUMNS skey, o_custkey, o_totalprice")
-      finally saved match {
-        case Some(v) => conf.set(hk, v)
-        case None => conf.unset(hk)
+      graft.GraftSession.withConfs(spark,
+          "spark.sql.statistics.histogram.enabled" -> histogram.toString) {
+        spark.sql(s"ANALYZE TABLE $StatsDb.$t COMPUTE STATISTICS " +
+                  "FOR COLUMNS skey, o_custkey, o_totalprice")
       }
     }
     t
@@ -138,16 +133,7 @@ object TableStats {
     * join reorder) enabled, restoring the previous configuration
     * after. CBO only acts where catalog stats exist, so flipping it on
     * session-wide is safe — but scoping keeps test plans explicit. */
-  def withCbo[T](spark: SparkSession)(body: => T): T = {
-    val conf = spark.conf
-    val keys = Seq("spark.sql.cbo.enabled",
-                   "spark.sql.cbo.joinReorder.enabled")
-    val saved = keys.map(k => k -> conf.getOption(k))
-    keys.foreach(conf.set(_, "true"))
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
-  }
+  def withCbo[T](spark: SparkSession)(body: => T): T =
+    graft.GraftSession.withConfs(spark, "spark.sql.cbo.enabled" -> "true",
+      "spark.sql.cbo.joinReorder.enabled" -> "true")(body)
 }

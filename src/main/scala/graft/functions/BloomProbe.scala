@@ -17,7 +17,7 @@ import org.apache.spark.util.sketch.BloomFilter
   * independent of batch task count. On a cluster the path must be
   * executor-readable (shared storage, or shipped via
   * `SparkContext.addFile`); the build side stays the in-plan
-  * distributed aggregate ([[BloomFns.bloomAgg]]). The read is a plain
+  * distributed `bloom_agg` aggregate ([[Natives]]). The read is a plain
   * local-file read, not Hadoop FS like the filter's writes and
   * maintenance ([[graft.analytics.BloomGramIndex]]): a task has no
   * session Hadoop conf to resolve another scheme with, so the probe
@@ -64,7 +64,7 @@ object BloomFilterCache {
   * probe against the filter persisted at `path`, resolved through
   * [[BloomFilterCache]] (loaded once per executor, NOT embedded in the
   * plan). Same one-sided-error contract as `bloom_might_contain`, and
-  * bit-compatible with filters built by [[BloomFns.bloomAgg]] over the
+  * bit-compatible with filters built by `bloom_agg` over the
   * same `xxhash64` values. Codegen keeps the filter reference in a
   * lazily-initialized instance field, so the hot loop is one array
   * probe per row. */
@@ -101,20 +101,4 @@ case class BloomProbeFile(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): BloomProbeFile =
     copy(left = newLeft, right = newRight)
-}
-
-object BloomProbeFile {
-  val fnName = "bloom_probe_file"
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, exprs => BloomProbeFile(exprs(0), exprs(1)), "built-in")
-
-  def probe(spark: org.apache.spark.sql.SparkSession,
-            path: org.apache.spark.sql.Column,
-            hashed: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(fnName, path, hashed)
-  }
 }

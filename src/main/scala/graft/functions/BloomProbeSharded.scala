@@ -77,21 +77,3 @@ case class BloomProbeSharded(first: Expression, second: Expression,
       newThird: Expression): Expression =
     copy(first = newFirst, second = newSecond, third = newThird)
 }
-
-object BloomProbeSharded {
-  val fnName = "bloom_probe_sharded"
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, exprs => BloomProbeSharded(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-
-  def probe(spark: org.apache.spark.sql.SparkSession,
-            basePath: org.apache.spark.sql.Column,
-            k: org.apache.spark.sql.Column,
-            hashed: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(fnName, basePath, k, hashed)
-  }
-}

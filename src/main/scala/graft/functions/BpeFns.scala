@@ -379,21 +379,3 @@ case class BpeTokenCount(first: Expression, second: Expression,
       newThird: Expression): Expression =
     copy(first = newFirst, second = newSecond, third = newThird)
 }
-
-object BpeFns {
-  val wordFnName = "bpe_word_tokens"
-  val docFnName = "bpe_token_count"
-  val segFnName = "bpe_word_segment"
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      wordFnName, exprs => BpeWordTokens(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      docFnName, exprs => BpeTokenCount(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      segFnName, exprs => BpeWordSegment(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-  }
-}

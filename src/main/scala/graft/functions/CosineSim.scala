@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -85,19 +85,4 @@ case class CosineSim(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object CosineSim {
-  val fnName = "cosine_sim"
-
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[CosineSim].getCanonicalName, fnName)
-
-  /** Imperative registration for an already-built session (Verify/Bench
-    * build their own sessions, so they can't use the
-    * `spark.sql.extensions` config path — see [[graft.GraftExtensions]]
-    * for that route). Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, exprs => CosineSim(exprs(0), exprs(1)), "built-in")
 }

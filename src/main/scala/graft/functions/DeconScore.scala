@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -247,22 +247,4 @@ case class DeconScore(left: Expression, right: Expression,
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object DeconScore {
-  val fnName = "decon_score"
-
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[DeconScore].getCanonicalName, fnName)
-
-  /** Idempotent imperative registration (see [[CosineSim.register]] for
-    * why both this and the extensions route exist). Args 3/4 must be
-    * integer literals (nBands, rowsPerBand). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName,
-      exprs => DeconScore(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Int],
-        exprs(3).eval().asInstanceOf[Int]),
-      "built-in")
 }

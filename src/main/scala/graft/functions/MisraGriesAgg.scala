@@ -198,26 +198,3 @@ case class MisraGriesAgg(
     copy(child = newChildren.head,
          weight = if (newChildren.length > 1) Some(newChildren(1)) else None)
 }
-
-object MisraGriesAgg {
-  val fnName = "misra_gries"
-
-  /** `misra_gries(item, k)` or `misra_gries(item, weight, k)` — k must
-    * be a foldable int literal; weight a bigint column (rows with null
-    * or non-positive weight are ignored). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName,
-      exprs => {
-        require(exprs.length == 2 || exprs.length == 3,
-          s"$fnName(item[, weight], k) takes 2 or 3 arguments")
-        val k = exprs.last.eval() match {
-          case i: Int => i
-          case other => throw new IllegalArgumentException(
-            s"$fnName k must be an int literal, got $other")
-        }
-        MisraGriesAgg(exprs.head,
-          if (exprs.length == 3) Some(exprs(1)) else None, k)
-      },
-      "built-in")
-}

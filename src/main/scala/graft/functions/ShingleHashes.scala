@@ -3,7 +3,7 @@ package graft.functions
 import java.util.LinkedHashSet
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -88,16 +88,4 @@ case class ShingleHashes(child: Expression, n: Int)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object ShingleHashes {
-  def fnName(n: Int): String = s"shingle_hashes_$n"
-
-  def info(n: Int): ExpressionInfo =
-    new ExpressionInfo(classOf[ShingleHashes].getCanonicalName, fnName(n))
-
-  /** Registers `shingle_hashes_<n>(text)` for the given n. Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession, n: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName(n), exprs => ShingleHashes(exprs.head, n), "built-in")
 }

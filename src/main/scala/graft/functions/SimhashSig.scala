@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
@@ -102,19 +102,4 @@ case class SimhashSig(child: Expression, nBits: Int)
 
   override protected def withNewChildInternal(
       newChild: Expression): Expression = copy(child = newChild)
-}
-
-object SimhashSig {
-  val fnName = "simhash_sig_n"
-
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[SimhashSig].getCanonicalName, fnName)
-
-  /** Idempotent imperative registration (see [[CosineSim.register]]).
-    * Arg 2 must be an integer literal (nBits). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName,
-      exprs => SimhashSig(exprs(0), exprs(1).eval().asInstanceOf[Int]),
-      "built-in")
 }

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -113,15 +113,4 @@ case class SpanStrip(first: Expression, second: Expression, third: Expression)
       newFirst: Expression, newSecond: Expression,
       newThird: Expression): Expression =
     copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-object SpanStrip {
-  val fnName = "span_strip"
-
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[SpanStrip].getCanonicalName, fnName)
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, exprs => SpanStrip(exprs(0), exprs(1), exprs(2)), "built-in")
 }

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -87,15 +87,6 @@ case class DotF(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object DotF {
-  val fnName = "dot_f"
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[DotF].getCanonicalName, fnName)
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, exprs => DotF(exprs(0), exprs(1)), "built-in")
 }
 
 case class DotL(left: Expression, right: Expression)
@@ -186,15 +177,6 @@ case class DotL(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object DotL {
-  val fnName = "dot_l"
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[DotL].getCanonicalName, fnName)
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, exprs => DotL(exprs(0), exprs(1)), "built-in")
-}
-
 case class SqDist(left: Expression, right: Expression)
     extends BinaryExpression {
   // Either side may be array<float> OR array<double>: the serve scans
@@ -280,13 +262,4 @@ case class SqDist(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object SqDist {
-  val fnName = "sq_dist"
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[SqDist].getCanonicalName, fnName)
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, exprs => SqDist(exprs(0), exprs(1)), "built-in")
 }

@@ -31,29 +31,23 @@ object VectorOps {
 
   /** Codegen'd native cosine ([[graft.functions.CosineSim]]): same
     * doubles as [[cosine]], ~100× less per-element overhead in all-pairs
-    * joins. Registers the function on `spark` idempotently. */
+    * joins. */
   def cosineNative(spark: org.apache.spark.sql.SparkSession,
-                   a: Column, b: Column): Column = {
-    CosineSim.register(spark)
-    call_function(CosineSim.fnName, a, b)
-  }
+                   a: Column, b: Column): Column =
+    Natives.call(spark, "cosine_sim", a, b)
 
   /** Codegen'd native [[dot]] ([[graft.functions.DotF]]): bit-identical
     * double fold, for corpus-scaled serve frames (r16 HOF audit). */
   def dotNative(spark: org.apache.spark.sql.SparkSession,
-                a: Column, b: Column): Column = {
-    DotF.register(spark)
-    call_function(DotF.fnName, a, b)
-  }
+                a: Column, b: Column): Column =
+    Natives.call(spark, "dot_f", a, b)
 
   /** Codegen'd native integer dot over two `array<long>` columns
     * ([[graft.functions.DotL]]) — the int8 serve's rescale input;
     * bit-identical to `aggregate(zip_with(a, b, _*_), 0L, _+_)`. */
   def dotLongNative(spark: org.apache.spark.sql.SparkSession,
-                    a: Column, b: Column): Column = {
-    DotL.register(spark)
-    call_function(DotL.fnName, a, b)
-  }
+                    a: Column, b: Column): Column =
+    Natives.call(spark, "dot_l", a, b)
 
   /** Random-hyperplane LSH bucket id: sign bits of `nBits` pseudo-random
     * projections packed into a long. Two vectors with high cosine

@@ -23,19 +23,6 @@ object ScaleExtensions {
   private def hashGate(key: org.apache.spark.sql.Column, hexThreshold: String) =
     md5(key.cast("string").cast("binary")) < hexThreshold
 
-  /** Run `body` (which must FORCE PLANNING inside — executedPlan is a
-    * lazy val) under scoped SQL confs, restoring the previous values. */
-  private def withConfs[T](s: org.apache.spark.sql.SparkSession,
-                           confs: (String, String)*)(body: => T): T = {
-    val saved = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
-
   /** The sk01/sk02 pair's shared shape: a zipf-keyed fact (key 1 holds
     * ~50 % of lineitem) shuffle-joined to a replicated dimension, then
     * aggregated BY THE JOIN KEY — the exact case AQE's skew-join
@@ -66,7 +53,8 @@ object ScaleExtensions {
     val dims = s.range(1, m + 1).toDF("skey")
       .withColumn("rep", explode(sequence(lit(0L), lit(repl - 1))))
       .select(col("skey"), ((col("skey") * 31 + col("rep")) % 97).as("w"))
-    withConfs(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+    graft.GraftSession.withConfs(s,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined =
         if (salted)
           SkewJoin.saltedJoin(facts, dims, "skey", col("src"),

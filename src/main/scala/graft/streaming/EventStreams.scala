@@ -502,9 +502,8 @@ object EventStreams {
           bench.select(col("bench_id"), col("embedding")),
           "decon.band-index", maxRows = 100000L))
     // same session-registration guard as curationStream: bench-derived
-    // frames resolve the native cosine against the driving session
-    graft.functions.CosineSim.register(stream.sparkSession)
-    graft.functions.DeconScore.register(stream.sparkSession)
+    // frames resolve the natives against the driving session
+    graft.functions.Natives.register(stream.sparkSession)
     // each one-row map frame is materialized once, in a scope the query
     // owns — micro-batch plans re-broadcast a cached row instead of
     // re-running the bench aggregation
@@ -564,12 +563,11 @@ object EventStreams {
     // without explicit knobs (ADVICE r14).
     require((bands == 0) == (rows == 0),
       s"pass both bands and rows, or neither (auto): got ($bands, $rows)")
-    // register the decon refine's native fn on the DRIVING session:
-    // frames built from the static `emb` side resolve against it (not
-    // the micro-batch clone), and clones inherit what is registered
-    // here before the query starts
-    graft.functions.CosineSim.register(stream.sparkSession)
-    graft.functions.DeconScore.register(stream.sparkSession)
+    // register the natives on the DRIVING session: frames built from
+    // the static `emb` side resolve against it (not the micro-batch
+    // clone), and clones inherit what is registered here before the
+    // query starts
+    graft.functions.Natives.register(stream.sparkSession)
     // the static side lives in a scope the query owns
     val owned = new Materialize.Scope
     val (embP, chunks, b, r) = Materialize.within(owned) {
@@ -706,10 +704,9 @@ object EventStreams {
     * fuzzy sibling of [[dedupedByContent]]. */
   def dedupedBySimhash(stream: DataFrame, textCol: String,
                        tsCol: String = "ts"): DataFrame = {
-    graft.functions.SimHash64.register(stream.sparkSession)
     // same token pipeline as Dedup.tokenHashesExpr, in Column form
     dedupedByFingerprint(stream, textCol,
-      t => call_function(graft.functions.SimHash64.fnName,
+      t => graft.functions.Natives.call(stream.sparkSession, "simhash64",
         transform(filter(split(lower(t), "\\s+"), tk => length(tk) > 0),
                   tok => xxhash64(tok))),
       tsCol)
@@ -739,9 +736,8 @@ object EventStreams {
       : Dataset[(Long, java.sql.Timestamp, Long)] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.SimHash64.register(spark)
     val horizonMs = horizonMinutes * 60000L
-    val fp = call_function(graft.functions.SimHash64.fnName,
+    val fp = graft.functions.Natives.call(spark, "simhash64",
       transform(filter(split(lower(col(textCol)), "\\s+"), tk => length(tk) > 0),
                 tok => xxhash64(tok)))
     docs
@@ -803,9 +799,8 @@ object EventStreams {
       : Dataset[(Long, Long)] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.MinHashSig.register(spark)
     val horizonMs = horizonMinutes * 60000L
-    val sig = call_function(graft.functions.MinHashSig.fnName,
+    val sig = graft.functions.Natives.call(spark, "minhash_sig",
       graft.analytics.Dedup.shingleHashes(spark, col(textCol), shingleN))
     docs
       .select(col(idCol).cast("long").as("__id"),
@@ -1069,7 +1064,6 @@ object EventStreams {
       : StreamingQuery =
     perBatch(stream, checkpointDir) { (batch, batchId) =>
       val spark = batch.sparkSession
-      graft.functions.MisraGriesAgg.register(spark)
       val grams = graft.analytics.FrequentItems.bigrams(batch)
         .withColumn("w", lit(1L)).withColumn("is_raw", lit(1L))
       // state = summary rows + one NULL-item row carrying the running
@@ -1082,7 +1076,7 @@ object EventStreams {
         .select(col("item").as("ngram"), col("est").as("w"),
                 lit(0L).as("is_raw"))
         .unionByName(grams.select("ngram", "w", "is_raw"))
-        .agg(call_function(graft.functions.MisraGriesAgg.fnName,
+        .agg(graft.functions.Natives.call(spark, "misra_gries",
                            col("ngram"), col("w"), lit(k)).as("mg"),
              coalesce(sum(col("w") * col("is_raw")), lit(0L)).as("nb"))
       val st = commitState(

@@ -81,7 +81,6 @@ class BpeTokenizerSpec extends SparkSpec {
     import spark.implicits._
     val tricky = Seq("abababab", "aaaa", "aaaaa", "abab", "aba", "",
                      "xyxyxy", "aabbaabb").toDF("w")
-    graft.functions.BpeFns.register(spark)
     val trickyMerges = Seq(
       BpeTokenizer.Merge(0, "a", "b", 0L),
       BpeTokenizer.Merge(1, "a", "a", 0L),
@@ -143,15 +142,14 @@ class BpeTokenizerSpec extends SparkSpec {
     // word (lossless segmentation), (c) every multi-character token is
     // a merge's surface form (single chars are the base alphabet).
     val merges = BpeTokenizer.loadOrLearn(spark, sf0001)
-    graft.functions.BpeFns.register(spark)
     val mL = typedLit(merges.map(_.l))
     val mR = typedLit(merges.map(_.r))
     val words = QueryDef.table(spark, sf0001, "documents")
       .select(explode(expr(
         "filter(split(text, '\\\\s+'), w -> length(w) > 0)")).as("w"))
       .distinct()
-      .withColumn("seg", call_function(
-        graft.functions.BpeFns.segFnName, col("w"), mL, mR))
+      .withColumn("seg", graft.functions.Natives.call(spark,
+        "bpe_word_segment", col("w"), mL, mR))
     val bad = words.filter(
       size(col("seg")) =!= BpeTokenizer.bpeWordTokens(col("w"), merges) ||
       concat_ws("", col("seg")) =!= col("w"))

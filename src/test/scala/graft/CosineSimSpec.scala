@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{CosineSim, VectorOps}
+import graft.functions.{Natives, VectorOps}
 import graft.queries.QueryDef
 
 /** The native codegen'd cosine must be BIT-identical to the HOF
@@ -27,7 +27,7 @@ class CosineSimSpec extends SparkSpec {
   }
 
   test("null/length/NaN edge cases match HOF semantics") {
-    CosineSim.register(spark)
+    Natives.register(spark)
     val df = Seq(
       (Some(Array(1.0f, 2.0f)), Some(Array(1.0f, 2.0f, 3.0f))), // length mismatch
       (None, Some(Array(1.0f))),                                // null array
@@ -40,8 +40,7 @@ class CosineSimSpec extends SparkSpec {
   }
 
   test("bloom trio: SQL agg builds a filter; literal and file probes agree bit-for-bit") {
-    import graft.functions.{BloomFns, BloomProbeFile}
-    BloomFns.register(spark)
+    Natives.register(spark)
     Seq("alpha", "beta", "gamma").toDF("s")
       .createOrReplaceTempView("bloom_items")
     val bytes = spark.sql(
@@ -53,10 +52,10 @@ class CosineSimSpec extends SparkSpec {
     val rows = Seq("alpha", "beta", "gamma", "never-inserted-1",
                    "never-inserted-2").toDF("s")
       .select(col("s"),
-        BloomFns.bloomContains(spark, lit(bytes), xxhash64(col("s")))
-          .as("via_literal"),
-        BloomProbeFile.probe(spark, lit(f.getAbsolutePath),
-                             xxhash64(col("s"))).as("via_file"))
+        Natives.call(spark, "bloom_might_contain", lit(bytes),
+                     xxhash64(col("s"))).as("via_literal"),
+        Natives.call(spark, "bloom_probe_file", lit(f.getAbsolutePath),
+                     xxhash64(col("s"))).as("via_file"))
       .collect()
     rows.foreach { r =>
       // the file-backed probe must be bit-compatible with Spark's own
@@ -65,18 +64,5 @@ class CosineSimSpec extends SparkSpec {
     }
     // no false negatives for inserted items
     assert(rows.take(3).forall(_.getBoolean(2)))
-  }
-
-  test("session-extensions route registers the function for SQL users") {
-    val s2 = spark.newSession()
-    new GraftExtensions().apply(
-      new org.apache.spark.sql.SparkSessionExtensions)
-    // config route can't apply to an existing session; the imperative
-    // route must cover it:
-    CosineSim.register(s2)
-    val r = s2.sql(
-      "SELECT cosine_sim(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)), " +
-      "array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)))").head().getDouble(0)
-    assert(math.abs(r - 1.0) < 1e-15)
   }
 }

@@ -203,8 +203,8 @@ class CurationPropertySpec extends SparkSpec {
       val batch = batchTexts.zipWithIndex
         .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
       val bytes = DataQuality.gramKeys(corpus)
-        .agg(graft.functions.BloomFns.bloomAgg(
-          spark, org.apache.spark.sql.functions.xxhash64(
+        .agg(graft.functions.Natives.call(spark, "bloom_agg",
+          org.apache.spark.sql.functions.xxhash64(
             org.apache.spark.sql.functions.col("g")),
           org.apache.spark.sql.functions.lit(1024L),
           org.apache.spark.sql.functions.lit(16384L)))

@@ -681,10 +681,9 @@ class DataQualitySpec extends SparkSpec {
       val covered = ps.flatMap(p => p until (p + L)).toSet
       w.zipWithIndex.collect { case (x, j) if !covered(j) => x }
     }
-    SpanStrip.register(spark)
     // codegen path: through a DataFrame plan
     val out = cases.toDF("words", "ps")
-      .select(call_function(SpanStrip.fnName,
+      .select(graft.functions.Natives.call(spark, "span_strip",
         col("words"), col("ps"), lit(L)).as("kept"))
       .collect().map(_.getSeq[String](0).toSeq)
     cases.zip(out).foreach { case ((w, ps), got) =>
@@ -756,8 +755,8 @@ class DataQualitySpec extends SparkSpec {
                     (11L, "alpha beta gamma delta epsilon zeta eta"))
       .toDF("doc_id", "text")
     val bytes = graft.analytics.DataQuality.gramKeys(corpus)
-      .agg(graft.functions.BloomFns.bloomAgg(
-        spark, xxhash64(col("g")), lit(1024L), lit(16384L)))
+      .agg(graft.functions.Natives.call(spark, "bloom_agg",
+        xxhash64(col("g")), lit(1024L), lit(16384L)))
       .head().getAs[Array[Byte]](0)
     val bf = java.io.File.createTempFile("graft-test-bloom", ".bf")
     bf.deleteOnExit()
@@ -814,8 +813,8 @@ class DataQualitySpec extends SparkSpec {
     val base = java.nio.file.Files.createTempDirectory("graft-shard-test")
       .resolve("fam.bf").toString
     val parts = grams.groupBy("shard")
-      .agg(graft.functions.BloomFns.bloomAgg(
-        spark, col("h"), lit(1024L), lit(16384L)).as("bf"))
+      .agg(graft.functions.Natives.call(spark, "bloom_agg",
+        col("h"), lit(1024L), lit(16384L)).as("bf"))
       .collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap
     assert(parts.keySet == (0 until k).toSet, s"residues hit: ${parts.keySet}")
     parts.foreach { case (i, bytes) =>
@@ -823,8 +822,8 @@ class DataQualitySpec extends SparkSpec {
         java.nio.file.Paths.get(s"$base-s$i"), bytes)
     }
     val probed = grams.select(
-      graft.functions.BloomProbeSharded.probe(
-        spark, lit(base), lit(k), col("h")).as("hit"))
+      graft.functions.Natives.call(spark, "bloom_probe_sharded",
+        lit(base), lit(k), col("h")).as("hit"))
       .collect().map(_.getBoolean(0))
     assert(probed.nonEmpty && probed.forall(identity),
            "an inserted gram missed its routed shard")
@@ -832,8 +831,8 @@ class DataQualitySpec extends SparkSpec {
     // saturated / the probe isn't trivially true)
     val absentHits = (0 until 200).map(i =>
         (s"absent_gram_$i", i)).toDF("g", "i")
-      .select(graft.functions.BloomProbeSharded.probe(
-        spark, lit(base), lit(k), xxhash64(col("g"))).as("hit"))
+      .select(graft.functions.Natives.call(spark, "bloom_probe_sharded",
+        lit(base), lit(k), xxhash64(col("g"))).as("hit"))
       .collect().count(_.getBoolean(0))
     assert(absentHits < 20, s"$absentHits/200 absent grams hit")
   }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.analytics.{Dedup, IvfIndex, Similarity, TextAnalysis}
-import graft.functions.VectorOps
+import graft.functions.{Natives, VectorOps}
 
 /** Fuzzy-dedup and similarity operators on planted fixtures: the
   * pipelines must find the planted near-duplicate pair and nothing
@@ -66,11 +66,10 @@ class DedupSpec extends SparkSpec {
   }
 
   test("native minhash_sig is exactly equal to the HOF reference") {
-    graft.functions.MinHashSig.register(spark)
     val sigs = docs
       .select(Dedup.shingleHashes(spark, $"text", 3).as("sh"))
       .select(Dedup.minhashSignature($"sh").as("hof"),
-              call_function("minhash_sig", $"sh").as("native"))
+              Natives.call(spark, "minhash_sig", $"sh").as("native"))
       .collect()
     sigs.foreach { r =>
       assert(r.getSeq[Long](0) == r.getSeq[Long](1))
@@ -209,10 +208,8 @@ class DedupSpec extends SparkSpec {
     // is a superset).
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val centroids = IvfIndex.fit(emb, nLists = 8)
-    val n2 = graft.functions.Nearest2Centroid
-    n2.register(spark)
     val got = emb.select(col("vec_id"),
-        call_function(n2.fnName, col("embedding"),
+        Natives.call(spark, "nearest2_centroid", col("embedding"),
           array(centroids.map(c => array(c.map(lit): _*)): _*)).as("n2"))
       .select(col("vec_id"), col("n2.l1"), col("n2.d1"),
               col("n2.l2"), col("n2.d2"))
@@ -1111,10 +1108,9 @@ class DedupSpec extends SparkSpec {
                        element_at($"res_codes", m + 1) + 1),
             (a, b) => (a - b) * (a - b)),
           lit(0.0), (a2, d) => a2 + d))
-    graft.functions.PqAdc.register(spark)
     val rows = assignments
       .select($"vec_id", hof.as("hof"),
-              call_function(graft.functions.PqAdc.fnName,
+              Natives.call(spark, "pq_adc",
                             qres, $"res_codes", cbLit).as("native"))
       .limit(200).collect()
     assert(rows.nonEmpty)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 import graft.analytics.FrequentItems
-import graft.functions.MisraGriesAgg
+import graft.functions.Natives
 
 /** Misra–Gries heavy hitters: the no-false-negative guarantee in its
   * real regime (vocabulary ≫ summary size, skewed stream), merge-order
@@ -18,7 +18,6 @@ class FrequentItemsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     (1 to v).flatMap(i => Seq.fill(math.max(c / i, 1))(s"item$i"))
 
   test("MG candidates cover every true heavy hitter when vocab >> k") {
-    MisraGriesAgg.register(spark)
     val k = 16
     val stream = zipfStream(v = 2000, c = 3000)
     val n = stream.size
@@ -35,7 +34,7 @@ class FrequentItemsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       new scala.util.Random(7).shuffle(stream))
     for (s0 <- orders; parts <- Seq(1, 3, 8)) {
       val cands = s0.toDF("item").repartition(parts)
-        .agg(call_function(MisraGriesAgg.fnName, $"item", lit(k)).as("mg"))
+        .agg(Natives.call(spark, "misra_gries", $"item", lit(k)).as("mg"))
         .select(explode($"mg.item").as("item"))
         .as[String].collect().toSet
       assert(cands.size <= k)
@@ -45,23 +44,21 @@ class FrequentItemsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("MG summary is exact when the vocabulary fits in k") {
-    MisraGriesAgg.register(spark)
     val stream = Seq("a", "a", "a", "b", "b", "c")
     val rows = stream.toDF("item").repartition(2)
-      .agg(call_function(MisraGriesAgg.fnName, $"item", lit(10)).as("mg"))
+      .agg(Natives.call(spark, "misra_gries", $"item", lit(10)).as("mg"))
       .select(explode($"mg").as("c"))
       .select($"c.item", $"c.est").as[(String, Long)].collect().toMap
     assert(rows == Map("a" -> 3L, "b" -> 2L, "c" -> 1L))
   }
 
   test("MG estimates undercount by at most N/(k+1)") {
-    MisraGriesAgg.register(spark)
     val k = 16
     val stream = zipfStream(v = 500, c = 2000)
     val n = stream.size
     val exact = stream.groupBy(identity).view.mapValues(_.size.toLong).toMap
     val ests = stream.toDF("item").repartition(5)
-      .agg(call_function(MisraGriesAgg.fnName, $"item", lit(k)).as("mg"))
+      .agg(Natives.call(spark, "misra_gries", $"item", lit(k)).as("mg"))
       .select(explode($"mg").as("c"))
       .select($"c.item", $"c.est").as[(String, Long)].collect()
     ests.foreach { case (item, est) =>
@@ -73,10 +70,9 @@ class FrequentItemsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("null items are ignored, not counted") {
-    MisraGriesAgg.register(spark)
     val rows = Seq(Some("a"), None, Some("a"), None, Some("b"))
       .toDF("item")
-      .agg(call_function(MisraGriesAgg.fnName, $"item", lit(4)).as("mg"))
+      .agg(Natives.call(spark, "misra_gries", $"item", lit(4)).as("mg"))
       .select(explode($"mg").as("c"))
       .select($"c.item", $"c.est").as[(String, Long)].collect().toMap
     assert(rows == Map("a" -> 2L, "b" -> 1L))
@@ -164,7 +160,6 @@ class FrequentItemsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("MG guarantee holds on random streams (sampled ScalaCheck, adversarial k)") {
-    MisraGriesAgg.register(spark)
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     // random multisets over a small alphabet with geometric-ish counts:
@@ -184,7 +179,7 @@ class FrequentItemsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
           .filter { case (_, c) => c.toLong * (k + 1) > n }.keySet.toSet
         val cands = new scala.util.Random(s).shuffle(stream)
           .toDF("item").repartition(1 + s % 4)
-          .agg(call_function(MisraGriesAgg.fnName, $"item", lit(k)).as("mg"))
+          .agg(Natives.call(spark, "misra_gries", $"item", lit(k)).as("mg"))
           .select(explode($"mg.item").as("item"))
           .as[String].collect().toSet
         assert(cands.size <= k)
@@ -195,7 +190,6 @@ class FrequentItemsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("weighted replay of a summary preserves the guarantee (sketch hand-off)") {
-    MisraGriesAgg.register(spark)
     val k = 8
     // stream 1 has a dominant item; stream 2 buries it under new vocab
     val s1 = Seq.fill(40)("hot") ++ (1 to 30).map(i => s"one$i")
@@ -203,13 +197,13 @@ class FrequentItemsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val n = s1.size + s2.size
     // summary of s1 alone
     val sum1 = s1.toDF("item").repartition(3)
-      .agg(call_function(MisraGriesAgg.fnName, $"item", lit(k)).as("mg"))
+      .agg(Natives.call(spark, "misra_gries", $"item", lit(k)).as("mg"))
       .select(explode($"mg").as("c"))
       .select($"c.item".as("item"), $"c.est".as("w"))
     // replay it (weighted) against stream 2 — exactly st24's hand-off
     val cands = sum1
       .unionByName(s2.toDF("item").withColumn("w", lit(1L)))
-      .agg(call_function(MisraGriesAgg.fnName, $"item", $"w", lit(k)).as("mg"))
+      .agg(Natives.call(spark, "misra_gries", $"item", $"w", lit(k)).as("mg"))
       .select(explode($"mg.item").as("item"))
       .as[String].collect().toSet
     // "hot" (40 occurrences) clears N/(k+1) = 130/9 — must survive the

@@ -27,6 +27,17 @@ class OfflineArtifactSpec extends SparkSpec {
     dir.toString
   }
 
+  private def scalaFiles(d: java.io.File): Seq[java.io.File] =
+    d.listFiles().toSeq.sortBy(_.getName).flatMap { f =>
+      if (f.isDirectory) scalaFiles(f)
+      else if (f.getName.endsWith(".scala")) Seq(f)
+      else Nil
+    }
+
+  /** Scaladoc and comment lines are not code. */
+  private def isComment(line: String): Boolean =
+    Seq("*", "//", "/*").exists(line.trim.startsWith)
+
   test("a partial artifact (data, no marker) is rebuilt, never read") {
     val c = corpusCopy("graft-partial")
     val nVecs = spark.read.parquet(s"$c/embeddings.parquet").count()
@@ -141,8 +152,6 @@ class OfflineArtifactSpec extends SparkSpec {
     // Hadoop FS scheme (scaladoc and comment lines are not code)
     val localFile = Seq("new java\\.io\\.File\\(", "java\\.nio\\.file\\.Files\\.",
                         "FileInputStream\\(").map(_.r)
-    def isComment(line: String): Boolean =
-      Seq("*", "//", "/*").exists(line.trim.startsWith)
     val hits = for {
       f <- root.listFiles().toSeq.sortBy(_.getName)
       if f.getName.endsWith(".scala")
@@ -158,17 +167,9 @@ class OfflineArtifactSpec extends SparkSpec {
        "Materialize and GraftSession.release") {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"source dir not found from ${root.getAbsolutePath}")
-    def scalaFiles(d: java.io.File): Seq[java.io.File] =
-      d.listFiles().toSeq.sortBy(_.getName).flatMap { f =>
-        if (f.isDirectory) scalaFiles(f)
-        else if (f.getName.endsWith(".scala")) Seq(f)
-        else Nil
-      }
     val allowed = Set("graft/analytics/Materialize.scala", "graft/GraftSession.scala")
     val banned = Seq("localCheckpoint\\(", "\\.persist\\(", "\\.cache\\(\\)",
                      "\\.unpersist\\(").map(_.r)
-    def isComment(line: String): Boolean =
-      Seq("*", "//", "/*").exists(line.trim.startsWith)
     val hits = for {
       f <- scalaFiles(root)
       rel = root.toPath.relativize(f.toPath).toString
@@ -183,12 +184,6 @@ class OfflineArtifactSpec extends SparkSpec {
   test("tripwire: no SparkSession.builder outside GraftSession") {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"source dir not found from ${root.getAbsolutePath}")
-    def scalaFiles(d: java.io.File): Seq[java.io.File] =
-      d.listFiles().toSeq.sortBy(_.getName).flatMap { f =>
-        if (f.isDirectory) scalaFiles(f)
-        else if (f.getName.endsWith(".scala")) Seq(f)
-        else Nil
-      }
     val hits = for {
       f <- scalaFiles(root)
       (line, i) <- Files.readAllLines(f.toPath).asScala.zipWithIndex
@@ -202,14 +197,6 @@ class OfflineArtifactSpec extends SparkSpec {
        "micro-batch protocol helpers") {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"source dir not found from ${root.getAbsolutePath}")
-    def scalaFiles(d: java.io.File): Seq[java.io.File] =
-      d.listFiles().toSeq.sortBy(_.getName).flatMap { f =>
-        if (f.isDirectory) scalaFiles(f)
-        else if (f.getName.endsWith(".scala")) Seq(f)
-        else Nil
-      }
-    def isComment(line: String): Boolean =
-      Seq("*", "//", "/*").exists(line.trim.startsWith)
     val defName = "\\bdef (\\w+)".r
     // each code use, with the def it sits in
     val hits = for {
@@ -229,5 +216,49 @@ class OfflineArtifactSpec extends SparkSpec {
         ("graft/streaming/EventStreams.scala", "partitionOverwriteMode", "land")),
       s"route these ${hits.size} through EventStreams.perBatch / land:\n" +
         hits.map { case (f, t, o, n) => s"$f:$n: $t (in $o)" }.mkString("\n"))
+  }
+
+  test("a bloom build restores the session's runtime-filter caps") {
+    val c = corpusCopy("graft-bloom-caps")
+    // values no build sets, so a cap left raised by any build shows
+    val caps = Seq(
+      "spark.sql.optimizer.runtime.bloomFilter.maxNumItems" -> "3000001",
+      "spark.sql.optimizer.runtime.bloomFilter.maxNumBits" -> "50000001")
+    GraftSession.withConfs(spark, caps: _*) {
+      BloomGramIndex.ensure(spark, c)
+      BloomGramIndex.ensureSharded(spark, c, DataQuality.ShardedK)
+      assert(caps.map { case (k, _) => k -> spark.conf.get(k) } == caps)
+    }
+  }
+
+  test("tripwire: natives reach a session only through the catalog") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"source dir not found from ${root.getAbsolutePath}")
+    val catalog = "graft/functions/Natives.scala"
+    val banned = Seq("createOrReplaceTempFunction", "injectFunction",
+                     "registerFunction")
+    val hits = for {
+      f <- scalaFiles(root)
+      rel = root.toPath.relativize(f.toPath).toString
+      if rel != catalog
+      (line, i) <- Files.readAllLines(f.toPath).asScala.zipWithIndex
+      if !isComment(line) && banned.exists(line.contains)
+    } yield s"$rel:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, "register natives through graft.functions.Natives:\n" +
+      hits.mkString("\n"))
+    // every Expression case class under functions/ is in the catalog
+    val caseClass = "^case class (\\w+)".r
+    val expressions = for {
+      f <- scalaFiles(new java.io.File(root, "graft/functions"))
+      line <- Files.readAllLines(f.toPath).asScala
+      m <- caseClass.findFirstMatchIn(line)
+      cls = Class.forName(s"graft.functions.${m.group(1)}")
+      if classOf[org.apache.spark.sql.catalyst.expressions.Expression]
+        .isAssignableFrom(cls)
+    } yield cls
+    val listed = graft.functions.Natives.all.map(_.cls).toSet
+    assert(expressions.size >= 20)
+    assert(expressions.filterNot(listed).isEmpty,
+      s"not in the catalog: ${expressions.filterNot(listed).map(_.getSimpleName)}")
   }
 }

@@ -12,12 +12,11 @@ import org.apache.spark.sql.functions._
 class SimhashSigSpec extends SparkSpec {
 
   private def pinConfig(nBits: Int): Unit = {
-    graft.functions.SimhashSig.register(spark)
     val emb = spark.read.parquet(s"$sf001/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     val diff = emb.select(
         col("vec_id"),
-        call_function(graft.functions.SimhashSig.fnName,
+        graft.functions.Natives.call(spark, "simhash_sig_n",
                       col("embedding"), lit(nBits)).as("native"),
         graft.functions.VectorOps.simhashBucket(col("embedding"), nBits)
           .as("hof"))
@@ -35,7 +34,6 @@ class SimhashSigSpec extends SparkSpec {
   }
 
   test("edge conventions match the HOF: empty vector, null element, null vector") {
-    graft.functions.SimhashSig.register(spark)
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("embedding",
@@ -46,7 +44,7 @@ class SimhashSigSpec extends SparkSpec {
       Row(null))                                   // null vector: bucket 0 (both sides)
     val df = spark.createDataFrame(rows, schema)
     val got = df.select(
-        call_function(graft.functions.SimhashSig.fnName,
+        graft.functions.Natives.call(spark, "simhash_sig_n",
                       col("embedding"), lit(12)).as("native"),
         graft.functions.VectorOps.simhashBucket(col("embedding"), 12)
           .as("hof"))

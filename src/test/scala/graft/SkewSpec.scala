@@ -14,16 +14,6 @@ import graft.operators.SkewData
   */
 class SkewSpec extends SparkSpec {
 
-  private def withConfs[T](confs: (String, String)*)(body: => T): T = {
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   private def zipfFacts(d: String = sf0001): DataFrame =
     spark.read.parquet(s"$d/lineitem.parquet")
       .select(SkewData.zipfKey(col("l_orderkey") * 8 + col("l_linenumber"))
@@ -79,7 +69,7 @@ class SkewSpec extends SparkSpec {
   }
 
   test("AQE splits the bare skewed join (skew marker in the final plan)") {
-    withConfs(aqeSkewConfs: _*) {
+    GraftSession.withConfs(spark, aqeSkewConfs: _*) {
       // AQE splits a skewed reduce partition by MAPPER ranges — the
       // fixture's one-split parquet scan is ONE mapper, an unsplittable
       // unit (a production fact scan has thousands of mappers). The
@@ -93,7 +83,7 @@ class SkewSpec extends SparkSpec {
   }
 
   test("AQE declines the split under a same-key aggregate — salting's regime") {
-    withConfs(aqeSkewConfs: _*) {
+    GraftSession.withConfs(spark, aqeSkewConfs: _*) {
       val agged = zipfFacts(sf001).repartition(8).join(dims, Seq("skey"))
         .groupBy("skey")
         .agg(count(lit(1)).as("n"), sum(col("l_quantity") * col("w")).as("s"))

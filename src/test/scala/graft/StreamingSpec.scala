@@ -188,10 +188,9 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // reference: explode band keys, self-join, id_a < id_b
     import graft.analytics.Dedup
-    graft.functions.MinHashSig.register(spark)
     val keys = docs.select(col("doc_id"),
-        explode(Dedup.bandKeys(call_function(
-          graft.functions.MinHashSig.fnName,
+        explode(Dedup.bandKeys(graft.functions.Natives.call(spark,
+          "minhash_sig",
           Dedup.shingleHashes(spark, col("text"), 3)))).as("bk"))
     val ref = keys.select(col("doc_id").as("id_a"), col("bk"))
       .join(keys.select(col("doc_id").as("id_b"), col("bk")), Seq("bk"))

@@ -28,9 +28,8 @@ class TopRunSpec extends SparkSpec {
 
   private def pinEqual(df: org.apache.spark.sql.DataFrame,
                        arr: Column): Unit = {
-    graft.functions.TopRun.register(spark)
     val both = df.select(
-      call_function(graft.functions.TopRun.fnName, arr).as("nat"),
+      graft.functions.Natives.call(spark, "top_run", arr).as("nat"),
       topRunHof(arr).as("hof"))
     val diff = both.filter(
       col("nat.n") =!= col("hof.n") ||

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{DotF, DotL, SqDist, VectorOps}
+import graft.functions.{Natives, VectorOps}
 import graft.analytics.IvfIndex
 import graft.queries.QueryDef
 
@@ -73,7 +73,7 @@ class VecFoldsSpec extends SparkSpec {
   }
 
   test("edge conventions match the HOF folds: null array, length mismatch, null element, empty") {
-    DotF.register(spark); DotL.register(spark); SqDist.register(spark)
+    Natives.register(spark)
 
     val f = Seq(
       (Some(Seq(1.0f, 2.0f)), Some(Seq(1.0f, 2.0f, 3.0f))), // length mismatch

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -40,13 +40,34 @@ object Materialize {
 
   /** `df` checkpointed — or `df` itself when it is a checkpoint already
     * (an RDD-backed frame that is not recomputes per action: copied). */
-  def once(df: DataFrame): DataFrame = df.queryExecution.analyzed match {
-    case r: LogicalRDD if r.rdd.isCheckpointed => df
-    case _ =>
+  def once(df: DataFrame): DataFrame =
+    if (checkpointed(df)) df
+    else {
       val out = df.localCheckpoint(true)
       Option(current.get).foreach(_.owe(() => release(out)))
       out
-  }
+    }
+
+  /** [[once]], plus `metrics` — named aggregates over `df`'s rows — by
+    * name. They ride the checkpoint's own job (an [[Observation]]), so
+    * a side result (a row count, a key set) costs no action of its own.
+    * A frame that is a checkpoint already runs no checkpoint job, so
+    * its metrics are one aggregate over its blocks. */
+  def onceObserving(df: DataFrame, metrics: Column*): (DataFrame, Map[String, Any]) =
+    if (checkpointed(df)) {
+      val r = df.agg(metrics.head, metrics.tail: _*).head()
+      (df, r.getValuesMap[Any](r.schema.fieldNames.toSeq))
+    } else {
+      val obs = Observation()
+      val out = once(df.observe(obs, metrics.head, metrics.tail: _*))
+      (out, obs.get)
+    }
+
+  private def checkpointed(df: DataFrame): Boolean =
+    df.queryExecution.analyzed match {
+      case r: LogicalRDD => r.rdd.isCheckpointed
+      case _ => false
+    }
 
   /** `df` persisted — or as it is when the caller cached it, and then
     * it stays the caller's to release. */

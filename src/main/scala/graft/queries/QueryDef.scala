@@ -2,6 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.GraftSession
+
 /** One named query of the engine's public surface.
   *
   * @param name   stable key used by the driver (`SparkEntry.queries`)
@@ -39,11 +41,23 @@ object QueryDef {
     *  - plain µs TIMESTAMP (our own derived copies): passthrough.
     *
     * Every operator reads events through this one seam so a writer-side
-    * format drift is a one-line fix here, not a per-operator hunt. */
+    * format drift is a one-line fix here, not a per-operator hunt.
+    *
+    * The caller's session conf is never changed. The legacy
+    * nanos-as-long conf is set only around the schema read and, for a
+    * NANOS file, around building the scan: a scan captures its reader
+    * conf when it is built, so that file reads as an RDD of the
+    * normalized rows (no scan pushdown — no shipped file is NANOS). */
   def eventsTable(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    normalizeEventTs(raw)
+    import org.apache.spark.sql.types.LongType
+    GraftSession.withConfs(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
+      val raw = spark.read.parquet(s"$sfDir/events.parquet")
+      if (raw.schema("ts").dataType != LongType) normalizeEventTs(raw)
+      else {
+        val ts = normalizeEventTs(raw)
+        spark.createDataFrame(ts.rdd, ts.schema)
+      }
+    }
   }
 
   /** The `ts`-normalization half of [[eventsTable]], reusable on any

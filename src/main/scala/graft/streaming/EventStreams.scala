@@ -602,10 +602,18 @@ object EventStreams {
     *    restarted query reads the rewritten seed.
     *  - Tombstones are re-read EVERY batch: a takedown (deleteDocs)
     *    masks the gate from the next batch on, as on the batch gate.
-    *  - One read per batch: the micro-batch is materialized once
-    *    ([[Materialize.once]]), its shingles + band keys
-    *    (MinHashBandIndex.signatures) once; every consumer reads those
-    *    blocks, which the batch's scope drops when the batch ends.
+    *  - One read per batch: the micro-batch is materialized once with
+    *    its shingles + band keys (MinHashBandIndex.withSignatures), then
+    *    its banded candidates once, then its decisions; every consumer
+    *    reads those blocks, which the batch's scope drops when the
+    *    batch ends.
+    *  - No action of its own for a side result: the batch's row count
+    *    and kp set, the candidates' `shingles/` blocks and the accepted
+    *    doc ids (≤ the batch) are observed on those three checkpoints
+    *    ([[Materialize.onceObserving]]). The kp set prunes the bands
+    *    probe, the blocks prune the refine's seed shingles scan, and the
+    *    ids select the segment rows from the batch's signatures without
+    *    a join.
     *  - State: `decide(batch, nd)` is what lands in `outDir` (doc_id,
     *    keep, …); its keep = 1 docs land as the batch's segment in the
     *    two delta tables, which later batches read ([[landedBefore]]). */
@@ -618,27 +626,34 @@ object EventStreams {
     val seedBands = stream.sparkSession.read.parquet(s"$seedDir/bands")
       .select("corpus_id", "band", "key", "kp")
     val seedSh = stream.sparkSession.read.parquet(s"$seedDir/shingles")
-      .select("corpus_id", "sh")
+      .select("corpus_id", "sh", "cb")
     perBatch(stream, checkpointDir) { (landed, batchId) =>
       val spark = landed.sparkSession
-      val batch = Materialize.once(landed)
+      val (signed, seen) = Materialize.onceObserving(mh.withSignatures(spark, landed),
+        count(lit(1)).as("n"), mh.keyPartsOf(col("keys")).as("kps"))
       // empty micro-batch = no-op (nothing to gate)
-      if (!batch.isEmpty) {
+      if (seen("n") != 0L) {
+        val batch = signed.drop("sh", "keys")
+        val sigs = signed.select("doc_id", "sh", "keys")
         val bands = seedBands
           .join(graft.analytics.Tombstones.read(spark, seedDir, "corpus_id"),
                 Seq("corpus_id"), "left_anti")
           .unionByName(landedBefore(spark, bandsDeltaDir, seedBands.schema, batchId))
         val shingles = seedSh.unionByName(
           landedBefore(spark, shinglesDeltaDir, seedSh.schema, batchId))
-        val sigs = Materialize.once(mh.signatures(spark, batch))
+        val (cand, probed) = Materialize.onceObserving(
+          mh.candidates(bands, sigs, kps = Some(seen("kps").asInstanceOf[Seq[Int]])),
+          collect_set(col("cb")).as("blocks"))
         // materialize the decisions BEFORE the segment writes mutate
         // the delta dirs their plan reads
-        val out = Materialize.once(decide(batch,
-            mh.verdicts(batch, mh.scoredPairs(spark, bands, shingles, sigs))))
+        val (out, decided) = Materialize.onceObserving(decide(batch,
+            mh.verdicts(batch, mh.refine(cand, shingles, sigs,
+              blocks = Some(probed("blocks").asInstanceOf[Seq[Int]])))),
+          collect_set(when(col("keep") === 1, col("doc_id"))).as("accepted"))
         // the output and the two segment writes only read `out` and
-        // `sigs` blocks: independent, so they overlap
-        val accepted = out.filter(col("keep") === 1).select("doc_id")
-        val acc = sigs.join(accepted, Seq("doc_id"))
+        // `signed` blocks: independent, so they overlap
+        val accepted = decided("accepted").asInstanceOf[Seq[Long]]
+        val acc = sigs.filter(col("doc_id").isin(accepted: _*))
         graft.analytics.ParActions.run(
           Seq(() => land(out, batchId, outDir)) ++
             (if (accepted.isEmpty) Nil

@@ -541,8 +541,7 @@ class DataQualitySpec extends SparkSpec {
     }.reduce(_ union _)
     val dir = java.nio.file.Files.createTempDirectory("bp01-stress").toString
     stressed.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    GraftSession.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val out = SparkEntry.queries("bp01_boilerplate_ngrams")(spark, dir)
       val got = out.collect()
         .map(r => r.getAs[String]("gram") ->
@@ -566,7 +565,7 @@ class DataQualitySpec extends SparkSpec {
       assert(got == expected,
              s"stressed census mismatch: got ${got.size} grams, " +
              s"expected ${expected.size}")
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
   }
 
   test("dq05/st16: 1e5-distinct-source corpus flows the shuffled reputation path end-to-end") {
@@ -586,8 +585,7 @@ class DataQualitySpec extends SparkSpec {
         .otherwise(lit(good + " {")).as("text"))
     val dir = java.nio.file.Files.createTempDirectory("dq05-stress").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    GraftSession.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val out = SparkEntry.queries("dq05_source_reputation")(spark, dir)
         .agg(count(lit(1)), sum("keep_final"),
              countDistinct("source"), sum("source_ok")).head()
@@ -602,7 +600,7 @@ class DataQualitySpec extends SparkSpec {
         .agg(count(lit(1)), sum("keep_final")).head()
       assert(st.getLong(0) == 2L * nSrc && st.getLong(1) == nSrc,
              s"st16 stressed gate: $st")
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
   }
 
   test("bp01: every reported gram really spans >= 3 distinct docs (brute recount)") {

@@ -87,6 +87,33 @@ class MaterializeSpec extends SparkSpec {
     assert(!pinned(ck))
   }
 
+  test("onceObserving returns the checkpoint and its metrics, zero rows included") {
+    import org.apache.spark.sql.functions._
+    Materialize.scoped {
+      val (ck, m) = Materialize.onceObserving(frame(16),
+        count(lit(1)).as("n"), sort_array(collect_set($"tag")).as("tags"))
+      assert(pinned(ck))
+      assert(m("n") == 56L && m("tags") == (0L until 18L).toSeq, s"$m")
+      val (none, z) = Materialize.onceObserving(frame(17).filter($"id" < 0),
+        count(lit(1)).as("n"), sum($"id").as("s"))
+      assert(pinned(none) && none.isEmpty)
+      assert(z("n") == 0L && z("s") == null, s"$z")
+    }
+  }
+
+  test("onceObserving on a frame that is a checkpoint already still returns its metrics") {
+    import org.apache.spark.sql.functions._
+    val ck = frame(18).localCheckpoint(true)
+    try {
+      // no checkpoint job runs for it, so nothing would fill an
+      // Observation: the metrics must come from an aggregate instead
+      val (same, m) = Materialize.scoped(
+        Materialize.onceObserving(ck, count(lit(1)).as("n")))
+      assert(same eq ck)
+      assert(m("n") == 58L, s"$m")
+    } finally Materialize.release(ck)
+  }
+
   test("shared never releases a frame the caller cached") {
     val mine = frame(12).persist()
     try {

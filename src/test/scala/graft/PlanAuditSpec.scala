@@ -415,9 +415,8 @@ class PlanAuditSpec extends SparkSpec {
     // broadcast threshold off and AQE disabled, the planner must fall
     // back to a shuffled join — a lingering hint would still force
     // BroadcastHashJoin here.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    GraftSession.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.enabled" -> "false") {
       Seq("bp01_boilerplate_ngrams", "bp02_boilerplate_strip",
           "dd08_dup_spans").foreach { n =>
         val p = plan(n)
@@ -437,9 +436,6 @@ class PlanAuditSpec extends SparkSpec {
       assert("SortMergeJoin(?: \\S+)? \\[h1#[\\s\\S]*?LeftSemi".r
                .findFirstIn(p).isDefined,
              s"cp02 census semi-join is not shuffle-planned:\n$p")
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
     }
   }
 
@@ -451,9 +447,8 @@ class PlanAuditSpec extends SparkSpec {
     // above: with the threshold off and AQE disabled, a lingering hint
     // would still force a broadcast; a clean plan falls back to a
     // shuffled join on the state key.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    GraftSession.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.enabled" -> "false") {
       def shuffledOn(p: String, key: String): Boolean =
         s"(?:SortMergeJoin|ShuffledHashJoin)(?: \\S+)? \\[$key#".r
           .findFirstIn(p).isDefined
@@ -477,9 +472,6 @@ class PlanAuditSpec extends SparkSpec {
              !pSt.contains("BroadcastNestedLoopJoin"),
              s"st17 still forces a broadcast:\n$pSt")
       assert(shuffledOn(pSt, "shard"), pSt)
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
     }
   }
 
@@ -555,6 +547,29 @@ class PlanAuditSpec extends SparkSpec {
     // no forced broadcast anywhere in the gate: every join is
     // AQE-decided (the index side grows with the corpus)
     assert(!f.contains("ResolvedHint"), f)
+  }
+
+  test("st20: the executed curation ledger plan scans the seed bands once") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val mh = graft.analytics.MinHashBandIndex
+    val seed = mh.ensure(spark, sf0001)
+    val docs = graft.queries.QueryDef.table(spark, sf0001, "documents")
+    val slice = mh.arrivalsOf(docs).select("doc_id", "text")
+    val ledger = graft.streaming.StreamShapes.curationLedgerOf(spark, slice,
+      mh.gateFrames(spark, spark.read.parquet(s"$seed/bands"),
+                    spark.read.parquet(s"$seed/shingles"), slice),
+      graft.queries.QueryDef.table(spark, sf0001, "embeddings"), banded = true)
+    assert(ledger.collect().nonEmpty)
+    // the hot-bucket census and the candidate join read ONE probe: a
+    // second branch re-scans the bands every batch
+    object Plans extends AdaptiveSparkPlanHelper
+    val bandScans = Plans.collect(ledger.queryExecution.executedPlan) {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.getName == "bands") => s
+    }
+    assert(bandScans.size == 1,
+      s"${bandScans.size} bands scans:\n${ledger.queryExecution.executedPlan}")
   }
 
   test("fi01: the sketch pass partial-aggregates map-side; the shuffle is one summary per partition") {
@@ -819,13 +834,11 @@ class PlanAuditSpec extends SparkSpec {
     assert(spread.queryExecution.optimizedPlan.toString
              .contains("Repartition"),
       "guarded spread should fire on the one-split fixture scan")
-    spark.conf.set("spark.sql.execution.sortBeforeRepartition", "false")
-    try {
+    GraftSession.withConfs(spark, "spark.sql.execution.sortBeforeRepartition" -> "false") {
       val noSpread = graft.analytics.ScanSpread.forMapPass(df)
       assert(!noSpread.queryExecution.optimizedPlan.toString
                .contains("Repartition"),
         "spread must fall back to identity without sortBeforeRepartition")
-    } finally
-      spark.conf.unset("spark.sql.execution.sortBeforeRepartition")
+    }
   }
 }

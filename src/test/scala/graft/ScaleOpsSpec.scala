@@ -45,9 +45,49 @@ class ScaleOpsSpec extends SparkSpec {
     assert(backFromNanos.exceptAll(events).count() == 0)
   }
 
-  test("bucketed tables join without a shuffle exchange") {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+  private val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  test("events read seam leaves the caller's session conf as it was") {
+    GraftSession.withConfs(spark, nanosAsLong -> "false") {
+      val events = QueryDef.eventsTable(spark, sf0001)
+      assert(events.count() > 0)
+      assert(spark.conf.get(nanosAsLong) == "false",
+        "reading events changed the session's nanos-as-long conf")
+    }
+  }
+
+  test("events read seam reads a TIMESTAMP(NANOS) file as µs") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    import org.apache.spark.sql.types.TimestampType
+    val dir = java.nio.file.Files.createTempDirectory("events-nanos").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; " +
+      "required int64 ts (TIMESTAMP(NANOS,true)); }")
+    // 1.5 µs and 1 s + 999 ns: the sub-µs part is dropped
+    val nanos = Seq(1L -> 1500L, 2L -> 1000000999L)
+    val writer = ExampleParquetWriter.builder(new Path(s"$dir/events.parquet"))
+      .withType(schema).build()
     try {
+      val rows = new SimpleGroupFactory(schema)
+      nanos.foreach { case (id, ns) =>
+        writer.write(rows.newGroup().append("event_id", id).append("ts", ns))
+      }
+    } finally writer.close()
+    GraftSession.withConfs(spark, nanosAsLong -> "false") {
+      val events = QueryDef.eventsTable(spark, dir)
+      assert(events.schema("ts").dataType == TimestampType)
+      val micros = events.select($"event_id", expr("unix_micros(ts)"))
+        .as[(Long, Long)].collect().toMap
+      assert(micros == Map(1L -> 1L, 2L -> 1000000L), s"$micros")
+      assert(spark.conf.get(nanosAsLong) == "false")
+    }
+  }
+
+  test("bucketed tables join without a shuffle exchange") {
+    GraftSession.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val o = QueryDef.table(spark, sf0001, "orders")
       val l = QueryDef.table(spark, sf0001, "lineitem")
       BucketedStore.writeBucketed(
@@ -60,7 +100,7 @@ class ScaleOpsSpec extends SparkSpec {
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), s"expected shuffle-free plan:\n$plan")
       assert(joined.count() == l.count())
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
   }
 
   test("bucketed documents layout halves the dedup verify-join shuffles") {
@@ -68,9 +108,8 @@ class ScaleOpsSpec extends SparkSpec {
     // the corpus on doc_id; with `documents` persisted bucketed on
     // doc_id the corpus side of every such join is pre-shuffled — only
     // the (much smaller) candidate side exchanges
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false") // stable plan text
-    try {
+    GraftSession.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.enabled" -> "false") { // stable plan text
       val docs = spark.read.parquet(s"$sf0001/documents.parquet")
         .select("doc_id", "text")
       BucketedStore.writeBucketed(docs, "docs_dedup_b", "doc_id", 4)
@@ -83,9 +122,6 @@ class ScaleOpsSpec extends SparkSpec {
              s"expected 1 exchange (probe side only):\n$plan")
       val expected = docs.filter(col("doc_id").between(0L, 50L)).count()
       assert(joined.count() == expected && expected > 0)
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
     }
   }
 

@@ -1165,8 +1165,7 @@ class StreamingSpec extends SparkSpec {
       lit("alpha beta gamma delta").as("text"))
     val dir = java.nio.file.Files.createTempDirectory("st17-stress").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    GraftSession.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val out = SparkEntry.queries("st17_streaming_pack")(spark, dir)
         .agg(count(lit(1)), countDistinct("shard"), max("seq_id"),
              max("pos_in_seq"), sum("n_tokens")).head()
@@ -1175,7 +1174,7 @@ class StreamingSpec extends SparkSpec {
       assert(out.getLong(2) == 0L && out.getInt(3) == 1,
              s"packing drifted: $out")
       assert(out.getLong(4) == 4L * nShard, s"token totals: $out")
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
   }
 
   test("streaming pack + reputation router: empty micro-batches are no-ops, query survives") {
@@ -1500,7 +1499,7 @@ class StreamingSpec extends SparkSpec {
             .select("corpus_id", "band", "key", "kp")),
         spark.read.parquet(s"$seedDir/shingles")
           .unionByName(spark.read.parquet(s"$tmp/shingles")
-            .select("corpus_id", "sh")),
+            .select("corpus_id", "sh", "cb")),
         b2).collect().toSeq
       assert(mh.segmentCount(s"$tmp/bands") == 1, s"$scheme: segment not listed")
       val n = mh.mergeSegments(spark, seedDir, s"$tmp/bands", s"$tmp/shingles")
@@ -1750,6 +1749,148 @@ class StreamingSpec extends SparkSpec {
         assert(problems.isEmpty, s"$kind: ${problems.mkString("; ")}")
       } finally q.stop()
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("streaming curation: fixed per-batch work — SQL executions and jobs per batch, " +
+       "no isEmpty or collect action") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import org.apache.spark.sql.util.QueryExecutionListener
+    implicit val sqlCtx = spark.sqlContext
+    val sc = spark.sparkContext
+    val seed = graft.analytics.MinHashBandIndex.ensure(spark, sf0001)
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val arr = graft.analytics.MinHashBandIndex.arrivalsOf(
+        spark.read.parquet(s"$sf0001/documents.parquet"))
+      .select("doc_id", "text").as[(Long, String)].collect().toSeq
+    val slices = (0 until 3).map(i => arr.filter(_._1 % 3 == i))
+    // SQL executions and jobs per batch id of the query, and the name
+    // of every action the query's session runs
+    val perBatch = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
+    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val batchOf = """(?s).*\bbatch = (\d+).*""".r
+    def batch(desc: String): Option[Long] = Option(desc).collect {
+      case batchOf(b) => b.toLong
+    }
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val desc = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+        desc.foreach(tags.add)
+        desc.flatMap(batch).foreach(b => perBatch.add(("job", b)))
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          batch(s.description).foreach(b => perBatch.add(("sql", b)))
+        case _ => ()
+      }
+    }
+    val named = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = actions.add(f)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = actions.add(f)
+    }
+    // a tagged RDD job (no SQL action) delivered means every event
+    // before it was too
+    def drain(): Unit = {
+      val tag = s"drain-${System.nanoTime()}"
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      awaitTrue(s"job $tag delivered")(tags.contains(tag))
+    }
+    val tmp = java.nio.file.Files.createTempDirectory("st20-fixed").toString
+    val mem = MemoryStream[(Long, String)]
+    sc.addSparkListener(listener)
+    // registered before the start: the query's session inherits it
+    spark.listenerManager.register(named)
+    val q = EventStreams.curationStream(
+      mem.toDF().toDF("doc_id", "text"), seed, emb,
+      s"$tmp/bands", s"$tmp/shingles", s"$tmp/out", s"$tmp/ckpt")
+    try {
+      mem.addData(slices(0): _*); q.processAllAvailable()
+      drain(); actions.clear()
+      slices.drop(1).foreach { s => mem.addData(s: _*); q.processAllAvailable() }
+      drain()
+    } finally {
+      q.stop()
+      sc.removeSparkListener(listener)
+      spark.listenerManager.unregister(named)
+    }
+    // every timed batch (after the warm-up batch 0) accepts docs, so it
+    // runs all three segment writes
+    val kept = spark.read.parquet(s"$tmp/out").filter($"keep" === 1)
+      .groupBy("batch_id").count().as[(Long, Long)].collect().toMap
+    assert((1L to 2L).forall(b => kept.getOrElse(b, 0L) > 0), s"keepers: $kept")
+    val counts = perBatch.asScala.toSeq.groupBy(identity).map { case (k, v) => k -> v.size }
+    (1L to 2L).foreach { b =>
+      val sql = counts.getOrElse(("sql", b), 0)
+      val jobs = counts.getOrElse(("job", b), 0)
+      // the micro-batch, three checkpoints (batch with its signatures,
+      // candidates, decisions) and three writes (ledger, bands and
+      // shingles segments); the side results ride the checkpoints
+      assert(sql == 7, s"batch $b: $sql SQL executions")
+      assert(jobs <= 30, s"batch $b: $jobs jobs")
+    }
+    val side = actions.asScala.toSeq.filter(Set("isEmpty", "collect", "head",
+      "take", "first", "count", "tail", "collectAsList", "toLocalIterator"))
+    assert(side.isEmpty, s"side actions ran: $side (all actions: $actions)")
+    assert(actions.asScala.count(_ == "localCheckpoint") == 3 * 2, s"$actions")
+  }
+
+  test("streaming near-dup refine: files read from the seed shingles follow the " +
+       "candidates, not the seed (4× seed, disjoint vocabulary)") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    implicit val sqlCtx = spark.sqlContext
+    val mh = graft.analytics.MinHashBandIndex
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+    val corpus = mh.corpusOf(docs).select("doc_id", "text")
+    val nCorpus = corpus.count()
+    val maxId = docs.agg(max("doc_id")).as[Long].head()
+    // 3× more docs under fresh ids, each of words no other doc uses: no
+    // arrival shares a shingle with them, so the candidates are the same
+    val extra = spark.range(3 * nCorpus).select(
+      (col("id") + maxId + 1).as("doc_id"),
+      concat_ws(" ", (0 until 40).map(j =>
+        concat(lit("xq"), col("id").cast("string"), lit(s"w$j"))): _*).as("text"))
+    val arrivals = mh.arrivalsOf(docs).select("doc_id", "text")
+      .as[(Long, String)].collect().toSeq
+    object Plans extends AdaptiveSparkPlanHelper
+    def refineRead(corpusDocs: org.apache.spark.sql.DataFrame) = {
+      val tmp = java.nio.file.Files.createTempDirectory("refine-bytes").toString
+      val seed = s"$tmp/seed"
+      mh.buildFrom(spark, seed, corpusDocs)
+      val read = new java.util.concurrent.atomic.AtomicLong(0L)
+      val listener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+          Plans.collect(qe.executedPlan) {
+            case s: FileSourceScanExec
+                if s.relation.location.rootPaths.exists(_.toString.endsWith("seed/shingles")) =>
+              s.metrics("filesSize").value
+          }.foreach(read.addAndGet)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      // registered before the start: the query's session inherits it
+      spark.listenerManager.register(listener)
+      val mem = MemoryStream[(Long, String)]
+      val q = EventStreams.neardupIngestGate(mem.toDF().toDF("doc_id", "text"),
+        seed, s"$tmp/bands", s"$tmp/shingles", s"$tmp/out", s"$tmp/ckpt")
+      try { mem.addData(arrivals: _*); q.processAllAvailable() }
+      finally { q.stop(); spark.listenerManager.unregister(listener) }
+      val verdicts = spark.read.parquet(s"$tmp/out")
+        .select("doc_id", "keep", "match_id").as[(Long, Int, Option[Long])]
+        .collect().toSet
+      (read.get, verdicts)
+    }
+    val (bytes1, v1) = refineRead(corpus)
+    val (bytes4, v4) = refineRead(corpus.unionByName(extra))
+    assert(v1 == v4, "the extra docs changed a verdict")
+    assert(v1.exists(_._2 == 0), "no arrival was rejected: the refine never ran")
+    assert(bytes1 > 0 && bytes4 < 2 * bytes1,
+      s"seed shingles read: $bytes1 B from the seed, $bytes4 B from the 4× seed")
   }
 
   test("streaming curation: stop() releases the persisted static side and every batch's blocks") {

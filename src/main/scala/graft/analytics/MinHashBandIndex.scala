@@ -22,14 +22,11 @@ import graft.queries.QueryDef
   *    the batch only while the batch is tiny: its 12 keys per doc
   *    spread uniformly over the 64 dirs, so from about 20 docs on
   *    every dir is touched and the probe is a full bands scan.
-  *  - `shingles/` — (corpus_id, sh, cb): the shingle-hash sets used by
-  *    the exact-Jaccard refine, written PARTITIONED BY the id block
-  *    `cb = corpus_id >> [[ShingleBlockBits]]`. The refine joins the
-  *    candidates on (cb, corpus_id); a caller that knows the
-  *    candidates' blocks (the streaming gates observe them on their
-  *    candidates checkpoint, see [[refine]]) reads only those
-  *    partitions, so its bytes follow the candidates' id blocks, not
-  *    the corpus.
+  *  - `shingles/` — (corpus_id, sh): the shingle-hash sets used by the
+  *    exact-Jaccard refine; only rows for surviving CANDIDATES are
+  *    joined (an equi-join on corpus_id after LSH has pruned the
+  *    corpus to a bounded candidate set), but the scan that feeds the
+  *    join reads the whole dir.
   *  - `append_log/` — one provenance row per appended batch (count,
   *    id bounds, order-independent content stamp), extending the
   *    build-time content-stamp discipline to appended segments.
@@ -48,9 +45,8 @@ import graft.queries.QueryDef
   * Scale shape: the batch side is the arriving micro-batch (small by
   * definition); the corpus side is touched only through (a) the
   * kp-pruned bands scan — a full bands scan once the batch has about
-  * 20 docs — and (b) the candidate join into `shingles/`, which reads
-  * only the candidates' id blocks when the caller passes them and the
-  * whole dir otherwise. Appends are
+  * 20 docs — and (b) the candidate-id equi-join into `shingles/`,
+  * whose scan reads the whole dir on every call. Appends are
   * map-only writes of the accepted docs' bands + shingles (cost ∝
   * batch), so the index chains across ingest epochs the same way the
   * bloom gate's filter does (id03's discipline; chain property pinned
@@ -76,15 +72,7 @@ object MinHashBandIndex {
   def corpusOf(docs: DataFrame): DataFrame =
     docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
 
-  /** `shingles/` holds `1 << ShingleBlockBits` consecutive corpus ids
-    * per `cb` partition. */
-  private val ShingleBlockBits = 8
-
-  /** The `shingles/` partition of a corpus id. */
-  private def blockOf(corpusId: Column): Column =
-    shiftright(corpusId, ShingleBlockBits).cast("int")
-
-  private val Artifact = OfflineArtifact.Kind("mhband", "documents", "v2")
+  private val Artifact = OfflineArtifact.Kind("mhband", "documents", "v1")
 
   def indexDir(sfDir: String): String = Artifact.dir(sfDir)
 
@@ -109,15 +97,9 @@ object MinHashBandIndex {
                 posexplode(col("keys")).as(Seq("band", "key")))
       .withColumn("kp", pmod(col("key"), lit(KeyParts.toLong)).cast("int"))
 
-  /** Index-side shingle rows — (corpus_id, sh, cb) — of [[signatures]]. */
+  /** Index-side shingle rows — (corpus_id, sh) — of [[signatures]]. */
   def shinglesOf(sigs: DataFrame): DataFrame =
-    sigs.select(col("doc_id").as("corpus_id"), col("sh"),
-                blockOf(col("doc_id")).as("cb"))
-
-  /** `sh` (corpus_id, sh, cb) appended to, or overwriting, the
-    * `shingles/` dir `dir` in its layout: one file per `cb` dir. */
-  private def writeShingles(sh: DataFrame, mode: String, dir: String): Unit =
-    sh.repartition(col("cb")).write.mode(mode).partitionBy("cb").parquet(dir)
+    sigs.select(col("doc_id").as("corpus_id"), col("sh"))
 
   /** [[bandsOf]] `docs`' [[signatures]]. */
   def segmentBands(spark: SparkSession, docs: DataFrame): DataFrame =
@@ -166,8 +148,8 @@ object MinHashBandIndex {
                                           // parallelism is ~40-way, not
                                           // 64 (see mergeSegments)
         .write.mode("overwrite").partitionBy("kp").parquet(s"$dir/bands")
-      writeShingles(shinglesOf(sigs).dropDuplicates("corpus_id"),
-                    "overwrite", s"$dir/shingles")
+      shinglesOf(sigs).dropDuplicates("corpus_id")
+        .write.mode("overwrite").parquet(s"$dir/shingles")
     }
 
   /** Assignment-only APPEND of accepted docs: their bands + shingles
@@ -190,7 +172,7 @@ object MinHashBandIndex {
                                           // writers (see buildFrom note)
         .write.mode("append").partitionBy("kp").parquet(s"$dir/bands")
       val sh = shinglesOf(sigs).dropDuplicates("corpus_id")
-      writeShingles(sh, "append", s"$dir/shingles")
+      sh.write.mode("append").parquet(s"$dir/shingles")
       val prov = sh.agg(
         count(lit(1)).as("n_docs"),
         min("corpus_id").as("min_doc_id"),
@@ -203,15 +185,14 @@ object MinHashBandIndex {
 
   /** Fold streaming delta SEGMENTS (st19/st20's accepted-doc state,
     * batch-id-partitioned under the two delta roots) into the seed
-    * index: segment rows append into `seedDir/bands` and
-    * `seedDir/shingles` in their kp and cb partitioning — the merged
-    * index keeps its pruning layout — then the delta roots are
-    * dropped. Cost ∝ the segments, never the seed. This is the
-    * checkpoint step of a long-running ingest stream — without it the
-    * per-batch gate reads an ever-growing list of segment files; after
-    * it the stream restarts from an empty delta with identical gate
-    * semantics (spec-pinned: gate-against-merged ≡
-    * gate-against-seed+deltas).
+    * index: segment rows append into `seedDir/bands` (same kp
+    * partitioning — the merged index keeps its pruning layout) and
+    * `seedDir/shingles`, then the delta roots are dropped. Cost ∝ the
+    * segments, never the seed. This is the checkpoint step of a
+    * long-running ingest stream — without it the per-batch gate reads
+    * an ever-growing list of segment files; after it the stream
+    * restarts from an empty delta with identical gate semantics
+    * (spec-pinned: gate-against-merged ≡ gate-against-seed+deltas).
     * Returns the number of docs folded in. Run it only while the
     * stream is DOWN (it mutates state the running query reads). */
   def mergeSegments(spark: SparkSession, seedDir: String,
@@ -226,7 +207,7 @@ object MinHashBandIndex {
         () => Materialize.once(spark.read.parquet(bandsDeltaDir)
           .select("corpus_id", "band", "key", "kp")),
         () => Materialize.once(spark.read.parquet(shinglesDeltaDir)
-          .select("corpus_id", "sh", "cb")))
+          .select("corpus_id", "sh")))
       // spread the append across the kp dirs it lands in: a delta read
       // back from few landed files is 1-2 partitions, so the partitioned
       // write was ONE task sequentially opening all 64 kp writers (r17
@@ -238,7 +219,7 @@ object MinHashBandIndex {
         () => segBands.repartition(KeyParts, col("kp"))
           .write.mode("append").partitionBy("kp")
           .parquet(s"$seedDir/bands"),
-        () => writeShingles(segSh, "append", s"$seedDir/shingles"))
+        () => segSh.write.mode("append").parquet(s"$seedDir/shingles"))
       val n = segSh.count()
       OfflineArtifact.delete(spark, bandsDeltaDir)
       OfflineArtifact.delete(spark, shinglesDeltaDir)
@@ -282,48 +263,60 @@ object MinHashBandIndex {
   def deleteDocs(spark: SparkSession, dir: String, ids: DataFrame): Long =
     Tombstones.delete(spark, dir, ids, idCol = "corpus_id")
 
-  /** Physically apply the tombstones: the BANDS (the gating state) and
-    * the SHINGLES (the retracted docs' derived content, which a
-    * takedown must not outlive) are each rewritten partition-locally —
-    * only the kp (cb) partitions holding a tombstoned row — through
-    * [[OfflineArtifact.stagedSwap]]; tombstones cleared last, so every
-    * crash window leaves rows still masked by the gate. The shingles
-    * rewrite is decided INDEPENDENTLY of the bands (its own tombstone
-    * semi-join + staging-leftover check) — a purge replayed after all
-    * band partitions were already rewritten still rewrites the
-    * shingles, so purge convergence holds for both segments. Batch
-    * takedowns amortize: many tombstones, one rewrite per touched
-    * partition. Returns the number of band partitions rewritten. */
+  /** Physically apply the tombstones: the BANDS (the gating state) are
+    * rewritten kp-partition-locally — only partitions holding a
+    * tombstoned row — and the SHINGLES (the retracted docs' derived
+    * content, which a takedown must not outlive) in one filtered
+    * rewrite, each through [[OfflineArtifact.stagedSwap]]; tombstones
+    * cleared last, so every crash window leaves rows still masked by
+    * the gate. The shingles rewrite is decided INDEPENDENTLY of the
+    * bands (its own tombstone semi-join + staging-leftover check) — a
+    * purge replayed after all band partitions were already rewritten
+    * still rewrites the shingles, so purge convergence holds for both
+    * segments. Batch takedowns
+    * amortize: many tombstones, one rewrite. Returns the number of
+    * band partitions rewritten. */
   def purgeTombstones(spark: SparkSession, dir: String): Int =
     Materialize.scoped {
+      val bandsBase = s"$dir/bands"
+      // complete interrupted swaps first; recovered targets may hold
+      // old ∪ staged duplicates, so they are force-rewritten below and
+      // the rewrites' natural-key dedup converges their row sets
+      val recoveredKps = OfflineArtifact.recover(spark, bandsBase, "purge")
+        .filter(_.startsWith("kp=")).map(_.stripPrefix("kp=").toInt)
+      val recoveredSh =
+        OfflineArtifact.recover(spark, dir, "purge").contains("shingles")
       val tombs = Materialize.shared(Tombstones.read(spark, dir, "corpus_id"))
-      // the `part` partitions of `base` that hold a tombstoned row, each
-      // rewritten without it. Interrupted swaps are completed first;
-      // recovered partitions may hold old ∪ staged duplicates, so they
-      // are force-rewritten and `dedup` converges their row sets
-      def purgeParts(base: String, part: String)
-                    (dedup: DataFrame => DataFrame): Array[Int] = {
-        val recovered = OfflineArtifact.recover(spark, base, "purge")
-          .filter(_.startsWith(s"$part=")).map(_.stripPrefix(s"$part=").toInt)
-        val touched = (spark.read.parquet(base)
+      val touched =
+        (spark.read.parquet(s"$dir/bands")
           .join(tombs, Seq("corpus_id"), "left_semi")
-          .select(part).distinct().collect().map(_.getInt(0)) ++ recovered).distinct
-        touched.foreach { v =>
-          OfflineArtifact.stagedSwap(spark, s"$base/$part=$v", "purge") { tmp =>
-            dedup(spark.read.parquet(s"$base/$part=$v")
-                .join(tombs, Seq("corpus_id"), "left_anti"))
-              .coalesce(1)
-              .write.mode("overwrite").parquet(tmp)
-          }
+          .select("kp").distinct().collect().map(_.getInt(0)) ++
+          recoveredKps).distinct
+      touched.foreach { kp =>
+        OfflineArtifact.stagedSwap(spark, s"$bandsBase/kp=$kp", "purge") { tmp =>
+          spark.read.parquet(s"$bandsBase/kp=$kp")
+            .join(tombs, Seq("corpus_id"), "left_anti")
+            .distinct() // converges a crash-recovered duplicate partition
+            .coalesce(1)
+            .write.mode("overwrite").parquet(tmp)
         }
-        touched
       }
-      val touched = purgeParts(s"$dir/bands", "kp")(_.distinct())
       // shingles decided on their OWN evidence, never the bands-derived
       // touched set: after a crash between the band and shingle rewrites
       // the replayed purge finds no touched band partition but the
       // retracted docs' shingles still need to go
-      purgeParts(s"$dir/shingles", "cb")(_.dropDuplicates("corpus_id"))
+      val shDir = s"$dir/shingles"
+      val needShingles = recoveredSh ||
+        spark.read.parquet(shDir)
+          .join(tombs, Seq("corpus_id"), "left_semi")
+          .limit(1).count() > 0
+      if (needShingles)
+        OfflineArtifact.stagedSwap(spark, shDir, "purge") { tmp =>
+          spark.read.parquet(shDir)
+            .join(tombs, Seq("corpus_id"), "left_anti")
+            .dropDuplicates("corpus_id") // converges a crash-recovered duplicate dir
+            .write.mode("overwrite").parquet(tmp)
+        }
       Tombstones.clear(spark, dir)
       touched.length
     }
@@ -350,7 +343,7 @@ object MinHashBandIndex {
     * accepted segment, and the kp filter applied in [[scoredPairs]]
     * still prunes partitions of every member scan of the union.
     * `bands` carries (corpus_id, band, key, kp), `shingles`
-    * (corpus_id, sh, cb). */
+    * (corpus_id, sh). */
   def gateFrames(spark: SparkSession, bands: DataFrame, shingles: DataFrame,
                  batch: DataFrame,
                  minJaccard: Double = MinJaccard,
@@ -362,28 +355,21 @@ object MinHashBandIndex {
   /** Banded candidate pairs with their EXACT Jaccard — the stage
     * [[gateFrames]] folds into per-arrival verdicts, exposed for
     * pair-level consumers (the dm10 split-leakage audit reports every
-    * leaking (eval, train) pair, not just each doc's best witness):
-    * [[refine]] of [[candidates]]. `sigs` = the batch's [[signatures]].
-    * Returns (doc_id, corpus_id, j) for every banded candidate whose
-    * exact Jaccard clears `minJaccard`; the refine is exact, so each
-    * returned pair is a TRUE match regardless of what banding missed. */
+    * leaking (eval, train) pair, not just each doc's best witness).
+    * `sigs` = the batch's [[signatures]], read by the probe and the
+    * refine: the streaming gates pass it materialized, lazy callers
+    * keep lineage and recompute it. `kps` = the batch's kp set
+    * ([[keyPartsOf]] its keys), which prunes the bands scan to the kp
+    * dirs the batch probes; a caller that observed it on a checkpoint
+    * passes it, else it is collected here (one job). Returns (doc_id,
+    * corpus_id, j) for every banded candidate whose exact Jaccard
+    * clears `minJaccard`; the refine is exact, so each returned pair is
+    * a TRUE match regardless of what banding missed. */
   def scoredPairs(spark: SparkSession, bands: DataFrame, shingles: DataFrame,
                   sigs: DataFrame,
                   minJaccard: Double = MinJaccard,
-                  maxBucket: Int = MaxBucket): DataFrame =
-    refine(candidates(bands, sigs, maxBucket).distinct(), shingles, sigs,
-           minJaccard)
-
-  /** (doc_id, corpus_id, cb) — the batch docs and the corpus docs they
-    * share a band key with, once per shared key ([[scoredPairs]]
-    * dedups; a per-doc verdict needs no dedup), hot buckets
-    * (> `maxBucket` corpus rows) dropped. `kps` = the batch's kp set ([[keyPartsOf]] its keys),
-    * which prunes the bands scan to the kp dirs the batch probes; a
-    * caller that observed it on a checkpoint passes it, else it is
-    * collected here (one job). */
-  def candidates(bands: DataFrame, sigs: DataFrame,
-                 maxBucket: Int = MaxBucket,
-                 kps: Option[Seq[Int]] = None): DataFrame = {
+                  maxBucket: Int = MaxBucket,
+                  kps: Option[Seq[Int]] = None): DataFrame = {
     val rows = sigs.select(col("doc_id"),
                            posexplode(col("keys")).as(Seq("band", "key")))
     val kpSet = kps.getOrElse(
@@ -395,30 +381,21 @@ object MinHashBandIndex {
       .join(rows.select("band", "key"), Seq("band", "key"), "left_semi")
       .withColumn("__bn", count(lit(1)).over(Window.partitionBy("band", "key")))
       .filter(col("__bn") <= maxBucket)
-    rows.join(probed, Seq("band", "key"))
-      .select(col("doc_id"), col("corpus_id"), blockOf(col("corpus_id")).as("cb"))
-  }
-
-  /** Exact-Jaccard refine of [[candidates]] `cand`: the candidate corpus
-    * docs' shingles come from `shingles` (corpus_id, sh, cb) by an
-    * equi-join on (cb, corpus_id). `blocks` = the `cb` values of
-    * `cand`: a caller that observed them on its candidates checkpoint
-    * passes them, and the `shingles/` scan reads only those
-    * partitions. */
-  def refine(cand: DataFrame, shingles: DataFrame, sigs: DataFrame,
-             minJaccard: Double = MinJaccard,
-             blocks: Option[Seq[Int]] = None): DataFrame = {
-    val shC = blocks.fold(shingles)(b => shingles.filter(col("cb").isin(b: _*)))
-      .select(col("cb"), col("corpus_id"), col("sh").as("sh_c"))
-    cand.join(shC, Seq("cb", "corpus_id"))
+    val cand = rows.join(probed, Seq("band", "key"))
+      .select(col("doc_id"), col("corpus_id")).distinct()
+    // exact-Jaccard refine on candidates only; shingles of the few
+    // candidate corpus docs come from the persisted set via equi-join.
+    val shC = shingles.withColumnRenamed("sh", "sh_c")
+    cand
       .join(sigs.select(col("doc_id"), col("sh")), Seq("doc_id"))
+      .join(shC, Seq("corpus_id"))
       .select(col("doc_id"), col("corpus_id"),
               round(Dedup.jaccard(col("sh"), col("sh_c")), 6).as("j"))
       .filter(col("j") >= minJaccard)
   }
 
   /** The distinct `kp` partitions a batch's band `keys` probe, as one
-    * array aggregate: what [[candidates]] prunes the bands scan to. */
+    * array aggregate: what [[scoredPairs]] prunes the bands scan to. */
   def keyPartsOf(keys: Column): Column =
     array_distinct(flatten(collect_set(
       transform(keys, k => pmod(k, lit(KeyParts.toLong)).cast("int")))))

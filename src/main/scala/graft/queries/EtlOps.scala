@@ -216,9 +216,6 @@ object EtlOps {
           .select(col("r.*"), col("arrival"))
         val deduped = graft.analytics.Materialize.shared(ArtifactEtl
           .dedupKeepFirst(raw, "id", col("arrival")).drop("arrival"))
-        // filled here, before the eight start together: a lazy
-        // persist is filled by whichever consumer reaches it first
-        deduped.count()
         val (meta, media, colors) = ArtifactEtl.transform(deduped)
         // pre-existing epoch (an earlier run of the same crawl):
         // identical rows for ids % 10 = 0 already sit in the store

@@ -604,16 +604,13 @@ object EventStreams {
     *    masks the gate from the next batch on, as on the batch gate.
     *  - One read per batch: the micro-batch is materialized once with
     *    its shingles + band keys (MinHashBandIndex.withSignatures), then
-    *    its banded candidates once, then its decisions; every consumer
-    *    reads those blocks, which the batch's scope drops when the
-    *    batch ends.
+    *    its decisions; every consumer reads those blocks, which the
+    *    batch's scope drops when the batch ends.
     *  - No action of its own for a side result: the batch's row count
-    *    and kp set, the candidates' `shingles/` blocks and the accepted
-    *    doc ids (≤ the batch) are observed on those three checkpoints
-    *    ([[Materialize.onceObserving]]). The kp set prunes the bands
-    *    probe, the blocks prune the refine's seed shingles scan, and the
-    *    ids select the segment rows from the batch's signatures without
-    *    a join.
+    *    and kp set and the accepted doc ids (≤ the batch) are observed
+    *    on those two checkpoints ([[Materialize.onceObserving]]). The kp
+    *    set prunes the bands probe, and the ids select the segment rows
+    *    from the batch's signatures without a join.
     *  - State: `decide(batch, nd)` is what lands in `outDir` (doc_id,
     *    keep, …); its keep = 1 docs land as the batch's segment in the
     *    two delta tables, which later batches read ([[landedBefore]]). */
@@ -626,7 +623,7 @@ object EventStreams {
     val seedBands = stream.sparkSession.read.parquet(s"$seedDir/bands")
       .select("corpus_id", "band", "key", "kp")
     val seedSh = stream.sparkSession.read.parquet(s"$seedDir/shingles")
-      .select("corpus_id", "sh", "cb")
+      .select("corpus_id", "sh")
     perBatch(stream, checkpointDir) { (landed, batchId) =>
       val spark = landed.sparkSession
       val (signed, seen) = Materialize.onceObserving(mh.withSignatures(spark, landed),
@@ -641,14 +638,11 @@ object EventStreams {
           .unionByName(landedBefore(spark, bandsDeltaDir, seedBands.schema, batchId))
         val shingles = seedSh.unionByName(
           landedBefore(spark, shinglesDeltaDir, seedSh.schema, batchId))
-        val (cand, probed) = Materialize.onceObserving(
-          mh.candidates(bands, sigs, kps = Some(seen("kps").asInstanceOf[Seq[Int]])),
-          collect_set(col("cb")).as("blocks"))
         // materialize the decisions BEFORE the segment writes mutate
         // the delta dirs their plan reads
         val (out, decided) = Materialize.onceObserving(decide(batch,
-            mh.verdicts(batch, mh.refine(cand, shingles, sigs,
-              blocks = Some(probed("blocks").asInstanceOf[Seq[Int]])))),
+            mh.verdicts(batch, mh.scoredPairs(spark, bands, shingles, sigs,
+              kps = Some(seen("kps").asInstanceOf[Seq[Int]])))),
           collect_set(when(col("keep") === 1, col("doc_id"))).as("accepted"))
         // the output and the two segment writes only read `out` and
         // `signed` blocks: independent, so they overlap

@@ -2100,13 +2100,11 @@ object StreamShapes {
     // are ≡ 0 mod 20, so the corpus quarter ≡ 1 mod 4 never hides
     // them)
     def live(c: org.apache.spark.sql.Column) = c % 4 === 1 || c % 20 === 0
-    // hash on the partition column before each partitioned write: the
-    // multi-split seed scan otherwise writes one file per (input split
-    // × kp) — ~2k tiny files that every later listing/read of the
-    // staged copy pays for (r17 JobProf: 0.2 s listing jobs + a slower
-    // fold append). One file per kp (cb) dir, writers parallel across
-    // the keys; the copy keeps the seed's layout, which the fold
-    // appends into. The two
+    // hash on kp before the partitioned write: the multi-split seed
+    // scan otherwise writes one file per (input split × kp) — ~2k tiny
+    // files that every later listing/read of the staged copy pays for
+    // (r17 JobProf: 0.2 s listing jobs + a slower fold append). One
+    // file per kp dir, writers parallel across the 64 keys. The two
     // staging writes are independent — overlap them (ParActions).
     graft.analytics.ParActions.both(
       () => s.read.parquet(s"$seedSrc/bands").filter(live(col("corpus_id")))
@@ -2114,8 +2112,7 @@ object StreamShapes {
         .write.partitionBy("kp").parquet(s"$work/seed/bands"),
       () => s.read.parquet(s"$seedSrc/shingles")
         .filter(live(col("corpus_id")))
-        .repartition(col("cb"))
-        .write.partitionBy("cb").parquet(s"$work/seed/shingles"))
+        .write.parquet(s"$work/seed/shingles"))
     // readers keep the live() filter: it is a no-op on the staged
     // slice and keeps the folded-arrival visibility rule explicit
     def seedBands = s.read.parquet(s"$work/seed/bands")

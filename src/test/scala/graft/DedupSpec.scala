@@ -634,10 +634,9 @@ class DedupSpec extends SparkSpec {
     // bands as if already purged (built without the doomed doc)…
     MinHashBandIndex.buildFrom(spark, dir,
       docs.filter(col("doc_id") =!= doomedId))
-    // …but shingles (in the index's cb layout) still carrying it, plus
-    // the intact tombstone
+    // …but shingles still carrying it, plus the intact tombstone
     MinHashBandIndex.segmentShingles(spark, docs)
-      .write.mode("overwrite").partitionBy("cb").parquet(s"$dir/shingles")
+      .write.mode("overwrite").parquet(s"$dir/shingles")
     assert(Tombstones.delete(spark, dir, Seq(doomedId).toDF("corpus_id"),
       idCol = "corpus_id") == 1L)
     val touched = MinHashBandIndex.purgeTombstones(spark, dir)

@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.analytics.{ClusteredEmbeddings, DataQuality, Materialize}
-import graft.functions.VectorOps
 
 /** Banded-vs-exact decon crossover measurement on STRUCTURED vs NOISE
   * embeddings (VERDICT r12 "What's missing #3").
@@ -18,7 +17,7 @@ import graft.functions.VectorOps
   * miss bound at s = 0.9, not for selectivity: even two ORTHOGONAL
   * vectors pass a 4-bit band with odds 1/16, hence ≥ 1 − (15/16)¹² ≈
   * 54 % of ANY data). This probe separates them: the same scorer
-  * ([[DataQuality.semanticDeconScoredWith]], parameterized bands×rows)
+  * ([[DataQuality.DeconIndex]]`.scored`, one index per bands×rows)
   * runs over both the hash-noise fixture and the mixture-of-centroids
   * fixture ([[ClusteredEmbeddings]]) at several band shapes, measuring
   * candidate rate, drop recall vs the exact pass (a banded drop is
@@ -92,11 +91,7 @@ object DeconCrossover {
       // exact pass: broadcast bench, map-side partial max, one row per
       // corpus vector — the dc02 production shape
       val (exactCk, exactSec) = timed {
-        Materialize.once(corpus
-          .crossJoin(broadcast(bench.select(col("embedding").as("qvec"))))
-          .groupBy("vec_id")
-          .agg(max(VectorOps.cosineNative(spark, col("embedding"),
-                                          col("qvec"))).as("mc")))
+        Materialize.once(DataQuality.exactScored(corpus, bench))
       }
       val exactTau = exactCk.filter(col("mc") >= tau).count()
       val exactStrong = exactCk.filter(col("mc") >= strongTau).count()
@@ -104,13 +99,11 @@ object DeconCrossover {
         s""""drops_tau":$exactTau,"drops_strong":$exactStrong}""")
 
       for ((b, r) <- Seq((12, 4), (10, 6), (8, 7), (6, 8))) Materialize.scoped {
-        val (chunks, buildSec) = timed {
-          DataQuality.deconBenchBucketChunks(bench, bands = b, rows = r)
-            .map(Materialize.once)
+        val (index, buildSec) = timed {
+          DataQuality.DeconIndex(bench, Some((b, r)), once = true)
         }
         val (ck, scoreSec) = timed {
-          Materialize.once(
-            DataQuality.semanticDeconScoredWith(spark, corpus, chunks, b, r))
+          Materialize.once(index.scored(corpus))
         }
         val agg = ck.agg(
           sum("n_cand").as("cand"),

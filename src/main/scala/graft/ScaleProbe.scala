@@ -404,11 +404,12 @@ object ScaleProbe {
             b2))
         }
         time(s"st20_decon_$tag") {
-          force(DataQuality.semanticDeconLshDropsOf(spark,
-            emb.filter(col("label") =!= 0 && col("vec_id") % 10 === 0)
-              .select("vec_id", "embedding"),
-            emb.filter(col("label") === 0)
-              .select(col("vec_id").as("bench_id"), col("embedding"))))
+          force(DataQuality.DeconIndex(
+              emb.filter(col("label") === 0)
+                .select(col("vec_id").as("bench_id"), col("embedding")),
+              Some((DataQuality.DeconLshBands, DataQuality.DeconLshRows)))
+            .drops(emb.filter(col("label") =!= 0 && col("vec_id") % 10 === 0)
+              .select("vec_id", "embedding")))
         }
         time(s"st20_chain_$tag") {
           force(graft.streaming.StreamShapes

@@ -23,18 +23,15 @@ object Bounded {
     * ceiling and a production driver heap. */
   val MaxBenchRows = 2000000L
 
-  private val checked = new ConcurrentHashMap[String, java.lang.Long]()
+  private val memo = new ConcurrentHashMap[String, AnyRef]()
 
   /** `broadcast(df)` with the bounded-bench contract asserted. The
     * cache key includes the logical plan's semantic hash AND a content
     * stamp of the scanned files (path + mtime + length), so the same
     * tag over different data (tests, multiple corpora in one JVM)
     * re-counts — and so does data REGENERATED IN PLACE at the same
-    * path, which the plan hash alone cannot see. The count (a Spark
-    * job) runs OUTSIDE the map's compute lambda: get-then-putIfAbsent
-    * instead of computeIfAbsent, so no ConcurrentHashMap bin lock is
-    * held for the job's duration (a concurrent duplicate count is
-    * harmless; a stalled bin is not). The stamp is [[planStamp]]. */
+    * path, which the plan hash alone cannot see. The stamp is
+    * [[planStamp]]; the count is memoized by [[stampMemo]]. */
   def broadcastBench(df: DataFrame, tag: String,
                      maxRows: Long = MaxBenchRows): DataFrame = {
     checkedRowCount(df, tag, maxRows)
@@ -52,24 +49,35 @@ object Bounded {
     df.queryExecution.logical.semanticHash() + ":" +
       OfflineArtifact.filesStamp(df.sparkSession, df.inputFiles.toSeq)
 
+  /** Per-JVM memo of a value derived from `df`, keyed by `key` and
+    * [[planStamp]]: one map serves every such value (bounded counts,
+    * fetched query vectors), each under its own key prefix. `compute`
+    * (a Spark job) runs OUTSIDE the map's compute lambda:
+    * get-then-putIfAbsent instead of computeIfAbsent, so no
+    * ConcurrentHashMap bin lock is held for the job's duration (a
+    * concurrent duplicate job is harmless; a stalled bin is not). */
+  private[analytics] def stampMemo[V <: AnyRef](df: DataFrame, key: String)
+                                               (compute: => V): V = {
+    val k = key + "@" + planStamp(df)
+    val cached = memo.get(k)
+    if (cached != null) cached.asInstanceOf[V]
+    else {
+      val v = compute
+      val prev = memo.putIfAbsent(k, v)
+      (if (prev != null) prev else v).asInstanceOf[V]
+    }
+  }
+
   /** The count-and-assert half of [[broadcastBench]], exposed for
     * callers that need the bounded frame's ROW COUNT as well as the
     * contract (e.g. the decon serve sizing its band-bucket map chunks,
-    * [[DataQuality.deconBenchBucketChunks]]) — same content-stamped
+    * [[DataQuality.DeconIndex]]) — same content-stamped
     * cache, so asking for the count and then broadcasting under the
     * same tag pays one count job, not two. */
   def checkedRowCount(df: DataFrame, tag: String,
                       maxRows: Long = MaxBenchRows): Long = {
-    val key = tag + ":" + planStamp(df)
-    val n = {
-      val cached = checked.get(key)
-      if (cached != null) cached.longValue()
-      else {
-        val counted = java.lang.Long.valueOf(df.count())
-        val prev = checked.putIfAbsent(key, counted)
-        (if (prev != null) prev else counted).longValue()
-      }
-    }
+    val n = stampMemo(df, "count:" + tag)(
+      java.lang.Long.valueOf(df.count())).longValue()
     require(n <= maxRows,
       s"bench/eval frame '$tag' has $n rows (bound $maxRows): a frame " +
         "that scales with the corpus must not be broadcast — route it " +

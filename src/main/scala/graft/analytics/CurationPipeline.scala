@@ -491,13 +491,8 @@ object CurationPipeline {
         val text = DataQuality.qualityFlags(table(s, d, "documents"))
           .select(col("doc_id"), col("source"), col("keep").as("keep_text"))
         val emb = table(s, d, "embeddings")
-        val bench = DataQuality.benchSuite(emb)
-          .select(col("embedding").as("qvec"))
-        val vecKeep = emb.filter(col("label") =!= 0)
-          .crossJoin(Bounded.broadcastBench(bench, "cp05.bench-vecs"))
-          .groupBy("vec_id")
-          .agg(max(graft.functions.VectorOps.cosineNative(
-                 s, col("embedding"), col("qvec"))).as("mc"))
+        val vecKeep = DataQuality.exactScored(emb.filter(col("label") =!= 0),
+                                              DataQuality.benchSuite(emb))
           .select(col("vec_id").as("doc_id"),
                   (col("mc") < DataQuality.SemanticDeconTau).cast("int")
                     .as("keep_vec"))
@@ -575,13 +570,9 @@ object CurationPipeline {
       "cp05x_vector_gate_full",
       (s, d) => {
         val emb = table(s, d, "embeddings")
-        val bench = emb.filter(col("label") === 0)
-          .select(col("embedding").as("qvec"))
-        emb.filter(col("label") =!= 0 && col("vec_id") % 4 === 1)
-          .crossJoin(Bounded.broadcastBench(bench, "cp05x.bench-vecs"))
-          .groupBy("vec_id")
-          .agg(max(graft.functions.VectorOps.cosineNative(
-                 s, col("embedding"), col("qvec"))).as("mc"))
+        DataQuality.exactScored(
+            emb.filter(col("label") =!= 0 && col("vec_id") % 4 === 1),
+            emb.filter(col("label") === 0))
           .select(col("vec_id").as("doc_id"),
                   round(col("mc"), 6).as("max_benchmark_sim"),
                   (col("mc") < DataQuality.SemanticDeconTau).cast("int")
@@ -1043,13 +1034,8 @@ object CurationPipeline {
     // drop; docs without an embedding row keep keep_vec = 1; the
     // fixed-size benchmark suite keeps this stage linear in the corpus)
     val emb = table(s, d, "embeddings")
-    val bench = DataQuality.benchSuite(emb)
-      .select(col("embedding").as("qvec"))
-    val vecKeep = emb.filter(col("label") =!= 0)
-      .crossJoin(Bounded.broadcastBench(bench, "cp06.bench-vecs"))
-      .groupBy("vec_id")
-      .agg(max(graft.functions.VectorOps.cosineNative(
-             s, col("embedding"), col("qvec"))).as("mc"))
+    val vecKeep = DataQuality.exactScored(emb.filter(col("label") =!= 0),
+                                          DataQuality.benchSuite(emb))
       .select(col("vec_id").as("doc_id"),
               (col("mc") < DataQuality.SemanticDeconTau).cast("int")
                 .as("keep_vec"))

@@ -145,9 +145,9 @@ object DataQuality {
   val DeconAutoBenchThreshold = 10000L
 
   /** The measured config choice for a bench of `nBench` rows — the §D
-    * crossover boundary as code, used by the STREAMING gate's auto
-    * default ([[graft.streaming.EventStreams.deconGate]] with
-    * bands = 0). The registry entries keep their EXPLICIT configs:
+    * crossover boundary as code: the config a [[DeconIndex]] built
+    * with no explicit config serves (the streaming gates' default,
+    * dc06). The registry entries keep their EXPLICIT configs:
     * dc03/st18/st20 pin the 12×4 recall-anchor shape (their audit
     * bounds derive from it, and the scale gates replay them at corpora
     * whose bench crosses this threshold), dc05 pins 8×7. */
@@ -155,50 +155,24 @@ object DataQuality {
     if (nBench >= DeconAutoBenchThreshold) (DeconSelBands, DeconSelRows)
     else (DeconLshBands, DeconLshRows)
 
-  /** dc02's LSH prefilter — the scale path for benchmark sets past
-    * ~10⁵ rows (dc02's exact corpus×benchmark pass stays the small-set
-    * fast path). Both sides hash once to a 48-bit sign signature
-    * (map-only, no weight broadcast), split into [[DeconLshBands]]
-    * band keys; candidates are (corpus, bench) pairs sharing ANY band
-    * bucket, refined with EXACT cosine, dropped at the same
-    * [[SemanticDeconTau]] gate. Refinement is exact, so the drop set is
-    * always a SUBSET of dc02's (precision 1 by construction — dc03p);
-    * recall is the banded-LSH bound above (dc03r). Scale shape: the
-    * bench BAND INDEX is one broadcast row (a map from band key to its
-    * bucket of (bench_id, qvec) entries — eval-suite-sized by the
-    * [[Bounded]] contract); the corpus is a single MAP-ONLY projection
-    * that looks up its 12 buckets per row, dedups the union, and takes
-    * the exact-cosine max in-place. ZERO shuffle on candidate pairs —
-    * the r12 100× gate killed the previous shuffled band equi-join: on
-    * the fixture's hash-noise vectors ~54 % of all (corpus, bench)
-    * pairs share a band, so the join materialized ~1.9e9 pair rows
-    * (each carrying both 256-byte vectors, countDistinct forcing the
-    * full pair set through an Exchange) and filled the disk at
-    * sf10. The pair SCORING cost is inherent to banding noise; the
-    * pair SHUFFLE never was. */
-  def semanticDeconLshDrops(s: org.apache.spark.sql.SparkSession,
-                            emb: org.apache.spark.sql.DataFrame)
+  /** EXACT semantic decon: (vec_id, mc), each `corpus` (vec_id,
+    * embedding) row's max cosine against EVERY `bench` embedding — the
+    * one exact scan behind dc02, the anchors and audits, cp05/cp06 and
+    * the exact ledger; each caller adds only its own projection and
+    * tau filter. Scale shape: the bench broadcasts under the
+    * [[Bounded]] contract (a bench is fixed-size by convention), the
+    * corpus flows map-only through the dot products, and the max is
+    * partially aggregated map-side, so the shuffle carries ONE row per
+    * corpus vector. */
+  def exactScored(corpus: org.apache.spark.sql.DataFrame,
+                  bench: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
-    semanticDeconLshDropsOf(s,
-      emb.filter(col("label") =!= 0).select("vec_id", "embedding"),
-      emb.filter(col("label") === 0)
-        .select(col("vec_id").as("bench_id"), col("embedding")))
-
-  /** [[semanticDeconLshDrops]] with the two sides passed explicitly —
-    * the form the STREAMING gate needs (arriving corpus batch vs a
-    * static benchmark frame, st18 / EventStreams.deconGate). `corpus`
-    * carries (vec_id, embedding), `bench` (bench_id, embedding).
-    * One-shot convenience: builds the bench bucket chunks inline.
-    * Callers that score MANY slices against the same bench (streaming
-    * gates, multi-batch chains) must prebuild with
-    * [[deconBenchBucketChunks]] and call [[semanticDeconLshDropsWith]]
-    * instead — rebuilding the bucket map per call was the structural
-    * cause of st18's r12 2.7× regression. */
-  def semanticDeconLshDropsOf(s: org.apache.spark.sql.SparkSession,
-                              corpus: org.apache.spark.sql.DataFrame,
-                              benchIn: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    semanticDeconLshDropsWith(s, corpus, deconBenchBucketChunks(benchIn))
+    corpus
+      .crossJoin(Bounded.broadcastBench(
+        bench.select(col("embedding").as("qvec")), "decon.bench-vecs"))
+      .groupBy("vec_id")
+      .agg(max(graft.functions.VectorOps.cosineNative(
+             corpus.sparkSession, col("embedding"), col("qvec"))).as("mc"))
 
   /** Rows per band-bucket map CHUNK. Each bench vector costs ~3 KB in
     * the map row (64-float qvec struct duplicated across its 12 band
@@ -219,9 +193,20 @@ object DataQuality {
     * selectivity comes from data structure, not banding. */
   val DeconMapChunkRows = 10000L
 
-  /** The bench side of the map-only banded decon serve, prebuilt: a
-    * sequence of ONE-ROW frames, each a DENSE bucket table
-    * `bkts: array<array<struct<bench_id, qvec>>>` of length
+  /** BANDED semantic decon (dc02's LSH prefilter — the scale path for
+    * benchmark sets past ~10⁵ rows): the bench side prebuilt, together
+    * with the (bands, rows) it was built with. Both sides hash once to
+    * a `bands`·`rows`-bit sign signature split into `bands` band keys;
+    * candidates are (corpus, bench) pairs sharing ANY band bucket,
+    * refined with EXACT cosine, so the drop set at [[SemanticDeconTau]]
+    * is always a SUBSET of the exact one (precision 1 by construction —
+    * dc03p); recall is the banded-LSH bound (dc03r). Scoring always
+    * uses the index's own config, so build and score cannot disagree (a
+    * mismatch would put every slot lookup in the wrong band and empty
+    * every bucket silently).
+    *
+    * The bench side is a sequence of ONE-ROW frames, each a DENSE bucket
+    * table `bkts: array<array<struct<bench_id, qvec>>>` of length
     * bands·2^rows indexed by slot = band·2^rows + bandKey (missing
     * slots null), over an id-disjoint chunk of the bench (see
     * [[DeconMapChunkRows]]). Dense indexing replaces the r12
@@ -231,174 +216,148 @@ object DataQuality {
     * HOF [[graft.functions.VectorOps.simhashBucket]] stays the
     * independent REFERENCE both the native sig and the corpus-side
     * scorer ([[graft.functions.DeconScore]]) are spec-pinned against).
-    * Build ONCE per gate/stream, then score any number of slices with
-    * [[semanticDeconLshDropsWith]]; callers that serve many batches
-    * should [[Materialize.once]] each frame so the simhash →
-    * band-explode → groupBy → dense-table aggregation runs once, not
-    * per micro-batch. */
-  def deconBenchBucketChunks(benchIn: org.apache.spark.sql.DataFrame,
-                             chunkRows: Long = DeconMapChunkRows,
-                             bands: Int = DeconLshBands,
-                             rows: Int = DeconLshRows)
-      : Seq[org.apache.spark.sql.DataFrame] = {
-    // (bands, rows) defaults to dc03's recall-anchored 12×4 config; the
-    // clustered-fixture crossover probe (graft.DeconCrossover) passes
-    // selectivity configs (e.g. 6×8) — same machinery, same scorer.
-    val nBits = bands * rows
-    require(nBits <= 63, s"signature does not fit one long: $nBits bits")
-    // nSlots = bands << rows and the per-band slot base are Int
-    // arithmetic: without this bound, e.g. (bands=2, rows=31) passes
-    // the nBits check yet overflows to a negative slot base and a
-    // silently broken bucket table. Mirrors DeconScore's guard.
-    require(bands >= 1 && rows >= 1 && rows <= 24,
-      s"need 1 <= rows <= 24 (slot arithmetic is Int), got " +
-        s"($bands bands, $rows rows)")
-    require(chunkRows >= 1, s"chunkRows must be positive: $chunkRows")
-    val mask = (1L << rows) - 1
-    val nSlots = bands << rows
-    // bench-side signature: the native twin of the scorer's signature
-    // (r15 — the HOF reference form evaluated nBits × dim interpreted
-    // lambdas per row: invisible at a 199-row bench, two 7.6 s
-    // single-task stages at dc06's 10⁴-row bench and worse at the 100×
-    // corpus' organic 2·10⁴ bench; SimhashSigSpec pins native ≡ HOF
-    // bit-for-bit, nulls and empties included)
-    val benchSel = benchIn.select(col("bench_id"), col("embedding"))
-    // same tag + content-stamped cache as a broadcastBench call, so
-    // the count job is shared with any broadcast of the same frame
-    val n = Bounded.checkedRowCount(benchSel, "decon.band-index",
-                                    maxRows = 100000L)
-    val k = math.max(1L, (n + chunkRows - 1) / chunkRows).toInt
-    (0 until k).map { c =>
-      val side =
-        if (k == 1) benchSel
-        else benchSel.filter(
-          pmod(xxhash64(col("bench_id")), lit(k.toLong)) === c)
-      side
-        .withColumn("__sig",
-          graft.functions.Natives.call(benchIn.sparkSession,
-            "simhash_sig_n", col("embedding"), lit(nBits)))
-        .select(explode(array((0 until bands).map { b =>
-          struct((lit(b << rows) +
-                  shiftright(col("__sig"), b * rows)
-                    .bitwiseAND(lit(mask)).cast("int")).as("slot"),
-                 struct(col("bench_id"),
-                        col("embedding").as("qvec")).as("e"))
-        }: _*)).as("x"))
-        .groupBy(col("x.slot").as("slot"))
-        .agg(collect_list(col("x.e")).as("bucket"))
-        .agg(map_from_entries(collect_list(struct(col("slot"), col("bucket"))))
-               .as("m"))
-        .select(transform(sequence(lit(0), lit(nSlots - 1)),
-                          sl => element_at(col("m"), sl))
-          // the chunk frame CARRIES its (bands, rows) in the column
-          // metadata so the scorer can verify them: a config mismatch
-          // between build and score silently empties every bucket
-          // (total recall loss), and before this stamp the contract
-          // was a doc comment only (ADVICE r15)
-          .as("bkts", new org.apache.spark.sql.types.MetadataBuilder()
-            .putLong(ChunkBandsKey, bands.toLong)
-            .putLong(ChunkRowsKey, rows.toLong).build()))
-    }
-  }
+    * Build ONCE per gate/stream, then score any number of slices. */
+  final class DeconIndex private (
+      val config: (Int, Int),
+      private[graft] val chunks: Seq[org.apache.spark.sql.DataFrame]) {
 
-  /** Column-metadata keys [[deconBenchBucketChunks]] stamps onto each
-    * chunk's `bkts` column and [[semanticDeconScoredWith]] verifies. */
-  private[graft] val ChunkBandsKey = "graft.decon.bands"
-  private[graft] val ChunkRowsKey = "graft.decon.rows"
-
-  /** The map-only scoring pass against PREBUILT bench bucket chunks:
-    * ONE native [[graft.functions.DeconScore]] eval per corpus row per
-    * chunk — signature, O(1) dense bucket loads, in-place exact-cosine
-    * max and distinct-candidate count in a single primitive loop (the
-    * r12 `transform`-lambda formulation evaluated interpreted at
-    * ~76 ms/row — 136 s of executor CPU for 1 801 fixture rows). The
-    * max over candidates is duplicate-insensitive so nothing is ever
-    * materialized per row beyond the score struct; per-chunk maxima
-    * combine with `greatest` (null-skipping, NaN-greatest — the same
-    * double ordering as the scorer) and per-chunk distinct counts ADD
-    * because the chunks partition bench ids. A corpus row whose
-    * buckets are all empty yields a null max and falls out of the tau
-    * filter, matching dc02's inner join. ZERO shuffle on candidate
-    * pairs — the r12 100× gate killed the previous shuffled band
-    * equi-join: on the fixture's hash-noise vectors ~54 % of all
-    * (corpus, bench) pairs share a band, so the join materialized
-    * ~1.9e9 pair rows and filled the disk at sf10. The pair SCORING
-    * cost is inherent to banding noise; the pair SHUFFLE never was. */
-  def semanticDeconLshDropsWith(s: org.apache.spark.sql.SparkSession,
-                                corpus: org.apache.spark.sql.DataFrame,
-                                chunks: Seq[org.apache.spark.sql.DataFrame],
-                                bands: Int = DeconLshBands,
-                                rows: Int = DeconLshRows)
-      : org.apache.spark.sql.DataFrame =
-    semanticDeconScoredWith(s, corpus, chunks, bands, rows)
-      .filter(col("mc") >= SemanticDeconTau)
-      .select(col("vec_id"), round(col("mc"), 6).as("max_cand_sim"),
-              col("n_cand"))
-
-  /** The scoring pass WITHOUT the tau filter: every corpus row's
-    * (vec_id, mc, n_cand) — mc null when no band bucket held a
-    * candidate. The drop gate above is a filter over this frame; the
-    * crossover probe reads it directly to measure CANDIDATE RATES
-    * (Σ n_cand / (corpus × bench)) per (bands, rows) config, which the
-    * filtered form hides. `chunks` must be built with the same
-    * (bands, rows) via [[deconBenchBucketChunks]]. */
-  def semanticDeconScoredWith(s: org.apache.spark.sql.SparkSession,
-                              corpus: org.apache.spark.sql.DataFrame,
-                              chunks: Seq[org.apache.spark.sql.DataFrame],
-                              bands: Int = DeconLshBands,
-                              rows: Int = DeconLshRows)
-      : org.apache.spark.sql.DataFrame = {
-    require(chunks.nonEmpty, "at least one bench bucket chunk required")
-    // Loud config check (ADVICE r15): score with the SAME (bands, rows)
-    // the chunks were built with, or every dense-table slot lookup
-    // lands in the wrong band partition and the gate silently passes
-    // everything. Chunks built before the stamp existed (no metadata)
-    // pass — the check tightens, never breaks, old callers.
-    chunks.foreach { ch =>
-      val md = ch.schema("bkts").metadata
-      // both stamp keys or neither: a chunk carrying one but not the
-      // other is a corrupt stamp, and reading the missing key would
-      // throw a bare NoSuchElementException instead of the intended
-      // loud message (ADVICE r16)
-      require(md.contains(ChunkBandsKey) == md.contains(ChunkRowsKey),
-        s"corrupt decon chunk stamp: bands key present=" +
-          s"${md.contains(ChunkBandsKey)}, rows key present=" +
-          s"${md.contains(ChunkRowsKey)} — rebuild the chunks via " +
-          "deconBenchBucketChunks, which always writes both")
-      if (md.contains(ChunkBandsKey)) {
-        val (cb, cr) = (md.getLong(ChunkBandsKey), md.getLong(ChunkRowsKey))
-        require(cb == bands && cr == rows,
-          s"decon config mismatch: chunks built with (bands=$cb, " +
-            s"rows=$cr) but scoring with (bands=$bands, rows=$rows) — " +
-            "this would empty every bucket silently; thread the " +
-            "RESOLVED config to both deconBenchBucketChunks and the " +
-            "scoring call")
+    /** The map-only scoring pass: `corpus` (vec_id, embedding, any
+      * other columns) with `embedding` replaced by `mc` — the max exact
+      * cosine over the row's candidates, null when no band bucket held
+      * one (it then falls out of any tau filter, matching the exact
+      * inner join) — and `n_cand`, its distinct candidate count. ONE
+      * native [[graft.functions.DeconScore]] eval per corpus row per
+      * chunk — signature, O(1) dense bucket loads, in-place
+      * exact-cosine max and distinct-candidate count in a single
+      * primitive loop (the r12 `transform`-lambda formulation evaluated
+      * interpreted at ~76 ms/row — 136 s of executor CPU for 1 801
+      * fixture rows). The max over candidates is duplicate-insensitive
+      * so nothing is ever materialized per row beyond the score struct;
+      * per-chunk maxima combine with `greatest` (null-skipping,
+      * NaN-greatest — the same double ordering as the scorer) and
+      * per-chunk distinct counts ADD because the chunks partition bench
+      * ids. ZERO shuffle on candidate pairs — the r12 100× gate killed
+      * the previous shuffled band equi-join: on the fixture's
+      * hash-noise vectors ~54 % of all (corpus, bench) pairs share a
+      * band, so the join materialized ~1.9e9 pair rows and filled the
+      * disk at sf10. The pair SCORING cost is inherent to banding
+      * noise; the pair SHUFFLE never was. The crossover probe reads
+      * this frame directly to measure CANDIDATE RATES
+      * (Σ n_cand / (corpus × bench)), which the tau filter hides. */
+    def scored(corpus: org.apache.spark.sql.DataFrame)
+        : org.apache.spark.sql.DataFrame = {
+      val (bands, rows) = config
+      val keys = corpus.columns.filter(_ != "embedding").map(col).toSeq
+      // The scoring pass is COMPUTE-dense (~bench/2 cosines per corpus
+      // row), so byte-sized parquet splits starve it: at sf10 the whole
+      // 200k-row corpus is two 128 MB splits = two tasks for 2.7e9
+      // cosines. One linear round-robin shuffle of the (tiny) corpus
+      // rows buys full-width parallelism at any scale.
+      val joined = chunks.zipWithIndex.foldLeft(
+        corpus.repartition(corpus.sparkSession.sparkContext.defaultParallelism)) {
+        case (acc, (ch, c)) =>
+          acc.crossJoin(broadcast(ch.select(col("bkts").as(s"__bkts_$c"))))
       }
+      // analysis resolves against the ROOT frame's session, which in the
+      // streaming gates is the driving session, not the micro-batch clone
+      def score(c: Int) = graft.functions.Natives.call(corpus.sparkSession,
+        "decon_score", col("embedding"), col(s"__bkts_$c"), lit(bands),
+        lit(rows))
+      val scores = joined.select(
+        keys ++ chunks.indices.map(c => score(c).as(s"__s_$c")): _*)
+      val mcs = chunks.indices.map(c => col(s"__s_$c").getField("mc"))
+      val mc = if (mcs.size == 1) mcs.head else greatest(mcs: _*)
+      val nCand = chunks.indices.map(c => col(s"__s_$c").getField("n_cand"))
+        .reduce(_ + _)
+      scores.select(keys ++ Seq(mc.as("mc"), nCand.as("n_cand")): _*)
     }
-    // The scoring pass is COMPUTE-dense (~bench/2 cosines per corpus
-    // row), so byte-sized parquet splits starve it: at sf10 the whole
-    // 200k-row corpus is two 128 MB splits = two tasks for 2.7e9
-    // cosines. One linear round-robin shuffle of the (tiny) corpus
-    // rows buys full-width parallelism at any scale.
-    val joined = chunks.zipWithIndex.foldLeft(
-      corpus.select(col("vec_id"), col("embedding"))
-        .repartition(s.sparkContext.defaultParallelism)) {
-      case (acc, (ch, c)) =>
-        acc.crossJoin(broadcast(ch.select(col("bkts").as(s"__bkts_$c"))))
-    }
-    // analysis resolves against the ROOT frame's session, which in the
-    // streaming gates is the driving session, not the micro-batch clone `s`
-    def score(c: Int) = graft.functions.Natives.call(corpus.sparkSession,
-      "decon_score", col("embedding"), col(s"__bkts_$c"), lit(bands),
-      lit(rows))
-    val scored = joined.select(
-      col("vec_id") +: chunks.indices.map(c => score(c).as(s"__s_$c")): _*)
-    val mcs = chunks.indices.map(c => col(s"__s_$c").getField("mc"))
-    val mc = if (mcs.size == 1) mcs.head else greatest(mcs: _*)
-    val nCand = chunks.indices.map(c => col(s"__s_$c").getField("n_cand"))
-      .reduce(_ + _)
-    scored.select(col("vec_id"), mc.as("mc"), nCand.as("n_cand"))
+
+    /** The drop gate: (vec_id, max_cand_sim, n_cand) of every `corpus`
+      * (vec_id, embedding) row whose candidate max reaches
+      * [[SemanticDeconTau]]. */
+    def drops(corpus: org.apache.spark.sql.DataFrame)
+        : org.apache.spark.sql.DataFrame =
+      scored(corpus)
+        .filter(col("mc") >= SemanticDeconTau)
+        .select(col("vec_id"), round(col("mc"), 6).as("max_cand_sim"),
+                col("n_cand"))
   }
+
+  object DeconIndex {
+
+    /** The index over `benchIn` (bench_id, embedding). `config` is
+      * (bands, rows); None is AUTO — [[deconConfigFor]] applied to the
+      * bench's row count (the content-stamped count the chunk sizing
+      * pays anyway). `once` checkpoints each chunk
+      * ([[Materialize.once]]), so a caller that scores many batches
+      * runs the simhash → band-explode → groupBy → dense-table
+      * aggregation once, not per batch. */
+    def apply(benchIn: org.apache.spark.sql.DataFrame,
+              config: Option[(Int, Int)] = None,
+              once: Boolean = false,
+              chunkRows: Long = DeconMapChunkRows): DeconIndex = {
+      require(chunkRows >= 1, s"chunkRows must be positive: $chunkRows")
+      val benchSel = benchIn.select(col("bench_id"), col("embedding"))
+      // same tag + content-stamped cache as a broadcastBench call, so
+      // the count job is shared with any broadcast of the same frame
+      val n = Bounded.checkedRowCount(benchSel, "decon.band-index",
+                                      maxRows = 100000L)
+      val (bands, rows) = config.getOrElse(deconConfigFor(n))
+      val nBits = bands * rows
+      require(nBits <= 63, s"signature does not fit one long: $nBits bits")
+      // nSlots = bands << rows and the per-band slot base are Int
+      // arithmetic: without this bound, e.g. (bands=2, rows=31) passes
+      // the nBits check yet overflows to a negative slot base and a
+      // silently broken bucket table. Mirrors DeconScore's guard.
+      require(bands >= 1 && rows >= 1 && rows <= 24,
+        s"need 1 <= rows <= 24 (slot arithmetic is Int), got " +
+          s"($bands bands, $rows rows)")
+      val mask = (1L << rows) - 1
+      val nSlots = bands << rows
+      // bench-side signature: the native twin of the scorer's signature
+      // (r15 — the HOF reference form evaluated nBits × dim interpreted
+      // lambdas per row: invisible at a 199-row bench, two 7.6 s
+      // single-task stages at dc06's 10⁴-row bench and worse at the 100×
+      // corpus' organic 2·10⁴ bench; SimhashSigSpec pins native ≡ HOF
+      // bit-for-bit, nulls and empties included)
+      val k = math.max(1L, (n + chunkRows - 1) / chunkRows).toInt
+      val chunks = (0 until k).map { c =>
+        val side =
+          if (k == 1) benchSel
+          else benchSel.filter(
+            pmod(xxhash64(col("bench_id")), lit(k.toLong)) === c)
+        val chunk = side
+          .withColumn("__sig",
+            graft.functions.Natives.call(benchIn.sparkSession,
+              "simhash_sig_n", col("embedding"), lit(nBits)))
+          .select(explode(array((0 until bands).map { b =>
+            struct((lit(b << rows) +
+                    shiftright(col("__sig"), b * rows)
+                      .bitwiseAND(lit(mask)).cast("int")).as("slot"),
+                   struct(col("bench_id"),
+                          col("embedding").as("qvec")).as("e"))
+          }: _*)).as("x"))
+          .groupBy(col("x.slot").as("slot"))
+          .agg(collect_list(col("x.e")).as("bucket"))
+          .agg(map_from_entries(collect_list(struct(col("slot"), col("bucket"))))
+                 .as("m"))
+          .select(transform(sequence(lit(0), lit(nSlots - 1)),
+                            sl => element_at(col("m"), sl)).as("bkts"))
+        if (once) Materialize.once(chunk) else chunk
+      }
+      new DeconIndex((bands, rows), chunks)
+    }
+  }
+
+  /** dc03's banded serve, which its precision and recall anchors
+    * replay: `emb`'s label-0 rows indexed at the 12×4 recall-anchor
+    * config, gating every other row. */
+  private[graft] def anchorDrops(emb: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    DeconIndex(emb.filter(col("label") === 0)
+                 .select(col("vec_id").as("bench_id"), col("embedding")),
+               Some((DeconLshBands, DeconLshRows)))
+      .drops(emb.filter(col("label") =!= 0).select("vec_id", "embedding"))
 
   /** (doc_id, g) rows: md5 keys of word `n`-grams of `docs.text` — the
     * shared gram pipeline behind the batch ingest gate (id01), the
@@ -1121,12 +1080,7 @@ object DataQuality {
       "dc02_semantic_decon",
       (s, d) => {
         val emb = table(s, d, "embeddings")
-        val bench = benchSuite(emb).select(col("embedding").as("qvec"))
-        emb.filter(col("label") =!= 0)
-          .crossJoin(Bounded.broadcastBench(bench, "dc02.bench-vecs"))
-          .groupBy("vec_id")
-          .agg(max(graft.functions.VectorOps.cosineNative(
-                 s, col("embedding"), col("qvec"))).as("mc"))
+        exactScored(emb.filter(col("label") =!= 0), benchSuite(emb))
           .select(col("vec_id"),
                   round(col("mc"), 6).as("max_benchmark_sim"),
                   (col("mc") < SemanticDeconTau).cast("int").as("keep"))
@@ -1161,13 +1115,8 @@ object DataQuality {
       "dc02x_semantic_decon_full",
       (s, d) => {
         val emb = table(s, d, "embeddings")
-        val bench = emb.filter(col("label") === 0)
-          .select(col("embedding").as("qvec"))
-        emb.filter(col("label") =!= 0)
-          .crossJoin(Bounded.broadcastBench(bench, "dc02x.bench-vecs"))
-          .groupBy("vec_id")
-          .agg(max(graft.functions.VectorOps.cosineNative(
-                 s, col("embedding"), col("qvec"))).as("mc"))
+        exactScored(emb.filter(col("label") =!= 0),
+                    emb.filter(col("label") === 0))
           .select(col("vec_id"),
                   round(col("mc"), 6).as("max_benchmark_sim"),
                   (col("mc") < SemanticDeconTau).cast("int").as("keep"))
@@ -1212,15 +1161,10 @@ object DataQuality {
       "dc03_semantic_decon_lsh",
       (s, d) => {
         val emb = table(s, d, "embeddings")
-        val served = Materialize.once(semanticDeconLshDrops(s, emb))
+        val served = Materialize.once(anchorDrops(emb))
         val audit = emb.filter(col("label") =!= 0 && col("vec_id") % 4 === 1)
         val exact = Materialize.once(
-          audit.crossJoin(Bounded.broadcastBench(
-              emb.filter(col("label") === 0)
-                .select(col("embedding").as("qvec")), "dc03.bench-vecs"))
-            .groupBy("vec_id")
-            .agg(max(graft.functions.VectorOps.cosineNative(
-                   s, col("embedding"), col("qvec"))).as("mc"))
+          exactScored(audit, emb.filter(col("label") === 0))
             .filter(col("mc") >= SemanticDeconTau)
             .select(col("vec_id"), round(col("mc"), 6).as("emc")))
         val sAud = served.filter(col("vec_id") % 4 === 1)
@@ -1277,16 +1221,11 @@ object DataQuality {
       "dc03p_decon_precision",
       (s, d) => {
         val emb = table(s, d, "embeddings")
-        val exactDrops = emb.filter(col("label") =!= 0)
-          .crossJoin(Bounded.broadcastBench(
-            emb.filter(col("label") === 0)
-              .select(col("embedding").as("qvec")), "dc03p.bench-vecs"))
-          .groupBy("vec_id")
-          .agg(max(graft.functions.VectorOps.cosineNative(
-                 s, col("embedding"), col("qvec"))).as("mc"))
+        val exactDrops = exactScored(emb.filter(col("label") =!= 0),
+                                     emb.filter(col("label") === 0))
           .filter(col("mc") >= SemanticDeconTau)
           .select("vec_id")
-        semanticDeconLshDrops(s, emb).select("vec_id")
+        anchorDrops(emb).select("vec_id")
           .except(exactDrops)
           .orderBy("vec_id")
       },
@@ -1316,17 +1255,12 @@ object DataQuality {
         require(missBound < 1e-4,
           s"band config too weak for a recall anchor: miss=$missBound")
         val emb = table(s, d, "embeddings")
-        val strongDrops = emb.filter(col("label") =!= 0)
-          .crossJoin(Bounded.broadcastBench(
-            emb.filter(col("label") === 0)
-              .select(col("embedding").as("qvec")), "dc03r.bench-vecs"))
-          .groupBy("vec_id")
-          .agg(max(graft.functions.VectorOps.cosineNative(
-                 s, col("embedding"), col("qvec"))).as("mc"))
+        val strongDrops = exactScored(emb.filter(col("label") =!= 0),
+                                      emb.filter(col("label") === 0))
           .filter(col("mc") >= 0.9)
           .select("vec_id")
         val missed = strongDrops
-          .except(semanticDeconLshDrops(s, emb).select("vec_id"))
+          .except(anchorDrops(emb).select("vec_id"))
         strongDrops.agg(count(lit(1)).as("n_strong"))
           .crossJoin(missed.agg(count(lit(1)).as("n_missed")))
           .select(col("n_strong"),
@@ -1385,33 +1319,27 @@ object DataQuality {
           .select("vec_id", "embedding")
         val bench = emb.filter(col("label") === 0)
           .select(col("vec_id").as("bench_id"), col("embedding"))
-        val chunks = deconBenchBucketChunks(
-          bench, bands = DeconSelBands, rows = DeconSelRows)
-        val scored = Materialize.once(semanticDeconScoredWith(
-          s, corpus, chunks, DeconSelBands, DeconSelRows))
+        val scored = Materialize.once(
+          DeconIndex(bench, Some((DeconSelBands, DeconSelRows)))
+            .scored(corpus))
         val served = scored.filter(col("mc") >= SemanticDeconTau)
           .select(col("vec_id"), round(col("mc"), 6).as("max_cand_sim"))
         val exact = Materialize.once(
-          corpus.filter(col("vec_id") % 4 === 1)
-            .crossJoin(Bounded.broadcastBench(
-              emb.filter(col("label") === 0)
-                .select(col("embedding").as("qvec")), "dc05.bench-vecs"))
-            .groupBy("vec_id")
-            .agg(max(graft.functions.VectorOps.cosineNative(
-                   s, col("embedding"), col("qvec"))).as("emc")))
-        val exactDrops = exact.filter(col("emc") >= SemanticDeconTau)
+          exactScored(corpus.filter(col("vec_id") % 4 === 1),
+                      emb.filter(col("label") === 0)))
+        val exactDrops = exact.filter(col("mc") >= SemanticDeconTau)
         val sAud = served.filter(col("vec_id") % 4 === 1)
         val precEsc = sAud.select("vec_id")
           .join(exactDrops.select("vec_id"), Seq("vec_id"), "left_anti")
           .agg(count(lit(1)).as("__p"))
         val simBound = sAud
           .join(exact.select(col("vec_id"),
-                             round(col("emc"), 6).as("emc6")),
+                             round(col("mc"), 6).as("emc6")),
                 Seq("vec_id"))
           .agg(coalesce(
             bool_and(col("max_cand_sim") <= col("emc6") + lit(1e-9)),
             lit(true)).as("sim_bounded_ok"))
-        val strong = exact.filter(col("emc") >= 0.9)
+        val strong = exact.filter(col("mc") >= 0.9)
         val missed = strong.select("vec_id")
           .join(sAud.select("vec_id"), Seq("vec_id"), "left_anti")
           .agg(count(lit(1)).as("__m"))
@@ -1496,39 +1424,33 @@ object DataQuality {
             .select((col("bench_id") * k + col("__r")).as("bench_id"),
                     col("embedding"))
         val nb = nb0 * k
-        val (b, r) = deconConfigFor(nb) // the boundary under test
+        val index = DeconIndex(bench) // auto: the boundary under test
+        val (b, r) = index.config
         val missAt09 = {
           val p = 1.0 - math.acos(0.9) / math.Pi
           math.pow(1.0 - math.pow(p, r), b)
         }
-        val chunks = deconBenchBucketChunks(bench, bands = b, rows = r)
-        val scored = Materialize.once(semanticDeconScoredWith(
-          s, corpus, chunks, b, r))
+        val scored = Materialize.once(index.scored(corpus))
         val served = scored.filter(col("mc") >= SemanticDeconTau)
           .select(col("vec_id"), round(col("mc"), 6).as("max_cand_sim"))
         // exact audit side scores the ORIGINAL bench: replicas cannot
         // change a max, so this is the same frame at 1/k the cost
         val exact = Materialize.once(
-          corpus.filter(col("vec_id") % 4 === 1)
-            .crossJoin(Bounded.broadcastBench(
-              emb.filter(col("label") === 0)
-                .select(col("embedding").as("qvec")), "dc06.bench-vecs"))
-            .groupBy("vec_id")
-            .agg(max(graft.functions.VectorOps.cosineNative(
-                   s, col("embedding"), col("qvec"))).as("emc")))
-        val exactDrops = exact.filter(col("emc") >= SemanticDeconTau)
+          exactScored(corpus.filter(col("vec_id") % 4 === 1),
+                      emb.filter(col("label") === 0)))
+        val exactDrops = exact.filter(col("mc") >= SemanticDeconTau)
         val sAud = served.filter(col("vec_id") % 4 === 1)
         val precEsc = sAud.select("vec_id")
           .join(exactDrops.select("vec_id"), Seq("vec_id"), "left_anti")
           .agg(count(lit(1)).as("__p"))
         val simBound = sAud
           .join(exact.select(col("vec_id"),
-                             round(col("emc"), 6).as("emc6")),
+                             round(col("mc"), 6).as("emc6")),
                 Seq("vec_id"))
           .agg(coalesce(
             bool_and(col("max_cand_sim") <= col("emc6") + lit(1e-9)),
             lit(true)).as("sim_bounded_ok"))
-        val strong = exact.filter(col("emc") >= 0.9)
+        val strong = exact.filter(col("mc") >= 0.9)
         val missed = strong.select("vec_id")
           .join(sAud.select("vec_id"), Seq("vec_id"), "left_anti")
           .agg(count(lit(1)).as("__m"))

@@ -34,26 +34,16 @@ object Similarity {
     * the driver for centroid/codebook ranking (FloorProf r15: the
     * eager one-row head() job was the dominant BUILD cost of the
     * IVF/PQ entries — a fresh-plan Spark job per entry for a
-    * corpus-static value). Keyed by [[Bounded.planStamp]] + queryId:
-    * a mutated index dir (appends, drift rebuilds, tombstone segments
-    * — all of which change the frame's scanned file set) refetches,
-    * so the cache can never serve a vector for changed data. */
-  private val qvecCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Float]]()
-
+    * corpus-static value). Keyed by [[Bounded.planStamp]] + queryId
+    * ([[Bounded.stampMemo]]): a mutated index dir (appends, drift
+    * rebuilds, tombstone segments — all of which change the frame's
+    * scanned file set) refetches, so the cache can never serve a
+    * vector for changed data. */
   private[analytics] def cachedQueryVec(df: DataFrame,
-                                        queryId: Long): Array[Float] = {
-    val key = Bounded.planStamp(df) + "#" + queryId
-    val c = qvecCache.get(key)
-    if (c != null) c
-    else {
-      // the fetch job runs OUTSIDE any map bin lock (Bounded recipe)
-      val v = df.filter(col("vec_id") === queryId)
-        .select("embedding").head().getSeq[Float](0).toArray
-      val p = qvecCache.putIfAbsent(key, v)
-      if (p != null) p else v
-    }
-  }
+                                        queryId: Long): Array[Float] =
+    Bounded.stampMemo(df, "qvec#" + queryId)(
+      df.filter(col("vec_id") === queryId)
+        .select("embedding").head().getSeq[Float](0).toArray)
 
   /** Brute-force cosine top-k against the vector with id `queryId`:
     * broadcast of one query row, codegen'd per-row cosine, top-k via

@@ -465,7 +465,7 @@ object EventStreams {
   /** STREAMING semantic decontamination (st18's continuous form):
     * arriving vectors are gated per micro-batch against a STATIC
     * benchmark frame with dc03's banded-LSH prefilter + exact-cosine
-    * refine ([[graft.analytics.DataQuality.semanticDeconLshDropsWith]]).
+    * refine ([[graft.analytics.DataQuality.DeconIndex]]).
     * Completely STATELESS — no running store, no delta reads: the
     * benchmark band-bucket map is built and MATERIALIZED once, before
     * the stream starts (r12 rebuilt it inside every micro-batch — one
@@ -479,28 +479,18 @@ object EventStreams {
     * rule. `bench` carries (bench_id, embedding); the stream (vec_id,
     * embedding).
     *
-    * `(bands, rows)` picks the banding config; the DEFAULT (0, 0) is
-    * AUTO — [[graft.analytics.DataQuality.deconConfigFor]] applies the
-    * measured §D crossover boundary to the bench size: 12×4 (the
-    * recall-anchor shape, 9.5e-5 miss bound at s = 0.9) below ~10⁴
-    * bench rows where its ~54 % candidate rate costs nothing, the 8×7
-    * selectivity config (12.7× over exact, 99.96 % strong recall on
-    * clustered data — served and audited by dc05) above it, where
-    * 12×4's unpruned candidate set is an order-of-magnitude tax. The
-    * bench count is the same content-stamped cached count the bucket
-    * builder pays anyway. Pass explicit values to pin a config. */
+    * `deconConfig` is the banding config (bands, rows); the DEFAULT
+    * None is AUTO — the index applies the measured §D crossover
+    * boundary to the bench size: 12×4 (the recall-anchor shape, 9.5e-5
+    * miss bound at s = 0.9) below ~10⁴ bench rows where its ~54 %
+    * candidate rate costs nothing, the 8×7 selectivity config (12.7×
+    * over exact, 99.96 % strong recall on clustered data — served and
+    * audited by dc05) above it, where 12×4's unpruned candidate set is
+    * an order-of-magnitude tax. Pass a config to pin it. */
   def deconGate(stream: DataFrame, bench: DataFrame, outDir: String,
                 checkpointDir: String,
-                bands: Int = 0, rows: Int = 0)
+                deconConfig: Option[(Int, Int)] = None)
       : StreamingQuery = {
-    require((bands == 0) == (rows == 0),
-      s"pass both bands and rows, or neither (auto): got ($bands, $rows)")
-    val (b, r) =
-      if (bands != 0) (bands, rows)
-      else graft.analytics.DataQuality.deconConfigFor(
-        graft.analytics.Bounded.checkedRowCount(
-          bench.select(col("bench_id"), col("embedding")),
-          "decon.band-index", maxRows = 100000L))
     // same session-registration guard as curationStream: bench-derived
     // frames resolve the natives against the driving session
     graft.functions.Natives.register(stream.sparkSession)
@@ -508,14 +498,12 @@ object EventStreams {
     // owns — micro-batch plans re-broadcast a cached row instead of
     // re-running the bench aggregation
     val owned = new Materialize.Scope
-    val benchChunks = Materialize.within(owned)(graft.analytics.DataQuality
-      .deconBenchBucketChunks(bench, bands = b, rows = r).map(Materialize.once))
+    val index = Materialize.within(owned)(graft.analytics.DataQuality
+      .DeconIndex(bench, deconConfig, once = true))
     val q = perBatch(stream, checkpointDir) { (batch, batchId) =>
       // empty micro-batch = no-op (nothing to gate)
       if (!batch.isEmpty) {
-        val drops = graft.analytics.DataQuality.semanticDeconLshDropsWith(
-          batch.sparkSession, batch.select("vec_id", "embedding"),
-          benchChunks, b, r)
+        val drops = index.drops(batch.select("vec_id", "embedding"))
         land(batch.select("vec_id").join(drops, Seq("vec_id"), "left")
                .select(col("vec_id"),
                        coalesce(col("n_cand"), lit(0L)).as("n_cand"),
@@ -554,15 +542,13 @@ object EventStreams {
   def curationStream(stream: DataFrame, seedDir: String, emb: DataFrame,
                      bandsDeltaDir: String, shinglesDeltaDir: String,
                      outDir: String, checkpointDir: String,
-                     bands: Int = 0, rows: Int = 0)
+                     deconConfig: Option[(Int, Int)] = None)
       : StreamingQuery = {
-    // (bands, rows) picks the decon stage's banding config; the
-    // DEFAULT (0, 0) is AUTO via deconConfigFor — the SAME default as
-    // deconGate and the batch twin StreamShapes.curationLedgerChain,
-    // so the stream-equals-batch contract holds at every bench size
-    // without explicit knobs (ADVICE r14).
-    require((bands == 0) == (rows == 0),
-      s"pass both bands and rows, or neither (auto): got ($bands, $rows)")
+    // deconConfig is the decon stage's (bands, rows); the DEFAULT None
+    // is AUTO — the SAME default as deconGate and the batch twin
+    // StreamShapes.curationLedgerChain, so the stream-equals-batch
+    // contract holds at every bench size without explicit knobs
+    // (ADVICE r14).
     // register the natives on the DRIVING session: frames built from
     // the static `emb` side resolve against it (not the micro-batch
     // clone), and clones inherit what is registered here before the
@@ -570,26 +556,18 @@ object EventStreams {
     graft.functions.Natives.register(stream.sparkSession)
     // the static side lives in a scope the query owns
     val owned = new Materialize.Scope
-    val (embP, chunks, b, r) = Materialize.within(owned) {
+    val (embP, index) = Materialize.within(owned) {
       val embP = Materialize.shared(emb)
-      val benchFrame = embP.filter(col("label") === 0)
-        .select(col("vec_id").as("bench_id"), col("embedding"))
-      val (b, r) =
-        if (bands != 0) (bands, rows)
-        else graft.analytics.DataQuality.deconConfigFor(
-          graft.analytics.Bounded.checkedRowCount(
-            benchFrame, "decon.band-index", maxRows = 100000L))
       // decon bucket map built + materialized ONCE before the stream
       // starts (same hoist as deconGate — r12 rebuilt it per batch)
-      (embP, graft.analytics.DataQuality
-        .deconBenchBucketChunks(benchFrame, bands = b, rows = r)
-        .map(Materialize.once), b, r)
+      (embP, graft.analytics.DataQuality.DeconIndex(
+        embP.filter(col("label") === 0)
+          .select(col("vec_id").as("bench_id"), col("embedding")),
+        deconConfig, once = true))
     }
     val q = nearDupStream(stream, seedDir, bandsDeltaDir, shinglesDeltaDir,
                           outDir, checkpointDir) { (batch, nd) =>
-      StreamShapes.curationLedgerOf(
-        batch.sparkSession, batch, nd, embP, banded = true, Some(chunks),
-        deconBands = b, deconRows = r)
+      StreamShapes.curationLedgerOf(batch, nd, embP, index.scored)
     }
     onTermination(q, owned)
   }

@@ -994,7 +994,7 @@ object StreamShapes {
         // recall-anchor shape (auto would flip it at ≥ 10⁴-row
         // benches, e.g. the 100× scale-gate corpus, by design)
         val served = deconGateChain(s, d,
-          DataQuality.DeconLshBands, DataQuality.DeconLshRows)
+          Some((DataQuality.DeconLshBands, DataQuality.DeconLshRows)))
         served.agg(
           count(lit(1)).as("n_corpus"),
           bool_and(col("batch") ===
@@ -1023,16 +1023,12 @@ object StreamShapes {
         import graft.analytics.DataQuality
         val emb = table(s, d, "embeddings")
         val served = Materialize.once(deconGateChain(s, d,
-          DataQuality.DeconLshBands, DataQuality.DeconLshRows))
+          Some((DataQuality.DeconLshBands, DataQuality.DeconLshRows))))
         val exact = Materialize.once(
-          emb.filter(col("label") =!= 0 && col("vec_id") % 8 === 1)
-            .select("vec_id", "embedding")
-            .crossJoin(graft.analytics.Bounded.broadcastBench(
-              emb.filter(col("label") === 0)
-                .select(col("embedding").as("qvec")), "st18.bench-vecs"))
-            .groupBy("vec_id")
-            .agg(max(graft.functions.VectorOps.cosineNative(
-                   s, col("embedding"), col("qvec"))).as("mc"))
+          DataQuality.exactScored(
+              emb.filter(col("label") =!= 0 && col("vec_id") % 8 === 1)
+                .select("vec_id", "embedding"),
+              emb.filter(col("label") === 0))
             .filter(col("mc") >= DataQuality.SemanticDeconTau)
             .select(col("vec_id"), round(col("mc"), 6).as("emc")))
         val sAudDrops = served
@@ -1091,14 +1087,8 @@ object StreamShapes {
       (s, d) => {
         import graft.analytics.DataQuality
         val emb = table(s, d, "embeddings")
-        val bench = emb.filter(col("label") === 0)
-          .select(col("embedding").as("qvec"))
         def out(batchNo: Int, slice: org.apache.spark.sql.DataFrame) =
-          slice.crossJoin(
-            graft.analytics.Bounded.broadcastBench(bench, "st18x.bench-vecs"))
-            .groupBy("vec_id")
-            .agg(max(graft.functions.VectorOps.cosineNative(
-                   s, col("embedding"), col("qvec"))).as("mc"))
+          DataQuality.exactScored(slice, emb.filter(col("label") === 0))
             .select(lit(batchNo).as("batch"), col("vec_id"),
                     round(col("mc"), 6).as("max_benchmark_sim"),
                     (col("mc") < DataQuality.SemanticDeconTau).cast("int")
@@ -1426,7 +1416,7 @@ object StreamShapes {
         // explicit 12×4 (same reason as st18: the st20a decon recall
         // bound is derived from the pinned recall-anchor config)
         val served = curationLedgerChain(s, d, banded = true,
-          DataQuality.DeconLshBands, DataQuality.DeconLshRows)
+          Some((DataQuality.DeconLshBands, DataQuality.DeconLshRows)))
         served.agg(
           count(lit(1)).as("n_arrivals"),
           sum(when(col("keep_quality") === 0, 1L).otherwise(0L))
@@ -1466,7 +1456,7 @@ object StreamShapes {
         val docs = table(s, d, "documents")
         val emb = table(s, d, "embeddings")
         val served = Materialize.once(curationLedgerChain(s, d, banded = true,
-          DataQuality.DeconLshBands, DataQuality.DeconLshRows))
+          Some((DataQuality.DeconLshBands, DataQuality.DeconLshRows))))
         val structAgg = served.agg(
           count(lit(1)).as("n_arrivals"),
           bool_and(col("keep") === col("keep_quality") *
@@ -1488,13 +1478,9 @@ object StreamShapes {
           .select(col("vec_id").as("doc_id"))
         val audDec = served.filter(col("doc_id") % 80 === 0)
         val exactDec = Materialize.once(
-          emb.filter(col("label") =!= 0 && col("vec_id") % 80 === 0)
-            .crossJoin(graft.analytics.Bounded.broadcastBench(
-              emb.filter(col("label") === 0)
-                .select(col("embedding").as("qvec")), "st20.bench-vecs"))
-            .groupBy("vec_id")
-            .agg(max(graft.functions.VectorOps.cosineNative(
-                   s, col("embedding"), col("qvec"))).as("mc"))
+          DataQuality.exactScored(
+              emb.filter(col("label") =!= 0 && col("vec_id") % 80 === 0),
+              emb.filter(col("label") === 0))
             .filter(col("mc") >= DataQuality.SemanticDeconTau)
             .select(col("vec_id").as("doc_id"), round(col("mc"), 6).as("emc")))
         val decDropsNb = audDec.filter(col("keep_vec") === 0)
@@ -1883,82 +1869,35 @@ object StreamShapes {
 
   /** One slice's curation ledger — quality gate × supplied near-dup
     * verdicts × semantic decon of the slice's vectors against `emb`'s
-    * label-0 benchmark (banded LSH prefilter in production, exact
-    * cosine for anchors); `stage` names the first stage that dropped
+    * label-0 benchmark; `stage` names the first stage that dropped
     * the doc. Shared by the st20 batch chain and the streaming twin
     * (EventStreams.curationStream) so the three-stage composition can
-    * never diverge between them. `benchChunks`: prebuilt decon bucket
-    * chunks ([[graft.analytics.DataQuality.deconBenchBucketChunks]]) —
-    * REQUIRED from callers that ledger many slices (streams, chains),
-    * so the bench aggregation isn't rebuilt per slice (st18's r12
-    * regression family); None rebuilds inline (one-shot callers).
-    * `deconDrops`: precomputed decon drop ids (vec_id) for any
-    * SUPERSET of the slice — the decon stage is stateless (each vector
-    * scores against the static bench only), so a multi-slice caller
-    * can score its whole corpus once and let each ledger intersect,
-    * instead of paying the scoring plan per slice; None scores the
-    * slice's own vectors here (the streaming twin's shape — arrivals
-    * are unknown upfront, per-batch cost stays ∝ batch). */
-  /** Exhaustive decon drop ids: exact max-cosine of `cvecs` against the
-    * broadcast bench, tau-gated — the anchor-form scoring shared by the
-    * per-slice ledger and the chain's precomputed whole-corpus pass. */
-  private def exactDeconDropsOf(s: org.apache.spark.sql.SparkSession,
-                                cvecs: org.apache.spark.sql.DataFrame,
-                                bench: org.apache.spark.sql.DataFrame,
-                                tag: String)
-      : org.apache.spark.sql.DataFrame = {
-    import graft.analytics.DataQuality
-    cvecs
-      .crossJoin(graft.analytics.Bounded.broadcastBench(
-        bench.select(col("embedding").as("qvec")), tag))
-      .groupBy("vec_id")
-      .agg(max(graft.functions.VectorOps.cosineNative(
-             s, col("embedding"), col("qvec"))).as("mc"))
-      .filter(col("mc") >= DataQuality.SemanticDeconTau)
-      .select("vec_id")
-  }
-
-  def curationLedgerOf(s: org.apache.spark.sql.SparkSession,
-                       slice: org.apache.spark.sql.DataFrame,
+    * never diverge between them. `deconScored` adds the decon score
+    * `mc` (max bench cosine; null when nothing scored) to the slice's
+    * vectors (vec_id, label, embedding): the stream scores them through
+    * its prebuilt [[graft.analytics.DataQuality.DeconIndex]] (per-batch
+    * cost stays ∝ batch), the chain looks them up in its whole-corpus
+    * pass. A vector drops when it is benchmark content (label 0) or,
+    * labelled otherwise, its `mc` reaches tau. */
+  def curationLedgerOf(slice: org.apache.spark.sql.DataFrame,
                        nd: org.apache.spark.sql.DataFrame,
                        emb: org.apache.spark.sql.DataFrame,
-                       banded: Boolean,
-                       benchChunks: Option[Seq[org.apache.spark.sql.DataFrame]] = None,
-                       deconDrops: Option[org.apache.spark.sql.DataFrame] = None,
-                       deconBands: Int = graft.analytics.DataQuality.DeconLshBands,
-                       deconRows: Int = graft.analytics.DataQuality.DeconLshRows)
+                       deconScored: org.apache.spark.sql.DataFrame =>
+                         org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    // (deconBands, deconRows) MUST match the config `benchChunks` was
-    // built with — a mismatch would silently empty every bucket, and
-    // since r16 the scorer VERIFIES it against the (bands, rows) stamp
-    // each chunk carries in its column metadata and fails loudly
-    // (DataQuality.semanticDeconScoredWith); callers that resolve a
-    // config (auto) thread it to both.
     import graft.analytics.DataQuality
-    val bench = emb.filter(col("label") === 0)
-      .select(col("vec_id").as("bench_id"), col("embedding"))
-    val ids = slice.select(col("doc_id").as("vec_id"))
-    lazy val cvecs = emb.filter(col("label") =!= 0).join(ids, Seq("vec_id"))
-      .select("vec_id", "embedding")
-    val drops = deconDrops match {
-      case Some(dd) => dd.select("vec_id").join(ids, Seq("vec_id"))
-      case None if banded =>
-        DataQuality.semanticDeconLshDropsWith(s, cvecs,
-            benchChunks.getOrElse(DataQuality.deconBenchBucketChunks(bench,
-              bands = deconBands, rows = deconRows)),
-            deconBands, deconRows)
-          .select("vec_id")
-      case None =>
-        exactDeconDropsOf(s, cvecs, bench, "cp.ledger.bench-vecs")
-    }
+    // one ids ⋈ emb feeds both the scoring and the label-0 rule, so a
+    // slice reads its vectors once
+    val vecs = emb.join(slice.select(col("doc_id").as("vec_id")), Seq("vec_id"))
+      .select("vec_id", "label", "embedding")
+    val drops = deconScored(vecs).filter(col("label") === 0 ||
+      (col("label") =!= 0 && col("mc") >= DataQuality.SemanticDeconTau))
     // every slice doc enters with keep 1, every drop id (all ⊆ the
     // slice) with 0, and the min per doc is the verdict: one shuffle,
     // not a distinct + an outer join back to the slice
     val vecKeep = slice.select(col("doc_id"), lit(1).as("keep_vec"))
-      .unionByName(drops
-        .unionByName(emb.filter(col("label") === 0).select("vec_id")
-          .join(ids, Seq("vec_id")))
-        .select(col("vec_id").as("doc_id"), lit(0).as("keep_vec")))
+      .unionByName(
+        drops.select(col("vec_id").as("doc_id"), lit(0).as("keep_vec")))
       .groupBy("doc_id").agg(min("keep_vec").cast("int").as("keep_vec"))
     // qualityFlags threads `source` through for downstream gates; the
     // keep bit itself never reads it, so a source-less stream slice
@@ -1982,44 +1921,27 @@ object StreamShapes {
                 .otherwise("kept").as("stage"))
   }
 
-  /** st20's two-batch curation chain: quality × near-dup × decon per
-    * arrival with first-drop stage attribution; batch 2's near-dup
-    * index side includes batch 1's ALL-STAGE keepers. `banded` picks
-    * the production candidate generation (LSH bands + band-bucket
-    * prune) vs the exhaustive/exact anchor forms. */
   /** st18's raw two-batch banded decon frame — the serve the entry
     * audits, and the frame the streaming twin (EventStreams.deconGate)
-    * is pinned row-equal against. */
+    * is pinned row-equal against. `deconConfig` is (bands, rows); None
+    * is AUTO, the SAME default as the streaming twin (ADVICE r14: the
+    * twins' defaults diverged past the 10⁴-row bench threshold, so the
+    * stream-equals-batch contract held only for explicit-config
+    * callers). The st18 registry entry pins 12×4 explicitly — its
+    * audit bounds derive from that shape. */
   private[graft] def deconGateChain(s: org.apache.spark.sql.SparkSession,
                                     d: String,
-                                    bands: Int = 0, rows: Int = 0)
+                                    deconConfig: Option[(Int, Int)] = None)
       : org.apache.spark.sql.DataFrame = {
-    // The DEFAULT (0, 0) is AUTO, the SAME default as the streaming
-    // twin EventStreams.deconGate (ADVICE r14: the twins' defaults
-    // diverged past the 10⁴-row bench threshold, so the stream-equals-
-    // batch contract held only for explicit-config callers):
-    // DataQuality.deconConfigFor picks 12×4 (recall-anchor) below ~10⁴
-    // bench rows and 8×7 (the measured 12.7× selectivity config,
-    // served + audited by dc05) above. The st18 registry entry pins
-    // 12×4 explicitly — its audit bounds derive from that shape.
     import graft.analytics.DataQuality
-    require((bands == 0) == (rows == 0),
-      s"pass both bands and rows, or neither (auto): got ($bands, $rows)")
     val emb = table(s, d, "embeddings")
     val bench = emb.filter(col("label") === 0)
       .select(col("vec_id").as("bench_id"), col("embedding"))
-    val (bandsR, rowsR) =
-      if (bands != 0) (bands, rows)
-      else DataQuality.deconConfigFor(
-        graft.analytics.Bounded.checkedRowCount(
-          bench, "decon.band-index", maxRows = 100000L))
     val corpus = emb.filter(col("label") =!= 0)
       .select("vec_id", "embedding")
     // bucket map built + materialized ONCE for both batches (the r12
     // form rebuilt it per out() call — the st18 regression)
-    val benchChunks = DataQuality
-      .deconBenchBucketChunks(bench, bands = bandsR, rows = rowsR)
-      .map(Materialize.once)
+    val index = DataQuality.DeconIndex(bench, deconConfig, once = true)
     // The gate is STATELESS (that is the entry's pinned claim: batch
     // slicing cannot change any decision), so the batch form scores the
     // WHOLE corpus in ONE pass and derives the batch tag afterwards —
@@ -2028,8 +1950,7 @@ object StreamShapes {
     // plan's dominant fixed cost at fixture scale; r12 paid it twice).
     // The streaming twin necessarily scores per arriving micro-batch;
     // row-equality between the two is pinned in StreamingSpec.
-    val drops = DataQuality.semanticDeconLshDropsWith(s, corpus, benchChunks,
-                                                      bandsR, rowsR)
+    val drops = index.drops(corpus)
     corpus.select("vec_id").join(drops, Seq("vec_id"), "left")
       .select((pmod(col("vec_id"), lit(2L)) + 1).cast("int").as("batch"),
               col("vec_id"),
@@ -2181,23 +2102,23 @@ object StreamShapes {
     }
   }
 
+  /** st20's two-batch curation chain: quality × near-dup × decon per
+    * arrival with first-drop stage attribution; batch 2's near-dup
+    * index side includes batch 1's ALL-STAGE keepers. `banded` picks
+    * the production candidate generation (LSH bands + band-bucket
+    * prune) vs the exhaustive/exact anchor forms. `deconConfig` is the
+    * decon stage's (bands, rows); None is AUTO, the same default as the
+    * streaming twin (EventStreams.curationStream) and the decon gate
+    * pair, so a batch user with a ≥ 10⁴-row bench gets the measured 8×7
+    * selectivity config without passing it (VERDICT r14 missing #1).
+    * The st20 registry entry pins 12×4 explicitly — its audit bounds
+    * derive from it. */
   private[graft] def curationLedgerChain(
       s: org.apache.spark.sql.SparkSession,
       d: String, banded: Boolean,
-      deconBands: Int = 0, deconRows: Int = 0)
+      deconConfig: Option[(Int, Int)] = None)
       : org.apache.spark.sql.DataFrame = {
-    // (deconBands, deconRows) — the decon stage's banding config. The
-    // DEFAULT (0, 0) is AUTO via DataQuality.deconConfigFor, the same
-    // default as the streaming twin (EventStreams.curationStream) and
-    // the decon gate pair, so a batch user with a ≥ 10⁴-row bench gets
-    // the measured 8×7 selectivity config without passing the knob
-    // (VERDICT r14 missing #1 — the chain's pinned 12×4 default left
-    // the dc05 crossover opt-in on the batch path). The st20 registry
-    // entry pins 12×4 explicitly — its audit bounds derive from it.
     import graft.analytics.{DataQuality, MinHashBandIndex}
-    require((deconBands == 0) == (deconRows == 0),
-      s"pass both bands and rows, or neither (auto): " +
-        s"got ($deconBands, $deconRows)")
     val docs = table(s, d, "documents")
     val emb = table(s, d, "embeddings")
     val arr = MinHashBandIndex.arrivalsOf(docs)
@@ -2205,34 +2126,27 @@ object StreamShapes {
     val b2 = arr.filter(col("doc_id") % 20 =!= 0)
     // The decon stage is STATELESS, so the chain scores the WHOLE
     // corpus once (banded serve or exact anchor form) and both ledgers
-    // intersect the materialized drop-id set — r12 paid the scoring
-    // plan + pass per ledger (the st18 regression family; at sf0.1 the
-    // decon planning cost dominated the chain). The near-dup stage
-    // stays chained (batch 2's reference includes batch 1 keepers).
+    // look their vectors up in the materialized over-tau set — r12 paid
+    // the scoring plan + pass per ledger (the st18 regression family; at
+    // sf0.1 the decon planning cost dominated the chain). The near-dup
+    // stage stays chained (batch 2's reference includes batch 1
+    // keepers).
     val benchAll = emb.filter(col("label") === 0)
       .select(col("vec_id").as("bench_id"), col("embedding"))
-    val (dBands, dRows) =
-      if (deconBands != 0) (deconBands, deconRows)
-      else DataQuality.deconConfigFor(
-        graft.analytics.Bounded.checkedRowCount(
-          benchAll, "decon.band-index", maxRows = 100000L))
     val corpusVecs = emb.filter(col("label") =!= 0)
       .select("vec_id", "embedding")
-    val deconDropsAll = Some(Materialize.once(
-      if (banded)
-        DataQuality.semanticDeconLshDropsWith(s, corpusVecs,
-          DataQuality.deconBenchBucketChunks(benchAll,
-              bands = dBands, rows = dRows)
-            .map(Materialize.once),
-          dBands, dRows)
-          .select("vec_id")
-      else
-        exactDeconDropsOf(s, corpusVecs, benchAll, "cp.ledger.bench-vecs")))
+    val overTau = Materialize.once(
+      (if (banded)
+         DataQuality.DeconIndex(benchAll, deconConfig, once = true)
+           .scored(corpusVecs)
+       else DataQuality.exactScored(corpusVecs, benchAll))
+        .filter(col("mc") >= DataQuality.SemanticDeconTau)
+        .select("vec_id", "mc"))
     def ledgerOf(batchNo: Int, slice: org.apache.spark.sql.DataFrame,
                  nd: org.apache.spark.sql.DataFrame)
         : org.apache.spark.sql.DataFrame =
-      curationLedgerOf(s, slice, nd, emb, banded,
-                       benchChunks = None, deconDrops = deconDropsAll)
+      curationLedgerOf(slice, nd, emb,
+                       _.join(overTau, Seq("vec_id"), "left"))
         .withColumn("batch", lit(batchNo))
     if (banded) {
       val seed = MinHashBandIndex.ensure(s, d)

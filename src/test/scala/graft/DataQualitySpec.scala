@@ -257,12 +257,15 @@ class DataQualitySpec extends SparkSpec {
       .select(col("vec_id").as("bench_id"), col("embedding"))
     val corpus = emb.filter(col("label") =!= 0)
       .select("vec_id", "embedding")
-    val single = DataQuality.deconBenchBucketChunks(bench)
-    assert(single.size == 1, s"56-row bench should be one chunk, got ${single.size}")
-    val chunked = DataQuality.deconBenchBucketChunks(bench, chunkRows = 8L)
-    assert(chunked.size == 7, s"ceil(56/8) = 7 chunks, got ${chunked.size}")
-    def serve(chunks: Seq[org.apache.spark.sql.DataFrame]) =
-      DataQuality.semanticDeconLshDropsWith(spark, corpus, chunks)
+    val anchor = Some((DataQuality.DeconLshBands, DataQuality.DeconLshRows))
+    val single = DataQuality.DeconIndex(bench, anchor)
+    assert(single.chunks.size == 1,
+           s"56-row bench should be one chunk, got ${single.chunks.size}")
+    val chunked = DataQuality.DeconIndex(bench, anchor, chunkRows = 8L)
+    assert(chunked.chunks.size == 7,
+           s"ceil(56/8) = 7 chunks, got ${chunked.chunks.size}")
+    def serve(index: DataQuality.DeconIndex) =
+      index.drops(corpus)
         .orderBy("vec_id").collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
     val a = serve(single)
@@ -315,7 +318,8 @@ class DataQualitySpec extends SparkSpec {
               col("n_cand"))
       .orderBy("vec_id").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
-    val native = DataQuality.semanticDeconLshDropsOf(spark, corpus, bench)
+    val native = DataQuality.DeconIndex(bench, Some((DeconLshBands, DeconLshRows)))
+      .drops(corpus)
       .orderBy("vec_id").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
     assert(ref.nonEmpty, "fixture should produce decon drops")
@@ -339,11 +343,9 @@ class DataQualitySpec extends SparkSpec {
       .select(col("vec_id").as("bench_id"), col("embedding"))
     val corpus = emb.filter(col("label") =!= 0)
       .select("vec_id", "embedding")
-    val chunks = DataQuality.deconBenchBucketChunks(bench)
-      .map(_.localCheckpoint(true))
-    def serveDf() = DataQuality
-      .semanticDeconScoredWith(spark, corpus, chunks)
-      .orderBy("vec_id")
+    val index = DataQuality.DeconIndex(bench,
+      Some((DataQuality.DeconLshBands, DataQuality.DeconLshRows)), once = true)
+    def serveDf() = index.scored(corpus).orderBy("vec_id")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0),
         if (r.isNullAt(1)) None else Some(r.getDouble(1)), r.getLong(2)))
@@ -461,11 +463,8 @@ class DataQualitySpec extends SparkSpec {
     val configs = Seq((6, 8, 0.95), (DataQuality.DeconSelBands,
                                      DataQuality.DeconSelRows, 0.98))
     configs.foreach { case (bands, rows, recallFloor) =>
-      val chunks = DataQuality.deconBenchBucketChunks(
-        bench, bands = bands, rows = rows)
-      val scored = DataQuality
-        .semanticDeconScoredWith(spark, corpus, chunks,
-                                 bands = bands, rows = rows)
+      val scored = DataQuality.DeconIndex(bench, Some((bands, rows)))
+        .scored(corpus)
         .collect().map(r => (r.getLong(0),
           if (r.isNullAt(1)) None else Some(r.getDouble(1)), r.getLong(2)))
       scored.foreach { case (id, mc, _) =>
@@ -497,7 +496,7 @@ class DataQualitySpec extends SparkSpec {
     val bench = emb.filter(col("label") === 0)
       .select(col("vec_id").as("bench_id"), col("embedding"))
     intercept[IllegalArgumentException] {
-      DataQuality.deconBenchBucketChunks(bench, bands = 2, rows = 31)
+      DataQuality.DeconIndex(bench, Some((2, 31)))
     }
     intercept[IllegalArgumentException] {
       import org.apache.spark.sql.catalyst.expressions.Literal
@@ -505,8 +504,8 @@ class DataQualitySpec extends SparkSpec {
                                  nBands = 2, rowsPerBand = 31)
     }
     // the documented configs still construct
-    DataQuality.deconBenchBucketChunks(bench,
-      bands = DataQuality.DeconSelBands, rows = DataQuality.DeconSelRows)
+    DataQuality.DeconIndex(bench,
+      Some((DataQuality.DeconSelBands, DataQuality.DeconSelRows)))
     ()
   }
 
@@ -522,6 +521,17 @@ class DataQualitySpec extends SparkSpec {
            (DataQuality.DeconSelBands, DataQuality.DeconSelRows))
     assert(DataQuality.deconConfigFor(100000L) ==
            (DataQuality.DeconSelBands, DataQuality.DeconSelRows))
+    // an index built with no config carries the boundary's choice for
+    // its bench's row count; an explicit config is carried as given
+    def benchOf(n: Long) = spark.range(n).select(col("id").as("bench_id"),
+      array(lit(1f), lit(0f)).as("embedding"))
+    assert(DataQuality.DeconIndex(benchOf(500L)).config ==
+           (DataQuality.DeconLshBands, DataQuality.DeconLshRows))
+    assert(DataQuality.DeconIndex(
+             benchOf(DataQuality.DeconAutoBenchThreshold)).config ==
+           (DataQuality.DeconSelBands, DataQuality.DeconSelRows))
+    assert(DataQuality.DeconIndex(benchOf(500L), Some((6, 8))).config ==
+           (6, 8))
   }
 
   test("bp01: 30x-duplicated corpus flows the shuffled census path, counts scale exactly") {

@@ -218,6 +218,37 @@ class OfflineArtifactSpec extends SparkSpec {
         hits.map { case (f, t, o, n) => s"$f:$n: $t (in $o)" }.mkString("\n"))
   }
 
+  test("tripwire: semantic decon is scored and configured only in " +
+       "DataQuality") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"source dir not found from ${root.getAbsolutePath}")
+    val owner = "graft/analytics/DataQuality.scala"
+    // an exact max-cosine scan or a bench-vecs broadcast written out by
+    // hand, or a banding config resolved by hand
+    val banned = Seq("max\\(\\S*cosineNative\\(", "deconConfigFor\\(").map(_.r)
+    val hits = for {
+      f <- scalaFiles(root)
+      rel = root.toPath.relativize(f.toPath).toString
+      if rel != owner
+      code = Files.readAllLines(f.toPath).asScala
+        .map(l => if (isComment(l)) "" else l).mkString("\n")
+      at <- ("broadcastBench\\(" +: banned.map(_.regex)).mkString("|").r
+        .findAllMatchIn(code).map(_.start).toSeq
+      // the call's argument list: a broadcastBench call often spans lines
+      call = {
+        var depth = 0
+        code.drop(at).takeWhile { ch =>
+          if (ch == '(') depth += 1 else if (ch == ')') depth -= 1
+          depth > 0 || ch != ')'
+        }
+      }
+      if call.contains("bench-vecs") || banned.exists(_.findPrefixOf(call).isDefined)
+    } yield s"$rel:${code.take(at).count(_ == '\n') + 1}: " +
+      call.takeWhile(_ != '\n')
+    assert(hits.isEmpty, s"score decon through DataQuality.exactScored / " +
+      s"DeconIndex (${hits.size} sites):\n" + hits.mkString("\n"))
+  }
+
   test("a bloom build restores the session's runtime-filter caps") {
     val c = corpusCopy("graft-bloom-caps")
     // values no build sets, so a cap left raised by any build shows

@@ -246,8 +246,8 @@ class PlanAuditSpec extends SparkSpec {
   test("dc03: banded decon serve is map-only — no shuffled join, no pair exchange") {
     // raw serving path (the entry's self-audit adds benign 1-row cross
     // joins of scalar aggregates around it)
-    val p = graft.analytics.DataQuality.semanticDeconLshDrops(
-        spark, spark.read.parquet(s"$sf0001/embeddings.parquet"))
+    val p = graft.analytics.DataQuality.anchorDrops(
+        spark.read.parquet(s"$sf0001/embeddings.parquet"))
       .queryExecution.executedPlan.toString
     // the bench band index is ONE broadcast row (a band-key → bucket
     // map); the corpus side is a single projection that looks its 12
@@ -552,14 +552,22 @@ class PlanAuditSpec extends SparkSpec {
   test("st20: the executed curation ledger plan scans the seed bands once") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.functions.col
     val mh = graft.analytics.MinHashBandIndex
     val seed = mh.ensure(spark, sf0001)
     val docs = graft.queries.QueryDef.table(spark, sf0001, "documents")
     val slice = mh.arrivalsOf(docs).select("doc_id", "text")
-    val ledger = graft.streaming.StreamShapes.curationLedgerOf(spark, slice,
+    val emb = graft.queries.QueryDef.table(spark, sf0001, "embeddings")
+    // the stream's static side: the bench index is checkpointed before
+    // the first batch, so the ledger's only vector reads are its own
+    val index = graft.analytics.DataQuality.DeconIndex(
+      emb.filter(col("label") === 0)
+        .select(col("vec_id").as("bench_id"), col("embedding")),
+      once = true)
+    val ledger = graft.streaming.StreamShapes.curationLedgerOf(slice,
       mh.gateFrames(spark, spark.read.parquet(s"$seed/bands"),
                     spark.read.parquet(s"$seed/shingles"), slice),
-      graft.queries.QueryDef.table(spark, sf0001, "embeddings"), banded = true)
+      emb, index.scored)
     assert(ledger.collect().nonEmpty)
     // the hot-bucket census and the candidate join read ONE probe: a
     // second branch re-scans the bands every batch
@@ -570,6 +578,15 @@ class PlanAuditSpec extends SparkSpec {
     }
     assert(bandScans.size == 1,
       s"${bandScans.size} bands scans:\n${ledger.queryExecution.executedPlan}")
+    // one ids ⋈ emb feeds both the decon scoring and the label-0 rule:
+    // a second branch re-reads every vector each batch
+    val vecScans = Plans.collect(ledger.queryExecution.executedPlan) {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths
+            .exists(_.getName == "embeddings.parquet") => s
+    }
+    assert(vecScans.size == 1,
+      s"${vecScans.size} vector scans:\n${ledger.queryExecution.executedPlan}")
   }
 
   test("fi01: the sketch pass partial-aggregates map-side; the shuffle is one summary per partition") {

@@ -1090,9 +1090,9 @@ class StreamingSpec extends SparkSpec {
     val (b1, b2) = corpus.partition(_._1 % 2 == 0)
     val mem = MemoryStream[(Long, Seq[Float])]
     val stream = mem.toDF().toDF("vec_id", "embedding")
+    val sel = Some((DataQuality.DeconSelBands, DataQuality.DeconSelRows))
     val q = EventStreams.deconGate(stream, bench, s"$tmp/out", s"$tmp/ckpt",
-                                   bands = DataQuality.DeconSelBands,
-                                   rows = DataQuality.DeconSelRows)
+                                   deconConfig = sel)
     try {
       mem.addData(b1.toSeq: _*)
       q.processAllAvailable()
@@ -1102,8 +1102,7 @@ class StreamingSpec extends SparkSpec {
         .select((col("batch_id").cast("int") + 1).as("batch"),
                 col("vec_id"), col("n_cand"), col("keep"))
       val batchForm = graft.streaming.StreamShapes.deconGateChain(
-        spark, sf0001, bands = DataQuality.DeconSelBands,
-        rows = DataQuality.DeconSelRows)
+        spark, sf0001, deconConfig = sel)
       assert(streamed.count() == batchForm.count())
       assert(streamed.exceptAll(batchForm).count() == 0 &&
              batchForm.exceptAll(streamed).count() == 0,
